@@ -801,13 +801,16 @@ def _pair_frame(
     return preds.crossJoin(deps)
 
 
-def choose_strategy(num_pairs: int, n_rows: int) -> str:
-    """Pick the physical fan-out strategy from the table shape: columnar
-    when the pair fan-out would amplify the data through a shuffle
-    (many pairs) and the table is small enough for per-task full-column
-    reads; packed otherwise (the tall-table / 100 TB path — the classic
-    per-pair unpivot remains available as an explicit strategy)."""
-    return "columnar" if num_pairs >= 8 and n_rows <= 100_000_000 else "packed"
+def choose_strategy(n_rows: int) -> str:
+    """Pick the physical fan-out strategy from the table's row count:
+    columnar up to 100M rows, where a per-task full-column read is
+    cheap, at any pair count — each pair then costs one column-pruned
+    read, with no sample data in a shuffle; packed above it (the
+    tall-table / 100 TB path — the classic per-pair unpivot remains
+    available as an explicit strategy). Per-worker memory for one pair
+    is the same either way: packed also fits each pair's group in one
+    Python worker."""
+    return "columnar" if n_rows <= 100_000_000 else "packed"
 
 
 def _needs_distributed_writer(spark: SparkSession, checkpoint_dir: str | None) -> bool:
@@ -966,10 +969,12 @@ def run_associations(
       unpivot would move n_rows x n_deps duplicated covariates through a
       shuffle for a table that reads back in kilobytes per task.
 
-    ``auto`` uses columnar when the duplicated-long-table cell count
-    (rows x pairs) is large relative to the table itself — i.e. when the
-    shuffle would amplify the data — and the table is small enough that
-    a per-task full-column read is cheap (<= ~100M rows).
+    ``auto`` takes moments whenever it applies; otherwise columnar when
+    the table is small enough that a per-task full-column read is cheap
+    (<= 100M rows, see choose_strategy) and packed above that. The row
+    count comes from the parquet footers when ``df`` is a plain parquet
+    scan (or ``source_files`` are given), so picking runs no Spark job
+    there; any other input is counted by Spark (input_row_count).
     """
     if strategy not in ("auto", "columnar", "moments", "packed", "unpivot"):
         # A typo previously fell through to the classic unpivot — the
@@ -997,8 +1002,12 @@ def run_associations(
             strategy = "moments"
         else:
             if n_rows is None:
-                n_rows = df.count()
-            strategy = choose_strategy(num_pairs, n_rows)
+                n_rows = input_row_count(
+                    source_files if source_files is not None
+                    else reusable_scan_files(df),
+                    df,
+                )
+            strategy = choose_strategy(n_rows)
             if (
                 strategy == "columnar"
                 and checkpoint_path is None
@@ -1143,7 +1152,8 @@ def reusable_scan_files(df: DataFrame) -> list[str] | None:
     """If ``df`` is nothing but a (projected) parquet scan, return its
     local data files so the columnar fan-out can read the SOURCE directly
     instead of writing a redundant checkpoint copy. Conservative: any
-    computed expression, filter, or non-parquet source returns None."""
+    computed expression, filter, projected hive partition column or
+    non-parquet source returns None."""
     try:
         # Render the plan with field-list truncation disabled: the
         # default spark.sql.debug.maxToStringFields=25 elides projection
@@ -1156,7 +1166,8 @@ def reusable_scan_files(df: DataFrame) -> list[str] | None:
         old = conf.get(key, None)
         conf.set(key, "1000000")
         try:
-            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            optimized = df._jdf.queryExecution().optimizedPlan()
+            plan = optimized.toString()
         finally:
             if old is None:
                 conf.unset(key)
@@ -1180,15 +1191,35 @@ def reusable_scan_files(df: DataFrame) -> list[str] | None:
         if "(" in inner or " AS " in inner:
             return None  # computed or renamed column
     try:
+        partition_cols = set(
+            optimized.collectLeaves().head().relation().partitionSchema().fieldNames()
+        )
         files = [
             f[len("file:"):] if f.startswith("file:") else f
             for f in df.inputFiles()
         ]
     except Exception:
         return None
+    if partition_cols & set(df.columns):
+        # Hive partition values live in directory names, not in the
+        # files a pyarrow read of the columns would open.
+        return None
     if not files or any("://" in f for f in files):
         return None  # non-local storage: fall back to checkpoint
     return sorted(files)
+
+
+def input_row_count(files: list[str] | None, df: DataFrame | None = None) -> int:
+    """How many rows an input has. ``files`` are the local parquet files
+    of a plain scan (reusable_scan_files): their footers' ``num_rows``
+    are summed locally with pyarrow, so no Spark job runs and no row is
+    read. Without files, ``df`` is counted by Spark — persist it first
+    if the rows are needed again."""
+    if files is None:
+        return df.count()
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def _parquet_files(path: str) -> list[str]:

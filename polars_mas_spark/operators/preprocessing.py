@@ -27,6 +27,7 @@ from pyspark.sql.types import NumericType
 
 from polars_mas_spark.colutils import qcol
 from polars_mas_spark.config import MASConfig
+from polars_mas_spark.operators.association import input_row_count
 from polars_mas_spark.operators.fills import backward_fill, forward_fill
 
 
@@ -447,10 +448,11 @@ def _recipe_stats_local(source_files, covs, strategy):
     try:
         import pyarrow.dataset as pads
 
-        ds = pads.dataset(source_files)
-        if ds.count_rows() > _RECIPE_DRIVER_MAX_ROWS:
+        if input_row_count(source_files) > _RECIPE_DRIVER_MAX_ROWS:
             return None
-        tbl = ds.to_table(columns=list(dict.fromkeys(covs)), use_threads=False)
+        tbl = pads.dataset(source_files).to_table(
+            columns=list(dict.fromkeys(covs)), use_threads=False
+        )
     except Exception:
         return None
     import pandas as pd

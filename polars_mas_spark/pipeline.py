@@ -19,6 +19,7 @@ from polars_mas_spark.config import MASConfig
 from polars_mas_spark.operators.association import (
     checkpoint_wide,
     choose_strategy,
+    input_row_count,
     reusable_scan_files,
     run_associations,
 )
@@ -46,7 +47,9 @@ def run_pipeline(
     Programmatic-first API (the reference is CLI-only; a Python API is on
     its declared roadmap, README.md:163): pass either an already-loaded
     wide DataFrame or an input path. ``strategy`` forces the fan-out's
-    physical strategy ("columnar"/"packed"/"unpivot"); default picks by shape.
+    physical strategy ("columnar"/"packed"/"unpivot"); default picks by
+    the input's row count, read from the parquet footers when the input
+    is a plain parquet scan (see choose_strategy).
     """
     if df is None:
         if input_path is None:
@@ -71,7 +74,6 @@ def run_pipeline(
     if len(df.columns) != len(included) or set(df.columns) != set(included):
         df = df.selectExpr(*[qname(c) for c in included])
 
-    num_pairs = len(config.predictor_columns) * len(config.dependent_columns)
     auto_strategy = strategy is None
     if strategy is not None and strategy not in (
         "columnar", "packed", "unpivot", "moments",
@@ -83,23 +85,26 @@ def run_pipeline(
             f"unknown strategy {strategy!r}; valid: "
             "columnar/packed/unpivot/moments (or None for auto)"
         )
+    if (
+        strategy is None
+        and config.model == "linear"
+        and config.quantitative
+        and len(config.covariate_columns) <= 64
+    ):
+        # Moments dominate for linear at every shape (see
+        # run_associations) — and need no row count to decide.
+        strategy = "moments"
+    # The local parquet files of a plain scan: the auto pick counts
+    # their footers and the columnar branch reads them directly.
+    files = reusable_scan_files(df) if strategy in (None, "columnar") else None
     if strategy is None:
-        if (
-            config.model == "linear"
-            and config.quantitative
-            and len(config.covariate_columns) <= 64
-        ):
-            # Moments dominate for linear at every shape (see
-            # run_associations) — and need no row count to decide.
-            strategy = "moments"
-        else:
-            # Persist BEFORE the strategy-deciding count so the pass
-            # that counts also populates the cache (review r9): the
-            # tall branch re-persists the same handle (a no-op) and the
-            # columnar checkpoint branch unpersists it explicitly.
+        if files is None:
+            # Not a plain parquet scan, so Spark must count it. Persist
+            # first so the counting pass also fills the cache: the tall
+            # branch re-persists the same handle (a no-op) and the
+            # columnar branch unpersists it once its checkpoint exists.
             df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            n_rows = df.count()
-            strategy = choose_strategy(num_pairs, n_rows)
+        strategy = choose_strategy(input_row_count(files, df))
     if strategy == "columnar" and config.missing_covariate_values in (
         "forward", "backward",
     ):
@@ -178,7 +183,8 @@ def run_pipeline(
         strategy = "packed"
 
     if strategy == "columnar":
-        # Wide-short shape (the PheWAS benchmark): the preprocessed wide
+        # Every table up to 100M rows, whatever its pair count, and above
+        # all the wide-short PheWAS shape, where the preprocessed wide
         # table must never exist as a JVM schema — caching or row-pivoting
         # ~1,800 columns costs tens of seconds per pass in codegen and
         # Arrow<->row conversion. Instead: (1) land the RAW included table
@@ -189,10 +195,9 @@ def run_pipeline(
         # reading only its columns and applying the recipe in pandas —
         # exactly how the reference's workers mmap its IPC file
         # (analysis.py:54-59).
-        files = reusable_scan_files(df)
         if files is None:
             ckpt = checkpoint_wide(df, config.checkpoint_dir)
-            df.unpersist()  # checkpoint written; drop the pre-count cache
+            df.unpersist()  # checkpoint written; drop any pre-count cache
             stats_df = spark.read.parquet(ckpt)
             from polars_mas_spark.operators.association import _parquet_files
 
@@ -208,12 +213,16 @@ def run_pipeline(
         ).persist(StorageLevel.MEMORY_AND_DISK)
         pre = stats_df  # for the shared unpersist below (no-op on scans)
     else:
-        # Tall shape: cache the projected input (preprocess collects
-        # eager statistics — uncached, every stat job would re-execute
-        # the upstream plan), then persist the preprocessed table as the
-        # analog of the reference's shared-memory IPC checkpoint
-        # (preprocessing.py:111-132) and run the long-table fan-out from
-        # it — packed by default, classic unpivot when explicitly asked.
+        # Tall shape (over 100M rows, a linear moments study, an
+        # explicit tall strategy, or a guard above forced it): cache the
+        # projected input — the auto pick's Spark count already filled
+        # the cache when the input is not a plain parquet scan — because
+        # preprocess collects eager statistics and, uncached, every stat
+        # job would re-execute the upstream plan. Then persist the
+        # preprocessed table as the analog of the reference's
+        # shared-memory IPC checkpoint (preprocessing.py:111-132) and run
+        # the long-table fan-out from it — packed by default, classic
+        # unpivot when explicitly asked.
         raw = df.persist(StorageLevel.MEMORY_AND_DISK)
         pre = preprocess(raw, config)
         if config.rint or config.logt:

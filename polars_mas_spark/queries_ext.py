@@ -6187,7 +6187,7 @@ def q_mas_poisson_rate_golden(spark, sf_dir):
         predictors="exposure", dependents=["y"], model="poisson",
         quantitative=True, min_case_count=10,
     )
-    res = run_associations(ev, cfg.resolve(ev.columns))
+    res = run_associations(ev, cfg.resolve(ev.columns), strategy="packed")
     return res.select(
         "predictor", "dependent",
         F.round("beta", 6).alias("beta"),

@@ -7,13 +7,14 @@ One place to encode the engine's Spark tuning philosophy:
   AQE re-plans per stage.
 - Arrow on for every executor<->Python boundary (the regression kernels
   and all extension Pandas UDFs move batches, not rows).
-- Shuffle partitions sized for the local test harness via env; a real
+- Shuffle partitions default to one per core of a local master; a real
   cluster deployment overrides via spark-defaults / --conf.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -33,6 +34,27 @@ _BLAS_ENV = {
 }
 
 
+_LOCAL_MASTER = re.compile(r"local(?:\[(\*|\d+)(?:\s*,\s*\d+)?\])?")
+
+
+def default_shuffle_partitions(master: str) -> int:
+    """One shuffle partition per core of a ``local``/``local[N]``/
+    ``local[*]`` master (with or without a retry count); any other
+    master keeps ``SPARK_GRAFT_CPUS``, else 32."""
+    m = _LOCAL_MASTER.fullmatch(master)
+    if m is None:
+        return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = m.group(1)
+    if cores is None:
+        return 1
+    if cores != "*":
+        return int(cores)
+    # The cores this process may run on, as the JVM counts for local[*].
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "polars-mas-spark",
     master: str | None = None,
@@ -47,7 +69,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = default_shuffle_partitions(master)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -6,6 +6,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -530,6 +531,43 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
 
 
+def test_auto_pick_is_columnar_at_few_pairs(synth, spark, tmp_path, monkeypatch):
+    # A 3-pair logistic study read from parquet takes the columnar path
+    # (the auto pick no longer wants many pairs) and matches packed,
+    # failure row included.
+    import polars_mas_spark.pipeline as pipeline
+
+    _, df = synth
+    src = str(tmp_path / "synth.parquet")
+    df.write.parquet(src)
+    picked = []
+    fan_out = pipeline.run_associations
+
+    def spy(*args, **kwargs):
+        picked.append(kwargs["strategy"])
+        return fan_out(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "run_associations", spy)
+    sel = ["predictor", "dependent", "pval", "beta", "se", "cases",
+           "controls", "converged", "failed_reason", "equation"]
+
+    def run(strategy):
+        cfg = MASConfig(
+            predictors="x", dependents=["ph_0", "ph_1", "ph_rare"],
+            covariates=["age", "sex"], model="logistic", min_case_count=20,
+        )
+        out = run_pipeline(spark, cfg, input_path=src, strategy=strategy)
+        return (out.select(*sel).toPandas()
+                .sort_values("dependent").reset_index(drop=True))
+
+    auto = run(None)
+    assert picked == ["columnar"]
+    assert auto.set_index("dependent").loc["ph_rare", "failed_reason"].startswith(
+        "Insufficient case"
+    )
+    pd.testing.assert_frame_equal(auto, run("packed"), check_exact=False, rtol=1e-9)
+
+
 def test_recipe_pipeline_matches_unpivot(spark, tmp_path):
     # The columnar run_pipeline path reduces preprocessing (sex filter,
     # mean-fill, constant-drop, one-hot) to a PrepRecipe applied in-task
@@ -849,6 +887,70 @@ def test_reusable_scan_files_wide_rename_detected(spark, tmp_path):
         "rename beyond the default maxToStringFields must disqualify reuse"
     )
     assert reusable_scan_files(scan.filter(F.col("c00") > 0)) is None
+
+
+def test_input_row_count_reads_footers_without_a_job(spark, tmp_path):
+    """A plain parquet scan is counted from its footers, with no Spark
+    job; inputs that are not one fall back to a Spark count."""
+    from polars_mas_spark.operators.association import (
+        input_row_count,
+        reusable_scan_files,
+    )
+
+    sc = spark.sparkContext
+    path = str(tmp_path / "multi.parquet")
+    pdf = pd.DataFrame({"x": np.arange(50, dtype=float), "y": np.arange(50) % 3})
+    spark.createDataFrame(pdf).repartition(3).write.parquet(path)
+    # An appended empty frame leaves a 0-row part file in the directory.
+    spark.createDataFrame(pdf).limit(0).write.mode("append").parquet(path)
+    csv = str(tmp_path / "in.csv")
+    pdf.to_csv(csv, index=False)
+    scan = spark.read.parquet(path).select("y", "x")
+    files = reusable_scan_files(scan)
+    assert len(files) >= 4
+    assert 0 in [pq.read_metadata(f).num_rows for f in files]
+
+    def count_in_group(group, df):
+        sc.setJobGroup(group, group)
+        try:
+            return input_row_count(reusable_scan_files(df), df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert count_in_group("footer-count", scan) == scan.count() == 50
+    assert list(sc.statusTracker().getJobIdsForGroup("footer-count")) == []
+    fallbacks = {
+        "csv-count": spark.read.option("header", True).csv(csv),
+        "computed-count": scan.select((F.col("x") + 1).alias("x")),
+    }
+    for group, df in fallbacks.items():
+        assert count_in_group(group, df) == 50
+        assert list(sc.statusTracker().getJobIdsForGroup(group)), group
+
+
+def test_reusable_scan_files_rejects_projected_partition_columns(spark, tmp_path):
+    """A hive partition column exists only in directory names, so a scan
+    that projects one is not reusable as files; the auto pick then takes
+    the checkpoint and still fits with the column as a covariate."""
+    from polars_mas_spark.operators.association import reusable_scan_files
+
+    rng = np.random.default_rng(5)
+    n = 300
+    pdf = pd.DataFrame({"x": rng.normal(0, 1, n), "site": rng.integers(0, 2, n)})
+    for i in range(2):
+        pdf[f"y{i}"] = (rng.random(n) < 0.3).astype("int64")
+    path = str(tmp_path / "hive.parquet")
+    spark.createDataFrame(pdf).write.partitionBy("site").parquet(path)
+    scan = spark.read.parquet(path)
+    assert reusable_scan_files(scan) is None
+    assert reusable_scan_files(scan.select("x", "y0", "y1")) is not None
+    cfg = MASConfig(
+        predictors="x", dependents=["y0", "y1"], covariates=["site"],
+        model="logistic", min_case_count=5,
+    )
+    res = run_pipeline(spark, cfg, input_path=path).toPandas()
+    assert (res["failed_reason"] == "nan").all()
+    assert all("site" in e for e in res["equation"])
 
 
 def test_columnar_nan_predictor_parity(spark):

@@ -462,7 +462,7 @@ def test_pipeline_columnar_guard_for_correlated_drop(spark, tmp_path):
     )
     with pt.raises(ValueError, match="drop_correlated_above"):
         run_pipeline(spark, cfg, df=df, strategy="columnar")
-    # Auto: 8 pairs >= 8 would pick columnar; the guard reroutes to
+    # Auto: 60 rows would pick columnar; the guard reroutes to
     # packed and the pruner runs (age2 leaves every equation).
     cfg2 = MASConfig(
         predictors="x", dependents=[f"y{j}" for j in range(8)],
