@@ -1,20 +1,52 @@
-"""Runtime native-thread capping for executor Python workers.
+"""Once-per-process set-up for executor Python workers.
 
-The engine's kernels solve tiny (n x ~10) systems; with one Python
-worker pinned to every core, any intra-process parallelism (OpenBLAS
-threads, pyarrow's pool) only adds contention (session._BLAS_ENV has the
-environment-variable version and measurements). Environment variables
-only work if they are set before the worker process loads numpy — true
-for sessions built by get_spark()/bench.py/__spark_entry__, but NOT
-guaranteed when a third-party harness owns the SparkSession. This module
-is the runtime fallback: it calls openblas_set_num_threads on the
-already-loaded BLAS (what threadpoolctl does; not installed here) and
-caps pyarrow's pool, safe to call any number of times.
+Every Python stage a study ships (the columnar ``fit_partition``, the
+array kernel behind the packed path, the moments ``solve`` and
+``checkpoint_wide``'s ``write_parts``) calls [[prepare_worker]] first.
+It removes two costs a reused worker would otherwise pay per task or
+per fit; both steps are safe to call any number of times.
+
+1. Native threads. The engine's kernels solve tiny (n x ~10) systems;
+   with one Python worker pinned to every core, any intra-process
+   parallelism (OpenBLAS threads, pyarrow's pool) only adds contention
+   (session._BLAS_ENV has the environment-variable version and
+   measurements). Environment variables only work if they are set
+   before the worker process loads numpy — true for sessions built by
+   get_spark()/bench.py/__spark_entry__, but NOT guaranteed when a
+   third-party harness owns the SparkSession. [[limit_native_threads]]
+   is the runtime fallback: it calls openblas_set_num_threads on the
+   already-loaded BLAS (what threadpoolctl does; not installed here)
+   and caps pyarrow's pool.
+2. Zip-archive re-reads. pyspark's worker calls
+   ``importlib.invalidate_caches()`` at the start of every task
+   (``worker_util.setup_spark_files``). On CPython < 3.12 every
+   ``zipimporter`` then re-parses its archive's whole central
+   directory, and a worker importing pyspark from ``pyspark.zip``
+   (1,328 entries) holds about 16 of them: on a 4-core guest that was
+   0.25-0.3 s of CPU per task, most of an empty task's cost.
+   [[stamp_zip_importers]] makes the re-read conditional on the archive
+   having changed on disk. CPython 3.12 made the invalidation lazy, so
+   the step does nothing there.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import sys
+
 _DONE = False
+# archive path -> (st_ino, st_mtime_ns, st_size) when its directory was
+# last read. Process-wide on purpose: zipimport's own directory cache is.
+_ARCHIVE_STAMPS: dict[str, tuple[int, int, int]] = {}
+
+
+def prepare_worker() -> None:
+    """The once-per-process worker set-up: one native thread per
+    worker and stamped zip importers (module docstring). Cheap after
+    the first call, so it can sit at the top of every shipped closure."""
+    limit_native_threads(1)
+    stamp_zip_importers()
 
 
 def limit_native_threads(n: int = 1) -> None:
@@ -25,7 +57,6 @@ def limit_native_threads(n: int = 1) -> None:
     try:
         import ctypes
         import glob
-        import os
 
         import numpy as np
 
@@ -60,3 +91,61 @@ def limit_native_threads(n: int = 1) -> None:
         pa.set_io_thread_count(max(2, int(n)))
     except Exception:
         pass
+
+
+def _stat_stamp(path: str) -> tuple[int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_mtime_ns, st.st_size)
+
+
+def stamp_zip_importers() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_ino, st_mtime_ns, st_size)`` differs from the values
+    recorded at its last read (CPython < 3.12; a no-op on 3.12+).
+
+    One read per changed archive refreshes every importer on it: the
+    others adopt the directory zipimport already cached for the archive.
+    An archive rewritten in place is still re-read, and an archive that
+    cannot be stat'ed or has no cached directory takes the original
+    path. The importers already in ``sys.path_importer_cache`` are
+    stamped on install, so the next task is already cheap: in a Spark
+    worker the installing task's own ``invalidate_caches()`` has just
+    re-read them. Later ``SparkFiles``/``addPyFile`` archives get new
+    finders, which read their directory when created."""
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if hasattr(cls.invalidate_caches, "__wrapped__"):
+        return
+    reread = cls.invalidate_caches
+
+    @functools.wraps(reread)
+    def invalidate_caches(self):
+        archive = self.archive
+        stamp = _stat_stamp(archive)
+        files = zipimport._zip_directory_cache.get(archive)
+        if (
+            stamp is not None
+            and files is not None
+            and _ARCHIVE_STAMPS.get(archive) == stamp
+        ):
+            self._files = files
+            return
+        reread(self)
+        if stamp is not None and archive in zipimport._zip_directory_cache:
+            _ARCHIVE_STAMPS[archive] = stamp
+        else:
+            _ARCHIVE_STAMPS.pop(archive, None)
+
+    for importer in list(sys.path_importer_cache.values()):
+        if not isinstance(importer, cls):
+            continue
+        stamp = _stat_stamp(importer.archive)
+        if stamp is not None and importer.archive in zipimport._zip_directory_cache:
+            _ARCHIVE_STAMPS[importer.archive] = stamp
+    cls.invalidate_caches = invalidate_caches

@@ -419,6 +419,9 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
     def solve(batches):
         import math as _math
 
+        from polars_mas_spark.functions.native_threads import prepare_worker
+
+        prepare_worker()
         for pdf in batches:
             out = []
             for r in pdf.to_dict("records"):
@@ -630,9 +633,9 @@ def make_array_kernel(
                 break
 
     def akernel(predictor, dependent, x, y, cov_arrays) -> dict:
-        from polars_mas_spark.functions.native_threads import limit_native_threads
+        from polars_mas_spark.functions.native_threads import prepare_worker
 
-        limit_native_threads(1)  # no-op after first call per process
+        prepare_worker()  # cheap after the first call per process
         row = dict(defaults)
         row["predictor"] = predictor
         row["dependent"] = dependent
@@ -901,6 +904,9 @@ def checkpoint_wide(df: DataFrame, checkpoint_dir: str | None = None) -> str:
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
+        from polars_mas_spark.functions.native_threads import prepare_worker
+
+        prepare_worker()
         pid = TaskContext.get().partitionId()
         writer = None
         n = 0
@@ -1236,6 +1242,24 @@ def _parquet_files(path: str) -> list[str]:
     )
 
 
+def _pair_tasks(n_pairs: int, parallelism: int) -> int:
+    """The fewest tasks that keep the best makespan for ``n_pairs`` on
+    ``parallelism`` cores: ``ceil(N / ceil(N / parallelism))``. 6 pairs
+    on 4 cores make 3 tasks of 2 (a fourth task would read the design
+    once more and finish no sooner)."""
+    per_task = -(-n_pairs // max(1, parallelism))
+    return max(1, -(-n_pairs // max(1, per_task)))
+
+
+def _pair_ids(spark: SparkSession, n_pairs: int) -> DataFrame:
+    """Pair ids ``0 .. n_pairs - 1`` as ``spark.range`` slices: pure JVM,
+    no shuffle, each task a contiguous run of ids whose sizes differ by
+    at most 1 across [[_pair_tasks]] tasks. Id ``i`` is the pair
+    ``(predictors[i // D], dependents[i % D])`` for D dependents."""
+    n_tasks = _pair_tasks(n_pairs, spark.sparkContext.defaultParallelism)
+    return spark.range(0, n_pairs, 1, n_tasks)
+
+
 def _fit_columnar(
     df: DataFrame,
     config: MASConfig,
@@ -1245,9 +1269,12 @@ def _fit_columnar(
     source_files: list[str] | None = None,
 ) -> DataFrame:
     """Column-parallel fan-out: checkpoint the table to parquet (via
-    checkpoint_wide, unless the caller already has parquet files),
-    distribute the PAIR list, and let every task column-prune its own
-    parquet read (design columns + its slice of dependents).
+    checkpoint_wide, unless the caller already has parquet files), slice
+    the pair ids with ``spark.range`` ([[_pair_ids]]: balanced
+    contiguous runs, no shuffle; the closure carries the P + D names and
+    each task decodes its ids), and let every task column-prune its own
+    parquet read (design columns + its run's dependents, one read per
+    predictor in the run).
 
     This is the Spark-native re-expression of the reference's physical
     strategy — sink_ipc + per-worker memory-mapped column reads
@@ -1280,9 +1307,8 @@ def _fit_columnar(
     )
     schema = result_schema(model)
     columns = [f.name for f in schema.fields]
-    n_parts = max(1, min(len(predictors) * len(dependents),
-                         spark.sparkContext.defaultParallelism))
-    pairs = _pair_frame(spark, predictors, dependents).repartition(n_parts)
+    n_deps = len(dependents)
+    pair_ids = _pair_ids(spark, len(predictors) * n_deps)
 
     cov_names = cov_pairs
     extra_cols = list(recipe.read_cols) if recipe is not None else []
@@ -1292,18 +1318,16 @@ def _fit_columnar(
         import pandas as pd
         import pyarrow.dataset as pads
 
-        from polars_mas_spark.functions.native_threads import limit_native_threads
+        from polars_mas_spark.functions.native_threads import prepare_worker
 
-        limit_native_threads(1)
+        prepare_worker()
 
-        todo = []
-        for pdf in batches:
-            todo.extend(zip(pdf["predictor"], pdf["dependent"]))
-        if not todo:
-            return
         by_pred: dict[str, list[str]] = {}
-        for p, d in todo:
-            by_pred.setdefault(p, []).append(d)
+        for pdf in batches:
+            for i in pdf["id"].tolist():
+                by_pred.setdefault(predictors[i // n_deps], []).append(
+                    dependents[i % n_deps]
+                )
         for p, deps in by_pred.items():
             cols = [p, *[orig for _, orig in cov_names], *extra_cols, *deps]
             # use_threads=False: with one Python worker already pinned to
@@ -1372,4 +1396,4 @@ def _fit_columnar(
                 [{c: r[c] for c in columns} for r in rows], columns=columns
             )
 
-    return pairs.mapInPandas(fit_partition, schema=schema)
+    return pair_ids.mapInPandas(fit_partition, schema=schema)

@@ -191,10 +191,11 @@ def run_pipeline(
         # as parquet — reusing the source files directly when the input
         # already is a plain parquet scan, else one pyarrow checkpoint;
         # (2) reduce preprocessing to a PrepRecipe via narrow
-        # column-pruned stats jobs; (3) fan out the pair list, each task
-        # reading only its columns and applying the recipe in pandas —
-        # exactly how the reference's workers mmap its IPC file
-        # (analysis.py:54-59).
+        # column-pruned stats jobs; (3) slice the pair ids with
+        # spark.range into balanced contiguous runs (no shuffle), each
+        # task decoding its ids to (predictor, dependent), reading only
+        # its columns and applying the recipe in pandas — exactly how the
+        # reference's workers mmap its IPC file (analysis.py:54-59).
         if files is None:
             ckpt = checkpoint_wide(df, config.checkpoint_dir)
             df.unpersist()  # checkpoint written; drop any pre-count cache

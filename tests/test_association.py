@@ -530,6 +530,81 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
          .select(*sel).toPandas().sort_values("dependent").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
 
+    # Two predictors x five dependents: 10 pair ids, which local[8]
+    # slices into 5 tasks of 2, so ids 4-5 decode to (x, ph_null) and
+    # (age, ph_0) inside one task — a run spanning the predictor boundary.
+    cfg = MASConfig(
+        predictors=["x", "age"],
+        dependents=["ph_0", "ph_1", "ph_2", "ph_rare", "ph_null"],
+        covariates=["sex"], model="firth", min_case_count=20,
+    ).resolve(df.columns)
+
+    def fit(strategy):
+        return (run_associations(df, cfg, strategy=strategy,
+                                 checkpoint_dir=str(tmp_path))
+                .select(*sel).toPandas()
+                .sort_values(["predictor", "dependent"]).reset_index(drop=True))
+
+    packed = fit("packed")
+    assert len(packed) == 10
+    pd.testing.assert_frame_equal(packed, fit("columnar"),
+                                  check_exact=False, rtol=1e-9)
+
+
+def test_pair_ids_slice_into_balanced_contiguous_tasks(spark):
+    from polars_mas_spark.operators.association import _pair_ids, _pair_tasks
+
+    # parallelism 4: the fewest tasks that keep the best makespan.
+    assert [_pair_tasks(n, 4) for n in (6, 9, 10, 800)] == [3, 3, 4, 4]
+    par = spark.sparkContext.defaultParallelism
+    for n in (6, 9, 10, 800):
+        ids = _pair_ids(spark, n)
+        runs = (ids.groupBy(F.spark_partition_id().alias("task"))
+                .agg(F.count("*").alias("n"), F.min("id").alias("lo"),
+                     F.max("id").alias("hi"))
+                .toPandas())
+        n_tasks = math.ceil(n / math.ceil(n / par))
+        assert ids.rdd.getNumPartitions() == n_tasks == len(runs)
+        assert runs["n"].sum() == n
+        assert runs["n"].max() - runs["n"].min() <= 1
+        assert ((runs["hi"] - runs["lo"] + 1) == runs["n"]).all()
+
+
+def test_worker_zip_stamp_skips_directory_rereads(spark):
+    # Inside a real Python worker: after the set-up step, the per-task
+    # importlib.invalidate_caches() re-reads no zip directory.
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        from polars_mas_spark.functions.native_threads import prepare_worker
+
+        prepare_worker()
+        n_zip = sum(
+            isinstance(v, zipimport.zipimporter)
+            for v in sys.path_importer_cache.values()
+        )
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda p: reads.append(p) or read_directory(p)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"zip_importers": [n_zip], "reads": [len(reads)]})
+
+    out = spark.range(1, numPartitions=1).mapInPandas(
+        probe, "zip_importers long, reads long"
+    ).toPandas()
+    if out["zip_importers"][0] == 0:
+        pytest.skip("the Python worker imports nothing from a zip archive")
+    assert out["reads"][0] == 0
+
 
 def test_auto_pick_is_columnar_at_few_pairs(synth, spark, tmp_path, monkeypatch):
     # A 3-pair logistic study read from parquet takes the columnar path
