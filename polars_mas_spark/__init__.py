@@ -1,7 +1,11 @@
 """polars-mas-spark: a PySpark-native Multiple Association Study engine
-with the query surface of `idinsmore1/polars-mas`, re-architected for
-Spark's distributed execution model, plus large-scale training-data
-pipeline operators (dedup, similarity search, text analysis).
+with the study surface of `idinsmore1/polars-mas`, re-architected for
+Spark's distributed execution model: read a wide samples x variables
+table, preprocess it, fit one regression per (predictor, dependent)
+pair, correct for multiple testing, annotate and write the results.
+
+``operators/`` also still holds a data-pipeline operator library (dedup,
+text, similarity, sampling, ...) that the MAS pipeline never imports.
 """
 
 from polars_mas_spark.config import MASConfig, resolve_columns

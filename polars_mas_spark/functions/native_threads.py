@@ -12,8 +12,8 @@ per fit; both steps are safe to call any number of times.
    (session._BLAS_ENV has the environment-variable version and
    measurements). Environment variables only work if they are set
    before the worker process loads numpy — true for sessions built by
-   get_spark()/bench.py/__spark_entry__, but NOT guaranteed when a
-   third-party harness owns the SparkSession. [[limit_native_threads]]
+   get_spark(), but NOT guaranteed when a third-party harness owns the
+   SparkSession. [[limit_native_threads]]
    is the runtime fallback: it calls openblas_set_num_threads on the
    already-loaded BLAS (what threadpoolctl does; not installed here)
    and caps pyarrow's pool.

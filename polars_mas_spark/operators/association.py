@@ -620,8 +620,8 @@ def make_array_kernel(
     overhead, none of it arithmetic. Every numeric decision here is
     made by the same operations on the same float64 values as the old
     pdf path (y.sum(), pd.unique-based distinct counts, column_stack →
-    add_intercept's C-order copy), so results are bit-identical — the
-    r13 A/B battery re-ran green (see OPTIMIZATION_r13.md)."""
+    add_intercept's C-order copy), so results are bit-identical —
+    tools/ab_kernel_battery.py checks this."""
     defaults = _LINEAR_DEFAULTS if model in _QUANT_MODELS else _BINARY_DEFAULTS
     fit_func = _MODEL_FUNCS[model]
     cov_pairs = safe_covariate_pairs(covariates)

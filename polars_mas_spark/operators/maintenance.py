@@ -359,8 +359,7 @@ def drift_psi(
 
 
 def _digest_encoding(cols: list[str]):
-    """Canonical row encoding shared by table_digest and its streaming
-    twin (streaming.events.stream_table_digest): length-prefixed fields
+    """Canonical row encoding of table_digest: length-prefixed fields
     ``v{len}:{val}`` (NULL -> ``n``), '|'-joined — a prefix code, so
     embedded delimiters cannot shift field boundaries."""
 

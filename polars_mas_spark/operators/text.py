@@ -205,10 +205,7 @@ PII_PATTERNS: list[tuple[str, str]] = [
 # Engine-portable strip classes (explicit code ranges behave identically
 # in Java regex and RE2, unlike named \p{Cntrl}/\p{Cc} whose sets differ):
 # C0 controls minus \t\n\r, DEL, and the zero-width Cf characters
-# (ZWSP/ZWNJ/ZWJ/BOM) that survive NFC and corrupt tokenization. ONE
-# range table generates both syntaxes (Java \uXXXX vs RE2 \x{XXXX}) so
-# the engine regex and the DuckDB oracle's replay class cannot drift
-# (ADVICE r10 #4 — queries_ext._UNORM_ORACLE interpolates _CTRL_RE2).
+# (ZWSP/ZWNJ/ZWJ/BOM) that survive NFC and corrupt tokenization.
 _CTRL_RANGES: tuple[tuple[int, int], ...] = (
     (0x00, 0x08), (0x0B, 0x0C), (0x0E, 0x1F), (0x7F, 0x7F),
     (0x200B, 0x200D), (0xFEFF, 0xFEFF),
@@ -225,17 +222,13 @@ def _ctrl_class(esc) -> str:
 _CTRL_JAVA = _ctrl_class(
     lambda cp: f"\\x{cp:02X}" if cp <= 0xFF else f"\\u{cp:04X}"
 )
-_CTRL_RE2 = _ctrl_class(
-    lambda cp: f"\\x{cp:02X}" if cp <= 0xFF else f"\\x{{{cp:04X}}}"
-)
 
 
 def unicode_normalize_col(text, form: str = "NFC"):
     """COLUMN form of [[unicode_normalize]] — the one normalize+strip
-    implementation, shared by the batch operator and the streaming
-    head-of-pipeline twin (streaming.events.stream_normalized_dedup's
-    ``unicode_form``): NFC/NFKC/NFD/NFKD via the Arrow-batched pandas
-    UDF (NULL -> ''), then the explicit code-range strip."""
+    implementation behind the batch operator: NFC/NFKC/NFD/NFKD via the
+    Arrow-batched pandas UDF (NULL -> ''), then the explicit code-range
+    strip."""
     from pyspark.sql.functions import pandas_udf
 
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):

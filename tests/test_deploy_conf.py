@@ -4,7 +4,7 @@
 key or a value Spark rejects would only surface on a real cluster. This
 boots a REAL local session with the profile's query-shaping settings
 applied (everything except cluster-topology keys that need YARN/K8s or
-an external shuffle service) and runs three representative queries
+an external shuffle service) and runs a packed and a columnar MAS study
 through it, so the profile cannot bit-rot.
 
 Runs in a subprocess: the test session's SparkContext is
@@ -15,7 +15,8 @@ import subprocess
 import sys
 from pathlib import Path
 
-CONF = Path(__file__).resolve().parent.parent / "deploy" / "spark-defaults-cluster.conf"
+ROOT = Path(__file__).resolve().parent.parent
+CONF = ROOT / "deploy" / "spark-defaults-cluster.conf"
 
 # Keys that only make sense with a cluster manager / external shuffle
 # service / history server; everything else must be locally bootable.
@@ -50,7 +51,7 @@ def parse_conf(path: Path) -> dict[str, str]:
 def test_conf_parses_and_covers_the_sizing_knobs():
     conf = parse_conf(CONF)
     # The three sizing knobs the header says scale together, plus the
-    # plan-shaping settings every registered query's audit assumes.
+    # plan-shaping settings the MAS fan-out relies on.
     for key in (
         "spark.executor.instances",
         "spark.sql.shuffle.partitions",
@@ -72,7 +73,9 @@ def test_conf_parses_and_covers_the_sizing_knobs():
 
 _DRIVE = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+
+root, work = sys.argv[1], sys.argv[2]
+sys.path.insert(0, root)
 from tests.test_deploy_conf import CONF, parse_conf, _CLUSTER_ONLY_PREFIXES
 
 from pyspark.sql import SparkSession
@@ -95,35 +98,50 @@ assert applied >= 15, applied
 assert spark.conf.get("spark.sql.shuffle.partitions") == conf["spark.sql.shuffle.partitions"]
 assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
-# Three representative queries straight from the registry: a scan
-# (pushdown path), a shuffle agg + broadcast join (TPC-H shape), and a
-# Pandas-UDF kernel fan-out (Arrow boundary) — at 16384 shuffle
-# partitions AQE must coalesce these, proving the profile doesn't choke
-# small stages either.
-from polars_mas_spark import queries as q
-from polars_mas_spark import queries_ext as qe
+# Two MAS studies through run_pipeline: the packed shuffle into the
+# grouped Arrow kernel, and the columnar per-task parquet reads. At
+# 16384 shuffle partitions AQE must coalesce these small stages,
+# proving the profile doesn't choke them.
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 
-sf = "/root/testdata/sf0.001"
-n1 = q.QUERIES["scan_project"](spark, sf).count()
-n2 = q.QUERIES["tpch_q3"](spark, sf).count()
-n3 = qe.q_mas_logistic_fanout(spark, sf).count()
-assert n1 > 0 and n2 > 0 and n3 > 0, (n1, n2, n3)
-print("DEPLOY_CONF_SMOKE_OK", applied, n1, n2, n3)
+from polars_mas_spark import MASConfig, run_pipeline
+
+rng = np.random.default_rng(7)
+n = 400
+x = rng.normal(size=n)
+cols = {"x": x, "cov": rng.normal(size=n)}
+deps = [f"y{i}" for i in range(3)]
+for d in deps:
+    cols[d] = (rng.random(n) < 1.0 / (1.0 + np.exp(-x))).astype(np.int64)
+path = f"{work}/wide.parquet"
+pq.write_table(pa.table(cols), path)
+rows = {}
+for strategy in ("packed", "columnar"):
+    cfg = MASConfig(
+        predictors="x", dependents=deps, covariates=["cov"],
+        model="logistic", min_case_count=10,
+    )
+    res = run_pipeline(spark, cfg, input_path=path, strategy=strategy)
+    rows[strategy] = res.count()
+assert all(v > 0 for v in rows.values()), rows
+print("DEPLOY_CONF_SMOKE_OK", applied, rows["packed"], rows["columnar"])
 spark.stop()
 """
 
 
-def test_profile_boots_and_runs_queries():
+def test_profile_boots_and_runs_queries(tmp_path):
     proc = subprocess.run(
-        [sys.executable, "-c", _DRIVE],
+        [sys.executable, "-c", _DRIVE, str(ROOT), str(tmp_path)],
         capture_output=True,
         text=True,
-        # A fresh 16384-shuffle-partition session + three queries takes
+        # A fresh 16384-shuffle-partition session + two studies takes
         # ~230 s on an IDLE box; under background load the 420 s limit
         # this started with flaked (r7). Generous ceiling — the test is
         # about booting the profile at all, not about speed.
         timeout=900,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "DEPLOY_CONF_SMOKE_OK" in proc.stdout, proc.stdout[-2000:]

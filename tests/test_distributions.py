@@ -78,7 +78,7 @@ def test_norm_ppf_vec_matches_scalar():
 
 
 def test_sql_probit_replay_matches_numpy():
-    """The rint_full oracle's generated-SQL probit (queries.py) must
+    """The rint_full oracle's generated-SQL probit (test_mas_goldens) must
     track norm_ppf_vec exactly enough that round(6) can never diverge:
     same Acklam/Cody coefficients (imported, not copied), same Horner
     order, Halley-contracted. Probes cover every branch boundary of
@@ -87,7 +87,7 @@ def test_sql_probit_replay_matches_numpy():
     import numpy as np
 
     from polars_mas_spark.functions.distributions import norm_ppf_vec
-    from polars_mas_spark.queries import _erfc_pos_sql, _probit_x0_sql
+    from tests.test_mas_goldens import _erfc_pos_sql, _probit_x0_sql
 
     rng = np.random.default_rng(42)
     ps = np.unique(np.concatenate([

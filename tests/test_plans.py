@@ -4,62 +4,69 @@ survive a 100x scale-up are checked, not assumed.
 - projection pruning reaches the parquet scan (ReadSchema)
 - predicate pushdown reaches the scan (PushedFilters)
 - dimension joins broadcast instead of shuffling the fact side
-- the MAS fan-out has exactly one exchange feeding the Python stage
-- relational stages run inside WholeStageCodegen
+- the wide->long unpivot is one JVM Expand over one scan
+- the PheWAS annotation join broadcasts the definition table
+- each fan-out strategy has exactly one exchange feeding its Python stage
+- RINT's global rank never funnels through a single partition
+- the data-pipeline operators keep their shuffle-free / broadcast /
+  no-pair-join shapes
 """
 
 from __future__ import annotations
 
-import pytest
+import re
+
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
 
-from polars_mas_spark.plans import formatted_plan as plan_of
-from polars_mas_spark.plans import op_count as _plans_op_count
+
+def plan_of(df) -> str:
+    """The formatted physical plan (what ``df.explain('formatted')``
+    prints), as a string."""
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
-@pytest.fixture(scope="module")
-def qs():
-    import __spark_entry__ as e
-
-    return e.queries()
-
-
-def test_projection_pruned_to_scan(spark, qs):
-    plan = plan_of(qs["scan_project"](spark, SF_DIR))
-    read_schema = next(l for l in plan.splitlines() if "ReadSchema" in l)
-    assert "o_orderkey" in read_schema and "o_totalprice" in read_schema
-    assert "o_comment" not in read_schema  # untouched column must not be read
+def _op_count(plan: str, op: str) -> int:
+    """Count operator DETAIL headers ('(N) OpName') — formatted plans
+    list each operator twice (tree line + detail section)."""
+    return len(re.findall(rf"\(\d+\) {re.escape(op)}\b", plan))
 
 
-def test_filter_pushed_to_scan(spark, qs):
-    plan = plan_of(qs["filter_predicate"](spark, SF_DIR))
-    pushed = next(l for l in plan.splitlines() if "PushedFilters" in l)
-    assert "c_mktsegment" in pushed and "c_acctbal" in pushed
+def test_unpivot_is_jvm_expand(spark):
+    """The fan-out's wide->long unpivot must compile to the JVM Expand
+    operator (one pipelined whole-stage-codegen pass), not a union of
+    per-column scans."""
+    from polars_mas_spark.operators.association import build_long_table
+
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    long_df = build_long_table(
+        li, ["l_quantity"], ["l_extendedprice", "l_discount", "l_tax"], []
+    )
+    plan = plan_of(long_df)
+    assert _op_count(plan, "Expand") == 1
+    assert "* Expand" in plan  # inside a WholeStageCodegen span
+    assert _op_count(plan, "Scan parquet") + _op_count(plan, "BatchScan") == 1
 
 
-_op_count = _plans_op_count
+def test_annotation_join_broadcasts(spark):
+    """The PheWAS annotation join must broadcast the phecode definition
+    table, never shuffle the results."""
+    from polars_mas_spark.operators.postprocessing import add_phecode_definitions
+    from polars_mas_spark.sources.readers import read_phecode_definitions
 
-
-def test_dimension_joins_broadcast(spark, qs):
-    plan = plan_of(qs["tpch_q5ish"](spark, SF_DIR))
-    assert _op_count(plan, "BroadcastHashJoin") == 3  # supplier, nation, region
-    assert "SortMergeJoin" not in plan  # fact side must never shuffle for dims
-
-
-def test_annotation_join_broadcasts(spark, qs):
-    plan = plan_of(qs["annotation_join"](spark, SF_DIR))
+    results = spark.createDataFrame(
+        [("x", "008.5", 0.01), ("x", "250.1", 0.2)],
+        "predictor string, dependent string, pval double",
+    )
+    out = add_phecode_definitions(
+        results, read_phecode_definitions(spark), is_phewas=True
+    )
+    plan = plan_of(out)
     assert _op_count(plan, "BroadcastHashJoin") == 1
-
-
-def test_aggregate_is_two_phase(spark, qs):
-    """tpch_q1 must plan map-side partial aggregation (two HashAggregates
-    around one exchange) — the shape that keeps a 100 TB groupBy's
-    shuffle proportional to groups, not rows."""
-    plan = plan_of(qs["tpch_q1"](spark, SF_DIR))
-    assert _op_count(plan, "HashAggregate") == 2
-    assert _op_count(plan, "Exchange") == 1
+    assert "SortMergeJoin" not in plan
 
 
 def test_mas_fanout_single_exchange_to_python(spark):
@@ -149,15 +156,6 @@ def test_moments_fanout_shuffles_aggregates_not_rows(spark):
     assert _op_count(plan, "MapInPandas") == 1
 
 
-def test_unpivot_is_jvm_expand(spark, qs):
-    """U1 must compile to the JVM Expand operator (one pipelined
-    whole-stage-codegen pass), not a union of per-column scans."""
-    plan = plan_of(qs["unpivot_long"](spark, SF_DIR))
-    assert _op_count(plan, "Expand") == 1
-    assert "* Expand" in plan  # inside a WholeStageCodegen span
-    assert _op_count(plan, "Scan parquet") + _op_count(plan, "BatchScan") == 1
-
-
 def test_rint_has_no_single_partition_stage(spark):
     """VERDICT r1 'What's wrong #2': RINT must not funnel the table
     through one task. The distributed two-phase rank keeps every window
@@ -173,22 +171,175 @@ def test_rint_has_no_single_partition_stage(spark):
     assert "windowspecdefinition" not in plan or "Window" in plan
 
 
-def test_curation_signals_are_map_only(spark, qs):
+# ---------------------------------------------------------------------------
+# Scan pushdown, broadcast dimensions, two-phase aggregation
+# ---------------------------------------------------------------------------
+
+
+def _t(spark, name):
+    return spark.read.parquet(f"{SF_DIR}/{name}.parquet")
+
+
+def _events(spark):
+    """The events table with ``ts`` as a session-tz TimestampType (the
+    file stores it without a UTC flag, which Spark reads as NTZ)."""
+    return _t(spark, "events").withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def test_projection_pruned_to_scan(spark):
+    plan = plan_of(
+        _t(spark, "orders").select("o_orderkey", "o_totalprice", "o_orderdate")
+    )
+    read_schema = next(l for l in plan.splitlines() if "ReadSchema" in l)
+    assert "o_orderkey" in read_schema and "o_totalprice" in read_schema
+    assert "o_comment" not in read_schema  # untouched column must not be read
+
+
+def test_filter_pushed_to_scan(spark):
+    c = _t(spark, "customer")
+    plan = plan_of(
+        c.filter(
+            (F.col("c_mktsegment") == "BUILDING") & (F.col("c_acctbal") > 100)
+        ).select("c_custkey", "c_name", "c_acctbal")
+    )
+    pushed = next(l for l in plan.splitlines() if "PushedFilters" in l)
+    assert "c_mktsegment" in pushed and "c_acctbal" in pushed
+
+
+def test_dimension_joins_broadcast(spark):
+    """A multi-dimension star join: all three dims broadcast, zero
+    shuffles on the fact side before the final aggregate."""
+    li = _t(spark, "lineitem")
+    s = _t(spark, "supplier")
+    n = _t(spark, "nation")
+    r = _t(spark, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
+    q = (
+        li.join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
+        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
+        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        .groupBy(F.col("n_name").alias("nation"))
+        .agg(
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
+            ).alias("revenue")
+        )
+    )
+    plan = plan_of(q)
+    assert _op_count(plan, "BroadcastHashJoin") == 3  # supplier, nation, region
+    assert "SortMergeJoin" not in plan  # fact side must never shuffle for dims
+
+
+def test_aggregate_is_two_phase(spark):
+    """A pricing-summary groupBy must plan map-side partial aggregation
+    (two HashAggregates around one exchange) — the shape that keeps a
+    100 TB groupBy's shuffle proportional to groups, not rows."""
+    li = _t(spark, "lineitem")
+    q = (
+        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("date"))
+        .groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 4).alias("sum_qty"),
+            F.round(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
+            F.round(
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
+            ).alias("sum_disc_price"),
+            F.round(
+                F.sum(
+                    F.col("l_extendedprice")
+                    * (1 - F.col("l_discount"))
+                    * (1 + F.col("l_tax"))
+                ),
+                4,
+            ).alias("sum_charge"),
+            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
+            F.round(F.avg("l_extendedprice"), 6).alias("avg_price"),
+            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
+            F.count("*").alias("count_order"),
+        )
+    )
+    plan = plan_of(q)
+    assert _op_count(plan, "HashAggregate") == 2
+    assert _op_count(plan, "Exchange") == 1
+
+
+# ---------------------------------------------------------------------------
+# Data-pipeline operators
+# ---------------------------------------------------------------------------
+
+
+def _docs(spark):
+    return _t(spark, "documents")
+
+
+def _plant(docs, rules):
+    """``docs`` (doc_id, text) with a span appended or prepended where a
+    ``doc_id`` predicate holds: ``rules`` is a list of
+    (predicate, span, prepend)."""
+    text = None
+    for pred, span, prepend in rules:
+        val = (
+            F.concat(F.lit(span + " "), F.col("text")) if prepend
+            else F.concat(F.col("text"), F.lit(" " + span))
+        )
+        text = F.when(pred, val) if text is None else text.when(pred, val)
+    return docs.select("doc_id", text.otherwise(F.col("text")).alias("text"))
+
+
+def _span(prefix):
+    return " ".join(f"{prefix}{i}" for i in range(12))
+
+
+def _exchange_blocks(plan):
+    import re
+
+    return [
+        block for block in re.split(r"\n\n", plan)
+        if block.lstrip().startswith("(") and "Exchange" in block.splitlines()[0]
+    ]
+
+
+def test_curation_signals_are_map_only(spark):
     """repetition_signals / quality_filter / pii_scrub must compile to a
     single-scan map-only plan: NO Exchange of any kind. Per-document
     signals that shuffle do not survive 100 TB."""
-    for name in ("repetition_signals", "quality_filter", "pii_scrub"):
-        plan = plan_of(qs[name](spark, SF_DIR))
+    from polars_mas_spark.operators import text as tx
+
+    docs = _docs(spark)
+    injected = docs.select("doc_id", "text").withColumn(
+        "text",
+        F.concat(
+            F.col("text"),
+            F.lit(" reach user"), F.col("doc_id").cast("string"),
+            F.lit("@mail.example.com or http://site.example/page?id="),
+            F.col("doc_id").cast("string"),
+            F.lit(" tel +1 555 010 "),
+            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+        ),
+    )
+    for name, q in (
+        ("repetition_signals", tx.repetition_signals(docs, "doc_id", "text")),
+        ("quality_filter",
+         tx.quality_filter(docs, "doc_id", "text", lang_col="lang")),
+        ("pii_scrub", tx.pii_scrub(injected, "text")),
+    ):
+        plan = plan_of(q)
         assert "Exchange" not in plan, f"{name} shuffles:\n{plan}"
 
 
-def test_span_dedup_no_pairs_no_python(spark, qs):
+def test_span_dedup_no_pairs_no_python(spark):
     """span_dedup must stay linear: no join of the window table against
     itself (pair blow-up), no row-Python, no cartesian — the window
     fingerprint rank + position anti-join + reassembly are all keyed
     shuffles. The fingerprint shuffle must carry md5 keys, not window
     text (the gram column is a Project-computed md5)."""
-    plan = plan_of(qs["span_dedup"](spark, SF_DIR))
+    from polars_mas_spark.operators import dedup as dd
+
+    plant = _span("zq")
+    planted = _plant(_docs(spark), [
+        (F.col("doc_id") % 101 == 0, plant, True),
+        (F.col("doc_id") % 101 == 1, plant, False),
+    ])
+    plan = plan_of(dd.span_dedup(planted, "doc_id", "text", k=10))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "SortMergeJoin LeftAnti" in plan or "ShuffledHashJoin LeftAnti" in plan \
@@ -196,7 +347,7 @@ def test_span_dedup_no_pairs_no_python(spark, qs):
     assert "md5" in plan  # fingerprints, never raw window text, shuffle
 
 
-def test_incremental_minhash_seen_text_never_shuffles(spark, qs):
+def test_incremental_minhash_seen_text_never_shuffles(spark):
     """The accepted-corpus side of incremental_minhash_dedup must
     collapse to distinct (band, bucket) keys before any join: no
     Exchange in the plan may carry the text column (tokenize/hash are
@@ -204,56 +355,102 @@ def test_incremental_minhash_seen_text_never_shuffles(spark, qs):
     doc), and there must be no pair join (cartesian) or row-Python."""
     import re
 
-    plan = plan_of(qs["incremental_minhash_dedup"](spark, SF_DIR))
+    from polars_mas_spark.operators import dedup as dd
+
+    docs = _docs(spark).select("doc_id", "text")
+    seen = docs.filter(F.col("doc_id") % 2 == 0)
+    newb = (
+        docs.filter(F.col("doc_id") % 2 == 1)
+        .unionAll(
+            docs.filter(F.col("doc_id") % 50 == 0).select(
+                (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+            )
+        )
+        .unionAll(
+            docs.filter(F.col("doc_id") % 50 == 10).select(
+                (F.col("doc_id") + 2000000).alias("doc_id"),
+                F.concat(F.col("text"), F.lit(" zz7new")).alias("text"),
+            )
+        )
+    )
+    plan = plan_of(dd.incremental_minhash_dedup(
+        newb, seen, "doc_id", "text",
+        num_hashes=16, bands=4, rows_per_band=4,
+    ).select("doc_id"))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     # Every Exchange node's Input/Output attribute list must be free of
     # the raw text column (formatted plans list attributes per node).
-    inspected = 0
-    for block in re.split(r"\n\n", plan):
-        if block.lstrip().startswith("(") and "Exchange" in block.splitlines()[0]:
-            inspected += 1
-            assert not re.search(r"\btext#", block), f"text shuffles:\n{block}"
+    blocks = _exchange_blocks(plan)
+    for block in blocks:
+        assert not re.search(r"\btext#", block), f"text shuffles:\n{block}"
     # Guard against vacuous green: the signature groupBys guarantee
     # Exchanges exist, so zero inspected blocks means the block
     # heuristic broke, not that the plan is shuffle-free.
-    assert inspected >= 1, plan
+    assert len(blocks) >= 1, plan
 
 
-def test_incremental_span_decon_seen_text_never_shuffles(spark, qs):
+def test_incremental_span_decon_seen_text_never_shuffles(spark):
     """The accepted-corpus side of incremental_span_decontaminate must
     enter the match as distinct md5 fingerprints: no Exchange may carry
     the raw text column, and there is no pair join or row-Python."""
     import re
 
-    plan = plan_of(qs["incremental_span_decontaminate"](spark, SF_DIR))
+    from polars_mas_spark.operators import dedup as dd
+
+    planted = _plant(_docs(spark), [
+        (F.col("doc_id") % 60 == 1, _span("ix"), False),
+        (F.col("doc_id") % 45 == 0, _span("ix"), True),
+        (F.col("doc_id") % 132 == 90, _span("jx"), True),
+    ])
+    seen = planted.filter(F.col("doc_id") % 3 != 0)
+    new_batch = planted.filter(F.col("doc_id") % 3 == 0)
+    fps = dd.span_fingerprints(seen, "text", k=10)
+    plan = plan_of(dd.incremental_span_decontaminate(
+        new_batch, fps, "doc_id", "text", k=10, seen_is_fingerprints=True
+    ))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
-    inspected = 0
-    for block in re.split(r"\n\n", plan):
-        if block.lstrip().startswith("(") and "Exchange" in block.splitlines()[0]:
-            inspected += 1
-            assert not re.search(r"\btext#", block), f"text shuffles:\n{block}"
+    blocks = _exchange_blocks(plan)
+    for block in blocks:
+        assert not re.search(r"\btext#", block), f"text shuffles:\n{block}"
     # fingerprint distinct + semi join + reassembly guarantee Exchanges
     # exist; zero inspected means the block heuristic broke.
-    assert inspected >= 1, plan
+    assert len(blocks) >= 1, plan
 
 
-def test_contamination_broadcasts_benchmark(spark, qs):
+def test_contamination_broadcasts_benchmark(spark):
     """The benchmark shingle set must broadcast; the corpus side must
     not appear under any shuffle Exchange before the join."""
-    plan = plan_of(qs["ngram_contamination"](spark, SF_DIR))
+    from polars_mas_spark.operators import text as tx
+
+    docs = _docs(spark)
+    bench = docs.filter(F.col("doc_id") < 20)
+    plan = plan_of(tx.ngram_contamination(docs, bench, "doc_id", "text", n=3))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
-def test_rollup_is_one_expand_one_aggregate(spark, qs):
+def test_rollup_is_one_expand_one_aggregate(spark):
     """rollup/cube must compile to a single Expand + one aggregation
     pair (one shuffle for ALL grouping levels), not per-level scans."""
     import re
 
-    for name in ("event_rollup", "event_cube"):
-        plan = plan_of(qs[name](spark, SF_DIR))
+    from polars_mas_spark.operators.olap import cube_report, rollup_report
+
+    ev = _events(spark).withColumn(
+        "cents", F.round(F.col("value") * 100, 0).cast("long")
+    )
+    for name, q in (
+        ("rollup", rollup_report(
+            ev.withColumn("day", F.to_date("ts")), ["event_type", "day"], "cents"
+        )),
+        ("cube", cube_report(
+            ev.withColumn("user_bucket", F.col("user_id") % 10),
+            ["event_type", "user_bucket"], "cents",
+        )),
+    ):
+        plan = plan_of(q)
         assert "Expand" in plan, plan
         scan_nodes = re.findall(r"\(\d+\) Scan parquet", plan)
         assert len(scan_nodes) == 1, f"{name} rescans:\n{plan}"
@@ -309,11 +506,25 @@ def test_salted_join_spreads_hot_key(spark):
     assert n_salts >= 4
 
 
-def test_interval_join_is_equi_not_nested_loop(spark, qs):
+def test_interval_join_is_equi_not_nested_loop(spark):
     """The binned interval join must plan as an equi-join (hash/SMJ/
     broadcast-hash) on (key, bin) — never the BroadcastNestedLoopJoin
     Spark gives a raw theta BETWEEN join."""
-    plan = plan_of(qs["purchases_in_click_sessions"](spark, SF_DIR))
+    from polars_mas_spark.operators.joins import interval_join
+
+    ev = _events(spark)
+    clicks = ev.filter(F.col("event_type") == "click")
+    iv = clicks.groupBy(
+        "user_id", F.to_date("ts").alias("day")
+    ).agg(F.min("ts").alias("span_start"), F.max("ts").alias("span_end"))
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "event_id", "user_id", "ts"
+    )
+    res = interval_join(
+        purchases, iv, on="user_id", ts_col="ts",
+        start_col="span_start", end_col="span_end", bin_seconds=3600,
+    )
+    plan = plan_of(res)
     assert "NestedLoop" not in plan, plan
 
 
@@ -342,7 +553,7 @@ def test_partitioned_layout_prunes_statically_and_dynamically(spark, tmp_path):
 
 
 def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from polars_mas_spark.sources.writers import compact_parquet, write_partitioned
+    from polars_mas_spark.sources.writers import compact_parquet
     import glob
 
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
@@ -357,65 +568,105 @@ def test_compact_parquet_reduces_file_count(spark, tmp_path):
     assert spark.read.parquet(path).count() == n_before
 
 
-def test_vocab_encode_applies_via_broadcast(spark, qs):
+def test_vocab_encode_applies_via_broadcast(spark):
     """The dictionary side of encode_column must broadcast (it exists
     because the value set is small); the fit must contain no
     single-partition global window."""
-    plan = plan_of(qs["vocab_encode_sources"](spark, SF_DIR))
+    from polars_mas_spark.operators import encoding as enc
+
+    docs = _docs(spark).select("doc_id", "source")
+    plan = plan_of(enc.encode_column(docs, "source"))
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_weighted_sample_is_takeordered_not_global_sort(spark, qs):
+def test_weighted_sample_is_takeordered_not_global_sort(spark):
     """Top-n by jitter key must compile to TakeOrderedAndProject
     (per-partition heaps merged on the driver), never a full global
     Sort + Limit of the corpus."""
-    plan = plan_of(qs["weighted_sample_docs"](spark, SF_DIR))
+    from polars_mas_spark.operators import sampling as smp
+
+    docs = _docs(spark).select("doc_id", "n_chars")
+    plan = plan_of(smp.weighted_sample_n(docs, "doc_id", "n_chars", n=200))
     assert "TakeOrderedAndProject" in plan
 
 
-def test_maintenance_joins_are_hash_not_nested_loop(spark, qs):
+def test_maintenance_joins_are_hash_not_nested_loop(spark):
     """snapshot_diff and cdc_apply are single key-join programs — no
     nested-loop/cartesian fallback, exactly one join each."""
-    for name in ("snapshot_diff_customers", "cdc_apply_orders"):
-        plan = plan_of(qs[name](spark, SF_DIR))
+    from polars_mas_spark.operators import maintenance as mt
+
+    cust = _t(spark, "customer")
+    newt = (
+        cust.filter(F.col("c_custkey") % 7 != 0)
+        .withColumn(
+            "c_acctbal",
+            F.when(
+                F.col("c_custkey") % 5 == 0, F.col("c_acctbal") + 100
+            ).otherwise(F.col("c_acctbal")),
+        )
+        .unionByName(
+            cust.filter(F.col("c_custkey") % 11 == 0).withColumn(
+                "c_custkey", F.col("c_custkey") + 1000000
+            )
+        )
+    )
+    base = _t(spark, "orders").select(
+        "o_orderkey", "o_totalprice", "o_orderstatus"
+    )
+    changes = _t(spark, "lineitem").select(
+        F.col("l_orderkey").alias("o_orderkey"),
+        F.col("l_shipdate").alias("ts"),
+        F.struct(
+            "l_linenumber", "l_extendedprice", "l_returnflag"
+        ).alias("seq"),
+        F.when(F.col("l_returnflag") == "R", "D").otherwise("U").alias("op"),
+        F.col("l_extendedprice").alias("o_totalprice"),
+    )
+    for name, q in (
+        ("snapshot_diff", mt.snapshot_diff(cust, newt, ["c_custkey"])),
+        ("cdc_apply", mt.cdc_apply(
+            base, changes, ["o_orderkey"], "ts", "seq", "op", ["o_totalprice"]
+        )),
+    ):
+        plan = plan_of(q)
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
-def test_resample_windows_are_key_partitioned(spark, qs):
+def test_resample_windows_are_key_partitioned(spark):
     """No single-partition window in the interpolation: every window
     partitions by the series key."""
-    plan = plan_of(qs["resample_interpolate_events"](spark, SF_DIR))
+    import re
+
+    from polars_mas_spark.operators import windows as wd
+
+    ev = (
+        _events(spark)
+        .filter(F.col("event_id") % 13 == 0)
+        .select("event_type", "ts", "value")
+    )
+    plan = plan_of(wd.resample_interpolate(ev, "event_type", "ts", "value", 3600))
     assert "CartesianProduct" not in plan
     # A global (unpartitioned) window would appear as an Exchange
     # SinglePartition feeding a Window; assert none exists.
-    import re
-
     assert not re.search(r"Exchange SinglePartition[\s\S]{0,400}?Window", plan)
 
 
-def test_tpch_wave2_dims_broadcast(spark, qs):
-    """The new star/snowflake shapes must broadcast every dimension:
-    q9ish (part/supplier/nation) and q8ish (customer/nation x2/region/
-    supplier) may shuffle only the fact-fact join."""
-    plan9 = plan_of(qs["tpch_q9ish"](spark, SF_DIR))
-    assert _op_count(plan9, "BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan9
-    plan8 = plan_of(qs["tpch_q8ish"](spark, SF_DIR))
-    assert _op_count(plan8, "BroadcastHashJoin") >= 5
-    assert "CartesianProduct" not in plan8
-    # q15ish's scalar max enters as a broadcast 1-row join, never a
-    # single-partition window over the supplier aggregate.
-    plan15 = plan_of(qs["tpch_q15ish"](spark, SF_DIR))
-    assert "Window" not in plan15
-
-
-def test_span_decontaminate_bench_broadcast_no_pairs(spark, qs):
+def test_span_decontaminate_bench_broadcast_no_pairs(spark):
     """The benchmark fingerprint set must reach the corpus windows as a
     BROADCAST (semi) join — the corpus n-gram stream never shuffles for
     the match — and the fingerprint keys are md5, never window text."""
-    plan = plan_of(qs["span_decontaminate"](spark, SF_DIR))
+    from polars_mas_spark.operators import dedup as dd
+
+    plant = _span("qx")
+    planted = _plant(_docs(spark), [
+        (F.col("doc_id") % 50 == 0, plant, False),
+        (F.col("doc_id") % 101 == 3, plant, True),
+    ])
+    bench = planted.filter(F.col("doc_id") % 50 == 0)
+    corp = planted.filter(F.col("doc_id") % 50 != 0)
+    plan = plan_of(dd.span_decontaminate(corp, bench, "doc_id", "text", k=10))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan

@@ -16,7 +16,14 @@ from pyspark.sql import functions as F
 from polars_mas_spark.operators import similarity as sim
 from polars_mas_spark.operators import text as tx
 from polars_mas_spark.operators import dedup as dd
-from polars_mas_spark.plans import formatted_plan, op_count
+from tests.test_plans import _op_count as op_count
+from tests.test_plans import plan_of as formatted_plan
+
+
+def _embeddings(spark, sf_dir):
+    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
+        "embedding", F.col("embedding").cast("array<double>")
+    )
 
 
 def _vec_df(spark, rows, id_name="vec_id"):
@@ -110,9 +117,14 @@ def test_semantic_decontaminate_corpus_never_broadcasts(spark, sf_small):
     """Scale contract: exactly ONE BroadcastExchange (the benchmark
     probe side) and no corpus-sized shuffle — the only hash exchange
     feeds the per-doc max aggregate over already-thresholded hits."""
-    from polars_mas_spark.queries_ext import q_semantic_decontaminate
-
-    plan = formatted_plan(q_semantic_decontaminate(spark, sf_small))
+    emb = _embeddings(spark, sf_small)
+    bench = emb.filter(F.col("vec_id") % 37 == 5).select(
+        F.col("vec_id").alias("bench_id"),
+        F.transform("embedding", lambda x: x + F.lit(0.02)).alias("embedding"),
+    )
+    plan = formatted_plan(sim.semantic_decontaminate(
+        emb, bench, threshold=0.42, n_centroids=16, n_probe=4
+    ))
     assert op_count(plan, "BroadcastExchange") == 1
     assert op_count(plan, "CartesianProduct") == 0
     # corpus rows reach the join via scan -> project (assign/norm) only
@@ -173,9 +185,19 @@ def test_incremental_semantic_seen_never_shuffles(spark, sf_small):
     BroadcastHashJoin whose build side is the BATCH. No Exchange sits
     between the seen-side scan and that join; every hash exchange in
     the plan moves batch/loser ids, never accepted vectors."""
-    from polars_mas_spark.queries_ext import q_incremental_semantic_dedup
-
-    plan = formatted_plan(q_incremental_semantic_dedup(spark, sf_small))
+    emb = _embeddings(spark, sf_small)
+    seen = emb.filter(F.col("vec_id") % 3 != 0)
+    planted = seen.filter(F.col("vec_id") % 41 == 1)
+    m = emb.agg(F.max("vec_id")).first()[0] + 1
+    batch = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id", "embedding")
+    for k, shift in ((1, 0.02), (2, 0.03)):
+        batch = batch.unionByName(planted.select(
+            (F.lit(k * m) + F.col("vec_id")).alias("vec_id"),
+            F.transform("embedding", lambda x: x + F.lit(shift)).alias("embedding"),
+        ))
+    plan = formatted_plan(sim.incremental_semantic_dedup(
+        batch, seen, threshold=0.8, n_clusters=8, refine_iters=1
+    ))
     assert op_count(plan, "CartesianProduct") == 0
     assert op_count(plan, "BroadcastHashJoin") >= 2  # peers + seen-vs-batch
     # Structural proxy bound tight by the implementation: every shuffle

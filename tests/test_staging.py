@@ -1,7 +1,7 @@
 """Size-gated stage materialization (staging.materialize_stage, r13):
 localCheckpoint below the threshold, recomputable DISK_ONLY persist
-above it, identical results either way — and the local-bench plans of
-the gated operators keep the checkpoint (no bench-shape change)."""
+above it, identical results either way — and the small-data plans of
+the gated operators keep the checkpoint."""
 
 from __future__ import annotations
 
@@ -9,8 +9,8 @@ from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+from tests.test_plans import plan_of as formatted_plan
 
-from polars_mas_spark.plans import formatted_plan
 from polars_mas_spark.staging import materialize_stage
 
 _CONF = "spark.polars_mas.localCheckpointMaxBytes"
@@ -54,11 +54,30 @@ def test_gated_operators_keep_local_checkpoint_plan(spark):
     """The two gated corpus-width stages (paragraph passages,
     perplexity per-doc scores) must still plan as localCheckpoint at
     bench SFs — the r12 measured wins rest on that shape."""
-    import __spark_entry__ as e
-    from polars_mas_spark.queries_ext import BENCH_ONLY
+    from polars_mas_spark.operators import dedup as dd
+    from polars_mas_spark.operators import text as tx
 
-    qs = {**e.queries(), **BENCH_ONLY}
-    for name in ("paragraph_neardup_dedup", "perplexity_thirds"):
-        plan = formatted_plan(qs[name](spark, SF_DIR))
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pairs = docs.select("doc_id", "text")
+    base = pairs.unionByName(
+        pairs.filter(F.col("doc_id") % 40 == 0).select(
+            (F.col("doc_id") + 1000000).alias("doc_id"), "text"
+        )
+    ).unionByName(
+        pairs.filter(F.col("doc_id") % 40 == 20).select(
+            (F.col("doc_id") + 2000000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" pz0 pz1 pz2 pz3 pz4 pz5")).alias(
+                "text"
+            ),
+        )
+    )
+    for name, q in (
+        ("paragraph_neardup_dedup", dd.paragraph_neardup_dedup(
+            base, "doc_id", "text",
+            max_words=16, num_hashes=16, bands=4, rows_per_band=4,
+        )),
+        ("perplexity_thirds", tx.perplexity_thirds(docs)),
+    ):
+        plan = formatted_plan(q)
         assert "Scan ExistingRDD" in plan, name
         assert "InMemoryTableScan" not in plan, name

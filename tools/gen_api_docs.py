@@ -1,6 +1,6 @@
-"""Generate docs/API.md: every public operator/function in the package
-with its signature and docstring summary, grouped by module. Run after
-adding operators so the reference stays current:
+"""Generate docs/API.md: every public function of the package with its
+signature and docstring summary, grouped by module. Run after changing
+the public surface so the reference stays current:
 
     python tools/gen_api_docs.py
 """
@@ -10,8 +10,10 @@ from __future__ import annotations
 import importlib
 import inspect
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 MODULES = [
     ("polars_mas_spark", "Top-level API"),
@@ -37,7 +39,6 @@ MODULES = [
     ("polars_mas_spark.operators.maintenance", "Table maintenance & data quality"),
     ("polars_mas_spark.operators.encoding", "Vocabulary encoding"),
     ("polars_mas_spark.operators.profile", "Profiling"),
-    ("polars_mas_spark.streaming.events", "Structured Streaming"),
     ("polars_mas_spark.sources.readers", "Sources"),
     ("polars_mas_spark.sources.writers", "Sinks"),
 ]
@@ -80,7 +81,7 @@ def main() -> None:
             out.append("")
             out.append(doc)
             out.append("")
-    with open("/root/repo/docs/API.md", "w") as f:
+    with open(ROOT / "docs" / "API.md", "w") as f:
         f.write("\n".join(out))
     n = sum(1 for line in out if line.startswith("### "))
     print(f"docs/API.md written: {n} public functions")
