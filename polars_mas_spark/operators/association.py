@@ -106,6 +106,12 @@ _MODEL_FUNCS: dict[str, Callable] = {
 # cases/controls (Poisson dependents are counts — quantitative).
 _QUANT_MODELS = ("linear", "poisson")
 
+# The physical fan-out strategies run_associations runs (see its
+# docstring); pipeline.plan_study picks among them.
+STRATEGIES = ("columnar", "packed", "moments", "unpivot")
+# The moments aggregate has O(C^2) columns for C covariates.
+MOMENTS_MAX_COVARIATES = 64
+
 
 def result_schema(model: str) -> T.StructType:
     return (
@@ -335,10 +341,11 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
             "outcome validation needs the kernel path; use packed)"
         )
     covariates = list(config.covariate_columns)
-    if len(covariates) > 64:
+    if len(covariates) > MOMENTS_MAX_COVARIATES:
         raise ValueError(
-            "moments strategy caps at 64 covariates (the aggregate has "
-            "O(C^2) columns); use the packed strategy beyond that"
+            f"moments strategy caps at {MOMENTS_MAX_COVARIATES} covariates "
+            "(the aggregate has O(C^2) columns); use the packed strategy "
+            "beyond that"
         )
     cov_pairs = safe_covariate_pairs(covariates)
     # NaN dependents are MISSING (packed-path contract: null dependents
@@ -855,34 +862,18 @@ def checkpoint_wide(df: DataFrame, checkpoint_dir: str | None = None) -> str:
 
     spark = df.sparkSession
     if _needs_distributed_writer(spark, checkpoint_dir):
-        if checkpoint_dir is None:
-            # Non-local master with no shared directory: the distributed
-            # writer would land partitions on the default FS while the
-            # columnar consumer lists and reads the path with
-            # driver-local POSIX I/O — a crash (HDFS) or partial data
-            # (scattered executor-local tmp). Fail with the fix instead.
-            raise ValueError(
-                "columnar checkpoint on a non-local master requires an "
-                "explicit POSIX-shared checkpoint_dir (NFS/Lustre "
-                "mount); or use strategy='packed', which needs no side "
-                "storage."
-            )
-        if "://" in checkpoint_dir:
-            # Refuse BEFORE paying for the full-table write: the
-            # columnar consumer lists and reads the checkpoint with
-            # driver-local POSIX I/O (os.listdir + pyarrow), which
-            # cannot open a URI-scheme path — the expensive write would
-            # complete and then the read would FileNotFoundError
-            # (review r9).
-            raise ValueError(
-                "columnar checkpoint requires a POSIX-visible path, got "
-                f"URI {checkpoint_dir!r} — mount the filesystem and pass "
-                "the mount path, or use strategy='packed'"
-            )
-        base = checkpoint_dir.rstrip("/")
-        path = f"{base}/pms_ckpt_{uuid.uuid4().hex}"
-        df.write.parquet(path)
-        return path
+        # Refuse BEFORE paying for the full-table write: the columnar
+        # consumer lists and reads the checkpoint with driver-local POSIX
+        # I/O (os.listdir + pyarrow). It cannot open a URI-scheme path —
+        # the read would FileNotFoundError after the write (review r9) —
+        # and on a non-local master with no shared directory each task
+        # would write to its own executor's tmp, leaving partial data.
+        raise ValueError(
+            "columnar checkpoint needs a POSIX-visible checkpoint_dir "
+            "shared by the driver and executors (NFS/Lustre mount), got "
+            f"{checkpoint_dir!r} on master {spark.sparkContext.master!r}; "
+            "or use strategy='packed', which needs no side storage"
+        )
 
     in_tmp = checkpoint_dir is None
     if checkpoint_dir is None:
@@ -938,19 +929,18 @@ def checkpoint_wide(df: DataFrame, checkpoint_dir: str | None = None) -> str:
 def run_associations(
     df: DataFrame,
     config: MASConfig,
-    strategy: str = "auto",
-    checkpoint_dir: str | None = None,
+    strategy: str,
     checkpoint_path: str | None = None,
-    n_rows: int | None = None,
     recipe=None,
     source_files: list[str] | None = None,
     n_buckets: int | None = None,
 ) -> DataFrame:
     """Distributed equivalent of run_associations_ipc (analysis.py:10-39).
 
-    Three physical strategies, picked by shape:
+    Runs the one physical strategy it is given; pipeline.plan_study is
+    what picks it. Four strategies:
 
-    - ``packed`` (tall tables — the 100 TB default): one shuffle keyed
+    - ``packed`` (tall tables — the 100 TB path): one shuffle keyed
       on (predictor, dep-bucket); each row carries the covariates once
       and a bucket of dependent values as an array, cutting shuffle
       cells from n·P·D·(C+1) to n·P·(G·C + D) (SURVEY §7.4.6). The
@@ -959,76 +949,30 @@ def run_associations(
       row and one group per (sample, predictor, dependent). Same
       results; kept as the reference-shaped formulation (U1) and the
       parity baseline for packed.
-    - ``moments`` (linear model only — the AUTO DEFAULT whenever it
-      applies): per-pair OLS via sufficient statistics — the shuffle
-      carries map-side-combined centered moment partials (Welford
-      covariances, O(k²) doubles per pair per partition — offset-stable
-      at any covariate scale) instead of sample rows; see
-      _fit_linear_moments. Row count drops out of the shuffle entirely.
+    - ``moments`` (linear model only): per-pair OLS via sufficient
+      statistics — the shuffle carries map-side-combined centered
+      moment partials (Welford covariances, O(k²) doubles per pair per
+      partition — offset-stable at any covariate scale) instead of
+      sample rows; see _fit_linear_moments. Row count drops out of the
+      shuffle entirely.
     - ``columnar`` (wide, short tables — the PheWAS shape: 5k-500k
       samples x ~1,800 phecodes): checkpoint the preprocessed table to
-      parquet once (the exact analog of the reference's Arrow-IPC sink +
-      per-worker mmap column reads, preprocessing.py:111-132 /
-      analysis.py:54-59), then fan the PAIR LIST out and let each task
-      do a column-pruned parquet read of just its dependents + the
-      shared design columns. ZERO shuffle of sample data; the long-table
-      unpivot would move n_rows x n_deps duplicated covariates through a
-      shuffle for a table that reads back in kilobytes per task.
-
-    ``auto`` takes moments whenever it applies; otherwise columnar when
-    the table is small enough that a per-task full-column read is cheap
-    (<= 100M rows, see choose_strategy) and packed above that. The row
-    count comes from the parquet footers when ``df`` is a plain parquet
-    scan (or ``source_files`` are given), so picking runs no Spark job
-    there; any other input is counted by Spark (input_row_count).
+      parquet once under ``config.checkpoint_dir`` (the exact analog of
+      the reference's Arrow-IPC sink + per-worker mmap column reads,
+      preprocessing.py:111-132 / analysis.py:54-59), then fan the PAIR
+      LIST out and let each task do a column-pruned parquet read of just
+      its dependents + the shared design columns. ZERO shuffle of sample
+      data; the long-table unpivot would move n_rows x n_deps duplicated
+      covariates through a shuffle for a table that reads back in
+      kilobytes per task. ``checkpoint_path`` or ``source_files`` name
+      parquet the caller already has, so no checkpoint is written.
     """
-    if strategy not in ("auto", "columnar", "moments", "packed", "unpivot"):
-        # A typo previously fell through to the classic unpivot — the
-        # exact n·P·D·(C+1) shuffle the other strategies exist to avoid
-        # — with no error (review r9).
-        raise ValueError(
-            f"unknown strategy {strategy!r}; valid: "
-            "auto/columnar/moments/packed/unpivot"
-        )
     spark = df.sparkSession
     model = config.model
     covariates = list(config.covariate_columns)
     num_pairs = len(config.predictor_columns) * len(config.dependent_columns)
-    if strategy == "auto":
-        # Linear models are exactly identified by their moment
-        # statistics, so the moments plan dominates at every shape (no
-        # row shuffle for tall tables, no checkpoint for wide ones) —
-        # it is the auto default whenever it applies. Iterative models
-        # pick by table shape.
-        if (
-            config.model == "linear"
-            and config.quantitative
-            and len(covariates) <= 64
-        ):
-            strategy = "moments"
-        else:
-            if n_rows is None:
-                n_rows = input_row_count(
-                    source_files if source_files is not None
-                    else reusable_scan_files(df),
-                    df,
-                )
-            strategy = choose_strategy(n_rows)
-            if (
-                strategy == "columnar"
-                and checkpoint_path is None
-                and source_files is None
-                and _needs_distributed_writer(spark, checkpoint_dir)
-            ):
-                # Auto-picked columnar needs driver-POSIX storage for
-                # its per-task reads; with none available (non-local
-                # master, no shared checkpoint_dir) the packed shuffle
-                # is the correct plan, not a crash.
-                strategy = "packed"
     if strategy == "columnar":
-        fitted = _fit_columnar(
-            df, config, checkpoint_dir, checkpoint_path, recipe, source_files
-        )
+        fitted = _fit_columnar(df, config, checkpoint_path, recipe, source_files)
         return _complete_pairs(spark, fitted, config)
     if strategy == "moments":
         return _complete_pairs(spark, _fit_linear_moments(df, config), config)
@@ -1061,6 +1005,12 @@ def run_associations(
             kernel, schema=result_schema(model)
         )
         return _complete_pairs(spark, fitted, config)
+    if strategy != "unpivot":
+        # A typo must not fall through to the classic unpivot — the
+        # exact n·P·D·(C+1) shuffle the other strategies exist to avoid.
+        raise ValueError(
+            f"unknown strategy {strategy!r}; valid: {'/'.join(STRATEGIES)}"
+        )
 
     long_df = build_long_table(
         df, config.predictor_columns, config.dependent_columns, covariates
@@ -1263,7 +1213,6 @@ def _pair_ids(spark: SparkSession, n_pairs: int) -> DataFrame:
 def _fit_columnar(
     df: DataFrame,
     config: MASConfig,
-    checkpoint_dir: str | None,
     checkpoint_path: str | None = None,
     recipe=None,
     source_files: list[str] | None = None,
@@ -1298,7 +1247,7 @@ def _fit_columnar(
         # Keep every column under its original (possibly dotted) name —
         # parquet has no column-name restrictions and pyarrow reads by
         # exact name, so no rename dance is needed.
-        path = checkpoint_path or checkpoint_wide(df, checkpoint_dir)
+        path = checkpoint_path or checkpoint_wide(df, config.checkpoint_dir)
         source_files = _parquet_files(path)
 
     akernel = make_array_kernel(

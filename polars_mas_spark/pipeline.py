@@ -11,12 +11,17 @@ re-scanning the source (SURVEY.md §4 note 1).
 
 from __future__ import annotations
 
+from dataclasses import dataclass, replace
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from polars_mas_spark.colutils import qname
 from polars_mas_spark.config import MASConfig
 from polars_mas_spark.operators.association import (
+    MOMENTS_MAX_COVARIATES,
+    STRATEGIES,
+    _parquet_files,
     checkpoint_wide,
     choose_strategy,
     input_row_count,
@@ -31,6 +36,161 @@ from polars_mas_spark.operators.postprocessing import (
 from polars_mas_spark.operators.preprocessing import build_prep_recipe, preprocess
 from polars_mas_spark.sources.readers import read_input
 from polars_mas_spark.sources.writers import write_output
+
+# Studies the columnar PrepRecipe path cannot run, as (applies, reason)
+# rules over the config and the Spark master. An auto pick of columnar
+# falls back to packed and records the first reason that applies; an
+# explicit strategy="columnar" raises it, because an explicit request is
+# never silently swapped. Each reason names its config field and
+# suggests only strategies that can run the study.
+_COLUMNAR_GUARDS = (
+    (
+        lambda c, master: c.missing_covariate_values in ("forward", "backward"),
+        "missing_covariate_values={c.missing_covariate_values!r}: ordered "
+        "covariate fills need the Spark window path; use packed/unpivot or "
+        "a different missing-value strategy",
+    ),
+    # The dependent-variable transforms run as Spark jobs over the tall
+    # path (rint is a global rank per dependent); the PrepRecipe has no
+    # transform pass, so the flag would be silently ignored.
+    (
+        lambda c, master: c.rint or c.logt,
+        "rint/logt: the PrepRecipe path has no dependent-transform pass; "
+        "use packed/unpivot, or drop the flag",
+    ),
+    # The correlated-covariate pruner runs inside preprocess(), which the
+    # PrepRecipe replaces: the same model would differ by physical
+    # strategy (review r5 finding).
+    (
+        lambda c, master: c.drop_correlated_above is not None,
+        "drop_correlated_above: the PrepRecipe path has no correlation "
+        "pass; use packed/unpivot, or drop the flag",
+    ),
+    # Columnar's per-task column-pruned reads go through pyarrow, which
+    # needs POSIX-visible paths; a URI checkpoint target (hdfs://,
+    # s3a://) means no shared mount.
+    (
+        lambda c, master: bool(c.checkpoint_dir) and "://" in c.checkpoint_dir,
+        "checkpoint_dir={c.checkpoint_dir!r} is a URI, but columnar needs a "
+        "POSIX-shared directory; point checkpoint_dir at a mounted path, or "
+        "use packed/unpivot",
+    ),
+)
+# Auto picks only. With a non-local master and no shared checkpoint_dir
+# the columnar checkpoint would land where the driver's POSIX reads
+# cannot see it, so packed is the safe auto choice. An EXPLICIT columnar
+# request proceeds: source-file reuse (reusable_scan_files) runs
+# checkpoint-free on any shared mount, and the broken case still fails
+# with checkpoint_wide's actionable error.
+_AUTO_COLUMNAR_GUARDS = (
+    (
+        lambda c, master: c.checkpoint_dir is None and not master.startswith("local"),
+        "checkpoint_dir is unset on a non-local master, so a columnar "
+        "checkpoint would not be visible to the driver",
+    ),
+)
+
+
+@dataclass(frozen=True)
+class StudyPlan:
+    """How one study's fan-out runs, as decided by plan_study.
+
+    ``requested`` is the caller's strategy (None for the auto pick).
+    ``files`` are, for columnar only, the source parquet files it reads
+    directly; None means a checkpoint is written first. ``n_rows`` and
+    ``row_source`` ("footers" or "spark count") are set when the auto
+    pick needed a row count. ``reasons`` holds one entry per fallback
+    taken, in order."""
+
+    strategy: str
+    requested: str | None
+    files: list[str] | None = None
+    n_rows: int | None = None
+    row_source: str | None = None
+    reasons: tuple[str, ...] = ()
+
+    def after_preprocess(self, n_covariates: int) -> StudyPlan:
+        """The plan once preprocessing has fixed the covariate count.
+
+        The auto moments pick saw the PRE-one-hot covariate count;
+        encoding can expand past the moments cap, so fall back to packed
+        instead of letting _fit_linear_moments raise after a full
+        preprocessing pass. An explicit strategy='moments' still raises
+        there — the user asked for it by name."""
+        if (
+            self.requested is None
+            and self.strategy == "moments"
+            and n_covariates > MOMENTS_MAX_COVARIATES
+        ):
+            reason = (
+                f"{n_covariates} covariates after one-hot encoding exceed "
+                f"the moments cap of {MOMENTS_MAX_COVARIATES}"
+            )
+            return replace(self, strategy="packed", reasons=(*self.reasons, reason))
+        return self
+
+
+def plan_study(
+    spark: SparkSession,
+    config: MASConfig,
+    df: DataFrame,
+    strategy: str | None = None,
+) -> StudyPlan:
+    """Pick the fan-out strategy for a resolved study. This is the only
+    code that picks or changes a strategy (see also
+    StudyPlan.after_preprocess).
+
+    ``strategy=None`` is the auto pick. A linear quantitative study with
+    at most 64 covariates takes moments, which needs no row count.
+    Anything else picks by row count (choose_strategy). The count is
+    summed from the parquet footers of a plain parquet scan, with no
+    Spark job; any other input is persisted and then counted by Spark,
+    so the counting pass fills the cache the chosen path reads. A
+    columnar pick that a guard above forbids becomes packed, with the
+    guard's reason recorded; an explicit columnar request raises it."""
+    if strategy is not None and strategy not in STRATEGIES:
+        # A typo must not pick a physical plan (review r9).
+        raise ValueError(
+            f"unknown strategy {strategy!r}; valid: "
+            f"{'/'.join(STRATEGIES)} (or None for auto)"
+        )
+    requested = strategy
+    if (
+        strategy is None
+        and config.model == "linear"
+        and config.quantitative
+        and len(config.covariate_columns) <= MOMENTS_MAX_COVARIATES
+    ):
+        strategy = "moments"
+    files = reusable_scan_files(df) if strategy in (None, "columnar") else None
+    n_rows = row_source = None
+    if strategy is None:
+        if files is None:
+            # Not a plain parquet scan, so Spark must count it. Persist
+            # first so the counting pass also fills the cache: the tall
+            # path re-persists the same handle (a no-op) and the columnar
+            # path unpersists it once its checkpoint exists.
+            df.persist(StorageLevel.MEMORY_AND_DISK)
+        n_rows = input_row_count(files, df)
+        row_source = "spark count" if files is None else "footers"
+        strategy = choose_strategy(n_rows)
+    reasons: tuple[str, ...] = ()
+    if strategy == "columnar":
+        guards = _COLUMNAR_GUARDS + (() if requested else _AUTO_COLUMNAR_GUARDS)
+        master = spark.sparkContext.master
+        for applies, reason in guards:
+            if applies(config, master):
+                reason = reason.format(c=config)
+                if requested:
+                    raise ValueError(
+                        f"strategy='columnar' cannot run this study: {reason}"
+                    )
+                strategy, reasons = "packed", (reason,)
+                break
+    return StudyPlan(
+        strategy, requested, files if strategy == "columnar" else None,
+        n_rows, row_source, reasons,
+    )
 
 
 def run_pipeline(
@@ -47,9 +207,8 @@ def run_pipeline(
     Programmatic-first API (the reference is CLI-only; a Python API is on
     its declared roadmap, README.md:163): pass either an already-loaded
     wide DataFrame or an input path. ``strategy`` forces the fan-out's
-    physical strategy ("columnar"/"packed"/"unpivot"); default picks by
-    the input's row count, read from the parquet footers when the input
-    is a plain parquet scan (see choose_strategy).
+    physical strategy ("columnar"/"packed"/"moments"/"unpivot"); None
+    lets plan_study pick it.
     """
     if df is None:
         if input_path is None:
@@ -74,115 +233,8 @@ def run_pipeline(
     if len(df.columns) != len(included) or set(df.columns) != set(included):
         df = df.selectExpr(*[qname(c) for c in included])
 
-    auto_strategy = strategy is None
-    if strategy is not None and strategy not in (
-        "columnar", "packed", "unpivot", "moments",
-    ):
-        # An unknown string previously slipped through the guards and
-        # was silently coerced to 'packed' at the run_associations call
-        # (review r9) — a typo must not pick a physical plan.
-        raise ValueError(
-            f"unknown strategy {strategy!r}; valid: "
-            "columnar/packed/unpivot/moments (or None for auto)"
-        )
-    if (
-        strategy is None
-        and config.model == "linear"
-        and config.quantitative
-        and len(config.covariate_columns) <= 64
-    ):
-        # Moments dominate for linear at every shape (see
-        # run_associations) — and need no row count to decide.
-        strategy = "moments"
-    # The local parquet files of a plain scan: the auto pick counts
-    # their footers and the columnar branch reads them directly.
-    files = reusable_scan_files(df) if strategy in (None, "columnar") else None
-    if strategy is None:
-        if files is None:
-            # Not a plain parquet scan, so Spark must count it. Persist
-            # first so the counting pass also fills the cache: the tall
-            # branch re-persists the same handle (a no-op) and the
-            # columnar branch unpersists it once its checkpoint exists.
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        strategy = choose_strategy(input_row_count(files, df))
-    if strategy == "columnar" and config.missing_covariate_values in (
-        "forward", "backward",
-    ):
-        # Ordered fills need the Spark window path. Same explicit-vs-
-        # auto policy as the guards below: auto picks fall back, an
-        # explicit columnar request errors instead of silently swapping.
-        if auto_strategy:
-            strategy = "packed"
-        else:
-            raise ValueError(
-                "strategy='columnar' cannot run ordered "
-                f"({config.missing_covariate_values!r}) covariate fills — "
-                "they need the Spark window path; use packed/unpivot or a "
-                "different missing-value strategy"
-            )
-    if strategy == "columnar" and (config.rint or config.logt):
-        # The dependent-variable transforms run as Spark jobs over the
-        # tall path (rint is a global rank per dependent); the columnar
-        # PrepRecipe has no transform pass, so the flag would be
-        # silently ignored — same auto-falls-back / explicit-errors
-        # policy as the guards around this one.
-        if auto_strategy:
-            strategy = "packed"
-        else:
-            raise ValueError(
-                "strategy='columnar' does not apply rint/logt (no "
-                "transform pass in the PrepRecipe path); use "
-                "packed/unpivot/moments, or drop the flag"
-            )
-    if strategy == "columnar" and config.drop_correlated_above is not None:
-        # The correlated-covariate pruner runs inside preprocess(); the
-        # columnar path replaces preprocess() with a PrepRecipe that
-        # does not consult it, so the flag would be SILENTLY ignored —
-        # the same model would differ by physical strategy (review r5
-        # finding). Same policy as the ordered-fill guard: auto falls
-        # back to the tall path, explicit columnar errors.
-        if auto_strategy:
-            strategy = "packed"
-        else:
-            raise ValueError(
-                "strategy='columnar' does not apply drop_correlated_above "
-                "(the PrepRecipe path has no correlation pass); use "
-                "packed/unpivot, or drop the flag"
-            )
-    if strategy == "columnar" and config.checkpoint_dir and "://" in config.checkpoint_dir:
-        # Columnar's per-task column-pruned reads go through pyarrow,
-        # which needs POSIX-visible paths; a URI-scheme checkpoint target
-        # (hdfs://, s3a://) means no shared mount. Auto picks fall back
-        # to the tall path (its shuffle needs no side storage); an
-        # EXPLICIT columnar request gets an actionable error, never a
-        # silent strategy swap (same policy as the non-local guard
-        # below).
-        if auto_strategy:
-            strategy = "packed"
-        else:
-            raise ValueError(
-                "strategy='columnar' needs a POSIX-shared checkpoint_dir "
-                f"(got URI {config.checkpoint_dir!r}) — point checkpoint_dir "
-                "at a mounted path, or use the packed/unpivot strategy"
-            )
-    if (
-        auto_strategy
-        and strategy == "columnar"
-        and config.checkpoint_dir is None
-        and not spark.sparkContext.master.startswith("local")
-    ):
-        # AUTO pick only: non-local master with no shared checkpoint dir
-        # means the columnar checkpoint would land where the driver's
-        # POSIX reads can't see it (association.checkpoint_wide raises
-        # on this) — the packed shuffle is the safe auto choice. An
-        # EXPLICIT strategy="columnar" proceeds: source-file reuse
-        # (reusable_scan_files) runs checkpoint-free on any shared
-        # mount, and the genuinely broken case still fails with
-        # checkpoint_wide's actionable error instead of a silent
-        # strategy swap.
-        strategy = "packed"
-
-    if strategy == "columnar":
+    plan = plan_study(spark, config, df, strategy)
+    if plan.strategy == "columnar":
         # Every table up to 100M rows, whatever its pair count, and above
         # all the wide-short PheWAS shape, where the preprocessed wide
         # table must never exist as a JVM schema — caching or row-pivoting
@@ -196,30 +248,28 @@ def run_pipeline(
         # task decoding its ids to (predictor, dependent), reading only
         # its columns and applying the recipe in pandas — exactly how the
         # reference's workers mmap its IPC file (analysis.py:54-59).
-        if files is None:
+        if plan.files is None:
             ckpt = checkpoint_wide(df, config.checkpoint_dir)
             df.unpersist()  # checkpoint written; drop any pre-count cache
             stats_df = spark.read.parquet(ckpt)
-            from polars_mas_spark.operators.association import _parquet_files
-
             stats_files = _parquet_files(ckpt)
         else:
             ckpt = None
             stats_df = df
-            stats_files = files
+            stats_files = plan.files
         recipe = build_prep_recipe(stats_df, config, source_files=stats_files)
         results = run_associations(
             stats_df, config, strategy="columnar",
-            checkpoint_path=ckpt, recipe=recipe, source_files=files,
+            checkpoint_path=ckpt, recipe=recipe, source_files=plan.files,
         ).persist(StorageLevel.MEMORY_AND_DISK)
         pre = stats_df  # for the shared unpersist below (no-op on scans)
     else:
         # Tall shape (over 100M rows, a linear moments study, an
-        # explicit tall strategy, or a guard above forced it): cache the
-        # projected input — the auto pick's Spark count already filled
-        # the cache when the input is not a plain parquet scan — because
-        # preprocess collects eager statistics and, uncached, every stat
-        # job would re-execute the upstream plan. Then persist the
+        # explicit tall strategy, or a planner guard forced it): cache
+        # the projected input — the auto pick's Spark count already
+        # filled the cache when the input is not a plain parquet scan —
+        # because preprocess collects eager statistics and, uncached,
+        # every stat job would re-execute the upstream plan. Then persist the
         # preprocessed table as the analog of the reference's
         # shared-memory IPC checkpoint (preprocessing.py:111-132) and run
         # the long-table fan-out from it — packed by default, classic
@@ -247,20 +297,9 @@ def run_pipeline(
         pre = pre.persist(StorageLevel.MEMORY_AND_DISK)
         pre.count()  # materialize before the fan-out; frees the raw cache
         raw.unpersist()
-        if (
-            auto_strategy
-            and strategy == "moments"
-            and len(config.covariate_columns) > 64
-        ):
-            # The auto pick above saw the PRE-one-hot covariate count;
-            # encoding can expand past the moments cap (O(C^2) aggregate
-            # columns) — fall back to the packed kernel instead of
-            # letting _fit_linear_moments raise after a full
-            # preprocessing pass. (An EXPLICIT strategy='moments' still
-            # raises — the user asked for it by name.)
-            strategy = "packed"
+        plan = plan.after_preprocess(len(config.covariate_columns))
         results = run_associations(
-            pre, config, strategy=strategy,
+            pre, config, strategy=plan.strategy,
         ).persist(StorageLevel.MEMORY_AND_DISK)
 
     # Persist the (small) results table: the correction counts are an

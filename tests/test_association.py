@@ -77,7 +77,7 @@ def test_failure_rows_not_exceptions(synth, spark):
         predictors="x", dependents=["ph_0", "ph_rare", "ph_null"],
         covariates=["age", "sex"], model="firth", min_case_count=20,
     )
-    out = run_associations(df, cfg.resolve(df.columns))
+    out = run_associations(df, cfg.resolve(df.columns), strategy="columnar")
     # Failure rows must arrive as float NaN, NEVER Spark NULL: the Arrow
     # grouped-map boundary converts the kernel's pandas NaN to NULL, and
     # _complete_pairs restores it so `pval IS NOT NULL` counts failures
@@ -141,7 +141,7 @@ def test_multi_predictor_fanout(synth, spark):
         predictors=["x", "age"], dependents=["ph_0", "ph_1"],
         covariates=["sex"], model="logistic", min_case_count=5,
     )
-    res = run_associations(df, cfg.resolve(df.columns)).toPandas()
+    res = run_associations(df, cfg.resolve(df.columns), strategy="columnar").toPandas()
     assert len(res) == 4
     assert set(zip(res["predictor"], res["dependent"])) == {
         ("x", "ph_0"), ("x", "ph_1"), ("age", "ph_0"), ("age", "ph_1"),
@@ -154,7 +154,9 @@ def test_quantitative_linear(synth, spark):
         predictors="x", dependents=["age"], covariates=["sex"],
         model="linear", quantitative=True, min_case_count=20,
     )
-    res = run_associations(df, cfg.resolve(df.columns)).toPandas().iloc[0]
+    res = run_associations(
+        df, cfg.resolve(df.columns), strategy="moments"
+    ).toPandas().iloc[0]
     serial = ols_fit(pdf[["x", "sex"]].to_numpy(float), pdf["age"].to_numpy(float))
     assert res["beta"] == pytest.approx(serial["beta"], abs=1e-9)
     assert res["pval"] == pytest.approx(serial["pval"], rel=1e-9)
@@ -175,7 +177,9 @@ def test_constant_covariate_dropped_per_group(spark):
         predictors="x", dependents=["y"], covariates=["sex"],
         model="logistic", min_case_count=5,
     )
-    res = run_associations(df, cfg.resolve(df.columns)).toPandas().iloc[0]
+    res = run_associations(
+        df, cfg.resolve(df.columns), strategy="columnar"
+    ).toPandas().iloc[0]
     assert res["equation"] == "y ~ x + "
     assert np.isfinite(res["beta"])
 
@@ -521,12 +525,13 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
     cfg = MASConfig(
         predictors="x", dependents=["ph_0", "ph_1", "ph_2", "ph_rare", "ph_null"],
         covariates=["age", "sex"], model="firth", min_case_count=20,
+        checkpoint_dir=str(tmp_path),
     ).resolve(df.columns)
     sel = ["predictor", "dependent", "pval", "beta", "se", "cases",
            "controls", "converged", "failed_reason", "equation"]
     a = (run_associations(df, cfg, strategy="unpivot")
          .select(*sel).toPandas().sort_values("dependent").reset_index(drop=True))
-    b = (run_associations(df, cfg, strategy="columnar", checkpoint_dir=str(tmp_path))
+    b = (run_associations(df, cfg, strategy="columnar")
          .select(*sel).toPandas().sort_values("dependent").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
 
@@ -537,11 +542,11 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
         predictors=["x", "age"],
         dependents=["ph_0", "ph_1", "ph_2", "ph_rare", "ph_null"],
         covariates=["sex"], model="firth", min_case_count=20,
+        checkpoint_dir=str(tmp_path),
     ).resolve(df.columns)
 
     def fit(strategy):
-        return (run_associations(df, cfg, strategy=strategy,
-                                 checkpoint_dir=str(tmp_path))
+        return (run_associations(df, cfg, strategy=strategy)
                 .select(*sel).toPandas()
                 .sort_values(["predictor", "dependent"]).reset_index(drop=True))
 
@@ -549,6 +554,20 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
     assert len(packed) == 10
     pd.testing.assert_frame_equal(packed, fit("columnar"),
                                   check_exact=False, rtol=1e-9)
+
+
+def test_columnar_checkpoint_lands_in_config_checkpoint_dir(synth, spark, tmp_path):
+    # run_associations' columnar checkpoint goes under the study's
+    # checkpoint_dir, the same one run_pipeline uses — not the system
+    # temp dir.
+    _, df = synth
+    cfg = MASConfig(
+        predictors="x", dependents=["ph_0", "ph_1"], covariates=["age"],
+        model="logistic", min_case_count=20, checkpoint_dir=str(tmp_path),
+    ).resolve(df.columns)
+    assert run_associations(df, cfg, strategy="columnar").count() == 2
+    ckpts = [p for p in tmp_path.iterdir() if p.name.startswith("pms_ckpt_")]
+    assert len(ckpts) == 1 and list(ckpts[0].glob("*.parquet"))
 
 
 def test_pair_ids_slice_into_balanced_contiguous_tasks(spark):
@@ -781,10 +800,12 @@ def test_dotted_phecode_column_names(spark):
     assert np.isfinite(res["beta"])
 
 
-def test_checkpoint_wide_distributed_fallback(synth, spark, tmp_path, monkeypatch):
+def test_checkpoint_wide_distributed_fallback(synth, spark, tmp_path):
     """URI-scheme checkpoint targets (and clusterized masters without an
-    explicit shared dir) must route through Spark's own parquet writer
-    instead of the per-partition pyarrow fast path (VERDICT r1 #7)."""
+    explicit shared dir) cannot take the per-partition pyarrow writer
+    (VERDICT r1 #7), and the columnar consumer could not read them back
+    with driver-local POSIX I/O, so checkpoint_wide refuses them before
+    any Spark job runs."""
     from polars_mas_spark.operators import association as assoc
 
     assert assoc._needs_distributed_writer(spark, "hdfs://nn/tmp") is True
@@ -792,21 +813,22 @@ def test_checkpoint_wide_distributed_fallback(synth, spark, tmp_path, monkeypatc
     assert assoc._needs_distributed_writer(spark, str(tmp_path)) is False
     assert assoc._needs_distributed_writer(spark, None) is False  # local master
 
-    # Exercise the fallback branch itself: force the decision, point the
-    # "remote" target at a local dir so the write is observable.
-    monkeypatch.setattr(
-        assoc, "_needs_distributed_writer", lambda s, d: True
-    )
     _, df = synth
-    path = assoc.checkpoint_wide(df, str(tmp_path))
-    back = spark.read.parquet(path)
-    assert back.count() == df.count()
-    assert set(back.columns) == set(df.columns)
+    sc = spark.sparkContext
+    for target in ("hdfs://nn/tmp", "s3a://bucket/ckpt"):
+        group = f"checkpoint-refused-{target[:3]}"
+        sc.setJobGroup(group, group)
+        try:
+            with pytest.raises(ValueError, match="POSIX-visible"):
+                assoc.checkpoint_wide(df, target)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_pipeline_downgrades_columnar_on_uri_checkpoint(spark, tmp_path):
     """run_pipeline must not hand a URI checkpoint dir to the pyarrow
-    columnar path — it silently switches to the unpivot strategy."""
+    columnar path — the auto pick falls back to the packed strategy."""
     import numpy as np
     import pandas as pd
 
@@ -1147,7 +1169,7 @@ def test_poisson_fanout_with_covariate(spark):
         predictors="x", dependents=["y"], covariates=["cov"],
         model="poisson", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    row = run_associations(df, cfg).toPandas().iloc[0]
+    row = run_associations(df, cfg, strategy="columnar").toPandas().iloc[0]
     assert bool(row["converged"])
     assert row["n_observations"] == n
     assert 0.4 < row["beta"] < 1.0  # planted 0.7, Wald se ~0.06
