@@ -16,6 +16,8 @@ algorithms directly:
   gtol=1e-5, xtol=1e-5. The p-value is a penalized likelihood-ratio
   test of the tested coefficient (models.py:41 `fl.lrt(0)`), which is
   what makes small-sample/separated PheWAS fits well-behaved.
+  ``firth_fit_many`` fits many dependents on one design together, with
+  firth_fit's decisions and a different floating-point op order.
 
 Design-matrix convention (reference models.py:58,73): the *tested*
 predictor is column 0, covariates follow, and the intercept is appended
@@ -28,7 +30,9 @@ touch Spark.
 
 from __future__ import annotations
 
+import itertools
 import math
+from typing import Iterable
 
 import numpy as np
 
@@ -506,6 +510,149 @@ def _hermite_root(
     return b if lo < b < hi else math.nan
 
 
+class _ProfileSide:
+    """One side of a profile-CI search: the scalar bound search
+    ([[_profile_search]]) plus the warm start of its next refit, the
+    FIRST-ORDER PREDICTOR along the profile path, warm + (b - b_warm) *
+    tangent (see firth_profile_ci). The per-pair search and the batch
+    ([[firth_fit_many]]) both drive it, so the search logic exists once."""
+
+    def __init__(self, search, warm: np.ndarray, b_warm: float, tangent):
+        self._search = search
+        self.warm, self.b_warm, self.tangent = warm, b_warm, tangent
+        self.b = math.nan
+        self.bound = math.nan
+
+    def advance(self, reply: tuple[float, float] | None = None) -> bool:
+        """Send the last refit's (f, f') (None to begin); True while a
+        refit at ``self.b`` is pending, False once ``self.bound`` holds
+        the result."""
+        try:
+            self.b = self._search.send(reply)
+            return True
+        except StopIteration as stop:
+            self.bound = stop.value
+            return False
+
+    def start(self) -> np.ndarray:
+        """The predicted warm start for the refit at ``self.b``."""
+        if self.tangent is None:
+            return self.warm
+        return self.warm + (self.b - self.b_warm) * self.tangent
+
+    def update(self, beta: np.ndarray, tangent: np.ndarray | None) -> None:
+        """Record the refit at ``self.b``: its solution and, when
+        defined, its profile-path tangent."""
+        self.warm, self.b_warm = beta, self.b
+        if tangent is not None:
+            self.tangent = tangent
+
+
+def _profile_sides(
+    beta_hat: np.ndarray,
+    pll_full: float,
+    se: float,
+    j: int,
+    alpha: float,
+    tol: float,
+    max_expand: int,
+    tangent0: np.ndarray | None,
+) -> tuple[_ProfileSide, _ProfileSide]:
+    """The (low, high) searches of one profile CI, not yet started."""
+    zq = norm_ppf(1.0 - alpha / 2.0)
+    target = pll_full - 0.5 * zq * zq
+    step0 = zq * se if (se > 0 and math.isfinite(se)) else 1.0
+    b_hat = float(beta_hat[j])
+    return tuple(
+        _ProfileSide(
+            _profile_search(b_hat, pll_full, target, step0, direction, tol, max_expand),
+            beta_hat, b_hat, tangent0,
+        )
+        for direction in (-1.0, 1.0)
+    )
+
+
+def _profile_search(
+    b_hat: float,
+    pll_full: float,
+    target: float,
+    step0: float,
+    direction: float,
+    tol: float,
+    max_expand: int,
+):
+    """One side of the profile-CI bound search as a generator: it yields
+    each beta_j to refit at, is sent back the profile value and
+    derivative (f, f') there, and returns the bound (±inf when the
+    profile never drops to ``target`` within the expansion budget)."""
+    # Expand outward from beta_hat_j until the profile falls below
+    # the target (f is decreasing as we move away from the optimum).
+    # First probe at 1.15x the Wald half-width — profile bounds run
+    # slightly wide of Wald for logistic-shaped likelihoods, so this
+    # usually brackets in ONE evaluation; afterwards each probe uses
+    # its own derivative to jump (overshooting 10% to force the
+    # bracket) instead of blind geometric growth.
+    # g at the optimum is exactly 0 (the profile derivative IS the
+    # modified score's j-th component, stationary at beta_hat).
+    b_in, f_in, g_in = b_hat, pll_full, 0.0
+    step = 1.15 * step0
+    b_out, f_out, g_out = None, None, 0.0
+    b = b_hat
+    for _ in range(max_expand):
+        b = b + direction * step
+        f, g = yield b
+        if f < target:
+            b_out, f_out, g_out = b, f, g
+            break
+        b_in, f_in, g_in = b, f, g
+        jump = (target - f) / g if g != 0.0 else math.nan
+        if math.isfinite(jump) and direction * jump > 0:
+            step = 1.1 * abs(jump)
+        else:
+            step *= 1.6
+    if b_out is None:
+        return direction * math.inf
+    # Safeguarded CUBIC-HERMITE root find on [b_in, b_out]
+    # (f_in > target > f_out; f and f' known at BOTH ends, the
+    # derivative free via the envelope theorem). The Hermite
+    # interpolant is 4th-order accurate where the r7 one-sided
+    # Newton was 2nd-order — measured one fewer evaluation per side
+    # on the PheWAS shapes at identical converged bounds.
+    # Convergence is GUARANTEED, not just typical: any iteration
+    # whose |f - target| fails to shrink by at least 30% forces the
+    # next step to be a bisection (which halves the bracket), so a
+    # stalling interpolant cannot burn the iteration cap creeping
+    # along an ill-conditioned profile. The trigger is on
+    # f-progress, NOT bracket width — an interpolant converging to
+    # a root near one end of the bracket never shrinks the width
+    # much, and a width trigger would punish exactly the healthy
+    # case (it measurably doubled evaluations per side when tried).
+    best_b, best_gap = b_out, abs(f_out - target)
+    prev_gap = best_gap
+    force_bisect = False
+    for _ in range(30):
+        if best_gap < tol or abs(b_out - b_in) < 1e-10:
+            break
+        b_next = (
+            _hermite_root(b_in, f_in, g_in, b_out, f_out, g_out, target)
+            if not force_bisect
+            else math.nan
+        )
+        if math.isnan(b_next):  # degenerate, forced, or out of bracket
+            b_next = 0.5 * (b_in + b_out)
+        f_next, g_next = yield b_next
+        if f_next >= target:
+            b_in, f_in, g_in = b_next, f_next, g_next
+        else:
+            b_out, f_out, g_out = b_next, f_next, g_next
+        gap = abs(f_next - target)
+        force_bisect = gap > 0.7 * prev_gap
+        prev_gap = gap
+        if gap < best_gap:
+            best_b, best_gap = b_next, gap
+    return best_b
+
+
 def firth_profile_ci(
     Xc: np.ndarray,
     y: np.ndarray,
@@ -535,7 +682,9 @@ def firth_profile_ci(
     regressions, so evaluation count is the whole cost). A Newton step
     leaving the bracket falls back to the midpoint. Returns (low,
     high); an unbracketable side (profile never drops far enough within
-    the expansion budget) yields ±inf.
+    the expansion budget) yields ±inf. The search itself is
+    [[_profile_search]], shared with the batch ([[firth_fit_many]]);
+    this function drives each side to completion in turn.
 
     Each refit's warm start is the FIRST-ORDER PREDICTOR along the
     profile path, warm + (b - b_warm) * tangent, with the tangent
@@ -547,94 +696,26 @@ def firth_profile_ci(
     so converged numerics agree with the unpredicted path to the inner
     tolerance's second order (measured: bounds move < 2e-9 across the
     28-fixture battery, goldens hash-stable)."""
-    zq = norm_ppf(1.0 - alpha / 2.0)
-    target = pll_full - 0.5 * zq * zq
-    step0 = zq * se if (se > 0 and math.isfinite(se)) else 1.0
-    bounds = [math.nan, math.nan]
-    for side, direction in ((0, -1.0), (1, 1.0)):
-        # Expand outward from beta_hat_j until the profile falls below
-        # the target (f is decreasing as we move away from the optimum).
-        # First probe at 1.15x the Wald half-width — profile bounds run
-        # slightly wide of Wald for logistic-shaped likelihoods, so this
-        # usually brackets in ONE evaluation; afterwards each probe uses
-        # its own derivative to jump (overshooting 10% to force the
-        # bracket) instead of blind geometric growth.
-        # g at the optimum is exactly 0 (the profile derivative IS the
-        # modified score's j-th component, stationary at beta_hat).
-        b_in, f_in, g_in = float(beta_hat[j]), pll_full, 0.0
-        warm, b_warm, tang = beta_hat, float(beta_hat[j]), tangent0
-        step = 1.15 * step0
-        b_out, f_out, g_out = None, None, 0.0
-        b = float(beta_hat[j])
+    sides = _profile_sides(
+        beta_hat, pll_full, se, j, alpha, tol, max_expand, tangent0
+    )
+    for side in sides:
+        reply = None
+        while side.advance(reply):
+            f, wc, g, tg = _profile_pll(Xc, y, j, side.b, side.start(), ws)
+            side.update(wc, tg)
+            reply = (f, g)
+    return sides[0].bound, sides[1].bound
 
-        def predicted(bv: float) -> np.ndarray:
-            if tang is None:
-                return warm
-            return warm + (bv - b_warm) * tang
 
-        for _ in range(max_expand):
-            b = b + direction * step
-            f, wc, g, tg = _profile_pll(Xc, y, j, b, predicted(b), ws)
-            warm, b_warm = wc, b
-            if tg is not None:
-                tang = tg
-            if f < target:
-                b_out, f_out, g_out = b, f, g
-                break
-            b_in, f_in, g_in = b, f, g
-            jump = (target - f) / g if g != 0.0 else math.nan
-            if math.isfinite(jump) and direction * jump > 0:
-                step = 1.1 * abs(jump)
-            else:
-                step *= 1.6
-        if b_out is None:
-            bounds[side] = direction * math.inf
-            continue
-        # Safeguarded CUBIC-HERMITE root find on [b_in, b_out]
-        # (f_in > target > f_out; f and f' known at BOTH ends, the
-        # derivative free via the envelope theorem). The Hermite
-        # interpolant is 4th-order accurate where the r7 one-sided
-        # Newton was 2nd-order — measured one fewer evaluation per side
-        # on the PheWAS shapes at identical converged bounds.
-        # Convergence is GUARANTEED, not just typical: any iteration
-        # whose |f - target| fails to shrink by at least 30% forces the
-        # next step to be a bisection (which halves the bracket), so a
-        # stalling interpolant cannot burn the iteration cap creeping
-        # along an ill-conditioned profile. The trigger is on
-        # f-progress, NOT bracket width — an interpolant converging to
-        # a root near one end of the bracket never shrinks the width
-        # much, and a width trigger would punish exactly the healthy
-        # case (it measurably doubled evaluations per side when tried).
-        best_b, best_gap = b_out, abs(f_out - target)
-        prev_gap = best_gap
-        force_bisect = False
-        for _ in range(30):
-            if best_gap < tol or abs(b_out - b_in) < 1e-10:
-                break
-            b_next = (
-                _hermite_root(b_in, f_in, g_in, b_out, f_out, g_out, target)
-                if not force_bisect
-                else math.nan
-            )
-            if math.isnan(b_next):  # degenerate, forced, or out of bracket
-                b_next = 0.5 * (b_in + b_out)
-            f_next, wc, g_next, tg = _profile_pll(
-                Xc, y, j, b_next, predicted(b_next), ws
-            )
-            warm, b_warm = wc, b_next
-            if tg is not None:
-                tang = tg
-            if f_next >= target:
-                b_in, f_in, g_in = b_next, f_next, g_next
-            else:
-                b_out, f_out, g_out = b_next, f_next, g_next
-            gap = abs(f_next - target)
-            force_bisect = gap > 0.7 * prev_gap
-            prev_gap = gap
-            if gap < best_gap:
-                best_b, best_gap = b_next, gap
-        bounds[side] = best_b
-    return bounds[0], bounds[1]
+def _base_rate_start(y: np.ndarray, k: int) -> np.ndarray:
+    """The full fit's start: zeros, with the intercept (last) at the
+    logit of the prevalence when that is finite."""
+    beta0 = np.zeros(k)
+    ybar = float(y.mean())
+    if 0.0 < ybar < 1.0:
+        beta0[-1] = math.log(ybar / (1.0 - ybar))
+    return beta0
 
 
 def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
@@ -663,13 +744,8 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
     # monotone-halving guard (r8 measurement: 8->6 and 13->8 state
     # evals at prevalence 0.05/0.004; identical converged beta to
     # <= 6e-8, gated by the A/B fixture battery + MAS goldens).
-    ybar = float(y.mean())
-    beta0_full = None
-    if 0.0 < ybar < 1.0:
-        beta0_full = np.zeros(k)
-        beta0_full[-1] = math.log(ybar / (1.0 - ybar))
     beta, cov, conv_full, p_full, _, fish_full = _firth_newton(
-        Xc, y, all_free, beta0=beta0_full, ws=ws
+        Xc, y, all_free, beta0=_base_rate_start(y, k), ws=ws
     )
     pll_full = _pll_from_parts(y, p_full, fish_full, ws)
 
@@ -708,6 +784,317 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
         "ci_low": float(ci_low),
         "ci_high": float(ci_high),
     }
+
+
+# ---------------------------------------------------------------------------
+# Firth for many dependents at once
+# ---------------------------------------------------------------------------
+
+# Columns x rows held in one chunk of the batched Firth fit. Every
+# working array of a chunk is (columns, rows), and the profile-CI pass
+# holds two chains per column, so this bounds the batch's memory. On
+# phewas_firth-shaped data (n = 1,000, k = 7, 146 dependents, one core)
+# 2^14, i.e. 16 columns, cost the least CPU: 258 ms per 146 fits,
+# against 304-351 ms at 2^12-2^13, 276-299 ms at 2^15-2^17 and 659 ms
+# per pair, with a 6 MB peak traced allocation.
+_BATCH_ELEMENTS = 2 ** 14
+# Elements of the row-wise X (x) X matrix (n x k^2) the batch keeps per
+# design. A larger design (very wide or tall) fits per pair.
+_OUTER_ELEMENTS = 2 ** 22
+
+
+def _stacked(fn, *arrays: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``fn`` (np.linalg.inv or solve) over stacks of matrices, plus a
+    flag per matrix LAPACK finds singular; a flagged result is NaN
+    instead of failing the whole stack."""
+    try:
+        return fn(*arrays), np.zeros(len(arrays[0]), dtype=bool)
+    except np.linalg.LinAlgError:
+        out = np.full(arrays[-1].shape, math.nan)
+        singular = np.zeros(len(out), dtype=bool)
+        for i, parts in enumerate(zip(*arrays)):
+            try:
+                out[i] = fn(*parts)
+            except np.linalg.LinAlgError:
+                singular[i] = True
+        return out, singular
+
+
+def _firth_states(
+    Xc: np.ndarray, Q: np.ndarray, betas: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(p, w, Fisher) for each row of ``betas``, row-major (m x n). The
+    Fisher matrices are one GEMM, W @ Q, with Q the row-wise X (x) X; the
+    sigmoid is _sigmoid_into's formula."""
+    eta = betas @ Xc.T
+    t = np.exp(-np.abs(eta))
+    u = t + 1.0
+    p = 1.0 / u
+    np.divide(t, u, out=t)
+    np.copyto(p, t, where=eta < 0.0)
+    w = 1.0 - p
+    w *= p
+    k = Xc.shape[1]
+    return p, w, (w @ Q).reshape(len(betas), k, k)
+
+
+def _pll_rows(Y: np.ndarray, P: np.ndarray, F: np.ndarray) -> np.ndarray:
+    """_pll_from_parts for each row."""
+    eps = 1e-300
+    ll = np.einsum("ij,ij->i", Y, np.log(P + eps))
+    ll += np.einsum("ij,ij->i", 1.0 - Y, np.log(1.0 - P + eps))
+    sign, logdet = np.linalg.slogdet(F)
+    return np.where(sign <= 0, -math.inf, ll + 0.5 * logdet)
+
+
+def _firth_newton_many(
+    Xc: np.ndarray,
+    Q: np.ndarray,
+    Y: np.ndarray,
+    beta0: np.ndarray,
+    hold0: bool,
+    tol: float,
+    max_iter: int = 25,
+    max_step: float = 5.0,
+    max_halvings: int = 12,
+) -> tuple[np.ndarray, ...]:
+    """_firth_newton for every row of ``Y`` (m x n) in lockstep, each
+    from its own row of ``beta0``; ``hold0`` holds coefficient 0 at its
+    start (the LRT null fit and the profile refits), and xtol = gtol =
+    ``tol``. Each row takes exactly _firth_newton's decisions — the ±5
+    clamp, the PLL-monotone halving of a step >= 1 (up to 12 halvings,
+    plus the halving after the last failed try), the convergence test —
+    so rows differ from per-pair fits only in floating-point rounding.
+    A converged row retires from the working set.
+
+    Returns (beta, cov, converged, pll, p, w, singular), all row-major.
+    A row whose Fisher matrix or Newton system LAPACK finds singular is
+    flagged ``singular`` and left unfitted: _firth_newton would take a
+    pinv/lstsq step there, which the batch does not mirror."""
+    m, n = Y.shape
+    k = Xc.shape[1]
+    fr = slice(1 if hold0 else 0, None)
+    beta_out = np.array(beta0, dtype=np.float64)
+    p_out, w_out = np.empty((m, n)), np.empty((m, n))
+    f_out = np.empty((m, k, k))
+    converged = np.zeros(m, dtype=bool)
+    singular = np.zeros(m, dtype=bool)
+
+    rows = np.arange(m)
+    Yw = Y
+    beta = beta_out.copy()
+    p, w, fisher = _firth_states(Xc, Q, beta)
+    # The PLL at the current state, computed lazily as in _firth_newton
+    # (NaN = not computed).
+    pll = np.full(m, math.nan)
+
+    def retire(sel, conv):
+        r = rows[sel]
+        beta_out[r], p_out[r], w_out[r], f_out[r] = beta[sel], p[sel], w[sel], fisher[sel]
+        converged[r] = conv
+
+    for _ in range(max_iter):
+        if not rows.size:
+            break
+        # Hat diagonal and Firth modified score, as in _firth_newton. A
+        # singular row's NaNs run through this iteration harmlessly (a
+        # NaN step takes the small-step branch) and it leaves below.
+        fisher_inv, bad = _stacked(np.linalg.inv, fisher)
+        h = fisher_inv.reshape(len(rows), k * k) @ Q.T
+        h *= w
+        u = Yw - p
+        u += h * (0.5 - p)
+        score_f = (u @ Xc)[:, fr]
+        step, bad_step = _stacked(np.linalg.solve, fisher[:, fr, fr], score_f[..., None])
+        bad |= bad_step
+        step = step[..., 0]
+        mx = np.abs(step).max(axis=1)
+        clamp = mx > max_step
+        step[clamp] *= (max_step / mx[clamp])[:, None]
+        mx[clamp] = max_step
+
+        cand = beta.copy()
+        cand[:, fr] += step
+        p2, w2, f2 = np.empty_like(p), np.empty_like(w), np.empty_like(fisher)
+        pll2 = np.full(len(rows), math.nan)
+        guard = mx >= 1.0
+        easy = ~guard
+        if easy.any():
+            p2[easy], w2[easy], f2[easy] = _firth_states(Xc, Q, cand[easy])
+        if guard.any():
+            # Monotone-ascent safeguard on the large steps only.
+            stale = guard & np.isnan(pll)
+            if stale.any():
+                pll[stale] = _pll_rows(Yw[stale], p[stale], fisher[stale])
+            tries = np.flatnonzero(guard)
+            for _hs in range(max_halvings + 1):
+                cand[tries, fr] = beta[tries, fr] + step[tries]
+                p2[tries], w2[tries], f2[tries] = _firth_states(Xc, Q, cand[tries])
+                pll2[tries] = _pll_rows(Yw[tries], p2[tries], f2[tries])
+                tries = tries[~(pll2[tries] >= pll[tries] - 1e-12)]
+                if not tries.size:
+                    break
+                step[tries] *= 0.5
+                mx[tries] *= 0.5
+        beta, p, w, fisher, pll = cand, p2, w2, f2, pll2
+        done = (mx <= tol) & (np.abs(score_f).max(axis=1) <= tol)
+        retire(done, True)
+        singular[rows[bad]] = True
+        keep = ~(done | bad)
+        rows, Yw, beta, p, w, fisher, pll = (
+            a[keep] for a in (rows, Yw, beta, p, w, fisher, pll)
+        )
+    retire(slice(None), False)
+
+    ok = np.flatnonzero(~singular)
+    cov = np.full((m, k, k), math.nan)
+    cov[ok], bad = _stacked(np.linalg.inv, f_out[ok])
+    singular[ok[bad]] = True
+    pll_out = np.full(m, math.nan)
+    pll_out[ok] = _pll_rows(Y[ok], p_out[ok], f_out[ok])
+    return beta_out, cov, converged, pll_out, p_out, w_out, singular
+
+
+def _profile_ci_many(
+    Xc: np.ndarray,
+    Q: np.ndarray,
+    Yt: np.ndarray,
+    beta: np.ndarray,
+    cov: np.ndarray,
+    pll_full: np.ndarray,
+    cols: list[int],
+) -> dict[int, tuple[float, float]]:
+    """firth_profile_ci for the rows ``cols`` of ``Yt``. Every column's
+    two sides are independent searches ([[_profile_search]]) that
+    advance together: each round's pending profile refits are one
+    _firth_newton_many call at the per-pair refit's tolerance (1e-4).
+    Returns {col: (low, high)}, leaving out any column whose refit hit a
+    singular matrix."""
+    k = Xc.shape[1]
+    pending: list[tuple[int, _ProfileSide]] = []
+    sides: dict[int, tuple[_ProfileSide, _ProfileSide]] = {}
+    for c in cols:
+        c00 = float(cov[c, 0, 0])
+        ok = c00 > 0 and math.isfinite(c00)
+        se = math.sqrt(max(c00, 0.0))
+        sides[c] = _profile_sides(
+            beta[c], pll_full[c], se, 0, 0.05, 1e-6, 40,
+            cov[c, :, 0] / c00 if ok else None,
+        )
+        pending += [(c, side) for side in sides[c] if side.advance()]
+    while pending:
+        m = len(pending)
+        start = np.array([side.start() for _, side in pending])
+        start[:, 0] = [side.b for _, side in pending]
+        Yp = Yt[[c for c, _ in pending]]
+        beta_c, cov_c, _, f, p, w, bad = _firth_newton_many(
+            Xc, Q, Yp, start, hold0=True, tol=1e-4
+        )
+        # Profile derivative: the modified score's coefficient-0
+        # component at the profiled solution (see _profile_pll).
+        h = cov_c.reshape(m, k * k) @ Q.T
+        h *= w
+        u = Yp - p
+        u += h * (0.5 - p)
+        g = u @ Xc[:, 0]
+        for c in {pending[i][0] for i in np.flatnonzero(bad)}:
+            sides.pop(c, None)
+        nxt = []
+        for i, (c, side) in enumerate(pending):
+            if c not in sides:
+                continue
+            cjj = float(cov_c[i, 0, 0])
+            tangent = cov_c[i, :, 0] / cjj if (cjj > 0 and math.isfinite(cjj)) else None
+            side.update(beta_c[i], tangent)
+            if side.advance((float(f[i]), float(g[i]))):
+                nxt.append((c, side))
+        pending = nxt
+    return {c: (lo.bound, hi.bound) for c, (lo, hi) in sides.items()}
+
+
+def _firth_chunk(Xc: np.ndarray, Q: np.ndarray, Yt: np.ndarray) -> list[dict | None]:
+    """firth_fit's result for each row of ``Yt`` (B x n), fitted
+    together; None for a column that hit a singular matrix or whose full
+    or null fit did not converge."""
+    B, k = len(Yt), Xc.shape[1]
+    beta0 = np.array([_base_rate_start(y, k) for y in Yt])
+    beta, cov, conv_full, pll_full, _, _, bad = _firth_newton_many(
+        Xc, Q, Yt, beta0, hold0=False, tol=1e-5
+    )
+    # LRT null fit, warm-started from the full fit.
+    live = np.flatnonzero(~bad)
+    start = beta[live].copy()
+    start[:, 0] = 0.0
+    _, _, conv_null, pll_null, _, _, bad_null = _firth_newton_many(
+        Xc, Q, Yt[live], start, hold0=True, tol=1e-5
+    )
+    # A fit that ran out of iterations stopped at a path-dependent
+    # iterate, where op-order rounding need not stay small: the per-pair
+    # kernel fits that column instead.
+    ok = ~bad_null & conv_null & conv_full[live]
+    live, pll_null = live[ok], pll_null[ok]
+    ci = _profile_ci_many(Xc, Q, Yt, beta, cov, pll_full, live.tolist())
+
+    out: list[dict | None] = [None] * B
+    for c, pll0 in zip(live.tolist(), pll_null):
+        if c not in ci:
+            continue
+        lr = max(2.0 * (pll_full[c] - pll0), 0.0)
+        b0 = float(beta[c, 0])
+        out[c] = {
+            "pval": chi2_sf(float(lr), 1.0),
+            "beta": b0,
+            "se": math.sqrt(max(cov[c, 0, 0], 0.0)),
+            "OR": math.exp(b0),
+            "converged": True,
+            "ci_low": float(ci[c][0]),
+            "ci_high": float(ci[c][1]),
+        }
+    return out
+
+
+def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
+    """firth_fit for each of ``ys`` (dependents of length n) against one
+    design ``X``, fitted together: one result dict per dependent, with
+    firth_fit's keys.
+
+    A PheWAS task fits many dependents on the same x and covariates,
+    and per pair the Newton and profile-CI search are mostly
+    interpreter and small-BLAS dispatch. Here every column of a chunk
+    takes firth_fit's exact decision sequence in lockstep
+    ([[_firth_newton_many]]), so results differ from per-pair fits only
+    in floating-point op order (tests/test_stats_kernels.py holds them
+    to rtol 1e-9). Per iteration, all Fisher matrices are one GEMM,
+    W @ Q with Q the row-wise X (x) X (n x k^2), and all hat diagonals
+    are one more, Finv.reshape(B, k^2) @ Q.T; inverses, solves and
+    log-determinants are stacked. ``ys`` is consumed in chunks of
+    _BATCH_ELEMENTS // n columns, so only one chunk is held at a time.
+
+    firth_fit is both the reference and the fallback: it fits a column
+    whose batched solve hit a singular matrix or whose full or null fit
+    did not converge, and every column when batching cannot help
+    (n > _BATCH_ELEMENTS / 2, an n x k^2 Q over _OUTER_ELEMENTS) or the
+    design is non-finite or rank-deficient (every column's Fisher
+    matrix is then singular)."""
+    X = np.asarray(X, dtype=np.float64)
+    ys = (np.ascontiguousarray(y, dtype=np.float64) for y in ys)
+    n = len(X)
+    Xc = add_intercept(X.reshape(n, -1))
+    k = Xc.shape[1]
+    width = _BATCH_ELEMENTS // max(n, 1)
+    if (
+        width < 2
+        or n * k * k > _OUTER_ELEMENTS
+        or not np.isfinite(Xc).all()
+        or np.linalg.matrix_rank(Xc) < k
+    ):
+        return [firth_fit(X, y) for y in ys]
+    Q = (Xc[:, :, None] * Xc[:, None, :]).reshape(n, k * k)
+    out: list[dict] = []
+    while chunk := list(itertools.islice(ys, width)):
+        fits = _firth_chunk(Xc, Q, np.array(chunk))
+        out += [r if r is not None else firth_fit(X, y) for r, y in zip(fits, chunk)]
+    return out
 
 
 # ---------------------------------------------------------------------------

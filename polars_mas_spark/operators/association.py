@@ -40,6 +40,7 @@ from polars_mas_spark.colutils import qcol, qname
 from polars_mas_spark.config import MASConfig
 from polars_mas_spark.functions.stats import (
     firth_fit,
+    firth_fit_many,
     logistic_fit,
     ols_fit,
     poisson_fit,
@@ -262,13 +263,11 @@ def make_packed_kernel(
     sex_col: str | None = None,
 ) -> Callable[[tuple, pd.DataFrame], pd.DataFrame]:
     """Grouped-map kernel over (predictor, dep-bucket) groups: unpack the
-    bucket's dependent-value arrays and run the EXACT per-pair kernel
-    core ([[make_array_kernel]]) once per dependent, so validation, sex
-    restriction, per-subset constant drop, and the failure-as-row
-    channel are shared code with the classic unpivot path — result
-    parity by construction. One result DataFrame per bucket group
-    instead of a per-dependent concat (r13: same rows, less pandas
-    construction overhead)."""
+    bucket's dependent-value arrays and run the group kernel
+    ([[make_array_kernel]]) over them, so validation, sex restriction,
+    per-subset constant drop, and the failure-as-row channel are shared
+    code with the classic unpivot path. One result DataFrame per bucket
+    group."""
     inner = make_array_kernel(
         model, covariates, quantitative, min_case_count,
         sex_restrictions, sex_col,
@@ -281,22 +280,18 @@ def make_packed_kernel(
         deps = bucket_deps[int(bucket)]
         # Arrow list<double> arrives as ndarray-per-cell; nulls are NaN.
         mat = np.array(pdf[PACKED_DEPS].tolist(), dtype=np.float64)
-        x = pdf[PRED_VALUE].to_numpy()
+        if not mat.size:
+            mat = np.empty((0, len(deps)), dtype=np.float64)
         cov_np = [
             (safe, orig, pdf[safe].to_numpy())
             for safe, orig in cov_pairs
             if safe in pdf.columns
         ]
-        rows = []
-        for j, dep in enumerate(deps):
-            y = mat[:, j] if mat.size else np.empty(0, dtype=np.float64)
-            mask = ~np.isnan(y)
-            rows.append(
-                inner(
-                    predictor, dep, x[mask], y[mask],
-                    [(s, o, a[mask]) for s, o, a in cov_np],
-                )
-            )
+        column = {dep: j for j, dep in enumerate(deps)}
+        rows = inner(
+            predictor, pdf[PRED_VALUE].to_numpy(), cov_np, deps,
+            lambda dep: mat[:, column[dep]],
+        )
         return pd.DataFrame(
             [{c: r[c] for c in columns} for r in rows], columns=columns
         )
@@ -609,26 +604,36 @@ def make_array_kernel(
     sex_restrictions: dict | None = None,
     sex_col: str | None = None,
 ) -> Callable:
-    """The per-pair fit kernel over RAW NUMPY ARRAYS — the shared core
+    """The group fit kernel over RAW NUMPY ARRAYS — the shared core
     behind make_kernel / make_packed_kernel / the columnar fan-out, so
     every physical strategy runs the exact same validation, per-subset
     constant drop, design build, and failure-as-row channel.
 
-    Returns ``fn(predictor, dependent, x, y, cov_arrays) -> dict`` where
-    ``x``/``y`` are equal-length float64 ndarrays (already null-masked
-    like the long-table filter) and ``cov_arrays`` is ``[(safe_name,
-    orig_name, values_ndarray)]`` in covariate order for the covariates
-    present in the group. The dict is one result row (result_schema
-    order keys).
+    Returns ``fn(predictor, x, cov_arrays, deps, values, keep=None) ->
+    list[dict]``, one result row (result_schema keys) per dependent in
+    ``deps``, in order. ``x`` is the predictor column over the task's
+    rows (float64; NaN values reach the fit and fail the pair as a row),
+    ``cov_arrays`` is ``[(safe_name, orig_name, values_ndarray)]`` in
+    covariate order for the covariates present, ``values(dependent)``
+    returns a dependent's column (float64, NaN for a missing value) and
+    ``keep`` masks the rows every dependent may use (None: all rows).
+    Dependent columns are fetched when needed and not kept, so a task
+    holds one of them at a time (one chunk, in the Firth batch).
 
-    Split out in r13 (guide §4.2): the pdf-facing wrapper spent
-    3-6 ms/fit in pandas machinery (DataFrame construction, Series
-    getitem, Series.nunique) against a 14-52 ms fit — pure dispatch
-    overhead, none of it arithmetic. Every numeric decision here is
-    made by the same operations on the same float64 values as the old
-    pdf path (y.sum(), pd.unique-based distinct counts, column_stack →
-    add_intercept's C-order copy), so results are bit-identical —
-    tools/ab_kernel_battery.py checks this."""
+    Each dependent's row mask is ``keep``, y not NaN and its sex
+    restriction; dependents with identical masks form a group. Per
+    group, once: the masked x and covariates, the constant-predictor
+    check, the per-subset constant-covariate drop and the design X. Per
+    dependent, in that order: the case/control checks. A Firth group
+    with two or more dependents left is fitted by
+    stats.firth_fit_many; every other fit is the per-pair kernel.
+
+    Every numeric decision here is made by the same operations on the
+    same float64 values as a per-pair fit of one dependent (y.sum(),
+    pd.unique-based distinct counts, column_stack → add_intercept's
+    C-order copy), so the per-pair kernels stay bit-identical —
+    tools/ab_kernel_battery.py checks this, and it holds the batch to
+    rtol 1e-9."""
     defaults = _LINEAR_DEFAULTS if model in _QUANT_MODELS else _BINARY_DEFAULTS
     fit_func = _MODEL_FUNCS[model]
     cov_pairs = safe_covariate_pairs(covariates)
@@ -639,53 +644,41 @@ def make_array_kernel(
                 sex_safe = safe
                 break
 
-    def akernel(predictor, dependent, x, y, cov_arrays) -> dict:
-        from polars_mas_spark.functions.native_threads import prepare_worker
-
-        prepare_worker()  # cheap after the first call per process
-        row = dict(defaults)
-        row["predictor"] = predictor
-        row["dependent"] = dependent
-
-        if sex_safe is not None and sex_restrictions.get(dependent) is not None:
-            code = sex_restrictions[dependent]
-            mask = None
-            for safe, _orig, arr in cov_arrays:
-                if safe == sex_safe:
-                    # Elementwise == with NaN -> False, exactly the
-                    # pandas boolean-filter semantics of the old path.
-                    mask = arr == code
-                    break
-            if mask is not None:
-                x = x[mask]
-                y = y[mask]
-                cov_arrays = [(s, o, a[mask]) for s, o, a in cov_arrays]
-
-        n_rows = len(y)
-        if n_rows == 0:
-            row["failed_reason"] = "No data after dropping nulls."
-            return row
-
-        if not quantitative:
-            cases = int(y.sum())
-            controls = n_rows - cases
-            if cases < min_case_count:
-                row["failed_reason"] = f"Insufficient case count ({cases} cases)."
-                return row
-            if controls < min_case_count:
-                row["failed_reason"] = (
-                    f"Insufficient control count ({controls} controls)."
-                )
-                return row
-            if cases == n_rows:
-                row["failed_reason"] = "All observations are cases."
-                return row
-            row.update(cases=cases, controls=controls, total_n=n_rows)
-        else:
-            if n_rows < min_case_count:
-                row["failed_reason"] = f"Not enough observations ({n_rows})."
-                return row
-            row["n_observations"] = n_rows
+    def fit_group(predictor, x, cov_arrays, deps, masked) -> list[dict]:
+        rows, todo = [], []
+        for dependent in deps:
+            y = masked(dependent)
+            row = dict(defaults)
+            row["predictor"] = predictor
+            row["dependent"] = dependent
+            rows.append(row)
+            n_rows = len(y)
+            if n_rows == 0:
+                row["failed_reason"] = "No data after dropping nulls."
+                continue
+            if not quantitative:
+                cases = int(y.sum())
+                controls = n_rows - cases
+                if cases < min_case_count:
+                    row["failed_reason"] = f"Insufficient case count ({cases} cases)."
+                    continue
+                if controls < min_case_count:
+                    row["failed_reason"] = (
+                        f"Insufficient control count ({controls} controls)."
+                    )
+                    continue
+                if cases == n_rows:
+                    row["failed_reason"] = "All observations are cases."
+                    continue
+                row.update(cases=cases, controls=controls, total_n=n_rows)
+            else:
+                if n_rows < min_case_count:
+                    row["failed_reason"] = f"Not enough observations ({n_rows})."
+                    continue
+                row["n_observations"] = n_rows
+            todo.append(row)
+        if not todo:
+            return rows
 
         # A constant (monomorphic) predictor carries no association
         # signal, but the design matrix [pred, ..., intercept] becomes
@@ -696,8 +689,9 @@ def make_array_kernel(
         # (also keeps all three physical strategies result-identical;
         # the centered-moments formulation would report beta=0 here).
         if _nunique_values(x) <= 1:
-            row["failed_reason"] = "Constant predictor."
-            return row
+            for row in todo:
+                row["failed_reason"] = "Constant predictor."
+            return rows
 
         # Per-subset constant-covariate drop (analysis.py:196-206).
         active = [
@@ -705,10 +699,9 @@ def make_array_kernel(
             for _safe, orig, arr in cov_arrays
             if _nunique_values(arr) > 1
         ]
-        equation = (
-            f"{dependent} ~ {predictor} + {' + '.join(orig for orig, _ in active)}"
-        )
-        row["equation"] = equation
+        terms = f"{predictor} + {' + '.join(orig for orig, _ in active)}"
+        for row in todo:
+            row["equation"] = f"{row['dependent']} ~ {terms}"
 
         # column_stack casts + copies exactly like the old
         # pdf[[...]].to_numpy(float64); layout is normalized anyway by
@@ -716,12 +709,51 @@ def make_array_kernel(
         X = np.column_stack(
             [x, *[arr.astype(np.float64, copy=False) for _o, arr in active]]
         ) if active else x.reshape(-1, 1)
-        try:
-            stats = fit_func(X, y)
-            row.update(stats)
-        except Exception as exc:  # failures are rows, not exceptions
-            row["failed_reason"] = str(exc)
-        return row
+        if model == "firth" and len(todo) > 1:
+            try:
+                fits = firth_fit_many(X, (masked(r["dependent"]) for r in todo))
+            except Exception:  # per pair below: failures are rows
+                fits = None
+            if fits is not None:
+                for row, stats in zip(todo, fits):
+                    row.update(stats)
+                return rows
+        for row in todo:
+            try:
+                row.update(fit_func(X, masked(row["dependent"])))
+            except Exception as exc:  # failures are rows, not exceptions
+                row["failed_reason"] = str(exc)
+        return rows
+
+    def akernel(predictor, x, cov_arrays, deps, values, keep=None) -> list[dict]:
+        from polars_mas_spark.functions.native_threads import prepare_worker
+
+        prepare_worker()  # cheap after the first call per process
+        sex = None
+        if sex_safe is not None:
+            sex = next((a for s, _o, a in cov_arrays if s == sex_safe), None)
+        groups: dict[bytes, tuple[np.ndarray, list[int]]] = {}
+        for i, dependent in enumerate(deps):
+            mask = ~np.isnan(values(dependent))
+            if keep is not None:
+                mask &= keep
+            code = sex_restrictions.get(dependent) if sex is not None else None
+            if code is not None:
+                # Elementwise == with NaN -> False, exactly the pandas
+                # boolean-filter semantics of the old path.
+                mask &= sex == code
+            groups.setdefault(mask.tobytes(), (mask, []))[1].append(i)
+        rows: list[dict] = [None] * len(deps)
+        for mask, idx in groups.values():
+            fitted = fit_group(
+                predictor, x[mask],
+                [(s, o, a[mask]) for s, o, a in cov_arrays],
+                [deps[i] for i in idx],
+                lambda dependent, mask=mask: values(dependent)[mask],
+            )
+            for i, row in zip(idx, fitted):
+                rows[i] = row
+        return rows
 
     return akernel
 
@@ -763,7 +795,7 @@ def make_kernel(
             for safe, orig in cov_pairs
             if safe in pdf.columns
         ]
-        row = akernel(predictor, dependent, x, y, cov_arrays)
+        (row,) = akernel(predictor, x, cov_arrays, [dependent], lambda _d: y)
         return pd.DataFrame([{c: row[c] for c in columns}])
 
     return kernel
@@ -1104,12 +1136,20 @@ def _complete_pairs(
     )
 
 
-def reusable_scan_files(df: DataFrame) -> list[str] | None:
+def reusable_scan_files(
+    df: DataFrame, refusals: list[str] | None = None
+) -> list[str] | None:
     """If ``df`` is nothing but a (projected) parquet scan, return its
     local data files so the columnar fan-out can read the SOURCE directly
     instead of writing a redundant checkpoint copy. Conservative: any
     computed expression, filter, projected hive partition column or
-    non-parquet source returns None."""
+    non-parquet source returns None. When a parquet scan is refused,
+    the reason is appended to ``refusals`` (if given)."""
+
+    def refuse(why: str) -> None:
+        if refusals is not None:
+            refusals.append(f"{why}; columnar writes a checkpoint copy")
+
     try:
         # Render the plan with field-list truncation disabled: the
         # default spark.sql.debug.maxToStringFields=25 elides projection
@@ -1131,21 +1171,24 @@ def reusable_scan_files(df: DataFrame) -> list[str] | None:
                 conf.set(key, old)
     except Exception:
         return None
-    if "more fields" in plan:
-        return None  # truncated render despite the conf — stay safe
     lines = [ln for ln in plan.splitlines() if ln.strip()]
     if not lines:
         return None
     rel = lines[-1].strip(" +-:")
     if not rel.startswith("Relation") or "parquet" not in rel.lower():
         return None
+    if "more fields" in plan:
+        refuse("the parquet scan's plan rendered truncated")
+        return None
     for ln in lines[:-1]:
         stripped = ln.strip(" +-:")
         if not stripped.startswith("Project ["):
+            refuse(f"the parquet scan is under a {stripped.split(' ', 1)[0]}")
             return None
         inner = stripped[len("Project ["): stripped.rindex("]")]
         if "(" in inner or " AS " in inner:
-            return None  # computed or renamed column
+            refuse("the parquet scan has a computed or renamed column")
+            return None
     try:
         partition_cols = set(
             optimized.collectLeaves().head().relation().partitionSchema().fieldNames()
@@ -1156,11 +1199,19 @@ def reusable_scan_files(df: DataFrame) -> list[str] | None:
         ]
     except Exception:
         return None
-    if partition_cols & set(df.columns):
+    used = sorted(partition_cols & set(df.columns))
+    if used:
         # Hive partition values live in directory names, not in the
         # files a pyarrow read of the columns would open.
+        names = ", ".join(repr(c) for c in used)
+        plural = "s" if len(used) > 1 else ""
+        refuse(f"hive partition column{plural} {names} "
+               f"{'are study columns' if plural else 'is a study column'}")
         return None
-    if not files or any("://" in f for f in files):
+    if not files:
+        return None
+    if any("://" in f for f in files):
+        refuse("the parquet files are not on local storage")
         return None  # non-local storage: fall back to checkpoint
     return sorted(files)
 
@@ -1235,7 +1286,11 @@ def _fit_columnar(
     With ``recipe`` (a PrepRecipe), ``df``/the files hold the RAW
     included table and each task applies preprocessing to its slice in
     pandas — the preprocessed wide table never exists as a JVM schema.
-    Without one, the input must already be preprocessed."""
+    Without one, the input must already be preprocessed.
+
+    Each task hands a predictor's whole run of dependents to the group
+    kernel ([[make_array_kernel]]) in one call, so the Firth dependents
+    that share a row mask are fitted together (stats.firth_fit_many)."""
     spark = df.sparkSession
     model = config.model
     covariates = list(config.covariate_columns)
@@ -1263,7 +1318,7 @@ def _fit_columnar(
     extra_cols = list(recipe.read_cols) if recipe is not None else []
 
     def fit_partition(batches):
-        import numpy as np  # noqa: F401  (kernel dependency)
+        import numpy as np
         import pandas as pd
         import pyarrow.dataset as pads
 
@@ -1315,32 +1370,25 @@ def _fit_columnar(
                         tbl[recipe.sex_filter[0]]
                     ).to_numpy(zero_copy_only=False)
                 data = recipe.apply_pandas(data)
-            x = pd.to_numeric(data[p], errors="coerce")
-            # One numpy view per group column; per-dependent work below
-            # is pure ndarray masking + the shared array kernel. Values
-            # and decisions are identical to the old per-dependent
-            # pandas-frame construction (see make_array_kernel); rows
-            # come back as ONE DataFrame per predictor group instead of
-            # 1-row frames — same rows, ~D fewer Arrow batches per task.
-            x_np = x.to_numpy()
-            prednull_np = data["__pred_isnull__"].to_numpy()
-            cov_np = [
-                (safe, orig, data[orig].to_numpy())
-                for safe, orig in cov_names
-            ]
-            rows = []
-            for d in deps:
-                y = pd.to_numeric(data[d], errors="coerce")
-                y_np = y.to_numpy()
-                mask = (~prednull_np) & ~pd.isna(y_np)
-                rows.append(
-                    akernel(
-                        p, d,
-                        x_np[mask].astype(np.float64),
-                        y_np[mask].astype(np.float64),
-                        [(s, o, a[mask]) for s, o, a in cov_np],
-                    )
+            # The group kernel fetches each dependent's column through
+            # `numeric` when it needs it (see make_array_kernel), a few
+            # times per dependent, so plain numpy number columns skip
+            # pd.to_numeric (~80 us a call). Nulls become NaN; the
+            # predictor's own are masked by `keep`.
+            def numeric(col: str) -> np.ndarray:
+                s = data[col]
+                if isinstance(s.dtype, np.dtype) and s.dtype.kind in "biuf":
+                    return s.to_numpy().astype(np.float64)
+                return pd.to_numeric(s, errors="coerce").to_numpy(
+                    dtype=np.float64, na_value=np.nan
                 )
+
+            rows = akernel(
+                p, numeric(p),
+                [(safe, orig, data[orig].to_numpy()) for safe, orig in cov_names],
+                deps, numeric,
+                keep=~data["__pred_isnull__"].to_numpy(),
+            )
             yield pd.DataFrame(
                 [{c: r[c] for c in columns} for r in rows], columns=columns
             )

@@ -100,7 +100,8 @@ class StudyPlan:
     directly; None means a checkpoint is written first. ``n_rows`` and
     ``row_source`` ("footers" or "spark count") are set when the auto
     pick needed a row count. ``reasons`` holds one entry per fallback
-    taken, in order."""
+    taken, in order: why columnar became packed, or why a columnar
+    study cannot read its parquet input's own files."""
 
     strategy: str
     requested: str | None
@@ -162,7 +163,10 @@ def plan_study(
         and len(config.covariate_columns) <= MOMENTS_MAX_COVARIATES
     ):
         strategy = "moments"
-    files = reusable_scan_files(df) if strategy in (None, "columnar") else None
+    refusals: list[str] = []
+    files = (
+        reusable_scan_files(df, refusals) if strategy in (None, "columnar") else None
+    )
     n_rows = row_source = None
     if strategy is None:
         if files is None:
@@ -187,6 +191,8 @@ def plan_study(
                     )
                 strategy, reasons = "packed", (reason,)
                 break
+        else:
+            reasons = tuple(refusals)
     return StudyPlan(
         strategy, requested, files if strategy == "columnar" else None,
         n_rows, row_source, reasons,

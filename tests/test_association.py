@@ -779,6 +779,84 @@ def test_sex_specific_restrictions(spark):
     )
 
 
+def test_columnar_firth_mask_groups_match_unpivot(spark, monkeypatch):
+    # Columnar Firth fits the dependents that share a row mask together
+    # (stats.firth_fit_many); unpivot fits each pair alone. Mask groups
+    # here: four complete unrestricted dependents (ph_0, ph_1, ph_9 and
+    # ph_rare, which is under min_case_count), two restricted to each
+    # sex, two sharing one NaN pattern and one (ph_8) with its own.
+    from polars_mas_spark.functions import stats
+    from polars_mas_spark.operators import association as assoc
+
+    rng = np.random.default_rng(31)
+    n = 600
+    pdf = pd.DataFrame({
+        "x": rng.normal(0, 1, n),
+        "age": rng.normal(50, 10, n),
+        "sex": rng.integers(0, 2, n).astype("int64"),
+    })
+    deps = [f"ph_{i}" for i in range(10)] + ["ph_rare"]
+    for i in range(10):
+        logit = -1.2 + (0.6 if i % 3 == 0 else 0.0) * pdf["x"] + 0.02 * (pdf["age"] - 50)
+        pdf[f"ph_{i}"] = (rng.random(n) < 1 / (1 + np.exp(-logit))).astype(float)
+    pdf.loc[rng.random(n) < 0.1, ["ph_6", "ph_7"]] = np.nan
+    pdf.loc[rng.random(n) < 0.05, "ph_8"] = np.nan
+    pdf["ph_rare"] = 0.0
+    pdf.loc[:3, "ph_rare"] = 1.0
+    restrict = {"ph_2": 1, "ph_3": 1, "ph_4": 0, "ph_5": 0}
+    cfg = MASConfig(
+        predictors="x", dependents=deps, covariates=["age", "sex"],
+        sex_col="sex", sex_restrictions=restrict, model="firth",
+        min_case_count=20,
+    ).resolve(pdf.columns.tolist())
+
+    def fit(strategy):
+        return (run_associations(spark.createDataFrame(pdf), cfg, strategy=strategy)
+                .toPandas().sort_values("dependent").reset_index(drop=True))
+
+    a, b = fit("unpivot"), fit("columnar")
+    assert list(a["failed_reason"]) == list(b["failed_reason"])
+    assert a.set_index("dependent").loc["ph_rare", "failed_reason"] == (
+        "Insufficient case count (4 cases)."
+    )
+    assert a["failed_reason"].eq("nan").sum() == 10
+    pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
+
+    # The same task in-process, with spies: every multi-dependent mask
+    # group goes to the batch, and the per-pair kernel fits only the
+    # single-dependent group (ph_8).
+    batches, per_pair = [], []
+    fit_many, fit_one = stats.firth_fit_many, stats.firth_fit
+
+    def spy_many(X, ys):
+        ys = list(ys)
+        batches.append(len(ys))
+        return fit_many(X, ys)
+
+    def spy_one(X, y):
+        per_pair.append(len(y))
+        return fit_one(X, y)
+
+    monkeypatch.setattr(assoc, "firth_fit_many", spy_many)
+    monkeypatch.setattr(stats, "firth_fit", spy_one)
+    monkeypatch.setitem(assoc._MODEL_FUNCS, "firth", spy_one)
+    kernel = assoc.make_array_kernel(
+        "firth", ["age", "sex"], False, 20, restrict, "sex"
+    )
+    rows = kernel(
+        "x", pdf["x"].to_numpy(),
+        [(c, c, pdf[c].to_numpy()) for c in ("age", "sex")],
+        deps, lambda d: pdf[d].to_numpy(dtype=float),
+    )
+    assert sorted(batches) == [2, 2, 2, 3]
+    assert per_pair == [int(pdf["ph_8"].notna().sum())]
+    got = pd.DataFrame(rows).set_index("dependent")
+    want = a.set_index("dependent")
+    assert list(got.loc[deps, "failed_reason"]) == list(want.loc[deps, "failed_reason"])
+    for col in ("beta", "pval", "ci_low", "ci_high"):
+        np.testing.assert_allclose(got.loc[deps, col], want.loc[deps, col], rtol=1e-9)
+
+
 def test_dotted_phecode_column_names(spark):
     # PheWAS dependents are phecode-named ("250.0") — dots must not be
     # parsed as struct accessors anywhere in the engine (colutils.qcol).

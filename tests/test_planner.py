@@ -76,7 +76,7 @@ def plan_in_group(spark, group, cfg, df, strategy):
 HDFS = "hdfs://namenode/ckpt"
 FORWARD = {"missing_covariate_values": "forward", "order_col": "age"}
 # id: (input, study, config overrides, requested strategy, master,
-#      planned strategy, row source, config field named by the reason)
+#      planned strategy, row source, config field or text named by the reason)
 DECISIONS = {
     "parquet-logistic-auto": ("parquet", "logistic", {}, None, "local[8]",
                               "columnar", "footers", None),
@@ -107,7 +107,8 @@ DECISIONS = {
     "non-local-explicit-columnar": ("parquet", "logistic", {}, "columnar",
                                     "yarn", "columnar", None, None),
     "hive-covariate-auto": ("hive", "logistic", {"covariates": ["age", "site"]},
-                            None, "local[8]", "columnar", "spark count", None),
+                            None, "local[8]", "columnar", "spark count",
+                            "hive partition column 'site' is a study column"),
     "linear-ordered-fill-auto": ("parquet", "linear", FORWARD, None,
                                  "local[8]", "moments", None, None),
     "explicit-packed": ("parquet", "logistic", {}, "packed", "local[8]",

@@ -15,8 +15,10 @@ import math
 import numpy as np
 import pytest
 
+from polars_mas_spark.functions import stats
 from polars_mas_spark.functions.stats import (
     firth_fit,
+    firth_fit_many,
     logistic_fit,
     logistic_mle,
     ols_fit,
@@ -333,3 +335,108 @@ def test_hermite_root_properties():
 
     assert m.isnan(_hermite_root(1.0, 0.0, 1.0, 1.0, 2.0, 1.0, 1.0))
     assert m.isnan(_hermite_root(0.0, m.inf, 1.0, 1.0, 2.0, 1.0, 1.0))
+
+
+def _assert_batch_matches_per_pair(X, Y):
+    """firth_fit_many against per-pair firth_fit on each (contiguous)
+    column: rtol 1e-9 on the estimates, equal infinite (or NaN) values
+    and equal converged flags. Returns how many columns the batch handed
+    back to firth_fit."""
+    calls = []
+    per_pair = stats.firth_fit
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return per_pair(*args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(stats, "firth_fit", spy)
+        got = firth_fit_many(X, list(Y.T))
+    assert len(got) == Y.shape[1]
+    for b, res in enumerate(got):
+        want = per_pair(X, np.ascontiguousarray(Y[:, b]))
+        assert res["converged"] == want["converged"], b
+        for key in ("beta", "se", "pval", "ci_low", "ci_high"):
+            if math.isnan(want[key]):
+                assert math.isnan(res[key]), (b, key)
+            elif math.isinf(want[key]):
+                assert res[key] == want[key], (b, key)
+            else:
+                assert res[key] == pytest.approx(want[key], rel=1e-9, abs=0), (b, key)
+    return len(calls)
+
+
+BATCH_SHAPES = [
+    (n, k, prev, (2, 17, 40)[i % 3])
+    for i, (n, k, prev) in enumerate(
+        (n, k, prev)
+        for n in (60, 300, 1000, 5000)
+        for k in (1, 6, 21)
+        for prev in (0.5, 0.1, 0.02)
+    )
+    if n > k + 1
+]
+
+
+@pytest.mark.parametrize("n, k, prev, B", BATCH_SHAPES)
+def test_firth_fit_many_matches_per_pair(n, k, prev, B):
+    """The batch takes firth_fit's decisions column by column, so only
+    floating-point op order differs: every column agrees with its
+    per-pair fit to rtol 1e-9. Columns carry their own effect sizes
+    (some null, some strong) around one base rate."""
+    rng = np.random.default_rng(n * 1000 + k * 10 + B)
+    X = rng.normal(size=(n, k))
+    effects = rng.normal(0.0, 0.6, size=B) * (rng.random(B) < 0.5)
+    eta = X[:, :1] * effects + math.log(prev / (1 - prev))
+    Y = (rng.random((n, B)) < 1 / (1 + np.exp(-eta))).astype(float)
+    _assert_batch_matches_per_pair(X, Y)
+
+
+def test_firth_fit_many_planted_and_separated_columns():
+    """The odds-ratio-81 2x2 column of
+    test_firth_lrt_null_fit_no_step_clamp_oscillation (its LRT null fit
+    needs the PLL-monotone halving) and a completely separated column,
+    fitted in one batch next to ordinary columns."""
+    rng = np.random.RandomState(11)
+    n = 4000
+    x = (rng.rand(n) < 0.5).astype(float)
+    noise = rng.rand(n) < 0.1
+    cov = rng.normal(size=n)
+    Y = np.column_stack([
+        np.where(noise, 1.0 - x, x),  # OR ~81
+        x,  # separated
+        (rng.rand(n) < 0.2).astype(float),
+        (rng.rand(n) < 0.05 + 0.1 * x).astype(float),
+    ])
+    _assert_batch_matches_per_pair(np.column_stack([x, cov]), Y)
+
+
+def test_firth_fit_many_collinear_design_fits_per_column():
+    """A rank-deficient design makes every column's Fisher matrix
+    singular, where firth_fit takes pinv/lstsq steps the batch does not
+    mirror: every column falls back to firth_fit."""
+    rng = np.random.default_rng(5)
+    n = 500
+    X = rng.normal(size=(n, 3))
+    X[:, 2] = X[:, 1] * 2.0
+    Y = (rng.random((n, 6)) < 0.3).astype(float)
+    assert _assert_batch_matches_per_pair(X, Y) == 6
+
+
+def test_firth_newton_many_flags_singular_rows_only():
+    """A row whose Fisher matrix is singular (here: a start so far out
+    that every weight underflows to 0) is flagged and dropped, and the
+    other rows still take _firth_newton's path."""
+    rng = np.random.default_rng(9)
+    n = 200
+    Xc = np.column_stack([rng.normal(size=(n, 2)), np.ones(n)])
+    Q = (Xc[:, :, None] * Xc[:, None, :]).reshape(n, 9)
+    Y = (rng.random((2, n)) < 0.3).astype(float)
+    beta0 = np.array([[0.0, 0.0, -0.8], [0.0, 0.0, 1e4]])
+    beta, _, converged, _, _, _, singular = stats._firth_newton_many(
+        Xc, Q, Y, beta0, hold0=False, tol=1e-5
+    )
+    assert singular.tolist() == [False, True]
+    want = stats._firth_newton(Xc, Y[0], np.ones(3, dtype=bool), beta0=beta0[0])
+    assert converged[0] and want[2]
+    np.testing.assert_allclose(beta[0], want[0], rtol=1e-9)

@@ -11,6 +11,12 @@ functions/stats.py or the association kernels:
 Exits non-zero on any mismatch. CI bounds tighter than the historical
 contract (beta/se/pval bit-identical, CI <= 1e-6 relative): this battery
 requires full bit equality, which every r13 change satisfies.
+
+A second section is a TOLERANCE check, not a bit-identity one: it
+groups each shape into a multi-column Y, fits it with the working
+tree's batch (stats.firth_fit_many) and requires agreement with the OLD
+per-pair firth_fit at rtol 1e-9 — the batch changes the floating-point
+op order.
 """
 
 import importlib.util
@@ -102,6 +108,40 @@ for i, (X, y) in enumerate(cases):
                 bad += 1
 print(f"stats battery: {len(cases)} cases x 4 models, mismatches={bad}")
 assert bad == 0
+
+# ---- batch tolerance check: new firth_fit_many vs old per-pair firth_fit ----
+# Not a bit-identity check: the batch fits the columns of Y together
+# with a different floating-point op order, so it must agree with the
+# per-pair kernel to rtol 1e-9 (equal infinite/NaN values, equal
+# converged flags). Each shape becomes a multi-column Y: its y plus
+# two permutations of it (same design, same prevalence).
+tbad = 0
+n_cols = 0
+worst = 0.0
+for i, (X, y) in enumerate(cases):
+    Y = np.column_stack([y, rng.permutation(y), rng.permutation(y)])
+    got = new_stats.firth_fit_many(X, list(Y.T))
+    for b in range(Y.shape[1]):
+        n_cols += 1
+        want = old_stats.firth_fit(X, np.ascontiguousarray(Y[:, b]))
+        if got[b]["converged"] != want["converged"]:
+            print(f"batch case {i} col {b} converged: "
+                  f"old={want['converged']} new={got[b]['converged']}")
+            tbad += 1
+        for key in ("pval", "beta", "se", "OR", "ci_low", "ci_high"):
+            ov, nv = want[key], got[b][key]
+            if not math.isfinite(ov):
+                ok = (ov == nv) or (math.isnan(ov) and math.isnan(nv))
+            else:
+                rel = abs(nv - ov) / abs(ov) if ov else abs(nv)
+                worst = max(worst, rel)
+                ok = rel <= 1e-9
+            if not ok:
+                print(f"batch case {i} col {b} {key}: old={ov!r} new={nv!r}")
+                tbad += 1
+print(f"batch tolerance check (rtol 1e-9): {n_cols} columns, "
+      f"worst rel diff {worst:.1e}, mismatches={tbad}")
+assert tbad == 0
 
 # ---- kernel-level battery: old make_kernel vs new make_kernel ----
 sys.path.insert(0, "/root/repo")
