@@ -166,7 +166,7 @@ def main(argv: list[str] | None = None) -> int:
             print(config.summary())
             return 0
 
-        from polars_mas_spark.pipeline import run_pipeline
+        from polars_mas_spark.pipeline import run_study
 
         defs_df = None
         if args.phewas or args.flipwas or args.sex_specific:
@@ -189,13 +189,13 @@ def main(argv: list[str] | None = None) -> int:
                 defs_df, female_code=args.female_code, male_code=args.male_code
             )
 
-        results = run_pipeline(
+        results = run_study(
             spark, config, input_path=args.input,
             output_path=args.output, phecode_defs=defs_df,
         )
         if not args.output:
-            for row in results.limit(20).collect():
-                print(row.asDict())
+            for row in results.slice(0, 20).to_pylist():
+                print(row)
         return 0
     finally:
         spark.stop()

@@ -14,24 +14,29 @@ design replaces that wholesale (SURVEY.md §2.6 U1, §2.11 K6):
       -> filter pred/dep not null      (map-side, BEFORE the shuffle —
                                         null rows never cross the wire)
       -> groupBy(predictor, dependent).applyInPandas(kernel)
-      -> right-join the full pair list to re-materialize pairs that
-         vanished entirely ("No data after dropping nulls." rows —
-         failures are rows, not exceptions: analysis.py:110-124)
-      -> orderBy(pval)                 (nulls last, polars parity)
+      -> one Arrow collect of the fitted rows (toArrow)
+      -> on the driver: left-fill the full pair list to re-materialize
+         pairs that vanished entirely ("No data after dropping nulls."
+         rows — failures are rows, not exceptions: analysis.py:110-124)
+      -> sort by pval                  (NaN last, polars parity)
 
 One shuffle keyed on the pair id distributes the regressions; Arrow
 batches feed the pandas kernels. Scale notes: group count = P x D is the
 parallelism; each group holds <= n rows. Skewed pair sizes are handled
-by AQE; for P*D >> shuffle partitions the groups pack densely.
+by AQE; for P*D >> shuffle partitions the groups pack densely. The
+results table is P x D rows (a few million at most), so it is finished
+on the driver like the reference's postprocessing.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Callable, Iterable
+from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -801,48 +806,6 @@ def make_kernel(
     return kernel
 
 
-def _pair_frame(
-    spark: SparkSession, predictors: Iterable[str], dependents: Iterable[str]
-) -> DataFrame:
-    """The P x D pair list as a PURE-JVM DataFrame.
-
-    Preferred path: Arrow-backed ``createDataFrame(pandas)``, which
-    lands each name list as a JVM LocalRelation — one Arrow batch over
-    py4j, no Python workers at execution, and (unlike an
-    ``F.array(*[F.lit(...)])`` expression tree) no O(D) py4j round
-    trips: at 1,800 dependents the literal tree costs ~1 s of pure
-    driver time per build, the LocalRelation ~20 ms. The cross join of
-    two LocalRelations keeps the pair list JVM-side at any P x D.
-
-    NOT spark.createDataFrame(list_of_tuples) when Arrow is off: that
-    parallelizes a pickled Python RDD across defaultParallelism
-    partitions, and every partition launches a Python worker just to
-    unpickle a couple of strings — measured at ~2 s of dead wait per
-    task on a busy daemon (64 s of wall for a 3-row table on
-    local[32]); hence the literal-expression fallback."""
-    arrow = (
-        spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-        == "true"
-    )
-    if arrow:
-        import pandas as pd
-
-        preds = spark.createDataFrame(
-            pd.DataFrame({"predictor": list(predictors)})
-        )
-        deps = spark.createDataFrame(
-            pd.DataFrame({"dependent": list(dependents)})
-        )
-    else:
-        preds = spark.range(1).select(
-            F.explode(F.array(*[F.lit(p) for p in predictors])).alias("predictor")
-        )
-        deps = spark.range(1).select(
-            F.explode(F.array(*[F.lit(d) for d in dependents])).alias("dependent")
-        )
-    return preds.crossJoin(deps)
-
-
 def choose_strategy(n_rows: int) -> str:
     """Pick the physical fan-out strategy from the table's row count:
     columnar up to 100M rows, where a per-task full-column read is
@@ -966,11 +929,14 @@ def run_associations(
     recipe=None,
     source_files: list[str] | None = None,
     n_buckets: int | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """Distributed equivalent of run_associations_ipc (analysis.py:10-39).
 
-    Runs the one physical strategy it is given; pipeline.plan_study is
-    what picks it. Four strategies:
+    Runs the one physical strategy it is given (pipeline.plan_study is
+    what picks it) and returns the completed P x D results as a
+    ``pyarrow.Table`` sorted by pval, NaN last: every strategy's fitted
+    rows are collected once and finished on the driver
+    ([[_complete_pairs]]). Four strategies:
 
     - ``packed`` (tall tables — the 100 TB path): one shuffle keyed
       on (predictor, dep-bucket); each row carries the covariates once
@@ -1005,9 +971,9 @@ def run_associations(
     num_pairs = len(config.predictor_columns) * len(config.dependent_columns)
     if strategy == "columnar":
         fitted = _fit_columnar(df, config, checkpoint_path, recipe, source_files)
-        return _complete_pairs(spark, fitted, config)
+        return _complete_pairs(fitted, config)
     if strategy == "moments":
-        return _complete_pairs(spark, _fit_linear_moments(df, config), config)
+        return _complete_pairs(_fit_linear_moments(df, config), config)
 
     par = spark.sparkContext.defaultParallelism
     if strategy == "packed":
@@ -1036,7 +1002,7 @@ def run_associations(
         fitted = packed.groupBy("predictor", PACKED_BUCKET).applyInPandas(
             kernel, schema=result_schema(model)
         )
-        return _complete_pairs(spark, fitted, config)
+        return _complete_pairs(fitted, config)
     if strategy != "unpivot":
         # A typo must not fall through to the classic unpivot — the
         # exact n·P·D·(C+1) shuffle the other strategies exist to avoid.
@@ -1074,66 +1040,59 @@ def run_associations(
     fitted = long_df.groupBy("predictor", "dependent").applyInPandas(
         kernel, schema=result_schema(model)
     )
+    return _complete_pairs(fitted, config)
 
-    return _complete_pairs(spark, fitted, config)
 
+def _complete_pairs(fitted: DataFrame, config: MASConfig) -> pa.Table:
+    """Collect the fitted rows with one ``toArrow()`` and finish them on
+    the driver. Pairs whose rows were all null-dropped produce no fit
+    row at all; the full P x D pair list (id ``i`` is ``(predictors[i //
+    D], dependents[i % D])``, as in [[_pair_ids]]) is left-filled with
+    the reference sentinels and "No data after dropping nulls."
+    (analysis.py:113-124). Rows come back sorted by pval, NaN last."""
+    got = fitted.toArrow()
+    preds, deps = config.predictor_columns, config.dependent_columns
+    n_deps = len(deps)
+    n_pairs = len(preds) * n_deps
+    key_type = got.schema.field("predictor").type
 
-def _complete_pairs(
-    spark: SparkSession, fitted: DataFrame, config: MASConfig
-) -> DataFrame:
-    """Pairs whose rows were all null-dropped produce no fit row at all;
-    left-join the full pair list against the (tiny) fitted results to
-    re-materialize their failure rows with reference sentinels
-    (analysis.py:113-124). ``fitted`` is the broadcast side: results are
-    P x D rows, and broadcasting keeps the Python stage free of any
-    co-partitioning requirement a sort-merge join would impose on it."""
-    model = config.model
-    num_pairs = len(config.predictor_columns) * len(config.dependent_columns)
-    pairs = _pair_frame(spark, config.predictor_columns, config.dependent_columns)
-    defaults = dict(_LINEAR_DEFAULTS if model in _QUANT_MODELS else _BINARY_DEFAULTS)
+    def index_of(col: str, names: list[str]) -> np.ndarray:
+        idx = pc.index_in(got[col], value_set=pa.array(names, key_type))
+        return idx.to_numpy(zero_copy_only=False).astype(np.int64)
+
+    row_of = np.full(n_pairs, -1, dtype=np.int64)
+    row_of[index_of("predictor", preds) * n_deps + index_of("dependent", deps)] = (
+        np.arange(got.num_rows)
+    )
+    absent = row_of < 0
+    taken = got.take(pa.array(row_of, mask=absent))
+    defaults = dict(
+        _LINEAR_DEFAULTS if config.model in _QUANT_MODELS else _BINARY_DEFAULTS
+    )
     defaults["failed_reason"] = "No data after dropping nulls."
-    schema_types = {f.name: f.dataType for f in result_schema(model).fields}
-    present = fitted.withColumn("__present__", F.lit(True))
-    # Broadcast only while the results table is actually broadcastable;
-    # past ~500k pairs (wide stats rows add up) fall back to a shuffle
-    # join — at that scale the pair list is also worth distributing.
-    right = F.broadcast(present) if num_pairs <= 500_000 else present
-    joined = pairs.join(right, ["predictor", "dependent"], "left")
-
-    # NaN/NULL failure representation — the single place it is decided.
-    # The pandas kernel emits float NaN for every unfit statistic
-    # (reference analysis.py:228-260 sentinels), but the Arrow grouped-map
-    # boundary converts pandas NaN -> Spark NULL. The kernel never emits a
-    # true null in a double column, so any NULL double here IS a converted
-    # NaN: coalesce it back. This keeps output files showing NaN like the
-    # reference AND makes `pval IS NOT NULL` counting match polars'
-    # is_not_null() (True for NaN) — failed fits count toward the
-    # Bonferroni num_tests exactly as in reference postprocessing.py:18.
-    def _value(c: str, v):
-        dtype = schema_types[c]
-        absent = F.lit(v).cast(dtype)  # F.lit(nan) is a real double NaN
-        present_val = F.col(c)
-        if isinstance(dtype, T.DoubleType):
-            present_val = F.coalesce(present_val, F.lit(float("nan")))
-        return (
-            F.when(F.col("__present__").isNull(), absent)
-            .otherwise(present_val)
-            .alias(c)
-        )
-
-    filled = joined.select(
-        "predictor",
-        "dependent",
-        *[_value(c, v) for c, v in defaults.items()],
-    )
-    # Sort the (tiny: P x D rows) results table. NOT orderBy: a global
-    # orderBy range-samples its input, which would execute the entire
-    # regression fan-out a second time just to pick partition bounds.
-    # repartition(1) is a real shuffle boundary (upstream parallelism
-    # intact), and the single-partition sort is trivial at results scale.
-    return filled.repartition(1).sortWithinPartitions(
-        F.col("pval").asc_nulls_last()
-    )
+    columns = {
+        "predictor": pa.array(np.repeat(np.array(preds, dtype=object), n_deps), key_type),
+        "dependent": pa.array(np.tile(np.array(deps, dtype=object), len(preds)), key_type),
+    }
+    for c, default in defaults.items():
+        col = taken[c]
+        if pa.types.is_floating(col.type):
+            # NaN/NULL failure representation — the single place it is
+            # decided. The pandas kernels emit float NaN for every unfit
+            # statistic (reference analysis.py:228-260 sentinels), but
+            # the Arrow boundary into Spark turns pandas NaN into NULL.
+            # No kernel emits a true null double, so every NULL double
+            # (an absent pair's too; its defaults are all NaN) IS a NaN:
+            # restore it. Output files then show NaN like the reference,
+            # and bonferroni's non-null count matches polars'
+            # is_not_null() (True for NaN) — failed fits count toward
+            # num_tests exactly as in reference postprocessing.py:18.
+            columns[c] = pc.fill_null(col, math.nan)
+        else:
+            columns[c] = pc.if_else(pa.array(absent), pa.scalar(default, col.type), col)
+    table = pa.table(columns)
+    order = np.argsort(table["pval"].to_numpy(), kind="stable")
+    return table.take(order)
 
 
 def reusable_scan_files(

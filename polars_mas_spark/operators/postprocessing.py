@@ -1,21 +1,24 @@
-"""Postprocessing: multiple-testing correction, phenotype annotation, output.
+"""Postprocessing: multiple-testing correction and phenotype annotation.
 
 Reference surface: /root/reference/src/polars_mas/postprocessing.py:6-40.
 Bonferroni matches the reference exactly; Benjamini-Hochberg FDR is the
 first roadmap feature the reference declares but never implements
 (README.md:159,169; postprocessing.py:15 silently returns None for any
-method != "bonferroni") — here it is a real window-based operator.
+method != "bonferroni") — here it is a real operator.
 
-Scale note: the correction operates on the *results* table (one row per
-predictor x dependent pair), which is orders of magnitude smaller than
-the input data, so the global-order windows in BH are cheap even when
-the input is 100 TB.
+Like the reference, these run in one process on the results table: one
+row per predictor x dependent pair, a few million rows at most, orders
+of magnitude smaller than the input. run_associations hands it over as
+a ``pyarrow.Table``, and every operator here takes and returns one, so
+no correction or annotation runs a Spark job.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 
 
 def sex_restrictions_from_defs(
@@ -40,100 +43,98 @@ def sex_restrictions_from_defs(
     return out
 
 
+def _with_column(table: pa.Table, name: str, values) -> pa.Table:
+    """``table`` with column ``name`` set to ``values``: replaced in
+    place when it exists, appended otherwise (Spark's withColumn)."""
+    if name in table.column_names:
+        return table.set_column(table.column_names.index(name), name, values)
+    return table.append_column(name, values)
+
+
 def bonferroni(
-    df: DataFrame,
+    table: pa.Table,
     baseline_pval: float = 0.05,
     pval_col: str = "pval",
-    num_tests: int | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """Add ``bonferroni_significant`` = pval < baseline / #non-null-tests
     (postprocessing.py:14-20). Reference parity: polars' ``is_not_null()``
     is True for float NaN, so failed fits (which carry NaN p-values)
     COUNT toward the test total — only true nulls are excluded. The
     association fan-out guarantees failure rows reach this operator as
-    NaN, not NULL (the Arrow grouped-map boundary converts pandas NaN to
-    Spark NULL; ``association._complete_pairs`` coalesces every NULL
-    double back to NaN — the one documented place that decision lives),
-    so ``isNotNull`` here counts exactly what the reference counts. NaN
-    pvals then compare False against the threshold, matching polars.
-    Pass ``num_tests`` to reuse an already-computed count (one aggregate
-    job can serve both corrections, see run_pipeline)."""
-    if num_tests is None:
-        num_tests = df.filter(F.col(pval_col).isNotNull()).count()
+    NaN, not NULL (``association._complete_pairs`` restores every NULL
+    double to NaN — the one documented place that decision lives), so
+    the non-null count here counts exactly what the reference counts.
+    NaN pvals then compare False against the threshold, matching polars;
+    a NULL pval gives NULL."""
+    pvals = table[pval_col]
+    num_tests = len(pvals) - pvals.null_count
     if num_tests == 0:
-        return df.withColumn("bonferroni_significant", F.lit(None).cast("boolean"))
-    threshold = baseline_pval / num_tests
-    return df.withColumn(
-        "bonferroni_significant", F.col(pval_col) < F.lit(threshold)
-    )
+        flag = pa.nulls(len(pvals), pa.bool_())
+    else:
+        flag = pc.less(pvals, baseline_pval / num_tests)
+    return _with_column(table, "bonferroni_significant", flag)
 
 
 def benjamini_hochberg(
-    df: DataFrame,
+    table: pa.Table,
     pval_col: str = "pval",
     out_col: str = "pval_bh",
-    num_valid: int | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """BH step-up adjusted p-values: adj_i = min_{j>=i}(p_(j) * n / j),
-    capped at 1, computed with two windows over the ascending p order.
+    capped at 1. Rows come back in ascending p order (NaN, then NULL,
+    last); ``out_col`` is NULL where the p-value is NULL or NaN.
 
     Ties: every row of a tied p-value group uses the group's MAXIMUM
-    ascending rank (a RANGE-frame count of pvals <= p). This is the
-    canonical tie-invariant form — the step-up running minimum collapses
-    tied groups to p*n/maxrank anyway, so using maxrank directly makes
-    the result independent of any within-tie row order (row_number-based
-    ranks are engine-nondeterministic under ties).
+    ascending rank (the count of p-values <= p). This is the canonical
+    tie-invariant form — the step-up running minimum collapses tied
+    groups to p*n/maxrank anyway, so using maxrank directly makes the
+    result independent of any within-tie row order.
 
     Unlike bonferroni's reference-parity count, BH's n counts only
     *usable* p-values (NaN excluded): a NaN entering p*n/rank would
-    poison the running minimum. Pass ``num_valid`` to reuse a
-    precomputed count."""
-    valid = F.col(pval_col).isNotNull() & ~F.isnan(F.col(pval_col))
-    n = num_valid if num_valid is not None else df.filter(valid).count()
-    if n == 0:
-        return df.withColumn(out_col, F.lit(None).cast("double"))
-    # Explicit null ordering keeps failed fits (null pvals) out of the
-    # rank sequence (Spark's asc default puts nulls FIRST, which would
-    # shift every valid rank).
-    w_rank = Window.orderBy(F.col(pval_col).asc_nulls_last()).rangeBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_tail = Window.orderBy(F.col(pval_col).desc_nulls_last()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ranked = df.withColumn(
-        "__bh_rank__", F.when(valid, F.count(F.when(valid, 1)).over(w_rank))
-    )
-    adjusted = ranked.withColumn(
-        "__bh_raw__",
-        F.when(valid, F.least(F.col(pval_col) * F.lit(float(n)) / F.col("__bh_rank__"), F.lit(1.0))),
-    )
-    # Running minimum from the largest p downward implements the step-up rule.
-    out = adjusted.withColumn(
-        out_col, F.when(valid, F.min("__bh_raw__").over(w_tail))
-    ).drop("__bh_rank__", "__bh_raw__")
-    # Restore ascending p order: the step-up window sorted DESCENDING,
-    # so without this the bh-corrected results leave in reverse p order
-    # while bonferroni preserves ascending — output row order silently
-    # differed by correction choice (review r9).
-    return out.orderBy(F.col(pval_col).asc_nulls_last())
+    poison the running minimum."""
+    col = table[pval_col]
+    is_null = col.is_null().to_numpy(zero_copy_only=False)
+    p = col.to_numpy().astype(np.float64)  # NULL -> NaN, masked below
+    valid = ~is_null & ~np.isnan(p)
+    n = int(valid.sum())
+    adjusted = np.full(len(p), np.nan)
+    if n:
+        ranked = np.sort(p[valid])
+        rank = np.searchsorted(ranked, ranked, side="right")
+        raw = np.minimum(ranked * float(n) / rank, 1.0)
+        # Running minimum from the largest p downward: the step-up rule.
+        step_up = np.minimum.accumulate(raw[::-1])[::-1]
+        adjusted[valid] = step_up[np.searchsorted(ranked, p[valid], side="left")]
+    # Valid p ascending, then NaN, then NULL; stable within ties.
+    order = np.lexsort((np.where(valid, p, 0.0), ~valid, is_null))
+    out = _with_column(table, out_col, pa.array(adjusted, mask=~valid))
+    return out.take(order)
 
 
 def add_phecode_definitions(
-    df: DataFrame,
+    table: pa.Table,
     defs_df: DataFrame,
     is_phewas: bool = False,
     is_flipwas: bool = False,
-) -> DataFrame:
-    """Broadcast left join of the ~1.9k-row phecode definition table
+) -> pa.Table:
+    """Left join of the ~1.9k-row phecode definition table
     (postprocessing.py:23-29): dependent=phecode for PheWAS, predictor=
-    phecode for flipWAS. Broadcast => no shuffle of the results table."""
+    phecode for flipWAS. ``defs_df`` is collected once with
+    ``toArrow()``; the join runs locally, keeps the results' row order,
+    and leaves the definition columns NULL on unmatched rows."""
     if is_phewas:
         key = "dependent"
     elif is_flipwas:
         key = "predictor"
     else:
-        return df
-    return df.join(
-        F.broadcast(defs_df), on=df[key] == defs_df["phecode"], how="left"
-    ).drop("phecode")
+        return table
+    defs = defs_df.toArrow()
+    defs = _with_column(
+        defs, "phecode", defs["phecode"].cast(table.schema.field(key).type)
+    )
+    row = "__row__"
+    joined = table.append_column(row, pa.array(np.arange(table.num_rows))).join(
+        defs, keys=key, right_keys="phecode", join_type="left outer",
+    )
+    return joined.sort_by(row).drop_columns([row])

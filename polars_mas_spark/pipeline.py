@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, replace
 
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
@@ -199,7 +200,7 @@ def plan_study(
     )
 
 
-def run_pipeline(
+def run_study(
     spark: SparkSession,
     config: MASConfig,
     df: DataFrame | None = None,
@@ -207,15 +208,11 @@ def run_pipeline(
     output_path: str | None = None,
     phecode_defs: DataFrame | None = None,
     strategy: str | None = None,
-) -> DataFrame:
-    """Run the full MAS dataflow; returns the results DataFrame.
-
-    Programmatic-first API (the reference is CLI-only; a Python API is on
-    its declared roadmap, README.md:163): pass either an already-loaded
-    wide DataFrame or an input path. ``strategy`` forces the fan-out's
-    physical strategy ("columnar"/"packed"/"moments"/"unpivot"); None
-    lets plan_study pick it.
-    """
+) -> pa.Table:
+    """Run the full MAS dataflow and return the results as a local
+    ``pyarrow.Table``, sorted by pval. Takes run_pipeline's arguments;
+    the CLI prints from this table, so showing results runs no Spark
+    job."""
     if df is None:
         if input_path is None:
             raise ValueError("Provide either df or input_path")
@@ -267,8 +264,7 @@ def run_pipeline(
         results = run_associations(
             stats_df, config, strategy="columnar",
             checkpoint_path=ckpt, recipe=recipe, source_files=plan.files,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
-        pre = stats_df  # for the shared unpersist below (no-op on scans)
+        )
     else:
         # Tall shape (over 100M rows, a linear moments study, an
         # explicit tall strategy, or a planner guard forced it): cache
@@ -304,30 +300,16 @@ def run_pipeline(
         pre.count()  # materialize before the fan-out; frees the raw cache
         raw.unpersist()
         plan = plan.after_preprocess(len(config.covariate_columns))
-        results = run_associations(
-            pre, config, strategy=plan.strategy,
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        results = run_associations(pre, config, strategy=plan.strategy)
+        pre.unpersist()  # the fitted rows are collected
 
-    # Persist the (small) results table: the correction counts are an
-    # action, and without the cache the whole regression fan-out would
-    # run twice (once for the count, once for the caller's collect).
-    # ONE aggregate job serves both corrections: bonferroni's
-    # reference-parity count (non-null, NaN included — failure rows are
-    # NaN by _complete_pairs' NULL->NaN restore, so they COUNT, exactly
-    # like reference postprocessing.py:18 where polars is_not_null() is
-    # True for NaN) and BH's usable count (NaN excluded).
-    from pyspark.sql import functions as F
-
-    counts = results.agg(
-        F.count(F.when(F.col("pval").isNotNull(), 1)).alias("nn"),
-        F.count(
-            F.when(F.col("pval").isNotNull() & ~F.isnan(F.col("pval")), 1)
-        ).alias("valid"),
-    ).first()
-    results = bonferroni(results, num_tests=counts["nn"])
+    # The results are one local P x D table from here on, as in the
+    # reference (postprocessing.py:6-40): the corrections, the
+    # annotation and the write run on the driver, with no Spark job
+    # apart from the one collect of the phecode definitions.
+    results = bonferroni(results)
     if config.correction == "bh":
-        results = benjamini_hochberg(results, num_valid=counts["valid"])
-    pre.unpersist()  # results are cached; the wide table is no longer needed
+        results = benjamini_hochberg(results)
     if phecode_defs is not None:
         results = add_phecode_definitions(
             results, phecode_defs, config.is_phewas, config.is_flipwas
@@ -340,3 +322,26 @@ def run_pipeline(
         out_type = suffix if suffix in ("parquet", "csv", "tsv", "txt") else config.output_type
         write_output(results, output_path, out_type)
     return results
+
+
+def run_pipeline(
+    spark: SparkSession,
+    config: MASConfig,
+    df: DataFrame | None = None,
+    input_path: str | None = None,
+    output_path: str | None = None,
+    phecode_defs: DataFrame | None = None,
+    strategy: str | None = None,
+) -> DataFrame:
+    """Run the full MAS dataflow; returns the results DataFrame.
+
+    Programmatic-first API (the reference is CLI-only; a Python API is on
+    its declared roadmap, README.md:163): pass either an already-loaded
+    wide DataFrame or an input path. ``strategy`` forces the fan-out's
+    physical strategy ("columnar"/"packed"/"moments"/"unpivot"); None
+    lets plan_study pick it. The DataFrame wraps run_study's local
+    table (building it runs no Spark job).
+    """
+    return spark.createDataFrame(
+        run_study(spark, config, df, input_path, output_path, phecode_defs, strategy)
+    )

@@ -3,6 +3,7 @@ fit of the same data, and the failure-as-row contract must hold
 (reference analysis.py:42-260)."""
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
@@ -78,15 +79,15 @@ def test_failure_rows_not_exceptions(synth, spark):
         covariates=["age", "sex"], model="firth", min_case_count=20,
     )
     out = run_associations(df, cfg.resolve(df.columns), strategy="columnar")
-    # Failure rows must arrive as float NaN, NEVER Spark NULL: the Arrow
+    # Failure rows must arrive as float NaN, NEVER NULL: the Arrow
     # grouped-map boundary converts the kernel's pandas NaN to NULL, and
     # _complete_pairs restores it so `pval IS NOT NULL` counts failures
     # exactly like the reference's polars is_not_null() (VERDICT r2 #1).
-    from pyspark.sql import functions as F
+    import pyarrow.compute as pc
 
-    assert out.filter(F.col("pval").isNull()).count() == 0
-    assert out.filter(F.isnan("pval")).count() == 2  # ph_rare + ph_null
-    res = out.toPandas().set_index("dependent")
+    assert out["pval"].null_count == 0
+    assert pc.sum(pc.is_nan(out["pval"])).as_py() == 2  # ph_rare + ph_null
+    res = out.to_pandas().set_index("dependent")
     rare = res.loc["ph_rare"]
     assert rare["failed_reason"] == "Insufficient case count (5 cases)."
     assert math.isnan(rare["pval"])
@@ -124,11 +125,12 @@ def test_failed_fits_count_toward_bonferroni(synth, spark):
     from polars_mas_spark.operators.postprocessing import bonferroni
 
     # NB: createDataFrame(pandas) would itself convert NaN -> NULL at the
-    # Arrow boundary; a SQL literal produces a true double NaN.
+    # Arrow boundary; a SQL literal produces a true double NaN, and
+    # toArrow() keeps it.
     probe = spark.sql(
         "SELECT pval FROM VALUES (0.02D), (CAST('NaN' AS DOUBLE)), (0.0001D) t(pval)"
-    )
-    flagged = bonferroni(probe).toPandas().sort_values("pval").reset_index(drop=True)
+    ).toArrow()
+    flagged = bonferroni(probe).to_pandas().sort_values("pval").reset_index(drop=True)
     # 0.05/3 = 0.01667 < 0.02 -> NOT significant (with the undercount bug
     # num_tests would be 2 -> 0.025 threshold -> wrongly significant).
     assert flagged.loc[1, "bonferroni_significant"] == False  # noqa: E712
@@ -141,7 +143,7 @@ def test_multi_predictor_fanout(synth, spark):
         predictors=["x", "age"], dependents=["ph_0", "ph_1"],
         covariates=["sex"], model="logistic", min_case_count=5,
     )
-    res = run_associations(df, cfg.resolve(df.columns), strategy="columnar").toPandas()
+    res = run_associations(df, cfg.resolve(df.columns), strategy="columnar").to_pandas()
     assert len(res) == 4
     assert set(zip(res["predictor"], res["dependent"])) == {
         ("x", "ph_0"), ("x", "ph_1"), ("age", "ph_0"), ("age", "ph_1"),
@@ -156,7 +158,7 @@ def test_quantitative_linear(synth, spark):
     )
     res = run_associations(
         df, cfg.resolve(df.columns), strategy="moments"
-    ).toPandas().iloc[0]
+    ).to_pandas().iloc[0]
     serial = ols_fit(pdf[["x", "sex"]].to_numpy(float), pdf["age"].to_numpy(float))
     assert res["beta"] == pytest.approx(serial["beta"], abs=1e-9)
     assert res["pval"] == pytest.approx(serial["pval"], rel=1e-9)
@@ -179,7 +181,7 @@ def test_constant_covariate_dropped_per_group(spark):
     )
     res = run_associations(
         df, cfg.resolve(df.columns), strategy="columnar"
-    ).toPandas().iloc[0]
+    ).to_pandas().iloc[0]
     assert res["equation"] == "y ~ x + "
     assert np.isfinite(res["beta"])
 
@@ -215,9 +217,9 @@ def test_packed_strategy_matches_unpivot_and_shrinks_shuffle(spark):
     ).resolve(df.columns)
 
     a = (run_associations(df, cfg, strategy="unpivot")
-         .toPandas().sort_values("dependent").reset_index(drop=True))
+         .to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, cfg, strategy="packed", n_buckets=3)
-         .toPandas().sort_values("dependent").reset_index(drop=True))
+         .to_pandas().sort_values("dependent").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
     assert b.set_index("dependent").loc["ph_1", "failed_reason"] == (
         "No data after dropping nulls."
@@ -267,10 +269,10 @@ def test_moments_strategy_matches_kernel_ols(spark):
     )
     a = (run_associations(df, MASConfig(**cfg_kwargs).resolve(df.columns),
                           strategy="unpivot")
-         .toPandas().sort_values("dependent").reset_index(drop=True))
+         .to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, MASConfig(**cfg_kwargs).resolve(df.columns),
                           strategy="moments")
-         .toPandas().sort_values("dependent").reset_index(drop=True))
+         .to_pandas().sort_values("dependent").reset_index(drop=True))
     # Centered (covar_samp) moments are offset-stable; 1e-6 relative
     # is an ample parity bound vs the kernel's lstsq.
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-6, atol=1e-9)
@@ -287,10 +289,10 @@ def test_moments_strategy_matches_kernel_ols(spark):
     )
     am = (run_associations(df, MASConfig(**kw2).resolve(df.columns),
                            strategy="unpivot")
-          .toPandas().sort_values(["predictor", "dependent"]).reset_index(drop=True))
+          .to_pandas().sort_values(["predictor", "dependent"]).reset_index(drop=True))
     bm = (run_associations(df, MASConfig(**kw2).resolve(df.columns),
                            strategy="moments")
-          .toPandas().sort_values(["predictor", "dependent"]).reset_index(drop=True))
+          .to_pandas().sort_values(["predictor", "dependent"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(am, bm, check_exact=False, rtol=1e-6, atol=1e-9)
     assert set(bm["equation"]) == {
         "q_2 ~ x + sexc", "q_3 ~ x + sexc", "q_2 ~ age + sexc", "q_3 ~ age + sexc",
@@ -317,11 +319,11 @@ def test_moments_null_covariates_fail_as_rows(spark):
         predictors="x", dependents=["q_a", "q_b"], covariates=["age"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    out = run_associations(df, cfg, strategy="moments").toPandas()
+    out = run_associations(df, cfg, strategy="moments").to_pandas()
     assert set(out["failed_reason"]) == {"Null covariate values (age)."}
     assert out["pval"].isna().all()
     # Kernel path also yields failure rows (not silently-wrong numbers).
-    k = run_associations(df, cfg, strategy="unpivot").toPandas()
+    k = run_associations(df, cfg, strategy="unpivot").to_pandas()
     assert k["failed_reason"].notna().all()
 
 
@@ -359,7 +361,7 @@ def test_moments_keeps_large_offset_covariates(spark):
             predictors="x", dependents=["q"], covariates=["ts_cov"],
             model="linear", quantitative=True, min_case_count=10,
         ).resolve(df.columns)
-        return run_associations(df, cfg, strategy=strategy).toPandas().iloc[0]
+        return run_associations(df, cfg, strategy=strategy).to_pandas().iloc[0]
 
     # Small offset: both keep the covariate and agree (at larger
     # offsets the KERNEL's raw-gram pinv drifts first — measured 8e-4
@@ -400,8 +402,8 @@ def test_moments_rank_deficient_matches_kernel_df_resid(spark):
         predictors="x", dependents=["q"], covariates=["c1", "c2"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    m = run_associations(df, cfg, strategy="moments").toPandas().iloc[0]
-    k = run_associations(df, cfg, strategy="unpivot").toPandas().iloc[0]
+    m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
+    k = run_associations(df, cfg, strategy="unpivot").to_pandas().iloc[0]
     assert m["failed_reason"] == "nan"  # reference success sentinel
     for col in ("beta", "se", "pval", "ci_low", "ci_high"):
         assert m[col] == pytest.approx(k[col], rel=1e-6), col
@@ -432,8 +434,8 @@ def test_moments_nan_semantics_match_packed(spark):
         predictors="x", dependents=["q_a"], covariates=["c1"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    m = run_associations(df, cfg, strategy="moments").toPandas().iloc[0]
-    p = run_associations(df, cfg, strategy="packed").toPandas().iloc[0]
+    m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
+    p = run_associations(df, cfg, strategy="packed").to_pandas().iloc[0]
     assert m["n_observations"] == p["n_observations"] == n - 10
     assert m["beta"] == pytest.approx(p["beta"], rel=1e-9)
 
@@ -445,8 +447,8 @@ def test_moments_nan_semantics_match_packed(spark):
         predictors="x", dependents=["q_a"], covariates=["c1"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df2.columns)
-    m2 = run_associations(df2, cfg2, strategy="moments").toPandas().iloc[0]
-    p2 = run_associations(df2, cfg2, strategy="packed").toPandas().iloc[0]
+    m2 = run_associations(df2, cfg2, strategy="moments").to_pandas().iloc[0]
+    p2 = run_associations(df2, cfg2, strategy="packed").to_pandas().iloc[0]
     assert m2["failed_reason"] == "Non-finite predictor/covariate/dependent values."
     assert math.isnan(m2["pval"])
     assert p2["failed_reason"] not in (None, "nan")
@@ -469,8 +471,8 @@ def test_moments_dotted_column_names(spark):
         predictors="geno.dose", dependents=["250.1"], covariates=["age.years"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    m = run_associations(df, cfg, strategy="moments").toPandas().iloc[0]
-    k = run_associations(df, cfg, strategy="unpivot").toPandas().iloc[0]
+    m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
+    k = run_associations(df, cfg, strategy="unpivot").to_pandas().iloc[0]
     assert m["equation"] == k["equation"] == "250.1 ~ geno.dose + age.years"
     assert m["beta"] == pytest.approx(k["beta"], rel=1e-9)
     assert m["pval"] == pytest.approx(k["pval"], rel=1e-6)
@@ -530,9 +532,9 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
     sel = ["predictor", "dependent", "pval", "beta", "se", "cases",
            "controls", "converged", "failed_reason", "equation"]
     a = (run_associations(df, cfg, strategy="unpivot")
-         .select(*sel).toPandas().sort_values("dependent").reset_index(drop=True))
+         .select(sel).to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, cfg, strategy="columnar")
-         .select(*sel).toPandas().sort_values("dependent").reset_index(drop=True))
+         .select(sel).to_pandas().sort_values("dependent").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
 
     # Two predictors x five dependents: 10 pair ids, which local[8]
@@ -547,7 +549,7 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
 
     def fit(strategy):
         return (run_associations(df, cfg, strategy=strategy)
-                .select(*sel).toPandas()
+                .select(sel).to_pandas()
                 .sort_values(["predictor", "dependent"]).reset_index(drop=True))
 
     packed = fit("packed")
@@ -565,7 +567,7 @@ def test_columnar_checkpoint_lands_in_config_checkpoint_dir(synth, spark, tmp_pa
         predictors="x", dependents=["ph_0", "ph_1"], covariates=["age"],
         model="logistic", min_case_count=20, checkpoint_dir=str(tmp_path),
     ).resolve(df.columns)
-    assert run_associations(df, cfg, strategy="columnar").count() == 2
+    assert run_associations(df, cfg, strategy="columnar").num_rows == 2
     ckpts = [p for p in tmp_path.iterdir() if p.name.startswith("pms_ckpt_")]
     assert len(ckpts) == 1 and list(ckpts[0].glob("*.parquet"))
 
@@ -759,7 +761,7 @@ def test_sex_specific_restrictions(spark):
             model="logistic", min_case_count=5,
         ).resolve(pdf.columns.tolist())
         return (run_associations(spark.createDataFrame(pdf), cfg, strategy=strategy)
-                .toPandas().set_index("dependent"))
+                .to_pandas().set_index("dependent"))
 
     a, b = run("unpivot"), run("columnar")
     # Restricted pair counts = matching-sex rows only.
@@ -812,7 +814,7 @@ def test_columnar_firth_mask_groups_match_unpivot(spark, monkeypatch):
 
     def fit(strategy):
         return (run_associations(spark.createDataFrame(pdf), cfg, strategy=strategy)
-                .toPandas().sort_values("dependent").reset_index(drop=True))
+                .to_pandas().sort_values("dependent").reset_index(drop=True))
 
     a, b = fit("unpivot"), fit("columnar")
     assert list(a["failed_reason"]) == list(b["failed_reason"])
@@ -951,14 +953,14 @@ def test_constant_predictor_fails_as_row_all_strategies(spark):
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
     for strategy in ("moments", "packed", "unpivot"):
-        r = run_associations(df, lin, strategy=strategy).toPandas().iloc[0]
+        r = run_associations(df, lin, strategy=strategy).to_pandas().iloc[0]
         assert r["failed_reason"] == "Constant predictor.", strategy
         assert math.isnan(r["pval"]), strategy
     logi = MASConfig(
         predictors="x", dependents=["yb"], covariates=["c1"],
         model="logistic", min_case_count=10,
     ).resolve(df.columns)
-    r = run_associations(df, logi, strategy="packed").toPandas().iloc[0]
+    r = run_associations(df, logi, strategy="packed").to_pandas().iloc[0]
     assert r["failed_reason"] == "Constant predictor."
 
 
@@ -1004,7 +1006,7 @@ def test_nan_dependent_binary_unpivot_no_crash(spark):
         model="logistic", min_case_count=5,
     ).resolve(df.columns)
     for strategy in ("unpivot", "packed"):
-        r = run_associations(df, cfg, strategy=strategy).toPandas().iloc[0]
+        r = run_associations(df, cfg, strategy=strategy).to_pandas().iloc[0]
         assert r["failed_reason"] == "nan", strategy  # fit succeeded
         n_nan = int((pdf["x"] > 1.0).sum())
         assert r["total_n"] == n - n_nan, strategy
@@ -1027,8 +1029,8 @@ def test_all_null_covariate_drops_like_kernel(spark):
         predictors="x", dependents=["q"], covariates=["c_ok", "c_null"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    m = run_associations(df, cfg, strategy="moments").toPandas().iloc[0]
-    k = run_associations(df, cfg, strategy="unpivot").toPandas().iloc[0]
+    m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
+    k = run_associations(df, cfg, strategy="unpivot").to_pandas().iloc[0]
     assert m["failed_reason"] == k["failed_reason"] == "nan"
     assert m["equation"] == k["equation"] == "q ~ x + c_ok"
     assert m["beta"] == pytest.approx(k["beta"], rel=1e-9)
@@ -1143,8 +1145,8 @@ def test_columnar_nan_predictor_parity(spark):
         predictors="x", dependents=["q"], covariates=[],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    c = run_associations(df, cfg, strategy="columnar").toPandas().iloc[0]
-    p = run_associations(df, cfg, strategy="packed").toPandas().iloc[0]
+    c = run_associations(df, cfg, strategy="columnar").to_pandas().iloc[0]
+    p = run_associations(df, cfg, strategy="packed").to_pandas().iloc[0]
     assert p["failed_reason"] != "nan"  # kernel fails on the NaNs
     assert c["failed_reason"] != "nan"  # columnar must agree, not drop rows
 
@@ -1247,7 +1249,7 @@ def test_poisson_fanout_with_covariate(spark):
         predictors="x", dependents=["y"], covariates=["cov"],
         model="poisson", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    row = run_associations(df, cfg, strategy="columnar").toPandas().iloc[0]
+    row = run_associations(df, cfg, strategy="columnar").to_pandas().iloc[0]
     assert bool(row["converged"])
     assert row["n_observations"] == n
     assert 0.4 < row["beta"] < 1.0  # planted 0.7, Wald se ~0.06
@@ -1316,3 +1318,138 @@ def test_rint_logt_validation(spark):
             predictors="x", dependents=[], covariates=[],
             model="firth",
         ).resolve(["x", "y"])
+
+
+def _phewas_input(synth, tmp_path):
+    """The synth table as a parquet file with phecode-named dependents:
+    999.9 fits but has no definition, 008.5 fails validation and 401.1
+    has no data after dropping nulls."""
+    pdf, _ = synth
+    names = {"ph_0": "999.9", "ph_1": "250.1", "ph_rare": "008.5", "ph_null": "401.1"}
+    src = str(tmp_path / "phewas.parquet")
+    pdf[["x", "age", "sex", *names]].rename(columns=names).to_parquet(src)
+    return src, list(names.values())
+
+
+def _jobs_after_fan_out(spark, monkeypatch, group: str, **kwargs) -> int:
+    """Run one study and count the Spark jobs from run_associations on:
+    the wrapper puts the fan-out and everything after it in one job
+    group."""
+    import polars_mas_spark.pipeline as pipeline
+
+    sc = spark.sparkContext
+    fan_out = pipeline.run_associations
+
+    def grouped(*args, **kw):
+        sc.setJobGroup(group, group)
+        return fan_out(*args, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(pipeline, "run_associations", grouped)
+        try:
+            run_pipeline(spark, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_study_spark_job_budget(synth, spark, tmp_path, monkeypatch):
+    # From the fan-out on, a study is one collect of the fitted rows; a
+    # PheWAS study adds one collect of the phecode definitions. The
+    # corrections, the pair completion, the annotation and the write
+    # run on the driver.
+    from polars_mas_spark.sources.readers import read_phecode_definitions
+
+    src, deps = _phewas_input(synth, tmp_path)
+    cfg = MASConfig(predictors="x", dependents=deps, covariates=["age", "sex"],
+                    model="logistic", min_case_count=20)
+    assert _jobs_after_fan_out(
+        spark, monkeypatch, "budget-parquet", config=cfg, input_path=src,
+        output_path=str(tmp_path / "out.parquet"), strategy="columnar",
+    ) == 1
+    cfg = MASConfig(predictors="x", dependents=deps, covariates=["age", "sex"],
+                    model="logistic", min_case_count=20, is_phewas=True,
+                    correction="bh")
+    assert _jobs_after_fan_out(
+        spark, monkeypatch, "budget-phewas", config=cfg, input_path=src,
+        output_path=str(tmp_path / "out.csv"), strategy="columnar",
+        phecode_defs=read_phecode_definitions(spark),
+    ) == 2
+
+
+def test_outputs_keep_nan_and_null_apart(synth, spark, tmp_path, monkeypatch):
+    # Failed fits carry NaN statistics, while an unusable BH p-value and
+    # a missing annotation are NULL. The parquet file, the CSV file (cell
+    # for cell what Spark's CSV writer gives), a file:// URI written
+    # through Spark and the returned DataFrame all keep them apart.
+    import csv
+
+    import pyarrow as pa
+
+    from polars_mas_spark.sources import writers
+    from polars_mas_spark.sources.readers import read_phecode_definitions
+
+    src, deps = _phewas_input(synth, tmp_path)
+    cfg = MASConfig(predictors="x", dependents=deps, covariates=["age", "sex"],
+                    model="logistic", min_case_count=20, is_phewas=True,
+                    correction="bh")
+    defs = read_phecode_definitions(spark)
+    res = run_pipeline(spark, cfg, input_path=src, phecode_defs=defs,
+                       output_path=str(tmp_path / "out.parquet"))
+    assert res.filter(F.col("pval").isNull()).count() == 0
+    table = pq.read_table(str(tmp_path / "out.parquet"))
+    rows = {r["dependent"]: r for r in table.to_pylist()}
+    for failed in ("008.5", "401.1"):
+        for col in ("pval", "beta", "se"):
+            assert rows[failed][col] is not None and math.isnan(rows[failed][col])
+        assert rows[failed]["pval_bh"] is None
+    assert rows["401.1"]["failed_reason"] == "No data after dropping nulls."
+    assert rows["250.1"]["pval_bh"] is not None
+    assert rows["999.9"]["phenotype"] is None
+    assert rows["008.5"]["phenotype"] == "Bacterial enteritis"
+
+    # CSV: the same study's file against Spark's own CSV writer.
+    out_csv = str(tmp_path / "out.csv")
+    res = run_pipeline(spark, cfg, input_path=src, phecode_defs=defs,
+                       output_path=out_csv)
+    spark_dir = str(tmp_path / "spark_csv")
+    res.coalesce(1).write.option("header", True).csv(spark_dir)
+    (part,) = [f for f in os.listdir(spark_dir) if f.startswith("part-")]
+
+    def cells(path):
+        with open(path, newline="") as f:
+            header, *body = list(csv.reader(f))
+        return header, {r[header.index("dependent")]: r for r in body}
+
+    header, ours = cells(out_csv)
+    spark_header, theirs = cells(os.path.join(spark_dir, part))
+    assert header == spark_header and ours.keys() == theirs.keys()
+    numeric = {f.name for f in res.schema.fields
+               if f.dataType.typeName() in ("double", "long")}
+    for dep, want in theirs.items():
+        for name, got, exp in zip(header, ours[dep], want):
+            if exp in ("NaN", "", "true", "false") or name not in numeric:
+                assert got == exp, (dep, name)
+            else:
+                assert float(got) == float(exp), (dep, name)
+    assert ours["401.1"][header.index("pval_bh")] == ""
+    assert ours["401.1"][header.index("pval")] == "NaN"
+    assert ours["999.9"][header.index("phenotype")] == ""
+
+    # A URI goes through Spark's writer and reads back the same.
+    promoted = []
+    promote = writers._promote_single_file
+    monkeypatch.setattr(writers, "_promote_single_file",
+                        lambda *a: promoted.append(a[1]) or promote(*a))
+    local = str(tmp_path / "uri.parquet")
+    writers.write_output(table, f"file://{local}", "parquet")
+    assert promoted == [f"file://{local}"] and os.path.isfile(local)
+    back = pq.read_table(local)
+    assert back.column_names == table.column_names
+    for name in table.column_names:
+        a, b = table[name], back[name]
+        assert a.null_count == b.null_count, name
+        if pa.types.is_floating(a.type):
+            np.testing.assert_array_equal(a.to_numpy(), b.to_numpy())
+        else:
+            assert a.to_pylist() == b.to_pylist(), name

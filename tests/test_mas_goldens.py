@@ -407,7 +407,7 @@ def _pval_proxy_tests(spark):
         FROM tests""",
 )
 def q_bonferroni(spark):
-    return bonferroni(_pval_proxy_tests(spark))
+    return spark.createDataFrame(bonferroni(_pval_proxy_tests(spark).toArrow()))
 
 
 @golden(
@@ -426,7 +426,9 @@ def q_bonferroni(spark):
         FROM ranked""",
 )
 def q_bh_fdr(spark):
-    out = benjamini_hochberg(_pval_proxy_tests(spark))
+    out = spark.createDataFrame(
+        benjamini_hochberg(_pval_proxy_tests(spark).toArrow())
+    )
     return out.select(
         "test_id", "pval", F.round(F.col("pval_bh"), 6).alias("pval_bh")
     )
@@ -607,7 +609,9 @@ def _linear_fanout(spark, strategy):
         dependents=["l_extendedprice", "l_discount", "l_tax"],
         model="linear", quantitative=True, min_case_count=10,
     )
-    res = run_associations(li, cfg.resolve(li.columns), strategy=strategy)
+    res = spark.createDataFrame(
+        run_associations(li, cfg.resolve(li.columns), strategy=strategy)
+    )
     return res.select(
         "predictor", "dependent",
         F.round("beta", 6).alias("beta"),
@@ -656,7 +660,9 @@ def q_mas_sex_specific_linear(spark):
         sex_restrictions={"l_extendedprice": 1, "l_discount": 0, "l_tax": 1},
         model="linear", quantitative=True, min_case_count=10,
     )
-    res = run_associations(li, cfg.resolve(li.columns), strategy="packed")
+    res = spark.createDataFrame(
+        run_associations(li, cfg.resolve(li.columns), strategy="packed")
+    )
     return res.select(
         "predictor", "dependent",
         F.round("beta", 6).alias("beta"),
@@ -864,7 +870,9 @@ def q_mas_firth_2x2_haldane(spark):
         predictors="xbin", dependents=["ybin"],
         model="firth", min_case_count=10,
     )
-    res = run_associations(li, cfg.resolve(li.columns), strategy="packed")
+    res = spark.createDataFrame(
+        run_associations(li, cfg.resolve(li.columns), strategy="packed")
+    )
     return res.select(
         "predictor", "dependent",
         F.round("beta", 4).alias("beta"),
@@ -920,7 +928,9 @@ def q_mas_firth_sex2_golden(spark):
             covariates=[x for x in terms if x != t],
             model="firth", min_case_count=5,
         )
-        part = run_associations(sdf, cfg.resolve(sdf.columns), strategy="unpivot")
+        part = spark.createDataFrame(
+            run_associations(sdf, cfg.resolve(sdf.columns), strategy="unpivot")
+        )
         fitted = part if fitted is None else fitted.unionByName(part)
     # Tuples with an explicit schema map None to NULL whatever the
     # session's Arrow setting.
@@ -984,7 +994,9 @@ def q_mas_logistic_mtcars_golden(spark):
             predictors=term, dependents=["am"], covariates=[other],
             model="logistic", min_case_count=5,
         )
-        part = run_associations(mt, cfg.resolve(mt.columns), strategy="packed")
+        part = spark.createDataFrame(
+            run_associations(mt, cfg.resolve(mt.columns), strategy="packed")
+        )
         fitted = part if fitted is None else fitted.unionByName(part)
     pub = spark.createDataFrame(
         _MTCARS_PUBLISHED,
@@ -1025,7 +1037,9 @@ def q_mas_poisson_rate_golden(spark):
         predictors="exposure", dependents=["y"], model="poisson",
         quantitative=True, min_case_count=10,
     )
-    res = run_associations(ev, cfg.resolve(ev.columns), strategy="packed")
+    res = spark.createDataFrame(
+        run_associations(ev, cfg.resolve(ev.columns), strategy="packed")
+    )
     return res.select(
         "predictor", "dependent",
         F.round("beta", 6).alias("beta"),

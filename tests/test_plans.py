@@ -5,7 +5,7 @@ survive a 100x scale-up are checked, not assumed.
 - predicate pushdown reaches the scan (PushedFilters)
 - dimension joins broadcast instead of shuffling the fact side
 - the wide->long unpivot is one JVM Expand over one scan
-- the PheWAS annotation join broadcasts the definition table
+- the PheWAS annotation runs no Spark join
 - each fan-out strategy has exactly one exchange feeding its Python stage
 - RINT's global rank never funnels through a single partition
 - the data-pipeline operators keep their shuffle-free / broadcast /
@@ -51,22 +51,32 @@ def test_unpivot_is_jvm_expand(spark):
     assert _op_count(plan, "Scan parquet") + _op_count(plan, "BatchScan") == 1
 
 
-def test_annotation_join_broadcasts(spark):
-    """The PheWAS annotation join must broadcast the phecode definition
-    table, never shuffle the results."""
+def test_annotation_runs_no_spark_join(spark):
+    """The PheWAS annotation joins on the driver: its one Spark job is
+    the collect of the phecode definition table, whose plan holds no
+    join, and the results never enter Spark."""
+    import pyarrow as pa
+
     from polars_mas_spark.operators.postprocessing import add_phecode_definitions
     from polars_mas_spark.sources.readers import read_phecode_definitions
 
-    results = spark.createDataFrame(
-        [("x", "008.5", 0.01), ("x", "250.1", 0.2)],
-        "predictor string, dependent string, pval double",
-    )
-    out = add_phecode_definitions(
-        results, read_phecode_definitions(spark), is_phewas=True
-    )
-    plan = plan_of(out)
-    assert _op_count(plan, "BroadcastHashJoin") == 1
-    assert "SortMergeJoin" not in plan
+    results = pa.table({
+        "predictor": ["x", "x"],
+        "dependent": ["250.1", "008.5"],
+        "pval": [0.01, 0.2],
+    })
+    defs = read_phecode_definitions(spark)
+    assert "Join" not in plan_of(defs)
+    sc = spark.sparkContext
+    sc.setJobGroup("annotation", "annotation")
+    try:
+        out = add_phecode_definitions(results, defs, is_phewas=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("annotation")) == 1
+    assert isinstance(out, pa.Table)
+    assert out["dependent"].to_pylist() == ["250.1", "008.5"]
+    assert out["phenotype"].null_count == 0
 
 
 def test_mas_fanout_single_exchange_to_python(spark):

@@ -2,6 +2,7 @@
 feature), phecode annotation join (postprocessing.py:23-29)."""
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from polars_mas_spark.operators.postprocessing import (
@@ -12,19 +13,18 @@ from polars_mas_spark.operators.postprocessing import (
 
 
 @pytest.fixture()
-def results_df(spark):
-    pdf = pd.DataFrame(
+def results_df():
+    return pa.table(
         {
             "predictor": ["x"] * 5,
             "dependent": ["a", "b", "c", "d", "e"],
-            "pval": [0.001, 0.009, 0.04, 0.9, None],
+            "pval": pa.array([0.001, 0.009, 0.04, 0.9, None], pa.float64()),
         }
     )
-    return spark.createDataFrame(pdf)
 
 
 def test_bonferroni_threshold_counts_only_valid_tests(results_df):
-    out = bonferroni(results_df).toPandas().set_index("dependent")
+    out = bonferroni(results_df).to_pandas().set_index("dependent")
     # 4 valid tests -> threshold 0.0125
     assert out.loc["a", "bonferroni_significant"] == True  # noqa: E712
     assert out.loc["b", "bonferroni_significant"] == True  # noqa: E712
@@ -33,7 +33,7 @@ def test_bonferroni_threshold_counts_only_valid_tests(results_df):
 
 
 def test_benjamini_hochberg_adjustment(results_df):
-    out = benjamini_hochberg(results_df).toPandas().set_index("dependent")
+    out = benjamini_hochberg(results_df).to_pandas().set_index("dependent")
     # R: p.adjust(c(.001,.009,.04,.9), "BH") = 0.004, 0.018, 0.0533.., 0.9
     assert out.loc["a", "pval_bh"] == pytest.approx(0.004)
     assert out.loc["b", "pval_bh"] == pytest.approx(0.018)
@@ -42,11 +42,11 @@ def test_benjamini_hochberg_adjustment(results_df):
     assert pd.isna(out.loc["e", "pval_bh"])
 
 
-def test_bh_monotone_on_ties(spark):
-    pdf = pd.DataFrame(
+def test_bh_monotone_on_ties():
+    table = pa.table(
         {"dependent": list("abcd"), "pval": [0.02, 0.02, 0.01, 0.5]}
     )
-    out = benjamini_hochberg(spark.createDataFrame(pdf)).toPandas()
+    out = benjamini_hochberg(table).to_pandas()
     merged = dict(zip(out["dependent"], out["pval_bh"]))
     assert merged["a"] == pytest.approx(merged["b"])  # ties share adjusted p
     assert merged["c"] <= merged["a"] <= merged["d"]
@@ -64,7 +64,7 @@ def test_phecode_annotation_join_phewas(spark, results_df):
             }
         )
     )
-    out = add_phecode_definitions(results_df, defs, is_phewas=True).toPandas()
+    out = add_phecode_definitions(results_df, defs, is_phewas=True).to_pandas()
     got = out.set_index("dependent")
     assert got.loc["a", "phenotype"] == "Phen A"
     assert pd.isna(got.loc["c", "phenotype"])  # left join keeps unmatched
@@ -77,11 +77,11 @@ def test_phecode_annotation_join_noop_without_mode(spark, results_df):
                       "category": ["c"], "category_number": [1.0]})
     )
     out = add_phecode_definitions(results_df, defs)
-    assert out.columns == results_df.columns
+    assert out.column_names == results_df.column_names
 
 
 def test_pipeline_bh_correction(spark):
-    """config.correction='bh' adds pval_bh via the window-based BH
+    """config.correction='bh' adds pval_bh via the BH
     operator (the reference's declared-but-unimplemented FDR roadmap)."""
     import pandas as pd
     from polars_mas_spark.config import MASConfig

@@ -220,9 +220,9 @@ def test_packed_fanout_matches_unpivot_any_shape(
         model="logistic", min_case_count=5,  # binary: case/control checks
     ).resolve(df.columns)
     a = (run_associations(df, cfg, strategy="unpivot")
-         .toPandas().sort_values("dependent").reset_index(drop=True))
+         .to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, cfg, strategy="packed", n_buckets=n_buckets)
-         .toPandas().sort_values("dependent").reset_index(drop=True))
+         .to_pandas().sort_values("dependent").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
 
 
