@@ -4,8 +4,9 @@ Spark's distributed execution model: read a wide samples x variables
 table, preprocess it, fit one regression per (predictor, dependent)
 pair, correct for multiple testing, annotate and write the results.
 
-``operators/`` also still holds a data-pipeline operator library (dedup,
-text, similarity, sampling, ...) that the MAS pipeline never imports.
+``operators/`` also still holds what is left of a data-pipeline operator
+library (dedup, text, similarity, sampling, joins, OLAP, ...) that the
+MAS pipeline never imports; ``staging.py`` belongs to it too.
 """
 
 from polars_mas_spark.config import MASConfig, resolve_columns

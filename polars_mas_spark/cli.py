@@ -94,8 +94,9 @@ def create_parser() -> argparse.ArgumentParser:
     sx.add_argument("--female-only", action="store_true")
     ph.add_argument("--sex-specific", action="store_true",
                     help="Restrict male/female-only phecodes (per the defs "
-                         "table's sex column) to matching-sex rows; requires "
-                         "--phecode-defs and the sex column as a covariate")
+                         "table's sex column) to matching-sex rows; reads "
+                         "--phecode-defs or the bundled table, and needs the "
+                         "sex column as a covariate")
     ph.add_argument("--male-code", type=int, default=0,
                     help="Sex-column value meaning male (for --sex-specific)")
 

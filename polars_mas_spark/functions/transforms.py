@@ -1,6 +1,6 @@
 """Dependent-variable transforms the reference declares but never wires
 up (cli.py:93-103, README.md:160-161): rank-based inverse-normal
-transform (RINT), log transform, and covariate scaling.
+transform (RINT) and log transform.
 
 RINT is the one transform that needs a GLOBAL rank, and a naive
 ``row_number() over (order by col)`` funnels the whole table through a
@@ -328,95 +328,3 @@ def rint(
 
 def log_transform(df: DataFrame, col: str, out_col: str | None = None) -> DataFrame:
     return df.withColumn(out_col or col, F.log(qcol(col)))
-
-
-def _rewrite_columns(df: DataFrame, replacements: dict) -> DataFrame:
-    """ONE select replacing the given columns in place (same order,
-    untouched columns pass through). The per-column ``withColumn`` loop
-    it replaces appends one Project node per column — at this engine's
-    ~2,000-column PheWAS widths Catalyst analysis goes quadratic and
-    driver-side planning takes minutes for a map-only transform
-    (review r9); a single projection is semantically identical."""
-    if not replacements:
-        return df
-    return df.select(
-        *[
-            replacements[c].alias(c) if c in replacements else qcol(c)
-            for c in df.columns
-        ]
-    )
-
-
-def standard_scale(df: DataFrame, cols: list[str]) -> DataFrame:
-    """(x - mean) / stddev_samp per column, one aggregate job for all."""
-    # qcol, not bare names: F.avg("250.2") parses the dot as struct
-    # access and fails on exactly the phecode-style columns this engine
-    # exists for (winsorize/robust_scale below already quote).
-    stats = df.agg(
-        *[F.avg(qcol(c)).alias(f"__m_{c}") for c in cols],
-        *[F.stddev_samp(qcol(c)).alias(f"__s_{c}") for c in cols],
-    ).first()
-    repl = {}
-    for c in cols:
-        mean, std = stats[f"__m_{c}"], stats[f"__s_{c}"]
-        if std is None or std == 0:
-            continue
-        repl[c] = (qcol(c) - F.lit(mean)) / F.lit(std)
-    return _rewrite_columns(df, repl)
-
-
-def winsorize(
-    df: DataFrame, cols: list[str], lower: float = 0.01, upper: float = 0.99
-) -> DataFrame:
-    """Clamp each column to its [lower, upper] interpolated percentiles
-    — the standard heavy-tail guard before scaling/regression. ONE
-    exact-percentile aggregate job covers every column (swap
-    ``F.percentile`` for ``F.percentile_approx`` at 100 TB — exact
-    percentile holds per-group sorted values; approx is a fixed-size
-    sketch), then the clamp itself is a map-only least/greatest."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.percentile(qcol(c), F.lit(lower)).alias(f"__lo_{c}"))
-        aggs.append(F.percentile(qcol(c), F.lit(upper)).alias(f"__hi_{c}"))
-    stats = df.agg(*aggs).first()
-    repl = {}
-    for c in cols:
-        lo, hi = stats[f"__lo_{c}"], stats[f"__hi_{c}"]
-        if lo is None or hi is None:
-            continue
-        repl[c] = F.least(F.greatest(qcol(c), F.lit(lo)), F.lit(hi))
-    return _rewrite_columns(df, repl)
-
-
-def robust_scale(df: DataFrame, cols: list[str]) -> DataFrame:
-    """(x - median) / IQR per column — outlier-insensitive sibling of
-    standard_scale, same one-aggregate-job shape (exact percentiles;
-    percentile_approx is the 100 TB swap)."""
-    aggs = []
-    for c in cols:
-        aggs.append(F.percentile(qcol(c), F.lit(0.5)).alias(f"__md_{c}"))
-        aggs.append(F.percentile(qcol(c), F.lit(0.25)).alias(f"__q1_{c}"))
-        aggs.append(F.percentile(qcol(c), F.lit(0.75)).alias(f"__q3_{c}"))
-    stats = df.agg(*aggs).first()
-    repl = {}
-    for c in cols:
-        md = stats[f"__md_{c}"]
-        q1, q3 = stats[f"__q1_{c}"], stats[f"__q3_{c}"]
-        if md is None or q1 is None or q3 is None or q3 == q1:
-            continue
-        repl[c] = (qcol(c) - F.lit(md)) / F.lit(q3 - q1)
-    return _rewrite_columns(df, repl)
-
-
-def min_max_scale(df: DataFrame, cols: list[str]) -> DataFrame:
-    stats = df.agg(
-        *[F.min(qcol(c)).alias(f"__mn_{c}") for c in cols],
-        *[F.max(qcol(c)).alias(f"__mx_{c}") for c in cols],
-    ).first()
-    repl = {}
-    for c in cols:
-        lo, hi = stats[f"__mn_{c}"], stats[f"__mx_{c}"]
-        if lo is None or hi is None or hi == lo:
-            continue
-        repl[c] = (qcol(c) - F.lit(lo)) / F.lit(hi - lo)
-    return _rewrite_columns(df, repl)

@@ -1575,7 +1575,7 @@ def dedup_cascade(
     buckets) + id anti-joins between stages — every stage linear, no
     pair lists (the near stage inherits minhash_dedup's bucket-min
     formulation). Each stage's survivor frame is eagerly
-    localCheckpoint-ed (the multimodal/CC precedent): the verdict
+    localCheckpoint-ed (the CC precedent): the verdict
     union references every stage from several branches, and without
     the lineage break Catalyst re-derives the whole upstream cascade
     once per branch (measured 64 s -> ~4 s at sf0.01). At 100 TB the

@@ -45,7 +45,7 @@ def md5_u32(key: Column, salt: str = "", null_sentinel: bool = True) -> Column:
     ``md5(salt || cast(key as string))`` as a BIGINT in [0, 2^32).
     Single definition on purpose — the cross-engine oracle parity story
     requires every consumer (hash_bucket, weighted_sample_n,
-    maintenance.table_digest, encoding.fit_vocabulary) to use
+    encoding.fit_vocabulary) to use
     byte-identical construction; DuckDB mirror:
     ``('0x' || substring(md5(...), 1, 8))::BIGINT``.
     ``null_sentinel`` hashes NULL as a \x01 sentinel; pass False when

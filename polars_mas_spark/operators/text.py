@@ -1107,8 +1107,7 @@ def classifier_eval(
     """Train/holdout evaluation report for a scored corpus — the
     accept/reject gate after [[train_quality_classifier]] (VERDICT r10
     next-steps #5): bucketed AUC plus the confusion counts at a score
-    threshold, per split, in ONE aggregation pass over score buckets
-    (the conditional-count shape of ``maintenance.drift_psi``).
+    threshold, per split, in ONE aggregation pass over score buckets.
 
     Returns one row per split ('train' / 'holdout') of ALL-INTEGER
     columns — no rounded quotients can diverge cross-engine (the r9

@@ -3,9 +3,13 @@
 Reference: /root/reference/src/polars_mas/pipeline.py:17-42
 (read -> preprocess -> associations -> postprocess -> write). The
 reference materializes the preprocessed table to a /dev/shm Arrow IPC
-file so its worker processes can mmap it; in Spark that role is played
-by ``persist(MEMORY_AND_DISK)`` — the eager preprocessing statistics and
-the association shuffle both reuse the cached partitions instead of
+file so its worker processes can mmap it. Here that role depends on the
+plan. On the columnar path, the default up to 100M rows, each task reads
+its columns straight from parquet files: the source files when the input
+is a plain parquet scan, else one ``checkpoint_wide`` copy of the raw
+table. On the tall paths (packed, moments, unpivot) it is played by
+``persist(MEMORY_AND_DISK)``: the eager preprocessing statistics and the
+association shuffle both reuse the cached partitions instead of
 re-scanning the source (SURVEY.md §4 note 1).
 """
 

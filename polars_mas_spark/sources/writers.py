@@ -282,7 +282,7 @@ def zorder_value(
     customer or price, pick one sort order" tables.
 
     ``bin_edges`` maps column -> explicit ascending interior edges
-    (same pinned-edges philosophy as drift_psi: the key must be a pure
+    (pinned edges: the key must be a pure
     row function, never depend on a sampled quantile that shifts
     between writes). Each column's bin id is clamped to ``bits`` bits;
     ids are bit-interleaved column-major (first column owns the most

@@ -119,6 +119,52 @@ def test_api_doc_modules_exist():
     assert not missing, missing
 
 
+# Library modules no MAS entry point reaches, left from the operator
+# library (ROADMAP item 1). Each deletion step shrinks this set; a new
+# module that nothing reaches fails the test below.
+LEFTOVER_LIBRARY = {
+    f"{PKG}.{m}" for m in (
+        "operators.bloom", "operators.dedup", "operators.encoding",
+        "operators.joins", "operators.olap", "operators.packing",
+        "operators.scd", "operators.similarity", "operators.text", "staging",
+    )
+}
+ENTRY_POINTS = (PKG, f"{PKG}.__main__", f"{PKG}.cli", f"{PKG}.pipeline")
+
+
+def _module_name(path: Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+def _reachable(roots) -> set[str]:
+    """Package modules imported, transitively and at any nesting depth,
+    from ``roots``. Importing ``a.b.c`` also imports ``a.b`` and ``a``;
+    ``from a.b import c`` imports ``a.b.c`` when ``c`` is a submodule."""
+    seen: set[str] = set()
+    todo = list(roots)
+    while todo:
+        module = todo.pop()
+        if module in seen or _module_file(module) is None:
+            continue
+        seen.add(module)
+        for _, imported, name in _package_imports(_module_file(module)):
+            parts = imported.split(".")
+            todo += [".".join(parts[:i]) for i in range(1, len(parts) + 1)]
+            if name is not None:
+                todo.append(f"{imported}.{name}")
+    return seen
+
+
+def test_unreachable_modules_are_the_listed_leftovers():
+    modules = {_module_name(p) for p in (ROOT / PKG).rglob("*.py")}
+    unreachable = modules - _reachable(ENTRY_POINTS)
+    assert unreachable == LEFTOVER_LIBRARY, (
+        f"newly unreachable: {sorted(unreachable - LEFTOVER_LIBRARY)}; "
+        f"listed but reachable or gone: {sorted(LEFTOVER_LIBRARY - unreachable)}"
+    )
+
+
 def test_walk_catches_function_level_imports(tmp_path):
     """The checker itself: a dangling import inside a function body and
     a missing name in an existing module are both reported."""

@@ -133,21 +133,6 @@ def test_compact_parquet_local_roundtrip(spark, tmp_path):
     assert not os.path.exists(path + "__compact_old__")
 
 
-def test_frame_sample_plan_zero_frames(spark):
-    """Review r4: a zero-frame row used to throw 'Illegal sequence
-    boundaries' and kill the whole scan; it must expand to nothing."""
-    from polars_mas_spark.operators.multimodal import frame_sample_plan
-
-    df = spark.createDataFrame(
-        [(1, 25), (2, 0), (3, 1)], "doc_id long, n_frames long"
-    )
-    rows = frame_sample_plan(df, "doc_id", "n_frames", every_k=10).collect()
-    got = {}
-    for r in rows:
-        got.setdefault(r["doc_id"], []).append(r["frame_index"])
-    assert got == {1: [0, 10, 20], 3: [0]}
-
-
 def test_erfc_vec_nan_propagates():
     from polars_mas_spark.functions.distributions import erfc_vec
 

@@ -601,68 +601,6 @@ def test_weighted_sample_is_takeordered_not_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_maintenance_joins_are_hash_not_nested_loop(spark):
-    """snapshot_diff and cdc_apply are single key-join programs — no
-    nested-loop/cartesian fallback, exactly one join each."""
-    from polars_mas_spark.operators import maintenance as mt
-
-    cust = _t(spark, "customer")
-    newt = (
-        cust.filter(F.col("c_custkey") % 7 != 0)
-        .withColumn(
-            "c_acctbal",
-            F.when(
-                F.col("c_custkey") % 5 == 0, F.col("c_acctbal") + 100
-            ).otherwise(F.col("c_acctbal")),
-        )
-        .unionByName(
-            cust.filter(F.col("c_custkey") % 11 == 0).withColumn(
-                "c_custkey", F.col("c_custkey") + 1000000
-            )
-        )
-    )
-    base = _t(spark, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus"
-    )
-    changes = _t(spark, "lineitem").select(
-        F.col("l_orderkey").alias("o_orderkey"),
-        F.col("l_shipdate").alias("ts"),
-        F.struct(
-            "l_linenumber", "l_extendedprice", "l_returnflag"
-        ).alias("seq"),
-        F.when(F.col("l_returnflag") == "R", "D").otherwise("U").alias("op"),
-        F.col("l_extendedprice").alias("o_totalprice"),
-    )
-    for name, q in (
-        ("snapshot_diff", mt.snapshot_diff(cust, newt, ["c_custkey"])),
-        ("cdc_apply", mt.cdc_apply(
-            base, changes, ["o_orderkey"], "ts", "seq", "op", ["o_totalprice"]
-        )),
-    ):
-        plan = plan_of(q)
-        assert "CartesianProduct" not in plan, name
-        assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-def test_resample_windows_are_key_partitioned(spark):
-    """No single-partition window in the interpolation: every window
-    partitions by the series key."""
-    import re
-
-    from polars_mas_spark.operators import windows as wd
-
-    ev = (
-        _events(spark)
-        .filter(F.col("event_id") % 13 == 0)
-        .select("event_type", "ts", "value")
-    )
-    plan = plan_of(wd.resample_interpolate(ev, "event_type", "ts", "value", 3600))
-    assert "CartesianProduct" not in plan
-    # A global (unpartitioned) window would appear as an Exchange
-    # SinglePartition feeding a Window; assert none exists.
-    assert not re.search(r"Exchange SinglePartition[\s\S]{0,400}?Window", plan)
-
-
 def test_span_decontaminate_bench_broadcast_no_pairs(spark):
     """The benchmark fingerprint set must reach the corpus windows as a
     BROADCAST (semi) join — the corpus n-gram stream never shuffles for

@@ -143,20 +143,6 @@ def test_one_hot_binary_categorical_passthrough(spark):
     assert "bin" in out.columns  # <=2 levels: untouched (preprocessing.py:95)
 
 
-def test_profile_table_one_pass(spark):
-    from polars_mas_spark.operators.profile import profile_table
-
-    df = spark.createDataFrame(
-        [(1.0, 10), (2.0, None), (3.0, 30), (None, 20)],
-        "a double, b int",
-    )
-    rows = {r.column: r for r in profile_table(df).collect()}
-    assert rows["a"].n == 3 and rows["a"].nulls == 1
-    assert rows["a"].min == 1.0 and rows["a"].max == 3.0
-    assert rows["a"].mean == 2.0 and rows["a"].median == 2.0
-    assert rows["b"].median == 20.0
-
-
 def test_constant_string_covariate_dropped_not_failed(spark):
     """A constant string covariate must be dropped by the constant check
     (as it always was), not hard-failed by the undeclared-string guard —
@@ -219,27 +205,6 @@ def test_string_covariate_clear_error_both_paths(spark, tmp_path):
         preprocess(df, cfg())
     with pt.raises(ValueError, match="String-typed covariate"):
         build_prep_recipe(df, cfg())
-
-
-def test_scaling_dotted_columns(spark):
-    """Review r4: standard_scale/min_max_scale used bare column names in
-    their aggregates, so dotted phecode-style columns raised
-    AnalysisException while sibling winsorize/robust_scale worked."""
-    import numpy as np
-    import pandas as pd
-
-    from polars_mas_spark.functions.transforms import (
-        min_max_scale,
-        standard_scale,
-    )
-
-    rng = np.random.default_rng(41)
-    pdf = pd.DataFrame({"250.2": rng.normal(10, 3, 200)})
-    df = spark.createDataFrame(pdf)
-    s = standard_scale(df, ["250.2"]).toPandas()["250.2"]
-    assert abs(s.mean()) < 1e-9 and abs(s.std(ddof=1) - 1.0) < 1e-9
-    m = min_max_scale(df, ["250.2"]).toPandas()["250.2"]
-    assert m.min() == 0.0 and m.max() == 1.0
 
 
 def test_recipe_sex_filter_null_parity(spark):
@@ -379,6 +344,33 @@ def test_covariate_correlations_values_and_guards(spark):
     assert rows[("e", "f")] is None
     # Fewer than 2 covariates: empty result, no job.
     assert covariate_correlations(df, ["a"]).count() == 0
+
+
+def test_new_operators_accept_dotted_column_names(spark):
+    """qcol discipline (colutils): dotted user column names must work
+    through covariate_correlations and the sampling operators —
+    F.col('250.1') would parse as a struct access and fail or silently
+    misresolve."""
+    import datetime as dt
+
+    from polars_mas_spark.operators.preprocessing import covariate_correlations
+    from polars_mas_spark.operators.sampling import (
+        temporal_split,
+        weighted_sample_n,
+    )
+
+    df = spark.createDataFrame(
+        [(i, float(i), float(i) * 2 + 1) for i in range(40)],
+        ["id", "250.1", "008.5"],
+    )
+    corr = {
+        (r.col_a, r.col_b): r.corr
+        for r in covariate_correlations(df, ["250.1", "008.5"]).collect()
+    }
+    assert corr[("250.1", "008.5")] == 1.0
+    assert weighted_sample_n(df, "id", "008.5", 10).count() == 10
+    ts_df = df.withColumn("ts", F.lit(dt.datetime(2024, 1, 1)))
+    assert temporal_split(ts_df, "ts", "2024-06-01").count() == 40
 
 
 def test_drop_correlated_covariates_greedy_first_kept_wins(spark):

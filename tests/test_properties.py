@@ -262,107 +262,6 @@ def test_select_until_budget_matches_naive(spark, rows, budget, blocks):
 
 
 @given(
-    pts=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=40),   # minute offset
-            st.floats(min_value=-50, max_value=50,
-                      allow_nan=False, allow_infinity=False),
-        ),
-        min_size=1, max_size=10,
-    )
-)
-@SETTINGS
-def test_resample_interpolate_bounded_and_preserving(spark, pts):
-    """On ANY point set: grid values at observed buckets equal the
-    bucket mean (interpolated=False), and every interpolated value lies
-    within [min, max] of the observed values (linear interpolation with
-    edge clamping can never extrapolate outside the envelope)."""
-    import datetime as dt
-
-    from polars_mas_spark.operators.windows import resample_interpolate
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [("k", t0 + dt.timedelta(minutes=m), float(v)) for m, v in pts]
-    df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
-    out = resample_interpolate(df, "k", "ts", "v", 600).collect()
-    lo = min(v for _, v in pts)
-    hi = max(v for _, v in pts)
-    assert out, "grid never empty when input has a point"
-    for r in out:
-        assert lo - 1e-9 <= r.value <= hi + 1e-9
-    # Observed buckets carry the exact bucket mean.
-    from collections import defaultdict
-
-    buckets = defaultdict(list)
-    for m, v in pts:
-        buckets[(m * 60) // 600].append(float(v))
-    got = {
-        int(r.bucket_ts.timestamp() // 600): (r.value, r.interpolated)
-        for r in out
-    }
-    base = int(t0.timestamp()) // 600
-    for b, vs in buckets.items():
-        val, interp = got[base + b]
-        assert not interp
-        assert val == pytest.approx(sum(vs) / len(vs))
-
-
-@given(
-    ops=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=6),    # key
-            st.integers(min_value=0, max_value=5),    # ts
-            st.sampled_from(["U", "D"]),
-            st.floats(min_value=-9, max_value=9,
-                      allow_nan=False, allow_infinity=False),
-        ),
-        min_size=0, max_size=12,
-    )
-)
-@SETTINGS
-def test_cdc_apply_matches_sequential_replay(spark, ops):
-    """cdc_apply == a literal Python replay of the changelog in
-    (ts, seq) order over a dict — the latest-wins contract on ANY
-    changelog, including multi-update keys, deletes of absent keys,
-    and re-inserts."""
-    from polars_mas_spark.operators.maintenance import cdc_apply
-
-    base_rows = [(k, float(k) * 10) for k in range(4)]
-    seq_ops = [(k, t, i, op, v) for i, (k, t, op, v) in enumerate(ops)]
-    # Latest-change-wins: a key whose LATEST (ts, seq) op is U is
-    # present with that value; latest D is absent (equivalent to a full
-    # sequential replay for single-value upsert/delete semantics).
-    latest = {}
-    for k, t, i, op, v in seq_ops:
-        cur = latest.get(k)
-        if cur is None or (t, i) > (cur[0], cur[1]):
-            latest[k] = (t, i, op, v)
-    expect = {}
-    for k, v in base_rows:
-        if k in latest:
-            t, i, op, val = latest[k]
-            if op != "D":
-                expect[k] = val
-        else:
-            expect[k] = v
-    for k, (t, i, op, val) in latest.items():
-        if k not in dict(base_rows) and op != "D":
-            expect[k] = val
-    base = spark.createDataFrame(base_rows, "k long, v double")
-    if seq_ops:
-        ch = spark.createDataFrame(
-            seq_ops, "k long, ts long, seq long, op string, v double"
-        )
-        got = {
-            r.k: r.v
-            for r in cdc_apply(base, ch, ["k"], "ts", "seq", "op", ["v"]).collect()
-        }
-    else:
-        got = {r.k: r.v for r in base.collect()}
-    assert got == pytest.approx(expect)
-
-
-@given(
     data=st.data(),
     n=st.integers(min_value=60, max_value=400),
     flip=st.floats(min_value=0.0, max_value=0.45),

@@ -395,29 +395,6 @@ def test_random_projection_arrow_path_null_embedding(spark):
         assert len(out.loc[3, "projected"]) == 4, max_cells
 
 
-def test_embedding_profile_dirty_corpus(spark):
-    """The pre-flight report must count NULL / wrong-dim / non-finite /
-    zero vectors separately and compute norm stats over clean rows only."""
-    from polars_mas_spark.operators.profile import embedding_profile
-
-    rows = [
-        (1, [3.0, 4.0]),            # norm 5
-        (2, [0.0, 0.0]),            # zero vector (clean, norm 0)
-        (3, None),                  # NULL
-        (4, [1.0]),                 # wrong dim
-        (5, [float("nan"), 1.0]),   # non-finite
-        (6, [float("inf"), 1.0]),   # non-finite
-        (7, [None, 1.0]),           # NULL component -> non-finite bucket
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    r = embedding_profile(df, "embedding", expected_dim=2).collect()[0]
-    assert r.n_rows == 7 and r.n_null == 1 and r.n_wrong_dim == 1
-    # r5 advice: a vector with a NULL component must land in exactly
-    # one category (non-finite), not vanish via NULL predicate logic.
-    assert r.n_nonfinite == 3 and r.n_zero == 1
-    assert r.norm_min == 0.0 and r.norm_max == 5.0 and r.dim == 2
-
-
 def test_knn_graph_recall_and_degree(emb, spark):
     """Every node gets <= k edges ranked 1..k; approximate neighbors
     reach minimum recall against the exact per-node brute force."""

@@ -41,340 +41,6 @@ def test_fingerprint_normalization(spark):
     assert out.loc[0, "fingerprint"] != out.loc[2, "fingerprint"]
 
 
-def test_audio_features_fake_decoder(spark):
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        extract_audio_features, text_as_binary,
-    )
-
-    df = spark.createDataFrame(
-        [(0, "abcd"), (1, "")], "doc_id long, text string"
-    )
-    out = (
-        extract_audio_features(text_as_binary(df, "text"), "doc_id", "content")
-        .toPandas().set_index("doc_id")
-    )
-    b = np.frombuffer(b"abcd", dtype=np.uint8)
-    sig = (b.astype(float) - 128.0) / 128.0
-    assert out.loc[0, "n_bytes"] == 4
-    assert out.loc[0, "sample_rate"] == 8000 + ord("a") * 32
-    assert abs(out.loc[0, "rms"] - float(np.sqrt((sig**2).mean()))) < 1e-12
-    assert out.loc[1, "n_bytes"] == 0 and out.loc[1, "rms"] == 0.0
-
-
-def test_audio_rms_with_trailing_empty_in_one_batch(spark):
-    """Review r4: with empty/NULL payloads TRAILING a non-empty one in
-    the SAME Arrow batch, the old clamped-reduceat segment sum split
-    the last non-empty document's segment and reported a wrong rms.
-    coalesce(1) forces all rows into one batch to pin the fix."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        extract_audio_features, text_as_binary,
-    )
-
-    df = spark.createDataFrame(
-        [(0, "abcd"), (1, ""), (2, None)], "doc_id long, text string"
-    ).coalesce(1)
-    out = (
-        extract_audio_features(text_as_binary(df, "text"), "doc_id", "content")
-        .toPandas().set_index("doc_id")
-    )
-    b = np.frombuffer(b"abcd", dtype=np.uint8)
-    sig = (b.astype(float) - 128.0) / 128.0
-    assert abs(out.loc[0, "rms"] - float(np.sqrt((sig**2).mean()))) < 1e-12
-    assert out.loc[1, "rms"] == 0.0 and out.loc[2, "rms"] == 0.0
-
-
-def test_unknown_decoder_fails_fast(spark):
-    import pytest as _pytest
-
-    from polars_mas_spark.operators.multimodal import (
-        extract_audio_features, extract_image_features, text_as_binary,
-    )
-
-    df = spark.createDataFrame([(0, "abcd")], "doc_id long, text string")
-    binned = text_as_binary(df, "text")
-    # Driver-side, before any job runs — a typo must not cost a scan.
-    with _pytest.raises(ValueError, match="unknown audio decoder"):
-        extract_audio_features(binned, "doc_id", "content", decoder="mp3")
-    with _pytest.raises(ValueError, match="unknown image decoder"):
-        extract_image_features(binned, "doc_id", "content", decoder="jpeg")
-
-
-def test_wav_decoder_roundtrip_and_16bit():
-    """Pure-Python RIFF/WAVE decoder: 8-bit round-trip through the
-    matching encoder, a hand-built 16-bit stereo file (downmixed to
-    mono), chunk-walk past an extra LIST chunk, and rejection of
-    malformed input."""
-    import struct
-
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        decode_wav, wav_encode_pcm8,
-    )
-
-    # 8-bit mono round-trip.
-    pcm = bytes([0, 64, 128, 192, 255])
-    rate, s = decode_wav(wav_encode_pcm8(pcm, rate=44100))
-    assert rate == 44100
-    np.testing.assert_allclose(
-        s, (np.frombuffer(pcm, np.uint8).astype(float) - 128.0) / 128.0
-    )
-
-    # 16-bit stereo with an extra LIST chunk between fmt and data;
-    # channels downmix by mean: (1000, -1000) -> 0, (32767, 32767) -> ~1.
-    frames = struct.pack("<4h", 1000, -1000, 32767, 32767)
-    body = (
-        b"fmt " + struct.pack("<IHHIIHH", 16, 1, 2, 16000, 64000, 4, 16)
-        + b"LIST" + struct.pack("<I", 4) + b"INFO"
-        + b"data" + struct.pack("<I", len(frames)) + frames
-    )
-    buf = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
-    rate, s = decode_wav(buf)
-    assert rate == 16000 and s.size == 2
-    assert s[0] == 0.0 and abs(s[1] - 32767.0 / 32768.0) < 1e-12
-
-    # Rejections: not RIFF, truncated data chunk, compressed format.
-    assert decode_wav(b"abcd") is None
-    assert decode_wav(buf[:-2]) is None
-    bad = buf.replace(
-        struct.pack("<IHHIIHH", 16, 1, 2, 16000, 64000, 4, 16),
-        struct.pack("<IHHIIHH", 16, 85, 2, 16000, 64000, 4, 16),  # mp3 tag
-    )
-    assert decode_wav(bad) is None
-
-
-def test_netpbm_decoder_roundtrip_p5_p6_comments():
-    """Pure-Python netpbm decoder: P5 round-trip through the matching
-    encoder, P6 with header comments, truncated-raster rejection."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        decode_netpbm, netpbm_encode,
-    )
-
-    px = bytes(range(12))
-    w, h, out = decode_netpbm(netpbm_encode(4, 3, px))
-    assert (w, h) == (4, 3)
-    np.testing.assert_array_equal(out, np.frombuffer(px, np.uint8))
-
-    # P6 RGB (2x2 = 12 raster bytes) with comments inside the header.
-    buf = b"P6 # rgb\n# another comment\n 2\t2\n255\n" + px
-    w, h, out = decode_netpbm(buf)
-    assert (w, h) == (2, 2) and out.size == 12
-
-    assert decode_netpbm(b"P5\n4 3\n255\n" + px[:-1]) is None  # truncated
-    assert decode_netpbm(b"P5\n0 3\n255\n") is None  # zero width
-    assert decode_netpbm(b"JFIF....") is None
-
-
-def test_real_decoders_through_spark(spark):
-    """The wav/netpbm decoders through the full mapInPandas operators:
-    real payloads decode to real features; a corrupt payload in the
-    same batch degrades to a zeroed row instead of failing the scan."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        extract_audio_features, extract_image_features,
-        netpbm_encode, wav_encode_pcm8,
-    )
-
-    pcm = bytes([128, 255, 0, 128])
-    wav_rows = [(0, wav_encode_pcm8(pcm, rate=8000)), (1, b"not-audio")]
-    adf = spark.createDataFrame(wav_rows, "doc_id long, content binary")
-    aout = (
-        extract_audio_features(adf, "doc_id", "content", decoder="wav")
-        .toPandas().set_index("doc_id")
-    )
-    sig = (np.frombuffer(pcm, np.uint8).astype(float) - 128.0) / 128.0
-    assert aout.loc[0, "sample_rate"] == 8000
-    assert aout.loc[0, "n_samples"] == 4
-    assert abs(aout.loc[0, "duration_s"] - 4 / 8000) < 1e-12
-    assert abs(aout.loc[0, "rms"] - float(np.sqrt((sig**2).mean()))) < 1e-12
-    assert aout.loc[1, "sample_rate"] == 0 and aout.loc[1, "rms"] == 0.0
-    assert aout.loc[1, "n_bytes"] == len(b"not-audio")
-
-    px = bytes([10, 20, 30, 40, 50, 60])
-    img_rows = [(0, netpbm_encode(3, 2, px)), (1, b"\xff\xd8corrupt")]
-    idf = spark.createDataFrame(img_rows, "doc_id long, content binary")
-    iout = (
-        extract_image_features(idf, "doc_id", "content", decoder="netpbm")
-        .toPandas().set_index("doc_id")
-    )
-    assert (iout.loc[0, "width"], iout.loc[0, "height"]) == (3, 2)
-    assert abs(iout.loc[0, "mean_byte"] - 35.0) < 1e-12
-    assert iout.loc[1, "width"] == 0 and iout.loc[1, "mean_byte"] == 0.0
-
-
-def test_image_ahash_neardup_planted(spark):
-    """Perceptual near-dup on REAL 2-D images: an exact RGB re-encode
-    pairs at hamming 0, a one-block perturbation at hamming 1, an
-    inverted image and a corrupt payload never pair."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        image_ahash, image_neardup_pairs, netpbm_encode,
-    )
-
-    base = np.zeros((32, 32), np.uint8)
-    base[:, 16:] = 255  # left half dark, right half bright
-    pert = base.copy()
-    pert[0:4, 0:4] = 255  # flips exactly aHash bit 0
-    inv = 255 - base
-    rgb = np.repeat(base[:, :, None], 3, axis=2)  # same image, P6
-    rows = [
-        (1, netpbm_encode(32, 32, base.tobytes())),
-        (2, netpbm_encode(32, 32, pert.tobytes())),
-        (3, netpbm_encode(32, 32, inv.tobytes())),
-        (4, netpbm_encode(32, 32, rgb.tobytes(), rgb=True)),
-        (5, b"\xff\xd8corrupt"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    hashes = {
-        r.doc_id: r.ahash
-        for r in image_ahash(df, "doc_id", "content").collect()
-    }
-    assert hashes[5] is None  # corrupt -> NULL, never an error
-    assert hashes[1] == hashes[4]  # RGB luma proxy preserves the bits
-    pairs = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in image_neardup_pairs(
-            df, "doc_id", "content", max_distance=3
-        ).collect()
-    }
-    assert pairs[(1, 4)] == 0
-    assert pairs[(1, 2)] == 1 and pairs[(2, 4)] == 1
-    assert not any(3 in p or 5 in p for p in pairs)
-
-    # Documented aHash property: constant images hash all-zero and
-    # collide at hamming 0 whatever their level (blank-frame pairing).
-    blank = [
-        (10, netpbm_encode(32, 32, bytes([0]) * 1024)),
-        (11, netpbm_encode(32, 32, bytes([200]) * 1024)),
-    ]
-    bdf = spark.createDataFrame(blank, "doc_id long, content binary")
-    bh = {r.doc_id: r.ahash for r in image_ahash(bdf, "doc_id", "content").collect()}
-    assert bh[10] == bh[11] == "0" * 16
-
-    # grid > 8 regression: a uint64 shift vector wraps at 64 bits and
-    # silently zeroed every higher bit (numpy wraparound), so a 10x10
-    # grid hashed only its first 64 cells. The word-chunked packing
-    # must place bit 99 (bright bottom-right at grid=10) in the high
-    # nibbles, and the bright-half image must set high bits too.
-    hi = {
-        r.doc_id: r.ahash
-        for r in image_ahash(df, "doc_id", "content", grid=10).collect()
-    }
-    assert len(hi[1]) == 25  # 100 bits -> 25 hex chars
-    assert int(hi[1], 16) >> 64 != 0  # bits past 63 survive packing
-    # bit i corresponds to nibble layout value 2^i: the right-bright
-    # base image sets exactly the cells in columns 5..9 of every row.
-    expect = sum(1 << (r * 10 + c) for r in range(10) for c in range(5, 10))
-    assert int(hi[1], 16) == expect
-
-
-def test_pillow_decoder_registry_and_error():
-    """decoder='pillow' resolves from the registry; without Pillow
-    installed the error names the missing optional package (the loud
-    path an executor batch would hit)."""
-    import pytest
-
-    from polars_mas_spark.operators.multimodal import (
-        IMAGE_DECODERS, decode_pillow,
-    )
-
-    assert IMAGE_DECODERS["pillow"] is decode_pillow
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="Pillow"):
-            decode_pillow(b"\x89PNG\r\n\x1a\n")
-
-
-def test_pillow_decoder_on_planted_images():
-    """With Pillow present (optional), planted PNG/JPEG round-trip
-    through the same (w, h, flat-px) contract as decode_netpbm and an
-    exact re-encode pairs at hamming 0 through image_ahash."""
-    import pytest
-
-    PIL_Image = pytest.importorskip("PIL.Image")
-    import io
-
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import decode_pillow
-
-    base = np.zeros((32, 32), np.uint8)
-    base[:, 16:] = 255
-    buf = io.BytesIO()
-    PIL_Image.fromarray(base, mode="L").save(buf, format="PNG")
-    d = decode_pillow(buf.getvalue())
-    assert d is not None
-    w, h, px = d
-    assert (w, h) == (32, 32) and px.size == 32 * 32
-    assert np.array_equal(px.reshape(32, 32), base)
-    # RGB path: px flat size w*h*3
-    rgb = np.repeat(base[:, :, None], 3, axis=2)
-    buf2 = io.BytesIO()
-    PIL_Image.fromarray(rgb, mode="RGB").save(buf2, format="PNG")
-    d2 = decode_pillow(buf2.getvalue())
-    assert d2 is not None and d2[2].size == 32 * 32 * 3
-    assert decode_pillow(b"not an image") is None
-
-
-def test_image_neardup_hot_cluster_cap(spark):
-    """hot_cluster_cap bounds output on identical-hash mega-clusters
-    (VERDICT r7 "What's wrong" #3): a planted 12-member cluster emits
-    C(12,2)=66 pairs uncapped but exactly 11 representative links (min
-    doc_id, hamming 0) at cap=8; small clusters stay fully enumerated
-    and cross-hash near pairs route through the representative only."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        image_neardup_pairs, netpbm_encode,
-    )
-
-    base = np.zeros((32, 32), np.uint8)
-    base[:, 16:] = 255
-    pert = base.copy()
-    pert[0:4, 0:4] = 255  # hamming 1 from base
-    other = np.zeros((32, 32), np.uint8)
-    other[:16, :] = 255  # a different hash family (top-bright)
-    rows = [(i, netpbm_encode(32, 32, base.tobytes())) for i in range(12)]
-    rows.append((100, netpbm_encode(32, 32, pert.tobytes())))
-    rows += [
-        (200, netpbm_encode(32, 32, other.tobytes())),
-        (201, netpbm_encode(32, 32, other.tobytes())),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-
-    uncapped = image_neardup_pairs(df, "doc_id", "content").collect()
-    # 66 intra-mega + 12 mega-to-pert + 1 small-cluster pair
-    assert len(uncapped) == 66 + 12 + 1
-
-    capped = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in image_neardup_pairs(
-            df, "doc_id", "content", hot_cluster_cap=8
-        ).collect()
-    }
-    # 11 rep links + rep-to-pert + untouched small cluster = 13 rows
-    assert len(capped) == 13
-    assert all(capped[(0, m)] == 0 for m in range(1, 12))  # rep = min id
-    assert capped[(0, 100)] == 1  # cross-hash pair via the rep only
-    assert capped[(200, 201)] == 0  # sz=2 <= cap: exact enumeration
-    # cap >= cluster size leaves everything exact (byte-identical path)
-    exact = image_neardup_pairs(
-        df, "doc_id", "content", hot_cluster_cap=12
-    ).collect()
-    assert sorted((r.doc_a, r.doc_b, r.hamming) for r in exact) == sorted(
-        (r.doc_a, r.doc_b, r.hamming) for r in uncapped
-    )
-
-
 def test_simhash_segment_blocking_full_recall(spark):
     """The (max_distance+1)-segment blocking must recover EXACTLY the
     unblocked hamming<=d pair set (pigeonhole losslessness), at the
@@ -798,25 +464,6 @@ def test_passage_split_windows_and_overlap(spark):
         passage_split(df, "doc_id", "text", max_words=16, overlap=16)
 
 
-def test_distinct_profile_hll_within_tolerance(spark):
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.operators.profile import distinct_profile
-
-    df = spark.range(0, 20_000).select(
-        (F.col("id") % 1000).alias("k1k"),
-        (F.col("id") % 37).alias("k37"),
-        F.col("id").alias("uniq"),
-    )
-    approx = {r["column"]: r["n_distinct"]
-              for r in distinct_profile(df).collect()}
-    exact = {r["column"]: r["n_distinct"]
-             for r in distinct_profile(df, exact=True).collect()}
-    assert exact == {"k1k": 1000, "k37": 37, "uniq": 20_000}
-    for c in exact:
-        assert abs(approx[c] - exact[c]) / exact[c] < 0.05, (c, approx[c])
-
-
 def test_banding_mismatch_rejected(spark):
     """Review r4: bands*rows_per_band > num_hashes used to slice empty
     signature bands, giving every doc the md5('') bucket and silently
@@ -957,45 +604,6 @@ def test_passage_split_no_subsumed_tail(spark):
     assert by_doc[3] == [(0, 64), (1, 52)]     # 49..100; start 97 subsumed
 
 
-def test_topk_per_group_contract(spark):
-    """Review r4: tiebreak_col is required (nondeterministic top-k under
-    ties otherwise) and a pre-existing rank column must not be silently
-    clobbered."""
-    import pytest
-    from polars_mas_spark.operators.windows import topk_per_group
-
-    df = spark.createDataFrame(
-        [(1, 5.0, 10), (1, 5.0, 11), (1, 4.0, 12)],
-        "g long, v double, id long",
-    )
-    with pytest.raises(ValueError, match="tiebreak_col"):
-        topk_per_group(df, "g", "v", k=1)
-    top = topk_per_group(df, "g", "v", k=1, tiebreak_col="id").collect()
-    assert [(r["g"], r["id"]) for r in top] == [(1, 10)]
-    with pytest.raises(ValueError, match="already exists"):
-        topk_per_group(
-            df.withColumnRenamed("id", "rank"), "g", "v", k=1, tiebreak_col="rank"
-        )
-
-
-def test_asof_join_colliding_value_column(spark):
-    """Review r4: a right value column named like a left column must be
-    suffixed _right, not emitted as a duplicate name."""
-    from pyspark.sql import functions as F
-    from polars_mas_spark.operators.windows import asof_join
-
-    left = spark.createDataFrame(
-        [(1, 10, 100.0)], "id long, ts long, price double"
-    ).withColumn("ts", F.timestamp_seconds("ts"))
-    right = spark.createDataFrame(
-        [(1, 5, 99.0)], "id long, ts2 long, price double"
-    ).withColumn("ts2", F.timestamp_seconds("ts2"))
-    out = asof_join(left, right, on="id", left_ts="ts", right_ts="ts2")
-    assert out.columns == ["id", "ts", "price", "asof_ts2", "price_right"]
-    row = out.collect()[0]
-    assert row["price"] == 100.0 and row["price_right"] == 99.0
-
-
 def test_model_quality_score_matches_python(spark):
     """The hashing-trick scorer must reproduce a direct Python
     computation: same md5 buckets, same weight gather, same mean/sigmoid
@@ -1044,71 +652,6 @@ def test_model_quality_score_validates_weights(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     with _pytest.raises(ValueError, match="expected n_buckets"):
         model_quality_score(df, "doc_id", "text", weights=[0.1, 0.2])
-
-
-def test_cohort_retention_matrix(spark):
-    """Hand-built events: user 1 joins week of 2024-01-01 and returns
-    two weeks later; user 2 joins the same week, never returns; user 3
-    joins the next week. Matrix cells must count distinct users at each
-    (cohort_week, week_age)."""
-    import datetime
-
-    from polars_mas_spark.operators.windows import cohort_retention
-
-    rows = [
-        (1, datetime.datetime(2024, 1, 2, 10)),   # cohort wk 2024-01-01
-        (1, datetime.datetime(2024, 1, 16, 9)),   # age 2
-        (2, datetime.datetime(2024, 1, 4, 8)),    # cohort wk 2024-01-01
-        (3, datetime.datetime(2024, 1, 10, 12)),  # cohort wk 2024-01-08
-        (3, datetime.datetime(2024, 1, 11, 12)),  # same week: one cell
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
-    got = {
-        (str(r.cohort_week), r.week_age): r.n_users
-        for r in cohort_retention(df, "user_id", "ts").collect()
-    }
-    assert got == {
-        ("2024-01-01", 0): 2,
-        ("2024-01-01", 2): 1,
-        ("2024-01-08", 0): 1,
-    }, got
-
-
-def test_funnel_analysis_ordering_and_window(spark):
-    """Hand-built funnel: user 1 completes view->click->purchase in
-    order; user 2 clicks BEFORE viewing (click must not count); user 3
-    views then clicks outside the window."""
-    import datetime as dt
-
-    from polars_mas_spark.operators.windows import funnel_analysis
-
-    t0 = dt.datetime(2024, 3, 1, 12)
-
-    def at(**kw):
-        return t0 + dt.timedelta(**kw)
-
-    rows = [
-        (1, at(minutes=0), "view"),
-        (1, at(minutes=5), "click"),
-        (1, at(minutes=9), "purchase"),
-        (2, at(minutes=0), "click"),       # before any view
-        (2, at(minutes=10), "view"),
-        (3, at(minutes=0), "view"),
-        (3, at(days=8), "click"),          # outside 7-day window
-    ]
-    df = spark.createDataFrame(rows, "user_id long, ts timestamp, event_type string")
-    got = {
-        r.step: (r.event_type, r.n_users)
-        for r in funnel_analysis(
-            df, "user_id", "ts", "event_type",
-            ["view", "click", "purchase"], window_seconds=604800,
-        ).collect()
-    }
-    assert got == {
-        1: ("view", 3),
-        2: ("click", 1),
-        3: ("purchase", 1),
-    }, got
 
 
 def test_fuzzy_pairs_exact_vs_python_dp(spark):
@@ -1370,78 +913,6 @@ def test_leakage_safe_split_keeps_neardups_together(spark):
     assert len(out) == 33                       # every doc labeled
 
 
-def test_netpbm_rejects_comment_after_maxval():
-    """Review r5: the header tokenizer also stops at '#', so a comment
-    between maxval and the raster must be rejected as malformed, not
-    read as pixel bytes."""
-    from polars_mas_spark.operators.multimodal import decode_netpbm
-
-    px = bytes(range(12))
-    assert decode_netpbm(b"P5\n4 3\n255# comment\n" + px) is None
-    # the legitimate single-whitespace form still decodes
-    assert decode_netpbm(b"P5\n4 3\n255\n" + px) is not None
-
-
-def test_resample_interpolate_linear_and_edges(spark):
-    """Interior gaps interpolate linearly on the grid; leading/trailing
-    gaps clamp to the nearest observation; multiple points in one
-    bucket average; independent keys never bleed into each other."""
-    import datetime as dt
-
-    from polars_mas_spark.operators.windows import resample_interpolate
-
-    rows = [
-        ("a", dt.datetime(2024, 1, 1, 0, 5), 10.0),
-        ("a", dt.datetime(2024, 1, 1, 0, 40), 30.0),   # same bucket: avg 20
-        ("a", dt.datetime(2024, 1, 1, 3, 10), 50.0),
-        ("b", dt.datetime(2024, 1, 1, 1, 0), 5.0),
-    ]
-    df = spark.createDataFrame(rows, "k string, ts timestamp, v double")
-    out = {
-        (r.k, r.bucket_ts.hour): (r.value, r.interpolated)
-        for r in resample_interpolate(df, "k", "ts", "v", 3600).collect()
-    }
-    assert out[("a", 0)] == (20.0, False)
-    assert out[("a", 1)] == (30.0, True)   # 20 + (50-20)*1/3
-    assert out[("a", 2)] == (40.0, True)
-    assert out[("a", 3)] == (50.0, False)
-    assert out[("b", 1)] == (5.0, False)
-    assert len(out) == 5  # b's spine is a single bucket — no bleed
-
-
-def test_quantile_profile_exact_vs_approx(spark):
-    """Exact mode reproduces the closed-form interpolated percentile;
-    approx mode (the 100 TB path) lands within the sketch's rank
-    tolerance of the exact answer; grouped mode keys rows correctly."""
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.operators.profile import quantile_profile
-
-    df = spark.range(1000).select(
-        (F.col("id") % 2).alias("g"),
-        F.col("id").cast("double").alias("x"),
-    )
-    exact = {
-        (r.column, r.q): r.value
-        for r in quantile_profile(df, ["x"], [0.5, 0.9], exact=True).collect()
-    }
-    assert exact[("x", 0.5)] == 499.5
-    assert exact[("x", 0.9)] == 899.1
-    approx = {
-        (r.column, r.q): r.value
-        for r in quantile_profile(df, ["x"], [0.5, 0.9]).collect()
-    }
-    for k, v in exact.items():
-        assert abs(approx[k] - v) <= 2.0  # rank error 1e-4 * n=1000 << 2
-    grouped = {
-        (r.g, r.q): r.value
-        for r in quantile_profile(
-            df, ["x"], [0.5], group_col="g", exact=True
-        ).collect()
-    }
-    assert grouped[(0, 0.5)] == 499.0 and grouped[(1, 0.5)] == 500.0
-
-
 def test_weighted_sample_n_contract(spark):
     """Deterministic across runs, excludes non-positive/NULL weights,
     returns exactly n rows, and skews toward heavy weights."""
@@ -1477,113 +948,6 @@ def test_weighted_sample_n_contract(spark):
     assert mean_w > 6.0
     with pt.raises(ValueError, match="positive"):
         weighted_sample_n(df, "id", "w", 0)
-
-
-def test_event_transitions_counts_and_rowwise_probs(spark):
-    """Transitions counted per user in (ts, tiebreak) order; prob
-    normalizes within from_type; first event per user contributes no
-    transition."""
-    import datetime as dt
-
-    import pytest
-
-    from polars_mas_spark.operators.windows import event_transitions
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    for i, e in enumerate(["a", "b", "a", "c"]):      # u1: a>b, b>a, a>c
-        rows.append((1, t0 + dt.timedelta(minutes=i), i, e))
-    for i, e in enumerate(["a", "b"]):                # u2: a>b
-        rows.append((2, t0 + dt.timedelta(minutes=i), 10 + i, e))
-    df = spark.createDataFrame(rows, "u long, ts timestamp, eid long, e string")
-    out = {
-        (r.from_type, r.to_type): (r.n, r.prob)
-        for r in event_transitions(df, "u", "ts", "e", "eid").collect()
-    }
-    assert out[("a", "b")] == (2, pytest.approx(2 / 3))
-    assert out[("a", "c")] == (1, pytest.approx(1 / 3))
-    assert out[("b", "a")] == (1, pytest.approx(1.0))
-    assert len(out) == 3
-
-
-def test_window_paths_deterministic_under_duplicate_keys(spark):
-    """The flap class CLAUDE.md documents: generated data has produced
-    duplicate 'unique' keys before (lineitem), so session_paths and
-    event_transitions must give identical output when (ts, tiebreak)
-    ties straddle the max_steps boundary, for ANY input row order or
-    partitioning — the type column is the totalizing third key."""
-    import datetime as dt
-    import random
-
-    from polars_mas_spark.operators.windows import (
-        event_transitions,
-        session_paths,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    # u1: 4 unique steps, then THREE events tied on (ts, eid) with
-    # distinct types at positions 5-7 — the max_steps=5 cut falls
-    # inside the tie group.
-    for i, e in enumerate(["a", "b", "c", "d"]):
-        rows.append((1, t0 + dt.timedelta(minutes=i), i, e))
-    tie_ts = t0 + dt.timedelta(minutes=4)
-    for e in ["z", "y", "x"]:
-        rows.append((1, tie_ts, 99, e))
-    # u2: a fully tied pair at the session start
-    rows.append((2, t0, 0, "q"))
-    rows.append((2, t0, 0, "p"))
-
-    baselines = None
-    for seed in (1, 2, 3):
-        shuffled = rows[:]
-        random.Random(seed).shuffle(shuffled)
-        df = spark.createDataFrame(
-            shuffled, "u long, ts timestamp, eid long, e string"
-        ).repartition(seed + 1)
-        paths = sorted(
-            (r.path, r.n_sessions)
-            for r in session_paths(
-                df, "u", "ts", "e", "eid", gap_seconds=1800, max_steps=5
-            ).collect()
-        )
-        trans = sorted(
-            (r.from_type, r.to_type, r.n)
-            for r in event_transitions(df, "u", "ts", "e", "eid").collect()
-        )
-        if baselines is None:
-            baselines = (paths, trans)
-        else:
-            assert (paths, trans) == baselines, f"seed {seed} diverged"
-    # The tie resolves by type ascending: x, y precede z at the cut.
-    assert ("a>b>c>d>x", 1) in baselines[0]
-    assert ("p>q", 1) in baselines[0]
-
-
-def test_session_paths_deterministic_truncation_and_gaps(spark):
-    """Paths split at the gap, truncate at max_steps, and order events
-    by (ts, tiebreak) — never collect order."""
-    import datetime as dt
-
-    from polars_mas_spark.operators.windows import session_paths
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = []
-    # u1 session 1: a,b,c,d,e,f (truncates to 5); session 2 after 1h: x
-    for i, e in enumerate(["a", "b", "c", "d", "e", "f"]):
-        rows.append((1, t0 + dt.timedelta(minutes=i), i, e))
-    rows.append((1, t0 + dt.timedelta(hours=2), 99, "x"))
-    # u2: same opening pair
-    rows.append((2, t0, 0, "a"))
-    rows.append((2, t0 + dt.timedelta(minutes=1), 1, "b"))
-    df = spark.createDataFrame(rows, "u long, ts timestamp, eid long, e string")
-    out = {
-        r.path: r.n_sessions
-        for r in session_paths(
-            df, "u", "ts", "e", "eid", gap_seconds=1800, max_steps=5
-        ).collect()
-    }
-    assert out == {"a>b>c>d>e": 1, "x": 1, "a>b": 1}
 
 
 def test_bm25_hand_computed_scores(spark):
@@ -1699,152 +1063,6 @@ def test_url_dedup_summary_collapses_variants(spark):
     }
     assert out["http://ex.com/p?id=1&v=2"] == (4, 1, 3)
     assert out["http://other.com/q"] == (1, 9, 1)
-
-
-def test_audio_fingerprint_neardup_planted(spark):
-    """Audio near-dup on REAL WAV clips: an exact re-encode pairs at
-    hamming 0, a one-frame energy perturbation at small distance, an
-    inverted-envelope clip and a corrupt payload never pair; constant
-    clips hash all-zero (documented property); the hot-cluster cap
-    routes a planted identical-clip cluster through its representative."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        audio_fingerprint, audio_neardup_pairs, wav_encode_pcm8,
-    )
-
-    # 256 samples, 64 frames of 4: loud first half, quiet second half.
-    base = bytearray(128 for _ in range(256))
-    for i in range(128):
-        base[i] = 255 if i % 2 == 0 else 0  # high |amplitude| frames
-    pert = bytearray(base)
-    for i in range(4):
-        pert[128 + i] = 255 if i % 2 == 0 else 0  # one frame flips loud
-    inv = bytearray(base[128:] + base[:128])  # envelope swapped
-    rows = [
-        (1, wav_encode_pcm8(bytes(base))),
-        (2, wav_encode_pcm8(bytes(pert))),
-        (3, wav_encode_pcm8(bytes(inv))),
-        (4, wav_encode_pcm8(bytes(base))),  # exact copy of 1
-        (5, b"RIFFcorrupt"),
-        (6, wav_encode_pcm8(bytes([128]) * 256)),  # constant/silent
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    fps = {
-        r.doc_id: r.fingerprint
-        for r in audio_fingerprint(df, "doc_id", "content").collect()
-    }
-    assert fps[5] is None
-    assert fps[1] == fps[4]
-    assert fps[6] == "0" * 16  # constant clip -> all-zero hash
-    pairs = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in audio_neardup_pairs(
-            df, "doc_id", "content", max_distance=3
-        ).collect()
-    }
-    assert pairs[(1, 4)] == 0
-    assert pairs[(1, 2)] == 1 and pairs[(2, 4)] == 1
-    assert not any(3 in p or 5 in p or 6 in p for p in pairs)
-
-    # Hot-cluster cap through the shared helper: 11 identical clips
-    # emit 10 representative links, not C(11,2)=55 pairs.
-    many = [(i, wav_encode_pcm8(bytes(base))) for i in range(100, 111)]
-    mdf = spark.createDataFrame(many, "doc_id long, content binary")
-    capped = audio_neardup_pairs(
-        mdf, "doc_id", "content", hot_cluster_cap=8
-    ).collect()
-    assert len(capped) == 10
-    assert all(r.doc_a == 100 and r.hamming == 0 for r in capped)
-
-
-def test_video_neardup_planted_clips(spark):
-    """Video near-dup on real concatenated-netpbm containers: an exact
-    re-encode shares all frames, a clipped copy (2 of 3 frames) pairs
-    through min_shared=2, a one-frame overlap does NOT, corrupt tails
-    degrade to the valid frame prefix, and the max_df stop-hash guard
-    removes blank frames shared corpus-wide."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        netpbm_encode, video_neardup_pairs,
-    )
-
-    rng = np.random.default_rng(5)
-    f = [
-        netpbm_encode(16, 16, rng.integers(0, 256, 256, dtype=np.uint8).tobytes())
-        for _ in range(5)
-    ]
-    blank = netpbm_encode(16, 16, bytes([7]) * 256)  # constant frame
-    rows = [
-        (1, f[0] + f[1] + f[2]),
-        (2, f[0] + f[1] + f[2]),          # exact copy of 1
-        (3, f[1] + f[2] + f[3]),          # clipped: shares 2 frames with 1
-        (4, f[3] + f[4]),                 # shares 1 frame with 3 only
-        (5, f[4] + b"P5 corrupt tail"),   # valid prefix, corrupt tail
-        (6, b"not a video"),
-        (7, blank + f[0] + blank),        # blank frames + one real
-        (8, blank + blank + blank),       # all blank
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    pairs = {
-        (r.doc_a, r.doc_b): r.shared_frames
-        for r in video_neardup_pairs(
-            df, "doc_id", "content", min_shared=2
-        ).collect()
-    }
-    assert pairs[(1, 2)] == 3
-    assert pairs[(1, 3)] == 2 and pairs[(2, 3)] == 2
-    assert (3, 4) not in pairs  # one shared frame < min_shared
-    assert not any(5 in p or 6 in p for p in pairs)
-    # 7 and 8 share only the blank hash (one distinct) -> no pair at
-    # min_shared=2; with min_shared=1 they WOULD pair, and max_df=1
-    # (stop-hash) must remove that blank-frame vote again.
-    loose = {
-        (r.doc_a, r.doc_b)
-        for r in video_neardup_pairs(
-            df, "doc_id", "content", min_shared=1
-        ).collect()
-    }
-    assert (7, 8) in loose
-    guarded = {
-        (r.doc_a, r.doc_b)
-        for r in video_neardup_pairs(
-            df, "doc_id", "content", min_shared=1, max_df=1
-        ).collect()
-    }
-    assert (7, 8) not in guarded
-
-
-def test_video_neardup_default_hot_frame_guard(spark):
-    """The DEFAULT max_df (64) blocks the blank-frame quadratic blowup
-    (ADVICE r8): 70 videos all opening with the same constant frame
-    emit ZERO pairs by default (the shared hash's df=70 exceeds the
-    guard), while max_df=None opts back into all C(70,2) pairs."""
-    import numpy as np
-
-    from polars_mas_spark.operators.multimodal import (
-        netpbm_encode, video_neardup_pairs,
-    )
-
-    rng = np.random.default_rng(11)
-    blank = netpbm_encode(16, 16, bytes([0]) * 256)
-    rows = [
-        (
-            i,
-            blank
-            + netpbm_encode(
-                16, 16, rng.integers(0, 256, 256, dtype=np.uint8).tobytes()
-            ),
-        )
-        for i in range(70)
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, content binary")
-    assert video_neardup_pairs(df, min_shared=1).count() == 0
-    assert (
-        video_neardup_pairs(df, min_shared=1, max_df=None).count()
-        == 70 * 69 // 2
-    )
 
 
 def test_extract_html_text_edges(spark):
@@ -2293,43 +1511,6 @@ def test_extract_html_text_header_tag_not_head(spark):
     assert "REAL CONTENT" in r.extracted_text
     assert "Nav" in r.extracted_text  # header CONTENT is body text
     assert r.title == "t2"
-
-
-def test_asof_join_null_timestamps_never_match(spark):
-    """NULL-ts right rows are never carried as matches; NULL-ts left
-    rows match nothing (merge_asof/ASOF JOIN contract) — both
-    directions."""
-    import datetime
-
-    from polars_mas_spark.operators.windows import asof_join
-
-    t = lambda m: datetime.datetime(2024, 1, 1, 12, m)  # noqa: E731
-    left = spark.createDataFrame(
-        [(1, t(5)), (1, t(30)), (1, None)], "k int, ts timestamp"
-    )
-    right = spark.createDataFrame(
-        [(1, None, -1.0), (1, t(10), 10.0)],
-        "k int, ts timestamp, px double",
-    )
-    for direction in ("backward", "forward"):
-        got = {
-            (r.k, r.ts): (r.asof_ts, r.px)
-            for r in asof_join(
-                left, right, on="k", left_ts="ts", right_ts="ts",
-                direction=direction,
-            ).collect()
-        }
-        # NULL left ts -> no match, in BOTH directions
-        assert got[(1, None)] == (None, None), (direction, got)
-        # the NULL-ts right row (-1.0) is never anyone's match
-        assert all(v[1] != -1.0 for v in got.values()), (direction, got)
-    back = {
-        (r.k, r.ts): r.px
-        for r in asof_join(left, right, on="k", left_ts="ts",
-                           right_ts="ts").collect()
-    }
-    assert back[(1, t(5))] is None       # nothing at/before 12:05
-    assert back[(1, t(30))] == 10.0
 
 
 def test_salted_join_rejects_dim_preserving_hows(spark):

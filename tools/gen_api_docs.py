@@ -31,14 +31,10 @@ MODULES = [
     ("polars_mas_spark.operators.text", "Text analysis & curation"),
     ("polars_mas_spark.operators.sampling", "Sampling & budget selection"),
     ("polars_mas_spark.operators.packing", "Sequence packing"),
-    ("polars_mas_spark.operators.multimodal", "Multimodal columns"),
-    ("polars_mas_spark.operators.windows", "Window / sessionization"),
     ("polars_mas_spark.operators.joins", "Join strategies"),
     ("polars_mas_spark.operators.olap", "OLAP (pivot/rollup/cube)"),
     ("polars_mas_spark.operators.scd", "Slowly-changing dimensions"),
-    ("polars_mas_spark.operators.maintenance", "Table maintenance & data quality"),
     ("polars_mas_spark.operators.encoding", "Vocabulary encoding"),
-    ("polars_mas_spark.operators.profile", "Profiling"),
     ("polars_mas_spark.sources.readers", "Sources"),
     ("polars_mas_spark.sources.writers", "Sinks"),
 ]
