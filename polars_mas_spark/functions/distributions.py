@@ -33,10 +33,6 @@ def norm_sf(x: float) -> float:
     return 0.5 * math.erfc(x / _SQRT2)
 
 
-def norm_pdf(x: float) -> float:
-    return math.exp(-0.5 * x * x) / math.sqrt(2.0 * math.pi)
-
-
 # Coefficients for Acklam's rational approximation of the inverse normal CDF.
 _ACKLAM_A = (-3.969683028665376e+01, 2.209460984245205e+02, -2.759285104469687e+02,
              1.383577518672690e+02, -3.066479806614716e+01, 2.506628277459239e+00)

@@ -254,13 +254,6 @@ def logistic_fit(X: np.ndarray, y: np.ndarray) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _firth_penalized_loglik(Xc: np.ndarray, y: np.ndarray, beta: np.ndarray) -> float:
-    p = _sigmoid(Xc @ beta)
-    w = p * (1.0 - p)
-    fisher = (Xc * w[:, None]).T @ Xc
-    return _pll_from_parts(y, p, fisher)
-
-
 def _pll_from_parts(
     y: np.ndarray,
     p: np.ndarray,

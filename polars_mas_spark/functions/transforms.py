@@ -77,8 +77,8 @@ _AR = "__pms_avg_tie_rank__"
 
 def _avg_tie_ranks(df: DataFrame, col: str, num_blocks: int | None):
     """Distributed average-tie-rank over the valid values of ``col``
-    (module-docstring two-phase pattern), shared by [[blom_fractions]]
-    and [[curriculum_stages]]. Returns ``(ranked, invalid, n)`` where
+    (module-docstring two-phase pattern), for [[blom_fractions]].
+    Returns ``(ranked, invalid, n)`` where
     ``ranked`` carries the ``_AR`` double column (mean of the tied
     rows' consecutive global 1-based ranks) over the valid rows,
     ``invalid`` is the null/NaN slice untouched, and ``n`` is the
@@ -220,38 +220,6 @@ def grouped_avg_tie_ranks(
     return ranked, df.filter(~valid)
 
 
-def curriculum_stages(
-    df: DataFrame,
-    score_col: str,
-    n_stages: int = 4,
-    out_col: str = "stage",
-    num_blocks: int | None = None,
-) -> DataFrame:
-    """Quantile-rank CURRICULUM bucketing: stage ``s`` in
-    ``[0, n_stages)`` by global rank of ``score_col`` ascending —
-    "easiest quartile first" ordering for curriculum training
-    schedules, with ties sharing a stage via the average tie rank
-    (an ntile() would split ties arbitrarily AND funnel the corpus
-    through one task; this is the same two-phase distributed rank as
-    RINT). ``stage = floor(n_stages * (avg_tie_rank - 0.5) / n)`` —
-    the -0.5 centers each untied rank in its 1/n slot so the first
-    rank lands in stage 0 and the last in n_stages - 1. NULL/NaN
-    scores get a NULL stage. The arithmetic is written identically in
-    the SQL oracle (mul before div), so the IEEE result — and hence
-    the floor — is bit-identical cross-engine."""
-    if n_stages < 1:
-        raise ValueError(f"n_stages must be >= 1, got {n_stages}")
-    ranked, invalid, n = _avg_tie_ranks(df, score_col, num_blocks)
-    if n == 0:
-        return df.withColumn(out_col, F.lit(None).cast("int"))
-    stage = F.floor(
-        F.lit(float(n_stages)) * (F.col(_AR) - F.lit(0.5)) / F.lit(float(n))
-    ).cast("int")
-    out_valid = ranked.withColumn(out_col, stage).drop(_AR)
-    out_invalid = invalid.withColumn(out_col, F.lit(None).cast("int"))
-    return out_valid.unionByName(out_invalid)
-
-
 def quantile_buckets(
     df: DataFrame,
     score_col: str,
@@ -262,14 +230,13 @@ def quantile_buckets(
     label_col: str = "bucket_label",
     num_blocks: int | None = None,
 ) -> DataFrame:
-    """[[curriculum_stages]] generalized to a PER-GROUP cut: bucket
+    """Per-group quantile-rank bucketing: bucket
     ``s`` in ``[0, n_buckets)`` by the rank of ``score_col`` ascending
     WITHIN each ``group_col`` value, ties sharing a bucket via the
     average tie rank — ``bucket = floor(n_buckets * (avg_tie_rank -
-    0.5) / n_group)``, the same mul-before-div arithmetic as the
-    global version so the IEEE result (and the floor) is bit-identical
-    cross-engine on exact rank inputs. The distributed shape is
-    [[grouped_avg_tie_ranks]] (one global approxQuantile boundary job,
+    0.5) / n_group)``, written mul before div so the IEEE result (and
+    the floor) is bit-identical cross-engine on exact rank inputs.
+    The distributed shape is [[grouped_avg_tie_ranks]] (one global approxQuantile boundary job,
     one hash shuffle on (group, block) — no per-group single-task
     window). NULL/NaN scores get a NULL bucket; optional ``labels``
     (len == n_buckets) adds a label column (NULL for NULL buckets).

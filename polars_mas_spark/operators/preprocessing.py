@@ -494,7 +494,7 @@ def build_prep_recipe(
     if strategy in ("forward", "backward") and covs:
         raise ValueError(
             "forward/backward fill is order-dependent and cannot be "
-            "expressed as a per-task recipe; use the unpivot strategy."
+            "expressed as a per-task recipe; use strategy='packed'."
         )
 
     # ALL eager statistics in ONE aggregate job (two for `drop`, whose

@@ -44,8 +44,7 @@ def md5_u32(key: Column, salt: str = "", null_sentinel: bool = True) -> Column:
     sampler/digest in this engine: the first 8 hex digits of
     ``md5(salt || cast(key as string))`` as a BIGINT in [0, 2^32).
     Single definition on purpose — the cross-engine oracle parity story
-    requires every consumer (hash_bucket, weighted_sample_n,
-    encoding.fit_vocabulary) to use
+    requires every consumer (hash_bucket, weighted_sample_n) to use
     byte-identical construction; DuckDB mirror:
     ``('0x' || substring(md5(...), 1, 8))::BIGINT``.
     ``null_sentinel`` hashes NULL as a \x01 sentinel; pass False when

@@ -27,7 +27,6 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
-from polars_mas_spark.colutils import qcol
 
 _TEXT_SEPS = {"csv": ",", "tsv": "\t", "txt": "\t"}
 
@@ -57,7 +56,7 @@ def _promote_single_file(df: DataFrame, path: str, mode: str, write_fn) -> None:
     the actual coalesced write.
 
     All filesystem operations go through the Hadoop FileSystem for
-    ``path``'s scheme (like compact_parquet) — os.listdir/shutil.move
+    ``path``'s scheme — os.listdir/shutil.move
     only see the driver's local disk and would strand the temp
     directory on hdfs://, s3a://, etc."""
     spark = df.sparkSession
@@ -181,37 +180,6 @@ def write_output(
         raise
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    mode: str = "overwrite",
-    sort_within: list[str] | None = None,
-) -> None:
-    """Hive-partitioned parquet layout (``path/col=value/...``): THE
-    storage-side contract that makes 100 TB scans cheap. A filter or
-    join key on a partition column becomes directory pruning — the scan
-    never opens non-matching files (static PartitionFilters for literal
-    predicates; dynamic partition pruning when the value set comes from
-    a joined dimension — both plan-asserted in tests/test_plans.py).
-
-    ``sort_within`` additionally sorts rows inside each output file so
-    min/max row-group statistics turn range predicates on those columns
-    into row-group skips (poor man's clustering; parquet writes the
-    stats automatically).
-
-    Partition columns should be LOW cardinality (day, source, lang —
-    not doc_id): each distinct combination is a directory, and millions
-    of tiny files kill the driver's file listing before any query runs.
-    """
-    out = df
-    if sort_within:
-        # qcol each name: bare strings route through F.col, which reads
-        # dotted names ('250.1') as struct access (CLAUDE.md).
-        out = out.sortWithinPartitions(*[qcol(c) for c in sort_within])
-    out.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 def _hadoop_fs(spark, path: str):
     """(FileSystem, Path-class) for ``path`` via the JVM Hadoop API —
     works uniformly for local paths AND remote URIs (hdfs://, s3a://),
@@ -220,172 +188,3 @@ def _hadoop_fs(spark, path: str):
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return fs, jvm.org.apache.hadoop.fs.Path
-
-
-def compact_parquet(
-    spark,
-    path: str,
-    target_files: int,
-    partition_cols: list[str] | None = None,
-) -> None:
-    """Rewrite a parquet dataset into fewer files. Streaming ingestion
-    and fine-grained writes leave thousands of small files; at cluster
-    scale the fix is periodic compaction, not bigger drivers.
-
-    Plain layouts coalesce (no shuffle) to ``target_files`` total.
-    Partitioned layouts repartition on the partition columns, which
-    co-locates each partition value in one task and therefore yields
-    ONE file per partition directory — the usual compaction target;
-    ``target_files`` only bounds the number of concurrent write tasks.
-
-    Swap is crash-safe and CLUSTER-SAFE: all renames go through the
-    Hadoop FileSystem for ``path``'s scheme (local, hdfs://, s3a://…),
-    never the driver's local os.rename. The compacted copy is written
-    beside the dataset, the original renamed aside, the copy moved into
-    place, and only then is the original deleted — a crash leaves
-    either the original or both copies, never neither. (On object
-    stores without atomic rename, e.g. raw S3, the rename is a
-    copy+delete performed by the Hadoop connector — still correct, not
-    instantaneous.)"""
-    df = spark.read.parquet(path)
-    base = path.rstrip("/")
-    tmp = f"{base}__compact_tmp__"
-    if partition_cols:
-        (
-            df.repartition(target_files, *[df[c] for c in partition_cols])
-            .write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
-        )
-    else:
-        df.coalesce(target_files).write.mode("overwrite").parquet(tmp)
-    fs, P = _hadoop_fs(spark, base)
-    old = f"{base}__compact_old__"
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if not fs.rename(P(base), P(old)):
-        raise IOError(f"compact_parquet: failed to rename {base} aside")
-    if not fs.rename(P(tmp), P(base)):
-        fs.rename(P(old), P(base))  # roll back; tmp stays for retry
-        raise IOError(f"compact_parquet: failed to move compacted copy into {base}")
-    fs.delete(P(old), True)
-
-
-def zorder_value(
-    bin_edges: dict[str, list[float]], bits: int = 16
-):
-    """Column expression: the Morton (Z-order) interleave of each row's
-    per-column bin ids — the multi-column data-skipping sort key.
-
-    Sorting (or range-partitioning) a table by this value clusters rows
-    that are close in EVERY listed column into the same parquet row
-    groups, so min/max statistics prune scans filtered on ANY of the
-    columns — the standard lakehouse trick for "we filter on either
-    customer or price, pick one sort order" tables.
-
-    ``bin_edges`` maps column -> explicit ascending interior edges
-    (pinned edges: the key must be a pure
-    row function, never depend on a sampled quantile that shifts
-    between writes). Each column's bin id is clamped to ``bits`` bits;
-    ids are bit-interleaved column-major (first column owns the most
-    significant bit of each group). NULLs bin to 0 (sort first). Pure
-    JVM expression — usable in sortWithinPartitions/repartitionByRange
-    with zero extra jobs."""
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.colutils import qcol
-
-    cols = list(bin_edges)
-    # The interleave must fit a signed BIGINT: with more bits the high
-    # columns shift out entirely and data bits reach the SIGN bit, so
-    # some rows sort FIRST with negative z-values and row-group pruning
-    # silently stops working (review r9). Fail loudly instead.
-    if len(cols) * bits > 63:
-        raise ValueError(
-            f"zorder_value: {len(cols)} columns x {bits} bits = "
-            f"{len(cols) * bits} interleaved bits > 63 (signed BIGINT); "
-            "lower `bits` or drop columns"
-        )
-    ids = []
-    for c in cols:
-        edges = [float(e) for e in bin_edges[c]]
-        if edges != sorted(edges) or len(set(edges)) != len(edges):
-            raise ValueError(f"bin_edges[{c!r}] must be strictly increasing")
-        if len(edges) >= (1 << bits):
-            raise ValueError(f"too many edges for {bits}-bit bin ids")
-        v = qcol(c).cast("double")
-        # bin id = number of edges <= v (0 for NULL).
-        bid = F.lit(0)
-        for e in edges:
-            bid = bid + F.when(v >= F.lit(e), 1).otherwise(0)
-        ids.append(F.coalesce(bid, F.lit(0)).cast("long"))
-    z = F.lit(0).cast("long")
-    one = F.lit(1).cast("long")
-    # Interleave from the most significant bin bit down. bitwiseOR/AND,
-    # not |/&: Python's operators on Columns are LOGICAL or/and.
-    for bit in range(bits - 1, -1, -1):
-        for bid in ids:
-            z = F.shiftleft(z, 1).bitwiseOR(
-                F.shiftright(bid, bit).bitwiseAND(one)
-            )
-    return z
-
-
-def write_zordered(
-    df,
-    path: str,
-    bin_edges: dict[str, list[float]],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered by the Z-order key: repartitionByRange on
-    the z-value (range partitions = files, so each file owns a compact
-    z-range) then sortWithinPartitions — both on the SAME key, so the
-    second sort is partition-local. Row-group min/max stats then prune
-    on every binned column, not just a lexicographic leader."""
-    from pyspark.sql import functions as F
-
-    z = zorder_value(bin_edges)
-    out = df.withColumn("__z__", z)
-    if num_files:
-        out = out.repartitionByRange(num_files, F.col("__z__"))
-    (
-        out.sortWithinPartitions("__z__")
-        .drop("__z__")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_shuffled(
-    df,
-    path: str,
-    key_col: str,
-    salt: str = "",
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet in DETERMINISTIC pseudo-random order — the global
-    example shuffle a training run reads sequentially (epoch order must
-    be random w.r.t. any data property, yet reproducible run to run and
-    auditable per example). Order key = the engine-portable md5 hash of
-    ``key_col`` ([[md5_u32]], salt = epoch/seed): repartitionByRange on
-    the hash gives each output file a contiguous hash range (no global
-    sort — range exchange + partition-local sorts), sortWithinPartitions
-    finishes the total order. Re-salting re-shuffles without touching
-    the data; same salt always reproduces the same byte order."""
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.colutils import qcol
-    from polars_mas_spark.operators.sampling import md5_u32
-
-    h = md5_u32(qcol(key_col), salt)
-    out = df.withColumn("__shuf__", h)
-    if num_files:
-        out = out.repartitionByRange(num_files, F.col("__shuf__"))
-    (
-        # qcol on the tiebreak: a bare string goes through F.col, which
-        # parses dotted names ('250.1') as struct access (CLAUDE.md).
-        out.sortWithinPartitions(F.col("__shuf__"), qcol(key_col))
-        .drop("__shuf__")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -190,12 +190,6 @@ def _t(spark, name):
     return spark.read.parquet(f"{SF_DIR}/{name}.parquet")
 
 
-def _events(spark):
-    """The events table with ``ts`` as a session-tz TimestampType (the
-    file stores it without a UTC flag, which Spark reads as NTZ)."""
-    return _t(spark, "events").withColumn("ts", F.col("ts").cast("timestamp"))
-
-
 def test_projection_pruned_to_scan(spark):
     plan = plan_of(
         _t(spark, "orders").select("o_orderkey", "o_totalprice", "o_orderdate")
@@ -439,155 +433,6 @@ def test_contamination_broadcasts_benchmark(spark):
     plan = plan_of(tx.ngram_contamination(docs, bench, "doc_id", "text", n=3))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_rollup_is_one_expand_one_aggregate(spark):
-    """rollup/cube must compile to a single Expand + one aggregation
-    pair (one shuffle for ALL grouping levels), not per-level scans."""
-    import re
-
-    from polars_mas_spark.operators.olap import cube_report, rollup_report
-
-    ev = _events(spark).withColumn(
-        "cents", F.round(F.col("value") * 100, 0).cast("long")
-    )
-    for name, q in (
-        ("rollup", rollup_report(
-            ev.withColumn("day", F.to_date("ts")), ["event_type", "day"], "cents"
-        )),
-        ("cube", cube_report(
-            ev.withColumn("user_bucket", F.col("user_id") % 10),
-            ["event_type", "user_bucket"], "cents",
-        )),
-    ):
-        plan = plan_of(q)
-        assert "Expand" in plan, plan
-        scan_nodes = re.findall(r"\(\d+\) Scan parquet", plan)
-        assert len(scan_nodes) == 1, f"{name} rescans:\n{plan}"
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    """Two tables bucketed+sorted on the join key must sort-merge join
-    with NO shuffle Exchange (the pay-the-shuffle-once-at-write-time
-    layout). Auto-broadcast is disabled so the planner actually takes
-    the bucketed SMJ path — at real scale neither side broadcasts."""
-    from polars_mas_spark.operators.joins import write_bucketed
-
-    a = spark.range(0, 1000).withColumn("va", F.col("id") * 2)
-    b = spark.range(0, 1000).withColumn("vb", F.col("id") * 3)
-    write_bucketed(a, "bkt_a", "id", num_buckets=4)
-    write_bucketed(b, "bkt_b", "id", num_buckets=4)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), on="id")
-        plan = plan_of(joined)
-        assert "Exchange hashpartitioning" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert "Bucketed: true" in plan
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_salted_join_spreads_hot_key(spark):
-    """A 90%-hot key must land in multiple partitions after salting,
-    and the salted result must equal the plain join."""
-    from polars_mas_spark.operators.joins import salted_join
-
-    fact = spark.range(0, 2000).select(
-        F.when(F.col("id") < 1800, 7).otherwise(F.col("id") % 50).alias("k"),
-        F.col("id").alias("payload"),
-    )
-    dim = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(50)], "k long, attr string"
-    )
-    out = salted_join(fact, dim, on="k", salts=8)
-    plain = fact.join(dim, on="k")
-    assert out.count() == plain.count() == 2000
-    got = {(r.k, r.payload, r.attr) for r in out.collect()}
-    want = {(r.k, r.payload, r.attr) for r in plain.collect()}
-    assert got == want
-    # the hot key's rows must occupy several distinct salt values
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in fact.columns]), F.lit(8))
-    n_salts = (
-        fact.filter(F.col("k") == 7).select(salt.alias("s")).distinct().count()
-    )
-    assert n_salts >= 4
-
-
-def test_interval_join_is_equi_not_nested_loop(spark):
-    """The binned interval join must plan as an equi-join (hash/SMJ/
-    broadcast-hash) on (key, bin) — never the BroadcastNestedLoopJoin
-    Spark gives a raw theta BETWEEN join."""
-    from polars_mas_spark.operators.joins import interval_join
-
-    ev = _events(spark)
-    clicks = ev.filter(F.col("event_type") == "click")
-    iv = clicks.groupBy(
-        "user_id", F.to_date("ts").alias("day")
-    ).agg(F.min("ts").alias("span_start"), F.max("ts").alias("span_end"))
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "ts"
-    )
-    res = interval_join(
-        purchases, iv, on="user_id", ts_col="ts",
-        start_col="span_start", end_col="span_end", bin_seconds=3600,
-    )
-    plan = plan_of(res)
-    assert "NestedLoop" not in plan, plan
-
-
-def test_partitioned_layout_prunes_statically_and_dynamically(spark, tmp_path):
-    """write_partitioned must produce a layout where (a) a literal
-    filter on the partition column becomes a PartitionFilter — the scan
-    never lists non-matching directories — and (b) joining against a
-    selectively-filtered dimension on that column inserts a dynamic
-    partition pruning subquery (the 100 TB fact-dim pattern)."""
-    from polars_mas_spark.sources.writers import write_partitioned
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    path = str(tmp_path / "ev_part")
-    write_partitioned(ev, path, ["event_type"], sort_within=["user_id"])
-
-    flt = spark.read.parquet(path).filter(F.col("event_type") == "click")
-    plan = plan_of(flt)
-    assert "PartitionFilters: [isnotnull(event_type" in plan, plan
-    assert "= click" in plan.replace("#", " ").replace(")", " "), plan
-
-    dim = spark.createDataFrame(
-        [("click", 1), ("error", 0)], ["event_type", "keep"]
-    ).filter(F.col("keep") == 1)
-    joined = spark.read.parquet(path).join(F.broadcast(dim), "event_type")
-    assert "dynamicpruning" in plan_of(joined).lower()
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    from polars_mas_spark.sources.writers import compact_parquet
-    import glob
-
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    path = str(tmp_path / "ev_compact")
-    # fragment on purpose: many files per partition dir
-    ev.repartition(8).write.partitionBy("event_type").parquet(path)
-    before = len(glob.glob(f"{path}/event_type=*/*.parquet"))
-    n_before = spark.read.parquet(path).count()
-    compact_parquet(spark, path, 1, partition_cols=["event_type"])
-    after = len(glob.glob(f"{path}/event_type=*/*.parquet"))
-    assert after < before and after == 5
-    assert spark.read.parquet(path).count() == n_before
-
-
-def test_vocab_encode_applies_via_broadcast(spark):
-    """The dictionary side of encode_column must broadcast (it exists
-    because the value set is small); the fit must contain no
-    single-partition global window."""
-    from polars_mas_spark.operators import encoding as enc
-
-    docs = _docs(spark).select("doc_id", "source")
-    plan = plan_of(enc.encode_column(docs, "source"))
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_weighted_sample_is_takeordered_not_global_sort(spark):

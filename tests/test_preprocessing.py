@@ -207,6 +207,26 @@ def test_string_covariate_clear_error_both_paths(spark, tmp_path):
         build_prep_recipe(df, cfg())
 
 
+def test_recipe_refuses_ordered_fill_naming_packed(spark):
+    """An ordered covariate fill cannot be a per-task recipe. The
+    refusal names the strategy that runs it, packed, as the planner's
+    fallback for the same case does (pipeline._COLUMNAR_GUARDS)."""
+    import pytest as pt
+
+    from polars_mas_spark.operators.preprocessing import build_prep_recipe
+
+    df = spark.createDataFrame(
+        [(1, 40.0, 1.0), (2, None, 2.0)], "rid long, age double, q double"
+    )
+    cfg = MASConfig(
+        predictors="rid", dependents=["q"], covariates=["age"],
+        model="linear", quantitative=True,
+        missing_covariate_values="forward",
+    ).resolve(df.columns)
+    with pt.raises(ValueError, match="strategy='packed'"):
+        build_prep_recipe(df, cfg)
+
+
 def test_recipe_sex_filter_null_parity(spark):
     """Review r4: male_only in the recipe path kept null-sex rows (NaN
     != code is True in pandas) while the Spark filter dropped them —

@@ -348,27 +348,6 @@ def test_canonical_url_idempotent(spark, urls):
 
 @given(txts=texts)
 @SETTINGS
-def test_bpe_learner_matches_reference_on_any_corpus(spark, txts):
-    """The distributed BPE trainer agrees with the independent plain-
-    Python reference learner on ARBITRARY small corpora (the fixed-
-    corpus test pins known examples; this pins the tie-break and the
-    within-word merge application against generated ones)."""
-    from tests.test_sampling_packing import _py_bpe_learn
-    from polars_mas_spark.operators.encoding import bpe_learn_merges
-
-    df = _docs(spark, txts)
-    got = bpe_learn_merges(df, "text", num_merges=4)
-    wf: dict[str, int] = {}
-    for t in txts:
-        for w in t.lower().split():
-            if w:
-                wf[w] = wf.get(w, 0) + 1
-    want = _py_bpe_learn(wf, 4)
-    assert got == want, (txts, got, want)
-
-
-@given(txts=texts)
-@SETTINGS
 def test_span_decontaminate_matches_python_replay(spark, txts):
     """Exact equality against an independent Python replay: every
     ORIGINAL corpus window found in the benchmark window set has all k

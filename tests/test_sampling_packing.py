@@ -1,9 +1,8 @@
-"""Deterministic sampling + sequence packing invariants."""
+"""Deterministic sampling invariants."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from polars_mas_spark.operators import packing as pk
 from polars_mas_spark.operators import sampling as smp
 
 
@@ -57,40 +56,6 @@ def test_split_partitions_everything(ids):
     counts = {r.split: r.n for r in out.groupBy("split").agg(F.count("*").alias("n")).collect()}
     assert set(counts) == {"train", "eval"}
     assert counts["train"] + counts["eval"] == 2000
-
-
-def test_pack_sequences_invariants(spark):
-    rows = [(i, 10 + (i * 37) % 90) for i in range(300)]
-    df = spark.createDataFrame(rows, "key long, n_tokens long")
-    packed = pk.pack_sequences(df, "key", "n_tokens", budget=128, n_shards=4)
-    data = packed.orderBy("shard", "key").collect()
-    assert len(data) == 300
-    for r in data:
-        assert 0 <= r.pack_offset < 128
-        assert r.pack_id >= 0
-    # Within a shard, (pack_id, pack_offset) is non-decreasing in key order
-    # and equals the running token prefix exactly.
-    by_shard = {}
-    for r in data:
-        by_shard.setdefault(r.shard, []).append(r)
-    for shard_rows in by_shard.values():
-        prefix = 0
-        for r in shard_rows:
-            assert r.pack_id == prefix // 128
-            assert r.pack_offset == prefix % 128
-            prefix += r.n_tokens
-
-
-def test_pack_utilization_totals(spark):
-    rows = [(i, 50) for i in range(100)]
-    df = spark.createDataFrame(rows, "key long, n_tokens long")
-    util = pk.pack_utilization(df, "key", "n_tokens", budget=100, n_shards=2)
-    # Tokens are conserved under the r4 per-pack apportioning: the sum
-    # of tokens_in_pack over every pack equals the corpus token total.
-    total = util.agg(F.sum("tokens_in_pack").alias("t")).first().t
-    assert total == 5000
-    mx = util.agg(F.max("fill_fraction").alias("m")).first().m
-    assert mx <= 1.0
 
 
 def test_mixture_sample_hits_target_proportions(ids):
@@ -183,26 +148,6 @@ def test_mixture_sample_zero_weights_clear_error(spark):
         mixture_sample(df, "doc_id", "source", weights={})
     with pytest.raises(ValueError, match="positive"):
         mixture_sample(df, "doc_id", "source", weights={"web": 0.0})
-
-
-def test_pack_utilization_spanning_docs(spark):
-    """Review r4: a doc spanning multiple packs must apportion tokens to
-    each pack it crosses — fill_fraction <= 1 everywhere and covered
-    middle packs present — instead of fill=3.5 on the start pack and
-    missing packs."""
-    from polars_mas_spark.operators.packing import pack_utilization
-
-    df = spark.createDataFrame(
-        [(1, 3500), (2, 100)], "doc_id long, n_tokens long"
-    )
-    out = pack_utilization(
-        df, "doc_id", "n_tokens", budget=1000, n_shards=1
-    ).toPandas().set_index("pack_id").sort_index()
-    assert list(out.index) == [0, 1, 2, 3]
-    assert out.loc[0, "docs_started"] == 1 and out.loc[3, "docs_started"] == 1
-    assert list(out["tokens_in_pack"]) == [1000, 1000, 1000, 600]
-    assert (out["fill_fraction"] <= 1.0).all()
-    assert out.loc[3, "fill_fraction"] == 0.6
 
 
 def test_select_until_budget_prefix_and_ties(spark):
@@ -381,196 +326,16 @@ def test_sample_n_per_group_exact_and_stable(spark):
         sample_n_per_group(df, "doc_id", "src", -1)
 
 
-def test_vocabulary_encoding_dense_stable_oov(spark):
-    """Ids are dense [0, n), deterministic across refits, NULL and
-    unseen values map to the default id, and a stored vocab reproduces
-    train/serve-consistent ids on new data."""
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.operators.encoding import (
-        encode_column,
-        fit_vocabulary,
-    )
-
-    df = spark.createDataFrame(
-        [("a",), ("b",), ("c",), ("a",), (None,)], "v string"
-    )
-    vocab = fit_vocabulary(df, "v")
-    rows = {r.value: r.id for r in vocab.collect()}
-    assert sorted(rows.values()) == [0, 1, 2]  # dense, NULL excluded
-    refit = {r.value: r.id for r in fit_vocabulary(df, "v").collect()}
-    assert refit == rows  # deterministic
-    enc = {
-        (r.v): r.v_id
-        for r in encode_column(df, "v", vocab=vocab).collect()
-    }
-    assert enc[None] == -1
-    assert enc["a"] == rows["a"]
-    new = spark.createDataFrame([("b",), ("zzz",)], "v string")
-    enc2 = {r.v: r.v_id for r in encode_column(new, "v", vocab=vocab).collect()}
-    assert enc2["b"] == rows["b"] and enc2["zzz"] == -1
-
-
-def test_vocabulary_materialized_and_frozen(spark):
-    """The fit is file-backed (r6 advice: no driver-literal vocab, no
-    lineage contract): ids are identical across re-reads AND stay
-    frozen even when the SOURCE is non-deterministic — re-collecting
-    the returned frame must not re-derive from the input."""
-    from polars_mas_spark.operators.encoding import fit_vocabulary
-
-    df = spark.createDataFrame(
-        [(f"k{i % 7}",) for i in range(30)], "v string"
-    )
-    vocab = fit_vocabulary(df, "v")
-    first = {r.value: r.id for r in vocab.collect()}
-    assert len(first) == 7
-    assert sorted(first.values()) == list(range(7))
-    # evaluated again after the internal cache is released — a
-    # file-backed frame must reproduce exactly
-    assert {r.value: r.id for r in vocab.collect()} == first
-    # non-deterministic source: a fit over sample() is frozen at write
-    # time; two collects of the SAME returned frame agree regardless
-    nd = df.sample(0.9, seed=None)
-    v2 = fit_vocabulary(nd, "v")
-    got = {r.value: r.id for r in v2.collect()}
-    assert {r.value: r.id for r in v2.collect()} == got
-    assert sorted(got.values()) == list(range(len(got)))
-
-
-def test_bpe_merge_rank_order_and_chains(spark):
-    """BPE encode semantics: merges apply in RANK order (an earlier
-    merge consumes characters a later one would have used), multi-step
-    chains collapse whole words, merges never cross word boundaries,
-    greedy passes are left-to-right non-overlapping, and NULL text
-    counts 0."""
-    from polars_mas_spark.operators.encoding import (
-        DEFAULT_BPE_MERGES, bpe_token_counts, bpe_tokens_expr,
-    )
-    from pyspark.sql import functions as F
-
-    # Rank order: on 'abc', rank [(a,b),(b,c)] must yield [ab, c] —
-    # the later (b,c) merge finds its 'b' already consumed. Reversing
-    # the ranks yields [a, bc]: the order IS the semantics.
-    df1 = spark.createDataFrame([(1, "abc")], ["doc_id", "text"])
-    toks = lambda merges: df1.select(  # noqa: E731
-        bpe_tokens_expr(F.col("text"), merges).alias("t")
-    ).head()[0]
-    assert toks([("a", "b"), ("b", "c")]) == ["ab", "c"]
-    assert toks([("b", "c"), ("a", "b")]) == ["a", "bc"]
-    # Greedy left-to-right non-overlap: 'aaa' under (a,a) -> [aa, a].
-    df2 = spark.createDataFrame([(1, "aaa aaaa")], ["doc_id", "text"])
-    got = df2.select(
-        bpe_tokens_expr(F.col("text"), [("a", "a"), ("aa", "aa")]).alias("t")
-    ).head()[0]
-    assert got == ["aa", "a", "aaaa"]  # second word: (a,a)x2 then (aa,aa)
-
-    # Word-boundary isolation + chains on the default vocab: 'the'
-    # and 'batch' collapse to one token each; 't h' (two words) stays
-    # two tokens; 'order' -> [or, d, er] because (e,r) outranks (o,r).
-    rows = [
-        (1, "the batch"),
-        (2, "t h"),
-        (3, "order"),
-        (4, None),
-        (5, "THE Batch"),  # case-folded before encoding
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    out = {r.doc_id: r.bpe_tokens for r in bpe_token_counts(df, "text").collect()}
-    assert out[1] == 2 and out[5] == 2
-    assert out[2] == 2
-    assert out[3] == 3
-    assert out[4] == 0
-    arr = df.filter("doc_id = 3").select(
-        bpe_tokens_expr(F.col("text"), DEFAULT_BPE_MERGES).alias("t")
-    ).head()[0]
-    assert arr == ["or", "d", "er"]
-
-
-def _py_bpe_learn(word_freqs, num_merges):
-    """Independent reference learner (plain Python, no shared code
-    with the engine): greedy max-count pair, tie-break (count desc,
-    pair asc), merges applied left-to-right non-overlapping."""
-    vocab = {tuple(w): f for w, f in word_freqs.items()}
-    merges = []
-    for _ in range(num_merges):
-        counts = {}
-        for toks, f in vocab.items():
-            for p in zip(toks, toks[1:]):
-                counts[p] = counts.get(p, 0) + f
-        counts = {p: n for p, n in counts.items() if n >= 2}
-        if not counts:
-            break
-        best = min(counts, key=lambda p: (-counts[p], p))
-        merges.append(best)
-        new_vocab = {}
-        for toks, f in vocab.items():
-            out, i = [], 0
-            while i < len(toks):
-                if i + 1 < len(toks) and (toks[i], toks[i + 1]) == best:
-                    out.append(toks[i] + toks[i + 1])
-                    i += 2
-                else:
-                    out.append(toks[i])
-                    i += 1
-            new_vocab[tuple(out)] = new_vocab.get(tuple(out), 0) + f
-        vocab = new_vocab
-    return merges
-
-
-def test_bpe_learn_matches_independent_reference(spark):
-    """The distributed trainer must agree with an independent plain-
-    Python BPE learner on corpora exercising ties, within-word repeats,
-    and early stopping (no pair with count >= 2 left); and the learned
-    merges must compress token counts when fed back into the encoder."""
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.operators.encoding import (
-        bpe_learn_merges, bpe_token_counts,
-    )
-
-    corpora = [
-        {"low": 5, "lower": 2, "newest": 6, "widest": 3},  # Sennrich
-        {"aaa": 3, "aab": 2, "bba": 4},                    # overlap greed
-        {"ab": 1, "cd": 1},                                # early stop
-        {"banana": 2, "bandana": 1, "ananas": 3},
-    ]
-    for wf in corpora:
-        rows = [(w,) for w, f in wf.items() for _ in range(f)]
-        df = spark.createDataFrame(rows, schema="text string")
-        got = bpe_learn_merges(df, "text", num_merges=8)
-        want = _py_bpe_learn(wf, 8)
-        assert got == want, (wf, got, want)
-
-    wf = corpora[0]
-    df = spark.createDataFrame(
-        [(w,) for w, f in wf.items() for _ in range(f)], schema="text string"
-    )
-    merges = bpe_learn_merges(df, "text", num_merges=6)
-    char_total = bpe_token_counts(df, "text", merges=[]).agg(
-        F.sum("bpe_tokens")
-    ).head()[0]
-    bpe_total = bpe_token_counts(df, "text", merges=merges).agg(
-        F.sum("bpe_tokens")
-    ).head()[0]
-    assert bpe_total < char_total  # learned merges actually compress
-
-
 def test_bpe_and_span_dedup_input_validation(spark):
     """Malformed inputs fail loudly at plan-build time, not with
-    silently-wrong results: empty/whitespace/separator merge sides and
-    k < 1 span windows."""
+    silently-wrong results: k < 1 span windows."""
     import pytest
 
     from polars_mas_spark.operators.dedup import span_dedup
-    from polars_mas_spark.operators.encoding import bpe_apply_merges
-    from pyspark.sql import functions as F
 
     df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="k >= 1"):
         span_dedup(df, "doc_id", "text", k=0)
-    for bad in [("", "x")], [("a", "b c")], [("a", "\x1f")]:
-        with pytest.raises(ValueError, match="invalid BPE merge"):
-            bpe_apply_merges(F.col("text"), bad)
 
 
 def test_dsir_select_domain_affinity_and_topk(spark):
@@ -622,34 +387,6 @@ def test_dsir_select_validation_and_degenerate(spark):
         df, "doc_id", "text", F.col("is_t"), k=5).collect()}
     assert got[2].n_ngrams == 0 and got[2].logw == 0.0
     assert all(r.selected for r in got.values())
-
-
-def test_curriculum_stages_quartiles_ties_nulls(spark):
-    from polars_mas_spark.functions.transforms import curriculum_stages
-
-    rows = [(i, float(i)) for i in range(8)] + [
-        (100, None), (101, float("nan")),
-        # a 4-way tie right at a stage boundary: all four share a stage
-        (200, 3.5), (201, 3.5), (202, 3.5), (203, 3.5),
-    ]
-    df = spark.createDataFrame(rows, "id long, score double")
-    got = {r.id: r.stage for r in
-           curriculum_stages(df, "score", n_stages=4).collect()}
-    assert got[100] is None and got[101] is None
-    # the 12 valid scores split into quartiles; tied rows share a stage
-    tie_stages = {got[i] for i in (200, 201, 202, 203)}
-    assert len(tie_stages) == 1
-    valid = [v for k, v in got.items() if v is not None]
-    assert set(valid) <= {0, 1, 2, 3}
-    assert got[0] == 0 and got[7] == 3
-    # monotone: higher score never gets a lower stage
-    order = [got[i] for i in range(8)]
-    assert order == sorted(order)
-    with pytest.raises(ValueError, match="n_stages"):
-        curriculum_stages(df, "score", n_stages=0)
-    # n==0 short-circuit: all-null scores -> all-null stages
-    empty = spark.createDataFrame([(1, None)], "id long, score double")
-    assert curriculum_stages(empty, "score").collect()[0].stage is None
 
 
 def test_quantile_buckets_grouped_planted(spark):

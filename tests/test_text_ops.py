@@ -693,159 +693,6 @@ def test_fuzzy_pairs_exact_vs_python_dp(spark):
         assert got == expect, (d, got ^ expect)
 
 
-def test_pivot_report_explicit_values_contract(spark):
-    """Unlisted pivot values vanish (stable schema); empty cells count 0
-    with NULL sum."""
-    from polars_mas_spark.operators.olap import pivot_report
-
-    df = spark.createDataFrame(
-        [(1, "view", 2.0), (1, "view", 3.0), (1, "rogue", 9.0),
-         (2, "click", 1.5)],
-        "user_id long, event_type string, value double",
-    )
-    out = {
-        r.user_id: r
-        for r in pivot_report(
-            df, "user_id", "event_type", "value", ["view", "click"]
-        ).collect()
-    }
-    assert out[1].view_n == 2 and out[1].view_sum == 5.0
-    assert out[1].click_n == 0 and out[1].click_sum is None
-    assert out[2].click_n == 1 and out[2].click_sum == 1.5
-    assert "rogue_n" not in out[1].asDict()
-
-
-def test_scd2_merge_semantics(spark):
-    """Hand-built SCD2: no-op first update ignored, consecutive dups
-    collapse, chains close correctly, new keys build history, untouched
-    keys pass through, NULL-attr first update on a NEW key survives."""
-    import datetime
-
-    from polars_mas_spark.operators.scd import scd2_merge
-
-    d = datetime.date
-    cur = spark.createDataFrame(
-        [(1, "A", d(2020, 1, 1), None),
-         (2, "B", d(2020, 1, 1), None),
-         (3, "C", d(2019, 1, 1), d(2020, 1, 1)),   # already closed
-         (3, "D", d(2020, 1, 1), None)],
-        "k long, seg string, effective_from date, effective_to date",
-    )
-    upd = spark.createDataFrame(
-        [(1, d(2021, 1, 1), "A"),     # no-op vs open -> ignored
-         (1, d(2021, 6, 1), "X"),     # real change
-         (1, d(2021, 9, 1), "X"),     # consecutive dup -> collapsed
-         (1, d(2021, 12, 1), "Y"),    # second change
-         (4, d(2022, 1, 1), None),    # NEW key, NULL attr first update
-         (4, d(2022, 3, 1), "Z")],
-        "k long, ts date, seg string",
-    )
-    rows = {
-        (r.k, r.seg, str(r.effective_from)): (
-            str(r.effective_to) if r.effective_to else None
-        )
-        for r in scd2_merge(cur, upd, "k", ["seg"], "ts").collect()
-    }
-    assert rows == {
-        (1, "A", "2020-01-01"): "2021-06-01",
-        (1, "X", "2021-06-01"): "2021-12-01",
-        (1, "Y", "2021-12-01"): None,
-        (2, "B", "2020-01-01"): None,
-        (3, "C", "2019-01-01"): "2020-01-01",
-        (3, "D", "2020-01-01"): None,
-        (4, None, "2022-01-01"): "2022-03-01",
-        (4, "Z", "2022-03-01"): None,
-    }, rows
-
-
-def test_scd2_merge_rejects_stale_update(spark):
-    """An update older than the open version's effective_from must FAIL
-    the job (ADVICE r4): closing the open row before it opened would
-    build an inverted interval that no point-in-time lookup matches —
-    i.e. silently erase the key's pre-update history."""
-    import datetime
-
-    import pytest as _pytest
-
-    from polars_mas_spark.operators.scd import scd2_merge
-
-    d = datetime.date
-    cur = spark.createDataFrame(
-        [(1, "A", d(2020, 6, 1), None)],
-        "k long, seg string, effective_from date, effective_to date",
-    )
-    upd = spark.createDataFrame(
-        [(1, d(2020, 1, 1), "B")],  # predates the open version
-        "k long, ts date, seg string",
-    )
-    with _pytest.raises(Exception, match="precedes the open version"):
-        scd2_merge(cur, upd, "k", ["seg"], "ts").collect()
-
-
-def test_scd2_lookup_point_in_time(spark):
-    """Facts pick up the version valid AT their ts: boundary fact at a
-    version's from-date gets that version; facts before the first
-    version stay unmatched (NULL attrs)."""
-    import datetime
-
-    from polars_mas_spark.operators.scd import scd2_lookup
-
-    d = datetime.date
-    dim = spark.createDataFrame(
-        [(1, "A", d(2020, 1, 1), d(2021, 1, 1)),
-         (1, "B", d(2021, 1, 1), None)],
-        "k long, seg string, effective_from date, effective_to date",
-    )
-    facts = spark.createDataFrame(
-        [(10, 1, d(2019, 6, 1)),   # predates history -> NULL
-         (11, 1, d(2020, 6, 1)),   # inside A
-         (12, 1, d(2021, 1, 1)),   # boundary: B starts, A ends (to excl)
-         (13, 2, d(2022, 1, 1))],  # unknown key -> NULL
-        "fid long, k long, ts date",
-    )
-    got = {r.fid: r.seg for r in scd2_lookup(facts, dim, "k", "ts").collect()}
-    assert got == {10: None, 11: "A", 12: "B", 13: None}, got
-
-
-def test_scd2_interval_partition_property(spark):
-    """Hypothesis-style invariant on a pseudo-random update stream: per
-    key, merged intervals are disjoint, chained (each to == next from),
-    exactly one open version, and consecutive versions differ."""
-    import datetime
-    import random
-
-    from polars_mas_spark.operators.scd import scd2_merge
-
-    rng = random.Random(17)
-    base = datetime.date(2020, 1, 1)
-    cur_rows = [
-        (k, rng.choice("ABC"), base, None) for k in range(1, 9)
-    ]
-    upd_rows = []
-    for k in range(1, 12):  # keys 9-11 are new
-        days = sorted(rng.sample(range(1, 400), rng.randint(1, 8)))
-        for day in days:
-            upd_rows.append(
-                (k, base + datetime.timedelta(days=day), rng.choice("ABCD"))
-            )
-    cur = spark.createDataFrame(
-        cur_rows, "k long, seg string, effective_from date, effective_to date"
-    )
-    upd = spark.createDataFrame(upd_rows, "k long, ts date, seg string")
-    out = scd2_merge(cur, upd, "k", ["seg"], "ts").collect()
-    by_key = {}
-    for r in out:
-        by_key.setdefault(r.k, []).append(r)
-    assert set(by_key) == set(range(1, 12))
-    for k, rows in by_key.items():
-        rows.sort(key=lambda r: r.effective_from)
-        opens = [r for r in rows if r.effective_to is None]
-        assert len(opens) == 1 and opens[0] is rows[-1], (k, rows)
-        for a, b in zip(rows, rows[1:]):
-            assert a.effective_to == b.effective_from, (k, a, b)
-            assert a.seg != b.seg, (k, a, b)  # no zero-change versions
-
-
 def test_char_trigram_scores_math(spark):
     """Hand-computed LM on a two-doc corpus: counts, smoothing, unseen
     floor, and the short-doc (0, NULL, NULL) contract."""
@@ -1511,14 +1358,3 @@ def test_extract_html_text_header_tag_not_head(spark):
     assert "REAL CONTENT" in r.extracted_text
     assert "Nav" in r.extracted_text  # header CONTENT is body text
     assert r.title == "t2"
-
-
-def test_salted_join_rejects_dim_preserving_hows(spark):
-    from polars_mas_spark.operators.joins import salted_join
-
-    f = spark.createDataFrame([(1, "a")], "k int, x string")
-    d = spark.createDataFrame([(1, "y")], "k int, y string")
-    import pytest as _pt
-    with _pt.raises(ValueError, match="fact-preserving"):
-        salted_join(f, d, on="k", how="full_outer")
-    assert salted_join(f, d, on="k", how="left").count() == 1
