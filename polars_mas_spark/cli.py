@@ -154,6 +154,9 @@ def main(argv: list[str] | None = None) -> int:
     kwargs = {"master": master}
     if args.shuffle_partitions:
         kwargs["shuffle_partitions"] = args.shuffle_partitions
+    if args.quiet:
+        # The log level does not reach Spark's console progress bar.
+        kwargs["extra_conf"] = {"spark.ui.showConsoleProgress": "false"}
     spark = get_spark(app_name="polars-mas-spark", **kwargs)
     spark.sparkContext.setLogLevel(
         "INFO" if args.verbose else ("ERROR" if args.quiet else "WARN")

@@ -4,28 +4,19 @@ one distributed pass.
 The reference fans out a Python loop of predictor x dependent tasks over
 joblib worker processes, each re-reading a memory-mapped IPC file
 (/root/reference/src/polars_mas/analysis.py:10-107). The Spark-native
-design replaces that wholesale (SURVEY.md §2.6 U1, §2.11 K6):
+design replaces that wholesale (SURVEY.md §2.6 U1, §2.11 K6) with three
+physical strategies (run_associations): ``columnar`` slices the PAIR
+LIST into tasks that each read only their columns from parquet (the
+small design columns are replicated, no sample row is shuffled);
+``packed`` shuffles rows keyed on (predictor, dependent bucket); and
+``moments`` (linear only) aggregates centered moments per pair. The
+columnar and packed tasks share one numpy kernel (make_array_kernel).
 
-    wide table
-      -> explode predictors (struct array, only when >1 predictor)
-      -> unpivot dependents            (one long table; covariates ride
-                                        along as id columns so each group
-                                        arrives fit-ready)
-      -> filter pred/dep not null      (map-side, BEFORE the shuffle —
-                                        null rows never cross the wire)
-      -> groupBy(predictor, dependent).applyInPandas(kernel)
-      -> one Arrow collect of the fitted rows (toArrow)
-      -> on the driver: left-fill the full pair list to re-materialize
-         pairs that vanished entirely ("No data after dropping nulls."
-         rows — failures are rows, not exceptions: analysis.py:110-124)
-      -> sort by pval                  (NaN last, polars parity)
-
-One shuffle keyed on the pair id distributes the regressions; Arrow
-batches feed the pandas kernels. Scale notes: group count = P x D is the
-parallelism; each group holds <= n rows. Skewed pair sizes are handled
-by AQE; for P*D >> shuffle partitions the groups pack densely. The
-results table is P x D rows (a few million at most), so it is finished
-on the driver like the reference's postprocessing.
+Every strategy's fitted rows are collected once with ``toArrow()`` and
+finished on the driver: pairs that vanished entirely are left-filled as
+"No data after dropping nulls." rows (failures are rows, not
+exceptions: analysis.py:110-124), then sorted by pval (NaN last,
+polars parity).
 """
 
 from __future__ import annotations
@@ -114,7 +105,7 @@ _QUANT_MODELS = ("linear", "poisson")
 
 # The physical fan-out strategies run_associations runs (see its
 # docstring); pipeline.plan_study picks among them.
-STRATEGIES = ("columnar", "packed", "moments", "unpivot")
+STRATEGIES = ("columnar", "packed", "moments")
 # The moments aggregate has O(C^2) columns for C covariates.
 MOMENTS_MAX_COVARIATES = 64
 
@@ -145,7 +136,8 @@ def build_long_table(
     """Wide -> long: one row per (sample, predictor, dependent) with
     covariates as id columns. The P-way predictor explode and D-way
     dependent unpivot together express the reference's task fan-out
-    (analysis.py:13-15) as data, so Catalyst plans it as one pipeline."""
+    (analysis.py:13-15) as data, so Catalyst plans it as one pipeline.
+    The moments strategy aggregates over it ([[_fit_linear_moments]])."""
     cov_pairs = safe_covariate_pairs(covariates)
     cov_cols = [qcol(orig).alias(safe) for safe, orig in cov_pairs]
     if len(predictors) == 1:
@@ -202,8 +194,8 @@ def packed_bucket_count(n_preds: int, n_deps: int, parallelism: int) -> int:
     bucket. Invariants (property-tested in test_association.py):
     P·n_buckets >= min(P·D, parallelism) — the kernel stage never runs
     below cluster parallelism when there is enough work — while the
-    per-sample shuffle cell count G·C + D never exceeds the classic
-    unpivot's D·(C+1), so at 100x the dependents the shuffle stays
+    per-sample shuffle cell count G·C + D never exceeds a per-pair
+    long table's D·(C+1), so at 100x the dependents the shuffle stays
     strictly cheaper and the group count grows with D only until the
     4-per-core target is met."""
     return min(n_deps, max(1, -(-4 * parallelism // max(n_preds, 1))))
@@ -220,11 +212,12 @@ def build_packed_long_table(
     with that bucket's dependent values packed into ONE array column and
     covariates riding along as plain columns.
 
-    This is the SURVEY §7.4.6 tall-table mitigation. The classic unpivot
-    shuffles P x D rows per sample, each duplicating all C covariates —
-    shuffle cells ~ n·P·D·(C+1). Packing moves the same information in
-    P x G rows per sample (G = bucket count), each carrying C covariates
-    once plus D/G dependent values — cells ~ n·P·(G·C + D). With G sized
+    This is the SURVEY §7.4.6 tall-table mitigation. A per-pair long
+    table ([[build_long_table]]) would shuffle P x D rows per sample,
+    each duplicating all C covariates — cells ~ n·P·D·(C+1). Packing
+    moves the same information in P x G rows per sample (G = bucket
+    count), each carrying C covariates once plus D/G dependent values —
+    cells ~ n·P·(G·C + D). With G sized
     to the cluster parallelism (and D large, the PheWAS direction) the
     covariate duplication factor drops from D to G while the kernel
     stage keeps P·G-way parallelism. Dependent nulls can no longer be
@@ -271,7 +264,7 @@ def make_packed_kernel(
     bucket's dependent-value arrays and run the group kernel
     ([[make_array_kernel]]) over them, so validation, sex restriction,
     per-subset constant drop, and the failure-as-row channel are shared
-    code with the classic unpivot path. One result DataFrame per bucket
+    code with the columnar path. One result DataFrame per bucket
     group."""
     inner = make_array_kernel(
         model, covariates, quantitative, min_case_count,
@@ -312,15 +305,15 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
     tiny k×k systems in a vectorized pandas pass over the P×D-row
     aggregate table.
 
-    This is the linear model's true 100 TB plan: the classic kernel
-    ships every sample row through the pair shuffle, while the moments
+    This is the linear model's true 100 TB plan: the packed kernel
+    ships every sample row through its shuffle, while the moments
     shuffle carries only map-side-combined partials — O(partitions ×
     pairs × k²) doubles regardless of row count. OLS is exactly
     identified by these moments, so results match ``ols_fit`` to float
     precision (iterative models have no such finite statistic — they
     keep the kernel path).
 
-    Parity details mirrored from the kernel (make_kernel): per-pair
+    Parity details mirrored from the kernel (make_array_kernel): per-pair
     constant-covariate drop (here: Welford within-group variance == 0),
     the exact validation messages, sex-restricted dependents (a
     map-lookup row filter, identical to the kernel's pandas filter),
@@ -462,7 +455,7 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
                     out.append(rec)
                     continue
                 # Constant predictor -> failure row (kernel parity; see
-                # make_kernel — the min-norm alternative is a false
+                # make_array_kernel — the min-norm alternative is a false
                 # positive). NaN predictor variance falls through to the
                 # finiteness guard below.
                 v0 = r["__c0_0__"]
@@ -610,9 +603,18 @@ def make_array_kernel(
     sex_col: str | None = None,
 ) -> Callable:
     """The group fit kernel over RAW NUMPY ARRAYS — the shared core
-    behind make_kernel / make_packed_kernel / the columnar fan-out, so
-    every physical strategy runs the exact same validation, per-subset
-    constant drop, design build, and failure-as-row channel.
+    behind make_packed_kernel and the columnar fan-out, so both
+    row-holding strategies run the exact same validation
+    (analysis.py:110-193), per-subset constant drop
+    (analysis.py:196-206), design build + fit (analysis.py:71-87), and
+    failure-as-row channel (analysis.py:89-102).
+
+    ``sex_restrictions`` implements the reference's declared-but-dead
+    sex-specific phecode sets (constants.py:14-16, SURVEY.md §2.12): a
+    map of dependent -> required value of the ``sex_col`` covariate.
+    Restricted dependents are fitted only on matching-sex rows (R PheWAS
+    semantics); the sex covariate then goes constant in that subset and
+    the per-group constant drop removes it from the design.
 
     Returns ``fn(predictor, x, cov_arrays, deps, values, keep=None) ->
     list[dict]``, one result row (result_schema keys) per dependent in
@@ -763,56 +765,12 @@ def make_array_kernel(
     return akernel
 
 
-def make_kernel(
-    model: str,
-    covariates: list[str],
-    quantitative: bool,
-    min_case_count: int,
-    sex_restrictions: dict | None = None,
-    sex_col: str | None = None,
-) -> Callable[[tuple, pd.DataFrame], pd.DataFrame]:
-    """Build the grouped-map pandas kernel reproducing the reference's
-    per-task pipeline: validation (analysis.py:110-193), per-subset
-    constant-covariate drop (analysis.py:196-206), design-matrix build +
-    fit (analysis.py:71-87), failure-as-row error channel
-    (analysis.py:89-102). Thin pdf adapter over [[make_array_kernel]] —
-    the numeric core is shared with every other physical strategy.
-
-    ``sex_restrictions`` implements the reference's declared-but-dead
-    sex-specific phecode sets (constants.py:14-16, SURVEY.md §2.12): a
-    map of dependent -> required value of the ``sex_col`` covariate.
-    Restricted dependents are fitted only on matching-sex rows (R PheWAS
-    semantics); the sex covariate then goes constant in that subset and
-    the per-group constant drop removes it from the design naturally."""
-    columns = [f.name for f in result_schema(model).fields]
-    cov_pairs = safe_covariate_pairs(covariates)
-    akernel = make_array_kernel(
-        model, covariates, quantitative, min_case_count,
-        sex_restrictions, sex_col,
-    )
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        predictor, dependent = key
-        x = pdf[PRED_VALUE].to_numpy()
-        y = pdf[DEP_VALUE].to_numpy(dtype=np.float64)
-        cov_arrays = [
-            (safe, orig, pdf[safe].to_numpy())
-            for safe, orig in cov_pairs
-            if safe in pdf.columns
-        ]
-        (row,) = akernel(predictor, x, cov_arrays, [dependent], lambda _d: y)
-        return pd.DataFrame([{c: row[c] for c in columns}])
-
-    return kernel
-
-
 def choose_strategy(n_rows: int) -> str:
     """Pick the physical fan-out strategy from the table's row count:
     columnar up to 100M rows, where a per-task full-column read is
     cheap, at any pair count — each pair then costs one column-pruned
     read, with no sample data in a shuffle; packed above it (the
-    tall-table / 100 TB path — the classic per-pair unpivot remains
-    available as an explicit strategy). Per-worker memory for one pair
+    tall-table / 100 TB path). Per-worker memory for one pair
     is the same either way: packed also fits each pair's group in one
     Python worker."""
     return "columnar" if n_rows <= 100_000_000 else "packed"
@@ -936,17 +894,13 @@ def run_associations(
     what picks it) and returns the completed P x D results as a
     ``pyarrow.Table`` sorted by pval, NaN last: every strategy's fitted
     rows are collected once and finished on the driver
-    ([[_complete_pairs]]). Four strategies:
+    ([[_complete_pairs]]). Three strategies:
 
     - ``packed`` (tall tables — the 100 TB path): one shuffle keyed
       on (predictor, dep-bucket); each row carries the covariates once
       and a bucket of dependent values as an array, cutting shuffle
       cells from n·P·D·(C+1) to n·P·(G·C + D) (SURVEY §7.4.6). The
       kernel unpacks the bucket and runs the per-pair fit per dependent.
-    - ``unpivot`` (explicit only): classic wide -> long unpivot, one
-      row and one group per (sample, predictor, dependent). Same
-      results; kept as the reference-shaped formulation (U1) and the
-      parity baseline for packed.
     - ``moments`` (linear model only): per-pair OLS via sufficient
       statistics — the shuffle carries map-side-combined centered
       moment partials (Welford covariances, O(k²) doubles per pair per
@@ -960,7 +914,7 @@ def run_associations(
       preprocessing.py:111-132 / analysis.py:54-59), then fan the PAIR
       LIST out and let each task do a column-pruned parquet read of just
       its dependents + the shared design columns. ZERO shuffle of sample
-      data; the long-table unpivot would move n_rows x n_deps duplicated
+      data; a per-pair long table would move n_rows x n_deps duplicated
       covariates through a shuffle for a table that reads back in
       kilobytes per task. ``checkpoint_path`` or ``source_files`` name
       parquet the caller already has, so no checkpoint is written.
@@ -968,7 +922,6 @@ def run_associations(
     spark = df.sparkSession
     model = config.model
     covariates = list(config.covariate_columns)
-    num_pairs = len(config.predictor_columns) * len(config.dependent_columns)
     if strategy == "columnar":
         fitted = _fit_columnar(df, config, checkpoint_path, recipe, source_files)
         return _complete_pairs(fitted, config)
@@ -982,7 +935,7 @@ def run_associations(
         # per sample row instead of D times. G targets 4 groups per core
         # for balance; when P·D is already at or below that, every
         # dependent gets its own bucket and the plan degenerates to
-        # exactly the classic per-pair grouping.
+        # exactly the per-pair grouping.
         preds, deps = config.predictor_columns, config.dependent_columns
         if n_buckets is None:
             n_buckets = packed_bucket_count(len(preds), len(deps), par)
@@ -996,6 +949,11 @@ def run_associations(
             model, covariates, config.quantitative, config.min_case_count,
             bucket_deps, config.sex_restrictions, config.sex_col,
         )
+        # Sized explicitly, not left to AQE: adaptive coalescing merges
+        # partitions by BYTES, and regression groups are byte-small but
+        # compute-heavy, so it would serialize many fits into one
+        # Python worker. One partition per group up to the parallelism
+        # also leaves no empty partition to launch a worker for.
         n_groups = len(preds) * len(bucket_deps)
         n_parts = max(1, min(n_groups, par))
         packed = packed.repartition(n_parts, "predictor", PACKED_BUCKET)
@@ -1003,44 +961,9 @@ def run_associations(
             kernel, schema=result_schema(model)
         )
         return _complete_pairs(fitted, config)
-    if strategy != "unpivot":
-        # A typo must not fall through to the classic unpivot — the
-        # exact n·P·D·(C+1) shuffle the other strategies exist to avoid.
-        raise ValueError(
-            f"unknown strategy {strategy!r}; valid: {'/'.join(STRATEGIES)}"
-        )
-
-    long_df = build_long_table(
-        df, config.predictor_columns, config.dependent_columns, covariates
+    raise ValueError(
+        f"unknown strategy {strategy!r}; valid: {'/'.join(STRATEGIES)}"
     )
-    # Map-side null drop (analysis.py:57) — nulls never reach the
-    # shuffle. NaN dependents are MISSING on every path (packed masks
-    # them per-dependent; moments/columnar drop them); without the
-    # isnan filter a binary-model kernel would crash the whole job on
-    # int(NaN) instead of treating the row as absent. NaN predictors
-    # stay — the kernel fails those pairs as rows.
-    long_df = long_df.filter(
-        F.col(PRED_VALUE).isNotNull()
-        & F.col(DEP_VALUE).isNotNull()
-        & ~F.isnan(F.col(DEP_VALUE))
-    )
-    kernel = make_kernel(
-        model, covariates, config.quantitative, config.min_case_count,
-        config.sex_restrictions, config.sex_col,
-    )
-    # Explicitly size the fan-out shuffle: one partition per pair up to
-    # the cluster parallelism. Deliberately NOT left to AQE — adaptive
-    # coalescing merges partitions by BYTES, and regression groups are
-    # byte-small but compute-heavy, so AQE would happily serialize 1,800
-    # fits into one Python worker. The explicit repartition also keeps
-    # empty shuffle partitions (each of which launches a Python worker
-    # for FlatMapGroupsInPandas) to zero when P*D < parallelism.
-    n_parts = max(1, min(num_pairs, par))
-    long_df = long_df.repartition(n_parts, "predictor", "dependent")
-    fitted = long_df.groupBy("predictor", "dependent").applyInPandas(
-        kernel, schema=result_schema(model)
-    )
-    return _complete_pairs(fitted, config)
 
 
 def _complete_pairs(fitted: DataFrame, config: MASConfig) -> pa.Table:
@@ -1310,7 +1233,7 @@ def _fit_columnar(
             # True-null vs NaN must be distinguished BEFORE to_pandas
             # erases the difference: nulls are missing rows (dropped,
             # like every other path), while NaN predictors must reach
-            # the kernel and fail the pair as a row (packed/unpivot
+            # the kernel and fail the pair as a row (packed
             # parity). The arrow validity bitmap still knows which is
             # which; carry it as a column so the recipe's row filters
             # keep it aligned.

@@ -7,7 +7,7 @@ file so its worker processes can mmap it. Here that role depends on the
 plan. On the columnar path, the default up to 100M rows, each task reads
 its columns straight from parquet files: the source files when the input
 is a plain parquet scan, else one ``checkpoint_wide`` copy of the raw
-table. On the tall paths (packed, moments, unpivot) it is played by
+table. On the tall paths (packed, moments) it is played by
 ``persist(MEMORY_AND_DISK)``: the eager preprocessing statistics and the
 association shuffle both reuse the cached partitions instead of
 re-scanning the source (SURVEY.md §4 note 1).
@@ -52,7 +52,7 @@ _COLUMNAR_GUARDS = (
     (
         lambda c, master: c.missing_covariate_values in ("forward", "backward"),
         "missing_covariate_values={c.missing_covariate_values!r}: ordered "
-        "covariate fills need the Spark window path; use packed/unpivot or "
+        "covariate fills need the Spark window path; use packed or "
         "a different missing-value strategy",
     ),
     # The dependent-variable transforms run as Spark jobs over the tall
@@ -61,7 +61,7 @@ _COLUMNAR_GUARDS = (
     (
         lambda c, master: c.rint or c.logt,
         "rint/logt: the PrepRecipe path has no dependent-transform pass; "
-        "use packed/unpivot, or drop the flag",
+        "use packed, or drop the flag",
     ),
     # The correlated-covariate pruner runs inside preprocess(), which the
     # PrepRecipe replaces: the same model would differ by physical
@@ -69,7 +69,7 @@ _COLUMNAR_GUARDS = (
     (
         lambda c, master: c.drop_correlated_above is not None,
         "drop_correlated_above: the PrepRecipe path has no correlation "
-        "pass; use packed/unpivot, or drop the flag",
+        "pass; use packed, or drop the flag",
     ),
     # Columnar's per-task column-pruned reads go through pyarrow, which
     # needs POSIX-visible paths; a URI checkpoint target (hdfs://,
@@ -78,7 +78,7 @@ _COLUMNAR_GUARDS = (
         lambda c, master: bool(c.checkpoint_dir) and "://" in c.checkpoint_dir,
         "checkpoint_dir={c.checkpoint_dir!r} is a URI, but columnar needs a "
         "POSIX-shared directory; point checkpoint_dir at a mounted path, or "
-        "use packed/unpivot",
+        "use packed",
     ),
 )
 # Auto picks only. With a non-local master and no shared checkpoint_dir
@@ -278,8 +278,8 @@ def run_study(
         # every stat job would re-execute the upstream plan. Then persist the
         # preprocessed table as the analog of the reference's
         # shared-memory IPC checkpoint (preprocessing.py:111-132) and run
-        # the long-table fan-out from it — packed by default, classic
-        # unpivot when explicitly asked.
+        # the tall fan-out from it: packed, or moments for a linear
+        # study.
         raw = df.persist(StorageLevel.MEMORY_AND_DISK)
         pre = preprocess(raw, config)
         if config.rint or config.logt:
@@ -342,7 +342,7 @@ def run_pipeline(
     Programmatic-first API (the reference is CLI-only; a Python API is on
     its declared roadmap, README.md:163): pass either an already-loaded
     wide DataFrame or an input path. ``strategy`` forces the fan-out's
-    physical strategy ("columnar"/"packed"/"moments"/"unpivot"); None
+    physical strategy ("columnar"/"packed"/"moments"); None
     lets plan_study pick it. The DataFrame wraps run_study's local
     table (building it runs no Spark job).
     """

@@ -85,16 +85,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # CPU-heavy map operators (media decode, winnowing, per-token
-    # hashing) over COMPACT parquet starve for parallelism under the
-    # IO-tuned 128 MB default split: snappy text compresses ~10x, so a
-    # 50 MB file holding minutes of decode work becomes 1-2 tasks
-    # (observed: winnow at 10x data pinned one core for 6+ min while 31
-    # idled). At real scale files are plentiful and this knob is moot;
-    # for single-file fixtures set it to ~the file size / cores.
-    mpb = os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-    if mpb:
-        builder = builder.config("spark.sql.files.maxPartitionBytes", mpb)
     for key, value in _BLAS_ENV.items():
         builder = builder.config(f"spark.executorEnv.{key}", value)
     for key, value in (extra_conf or {}).items():

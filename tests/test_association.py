@@ -186,11 +186,12 @@ def test_constant_covariate_dropped_per_group(spark):
     assert np.isfinite(res["beta"])
 
 
-def test_packed_strategy_matches_unpivot_and_shrinks_shuffle(spark):
+def test_packed_strategy_matches_columnar_and_shrinks_shuffle(spark):
     """SURVEY §7.4.6: the packed tall-table fan-out must be
-    result-identical to the classic per-pair unpivot (failure rows,
-    sex restrictions, all-null pairs included) while moving ~C× fewer
-    cells through the shuffle on a many-covariate table."""
+    result-identical to the columnar fan-out (failure rows, sex
+    restrictions, all-null pairs included) while moving ~C× fewer
+    cells through the shuffle than a per-pair long table on a
+    many-covariate table."""
     from polars_mas_spark.operators.association import (
         build_long_table,
         build_packed_long_table,
@@ -216,7 +217,7 @@ def test_packed_strategy_matches_unpivot_and_shrinks_shuffle(spark):
         model="logistic", min_case_count=10,
     ).resolve(df.columns)
 
-    a = (run_associations(df, cfg, strategy="unpivot")
+    a = (run_associations(df, cfg, strategy="columnar")
          .to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, cfg, strategy="packed", n_buckets=3)
          .to_pandas().sort_values("dependent").reset_index(drop=True))
@@ -225,8 +226,8 @@ def test_packed_strategy_matches_unpivot_and_shrinks_shuffle(spark):
         "No data after dropping nulls."
     )
 
-    # Structural shuffle reduction: classic moves n·D rows × (C+1 value
-    # cols); packed with G buckets moves n·G rows × (C cols + D/G array
+    # Structural shuffle reduction: a per-pair long table ("classic")
+    # moves n·D rows × (C+1 value cols); packed with G buckets moves n·G rows × (C cols + D/G array
     # cells). At C=20, D=12, G=3 that is 4× fewer rows and ~3.8× fewer
     # cells through the exchange.
     classic = build_long_table(df, ["x"], deps, covs)
@@ -268,7 +269,7 @@ def test_moments_strategy_matches_kernel_ols(spark):
         model="linear", quantitative=True, min_case_count=10,
     )
     a = (run_associations(df, MASConfig(**cfg_kwargs).resolve(df.columns),
-                          strategy="unpivot")
+                          strategy="columnar")
          .to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, MASConfig(**cfg_kwargs).resolve(df.columns),
                           strategy="moments")
@@ -288,7 +289,7 @@ def test_moments_strategy_matches_kernel_ols(spark):
         model="linear", quantitative=True, min_case_count=10,
     )
     am = (run_associations(df, MASConfig(**kw2).resolve(df.columns),
-                           strategy="unpivot")
+                           strategy="columnar")
           .to_pandas().sort_values(["predictor", "dependent"]).reset_index(drop=True))
     bm = (run_associations(df, MASConfig(**kw2).resolve(df.columns),
                            strategy="moments")
@@ -323,7 +324,7 @@ def test_moments_null_covariates_fail_as_rows(spark):
     assert set(out["failed_reason"]) == {"Null covariate values (age)."}
     assert out["pval"].isna().all()
     # Kernel path also yields failure rows (not silently-wrong numbers).
-    k = run_associations(df, cfg, strategy="unpivot").to_pandas()
+    k = run_associations(df, cfg, strategy="columnar").to_pandas()
     assert k["failed_reason"].notna().all()
 
 
@@ -368,7 +369,7 @@ def test_moments_keeps_large_offset_covariates(spark):
     # relative on se at offset 1e4 — while the centered moments stay
     # bit-identical to the offset-0 exact answer).
     m = run(1.0e2, "moments")
-    k = run(1.0e2, "unpivot")
+    k = run(1.0e2, "columnar")
     assert m["equation"] == k["equation"] == "q ~ x + ts_cov"
     assert m["beta"] == pytest.approx(k["beta"], rel=1e-6)
     assert m["se"] == pytest.approx(k["se"], rel=1e-6)
@@ -403,7 +404,7 @@ def test_moments_rank_deficient_matches_kernel_df_resid(spark):
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
     m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
-    k = run_associations(df, cfg, strategy="unpivot").to_pandas().iloc[0]
+    k = run_associations(df, cfg, strategy="columnar").to_pandas().iloc[0]
     assert m["failed_reason"] == "nan"  # reference success sentinel
     for col in ("beta", "se", "pval", "ci_low", "ci_high"):
         assert m[col] == pytest.approx(k[col], rel=1e-6), col
@@ -472,7 +473,7 @@ def test_moments_dotted_column_names(spark):
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
     m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
-    k = run_associations(df, cfg, strategy="unpivot").to_pandas().iloc[0]
+    k = run_associations(df, cfg, strategy="columnar").to_pandas().iloc[0]
     assert m["equation"] == k["equation"] == "250.1 ~ geno.dose + age.years"
     assert m["beta"] == pytest.approx(k["beta"], rel=1e-9)
     assert m["pval"] == pytest.approx(k["pval"], rel=1e-6)
@@ -482,7 +483,7 @@ def test_packed_bucket_sizing_properties():
     """VERDICT r3 next-steps #7: at P·D >> cores the packed fan-out's
     bucket sizing must keep (a) kernel parallelism at or above the
     cluster's, (b) the per-sample shuffle cell count G·C + D within the
-    documented bound (never worse than the classic unpivot's D·(C+1)),
+    documented bound (never worse than a per-pair long table's D·(C+1)),
     and (c) the group count from exploding past ~4 groups/core — so a
     100x dependents scale-up degrades neither balance nor shuffle."""
     from hypothesis import given, settings
@@ -510,7 +511,7 @@ def test_packed_bucket_sizing_properties():
         n_groups = P * len(buckets)
         # (a) enough parallelism whenever there is enough work.
         assert n_groups >= min(P * D, par)
-        # (b) packed shuffle cells never exceed the classic unpivot's.
+        # (b) packed shuffle cells never exceed a per-pair long table's.
         assert len(buckets) * C + D <= D * (C + 1)
         # (c) bounded group count: ~4 per core plus the per-predictor
         # rounding, never past the raw pair count.
@@ -519,9 +520,9 @@ def test_packed_bucket_sizing_properties():
     check()
 
 
-def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
+def test_columnar_strategy_matches_packed(synth, spark, tmp_path):
     # The columnar (checkpoint + column-pruned per-task parquet read)
-    # physical strategy must be result-identical to the unpivot/shuffle
+    # physical strategy must be result-identical to the packed/shuffle
     # strategy — including failure rows and all-null pairs.
     pdf, df = synth
     cfg = MASConfig(
@@ -531,7 +532,7 @@ def test_columnar_strategy_matches_unpivot(synth, spark, tmp_path):
     ).resolve(df.columns)
     sel = ["predictor", "dependent", "pval", "beta", "se", "cases",
            "controls", "converged", "failed_reason", "equation"]
-    a = (run_associations(df, cfg, strategy="unpivot")
+    a = (run_associations(df, cfg, strategy="packed")
          .select(sel).to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, cfg, strategy="columnar")
          .select(sel).to_pandas().sort_values("dependent").reset_index(drop=True))
@@ -664,11 +665,11 @@ def test_auto_pick_is_columnar_at_few_pairs(synth, spark, tmp_path, monkeypatch)
     pd.testing.assert_frame_equal(auto, run("packed"), check_exact=False, rtol=1e-9)
 
 
-def test_recipe_pipeline_matches_unpivot(spark, tmp_path):
+def test_recipe_pipeline_matches_packed(spark, tmp_path):
     # The columnar run_pipeline path reduces preprocessing (sex filter,
     # mean-fill, constant-drop, one-hot) to a PrepRecipe applied in-task
     # in pandas; it must be row-for-row identical to the Spark
-    # preprocess() + unpivot path on a messy table.
+    # preprocess() + packed path on a messy table.
     rng = np.random.default_rng(7)
     n = 500
     pdf = pd.DataFrame(
@@ -702,7 +703,7 @@ def test_recipe_pipeline_matches_unpivot(spark, tmp_path):
         return (out.select(*sel).toPandas()
                 .sort_values("dependent").reset_index(drop=True))
 
-    a = run("unpivot")
+    a = run("packed")
     b = run("columnar")
     assert "site_b" in a.loc[0, "equation"] and "const_cov" not in a.loc[0, "equation"]
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
@@ -763,7 +764,7 @@ def test_sex_specific_restrictions(spark):
         return (run_associations(spark.createDataFrame(pdf), cfg, strategy=strategy)
                 .to_pandas().set_index("dependent"))
 
-    a, b = run("unpivot"), run("columnar")
+    a, b = run("packed"), run("columnar")
     # Restricted pair counts = matching-sex rows only.
     n_f = int((pdf["sex"] == 1).sum())
     assert a.loc["ph_0", "total_n"] == n_f
@@ -781,9 +782,10 @@ def test_sex_specific_restrictions(spark):
     )
 
 
-def test_columnar_firth_mask_groups_match_unpivot(spark, monkeypatch):
+def test_columnar_firth_mask_groups_match_per_pair_fits(spark, monkeypatch):
     # Columnar Firth fits the dependents that share a row mask together
-    # (stats.firth_fit_many); unpivot fits each pair alone. Mask groups
+    # (stats.firth_fit_many); packed with one dependent per bucket fits
+    # each pair alone (stats.firth_fit). Mask groups
     # here: four complete unrestricted dependents (ph_0, ph_1, ph_9 and
     # ph_rare, which is under min_case_count), two restricted to each
     # sex, two sharing one NaN pattern and one (ph_8) with its own.
@@ -812,11 +814,12 @@ def test_columnar_firth_mask_groups_match_unpivot(spark, monkeypatch):
         min_case_count=20,
     ).resolve(pdf.columns.tolist())
 
-    def fit(strategy):
-        return (run_associations(spark.createDataFrame(pdf), cfg, strategy=strategy)
+    def fit(strategy, **kwargs):
+        return (run_associations(spark.createDataFrame(pdf), cfg,
+                                 strategy=strategy, **kwargs)
                 .to_pandas().sort_values("dependent").reset_index(drop=True))
 
-    a, b = fit("unpivot"), fit("columnar")
+    a, b = fit("packed", n_buckets=len(deps)), fit("columnar")
     assert list(a["failed_reason"]) == list(b["failed_reason"])
     assert a.set_index("dependent").loc["ph_rare", "failed_reason"] == (
         "Insufficient case count (4 cases)."
@@ -952,7 +955,7 @@ def test_constant_predictor_fails_as_row_all_strategies(spark):
         predictors="x", dependents=["q"], covariates=["c1"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
-    for strategy in ("moments", "packed", "unpivot"):
+    for strategy in ("moments", "packed", "columnar"):
         r = run_associations(df, lin, strategy=strategy).to_pandas().iloc[0]
         assert r["failed_reason"] == "Constant predictor.", strategy
         assert math.isnan(r["pval"]), strategy
@@ -990,9 +993,9 @@ def test_auto_moments_downgrades_after_onehot_expansion(spark):
     assert np.isfinite(res["beta"])
 
 
-def test_nan_dependent_binary_unpivot_no_crash(spark):
+def test_nan_dependent_binary_no_crash(spark):
     """Review r4: a literal NaN dependent under a binary model crashed
-    the unpivot kernel on int(NaN) — NaN dependents are missing data on
+    the per-pair kernel on int(NaN) — NaN dependents are missing data on
     every path and must simply drop."""
     rng = np.random.default_rng(47)
     n = 120
@@ -1005,7 +1008,7 @@ def test_nan_dependent_binary_unpivot_no_crash(spark):
         predictors="x", dependents=["yb"], covariates=[],
         model="logistic", min_case_count=5,
     ).resolve(df.columns)
-    for strategy in ("unpivot", "packed"):
+    for strategy in ("packed", "columnar"):
         r = run_associations(df, cfg, strategy=strategy).to_pandas().iloc[0]
         assert r["failed_reason"] == "nan", strategy  # fit succeeded
         n_nan = int((pdf["x"] > 1.0).sum())
@@ -1030,7 +1033,7 @@ def test_all_null_covariate_drops_like_kernel(spark):
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df.columns)
     m = run_associations(df, cfg, strategy="moments").to_pandas().iloc[0]
-    k = run_associations(df, cfg, strategy="unpivot").to_pandas().iloc[0]
+    k = run_associations(df, cfg, strategy="columnar").to_pandas().iloc[0]
     assert m["failed_reason"] == k["failed_reason"] == "nan"
     assert m["equation"] == k["equation"] == "q ~ x + c_ok"
     assert m["beta"] == pytest.approx(k["beta"], rel=1e-9)
@@ -1132,8 +1135,8 @@ def test_reusable_scan_files_rejects_projected_partition_columns(spark, tmp_path
 
 def test_columnar_nan_predictor_parity(spark):
     """Review r4: the columnar path's pandas notna() mask silently
-    dropped NaN-predictor rows (converged fit) while packed/unpivot
-    fail the pair — the arrow validity bitmap now distinguishes true
+    dropped NaN-predictor rows (converged fit) while packed fails
+    the pair — the arrow validity bitmap now distinguishes true
     nulls (missing, dropped) from NaN values (pair fails)."""
     rng = np.random.default_rng(59)
     n = 140

@@ -76,6 +76,33 @@ def test_cli_dry_run(tmp_path):
     assert "predictor" in r.stdout.lower() or "x" in r.stdout
 
 
+def test_quiet_turns_off_the_console_progress_bar(monkeypatch):
+    # The log level does not reach Spark's "[Stage N:>" bar; -q passes
+    # the conf that does, and without -q the session keeps its default.
+    import pytest
+
+    import polars_mas_spark.session as session
+    from polars_mas_spark.cli import main
+
+    class Stop(Exception):
+        pass
+
+    seen = []
+
+    def fake_get_spark(**kwargs):
+        seen.append(kwargs)
+        raise Stop
+
+    monkeypatch.setattr(session, "get_spark", fake_get_spark)
+    argv = ["-i", "in.csv", "-p", "x", "-d", "d1"]
+    for extra in (["-q"], []):
+        with pytest.raises(Stop):
+            main(argv + extra)
+    quiet, loud = seen
+    assert quiet["extra_conf"] == {"spark.ui.showConsoleProgress": "false"}
+    assert "extra_conf" not in loud
+
+
 def test_sex_specific_flag_parses():
     p = create_parser()
     args = p.parse_args([

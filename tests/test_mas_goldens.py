@@ -300,7 +300,7 @@ def q_one_hot(spark):
              INTO NAME measure VALUE value)""",
 )
 def q_unpivot_long(spark):
-    """The wide->long unpivot behind the unpivot fan-out."""
+    """The wide->long unpivot behind the moments fan-out's long table."""
     li = _t(spark, "lineitem")
     return li.select(
         "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
@@ -622,9 +622,9 @@ def _linear_fanout(spark, strategy):
 
 @golden("mas_linear_fanout", _OLS_ORACLE)
 def q_mas_linear_fanout(spark):
-    """The unpivot fan-out's OLS kernel against DuckDB's closed-form
+    """The columnar fan-out's OLS kernel against DuckDB's closed-form
     regression: beta = regr_slope, se = sqrt(SSE/(n-2)/Sxx)."""
-    return _linear_fanout(spark, "unpivot")
+    return _linear_fanout(spark, "columnar")
 
 
 @golden("mas_linear_moments", _OLS_ORACLE)
@@ -907,7 +907,7 @@ _SEX2_PUBLISHED = [
     ),
 )
 def q_mas_firth_sex2_golden(spark):
-    """Each sex2 term fitted through the unpivot fan-out (Firth, profile
+    """Each sex2 term fitted through the columnar fan-out (Firth, profile
     CIs, LRT p-value) and kept only if it reproduces logistf."""
     import csv
 
@@ -929,7 +929,7 @@ def q_mas_firth_sex2_golden(spark):
             model="firth", min_case_count=5,
         )
         part = spark.createDataFrame(
-            run_associations(sdf, cfg.resolve(sdf.columns), strategy="unpivot")
+            run_associations(sdf, cfg.resolve(sdf.columns), strategy="columnar")
         )
         fitted = part if fitted is None else fitted.unionByName(part)
     # Tuples with an explicit schema map None to NULL whatever the

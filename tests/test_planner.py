@@ -113,8 +113,6 @@ DECISIONS = {
                                  "local[8]", "moments", None, None),
     "explicit-packed": ("parquet", "logistic", {}, "packed", "local[8]",
                         "packed", None, None),
-    "explicit-unpivot": ("frame", "logistic", {}, "unpivot", "local[8]",
-                         "unpivot", None, None),
     "explicit-moments": ("parquet", "linear", {}, "moments", "local[8]",
                          "moments", None, None),
     "explicit-columnar-frame": ("frame", "linear", {}, "columnar",
@@ -153,6 +151,14 @@ def test_plan_study_rejects_unknown_strategies(spark, inputs):
     # run_associations runs only the strategy it is given: no auto pick.
     with pytest.raises(ValueError, match="unknown strategy 'auto'"):
         run_associations(df, cfg, strategy="auto")
+    # The per-pair long-table fan-out is retired: both entry points
+    # refuse it by name and list the strategies that run.
+    with pytest.raises(ValueError, match="unknown strategy 'unpivot'") as planned:
+        plan_study(spark, cfg, df, "unpivot")
+    with pytest.raises(ValueError, match="unknown strategy 'unpivot'") as ran:
+        run_associations(df, cfg, strategy="unpivot")
+    for err in (planned, ran):
+        assert "columnar/packed/moments" in str(err.value)
 
 
 @pytest.mark.parametrize("overrides, field", [
@@ -171,6 +177,7 @@ def test_explicit_columnar_refuses_what_it_cannot_run(spark, inputs, overrides, 
         run_pipeline(spark, cfg, df=inputs("frame"), strategy="columnar")
     assert "strategy='columnar'" in str(err.value)
     assert "packed" in str(err.value) and "moments" not in str(err.value)
+    assert "unpivot" not in str(err.value)
 
 
 def test_after_preprocess_downgrades_only_an_auto_moments_pick():

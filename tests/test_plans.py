@@ -6,7 +6,8 @@ survive a 100x scale-up are checked, not assumed.
 - dimension joins broadcast instead of shuffling the fact side
 - the wide->long unpivot is one JVM Expand over one scan
 - the PheWAS annotation runs no Spark join
-- each fan-out strategy has exactly one exchange feeding its Python stage
+- each shuffling fan-out has exactly one exchange feeding its Python
+  stage (packed) or aggregates map-side before it (moments)
 - RINT's global rank never funnels through a single partition
 - the data-pipeline operators keep their shuffle-free / broadcast /
   no-pair-join shapes
@@ -79,40 +80,10 @@ def test_annotation_runs_no_spark_join(spark):
     assert out["phenotype"].null_count == 0
 
 
-def test_mas_fanout_single_exchange_to_python(spark):
-    """The long table must reach FlatMapGroupsInPandas through exactly one
-    hash exchange on the pair key — no extra co-partitioning shuffle, no
-    range-sample of the Python stage."""
-    from polars_mas_spark.config import MASConfig
-    from polars_mas_spark.operators.association import (
-        build_long_table, make_kernel, result_schema, PRED_VALUE, DEP_VALUE,
-    )
-
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet").select(
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax"
-    )
-    cfg = MASConfig(
-        predictors="l_quantity",
-        dependents=["l_extendedprice", "l_discount", "l_tax"],
-        model="linear", quantitative=True, min_case_count=10,
-    )
-    cfg.resolve(li.columns)
-    long_df = build_long_table(
-        li, cfg.predictor_columns, cfg.dependent_columns, []
-    ).filter(F.col(PRED_VALUE).isNotNull() & F.col(DEP_VALUE).isNotNull())
-    long_df = long_df.repartition(3, "predictor", "dependent")
-    fitted = long_df.groupBy("predictor", "dependent").applyInPandas(
-        make_kernel("linear", [], True, 10), schema=result_schema("linear")
-    )
-    plan = plan_of(fitted)
-    assert _op_count(plan, "FlatMapGroupsInPandas") == 1
-    assert _op_count(plan, "Exchange") == 1  # the explicit pair repartition only
-
-
 def test_packed_fanout_single_exchange_to_python(spark):
-    """The packed tall-table fan-out must match the classic path's plan
-    discipline: exactly one hash exchange (the explicit bucket
-    repartition) feeding one FlatMapGroupsInPandas, with the per-sample
+    """The packed tall-table fan-out must keep its plan discipline:
+    exactly one hash exchange (the explicit bucket repartition) feeding
+    one FlatMapGroupsInPandas, with the per-sample
     explode compiled to a single JVM Generate over one scan — no extra
     co-partitioning shuffle, no union of per-dependent scans."""
     from polars_mas_spark.config import MASConfig

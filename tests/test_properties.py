@@ -190,11 +190,11 @@ def test_mixture_sample_never_upsamples_and_is_subset(spark, weights):
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_packed_fanout_matches_unpivot_any_shape(
+def test_packed_fanout_matches_columnar_any_shape(
     spark, n_cov, n_dep, n_buckets, null_dep, seed
 ):
-    """The packed fan-out must be row-for-row identical to the classic
-    per-pair unpivot for ANY (covariate count, dependent count, bucket
+    """The packed fan-out must be row-for-row identical to the columnar
+    fan-out for ANY (covariate count, dependent count, bucket
     count, null pattern) — including bucket counts above the dependent
     count and an all-null dependent."""
     import numpy as np
@@ -219,7 +219,7 @@ def test_packed_fanout_matches_unpivot_any_shape(
         predictors="x", dependents=deps, covariates=covs,
         model="logistic", min_case_count=5,  # binary: case/control checks
     ).resolve(df.columns)
-    a = (run_associations(df, cfg, strategy="unpivot")
+    a = (run_associations(df, cfg, strategy="columnar")
          .to_pandas().sort_values("dependent").reset_index(drop=True))
     b = (run_associations(df, cfg, strategy="packed", n_buckets=n_buckets)
          .to_pandas().sort_values("dependent").reset_index(drop=True))

@@ -26,17 +26,17 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 os.environ.setdefault("OMP_NUM_THREADS", "1")
 os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
 
 import numpy as np
-import pandas as pd
 
 
 def load_old(relpath, name):
     src = subprocess.check_output(
-        ["git", "-C", "/root/repo", "show", f"HEAD:{relpath}"]).decode()
+        ["git", "-C", ROOT, "show", f"HEAD:{relpath}"]).decode()
     d = tempfile.mkdtemp()
     p = os.path.join(d, name + ".py")
     open(p, "w").write(src)
@@ -143,34 +143,20 @@ print(f"batch tolerance check (rtol 1e-9): {n_cols} columns, "
       f"worst rel diff {worst:.1e}, mismatches={tbad}")
 assert tbad == 0
 
-# ---- kernel-level battery: old make_kernel vs new make_kernel ----
-sys.path.insert(0, "/root/repo")
-# old association needs its sibling imports; easiest: import new module
-# for helpers and only diff make_kernel behavior via the old module with
-# stubbed package imports. Instead: reconstruct old kernel behavior via
-# git worktree? Simpler: compare new make_kernel against new
-# make_array_kernel-free REFERENCE implemented inline from HEAD source.
-old_assoc = None
-try:
-    src = subprocess.check_output(
-        ["git", "-C", "/root/repo", "show",
-         "HEAD:polars_mas_spark/operators/association.py"]).decode()
-    d = tempfile.mkdtemp()
-    pkgdir = d
-    p = os.path.join(d, "old_assoc.py")
-    open(p, "w").write(src)
-    spec = importlib.util.spec_from_file_location("old_assoc", p)
-    old_assoc = importlib.util.module_from_spec(spec)
-    sys.modules["old_assoc"] = old_assoc
-    spec.loader.exec_module(old_assoc)
-except Exception as e:
-    print("old assoc load failed:", e)
-    raise
+# ---- kernel-level battery: old make_array_kernel vs new make_array_kernel ----
+# One dependent per call, as a per-pair fit: NaN predictor cells reach
+# the fit (keep=None) and must fail the pair identically on both sides.
+src = subprocess.check_output(
+    ["git", "-C", ROOT, "show",
+     "HEAD:polars_mas_spark/operators/association.py"]).decode()
+p = os.path.join(tempfile.mkdtemp(), "old_assoc.py")
+open(p, "w").write(src)
+spec = importlib.util.spec_from_file_location("old_assoc", p)
+old_assoc = importlib.util.module_from_spec(spec)
+sys.modules["old_assoc"] = old_assoc
+spec.loader.exec_module(old_assoc)
 
 import polars_mas_spark.operators.association as new_assoc
-
-PRED = new_assoc.PRED_VALUE
-DEP = new_assoc.DEP_VALUE
 
 rng = np.random.default_rng(7)
 kbad = 0
@@ -179,12 +165,11 @@ for trial in range(200):
     covs = [f"c{j}" for j in range(int(rng.integers(0, 4)))]
     model = rng.choice(["firth", "logistic", "linear", "poisson"])
     quantitative = model in ("linear", "poisson")
-    data = {
-        PRED: rng.choice([0.0, 1.0, 2.0, np.nan], size=n,
-                         p=[0.4, 0.3, 0.25, 0.05]).astype(float),
-        DEP: (rng.random(n) < 0.3).astype(float)
-        if not quantitative else rng.normal(size=n),
-    }
+    x = rng.choice([0.0, 1.0, 2.0, np.nan], size=n,
+                   p=[0.4, 0.3, 0.25, 0.05]).astype(float)
+    y = ((rng.random(n) < 0.3).astype(float)
+         if not quantitative else rng.normal(size=n))
+    data = {}
     for c in covs:
         kind = rng.integers(0, 4)
         if kind == 0:
@@ -197,36 +182,30 @@ for trial in range(200):
             arr = rng.normal(size=n)
             arr[rng.random(n) < 0.1] = np.nan
             data[c] = arr
-    pdf = pd.DataFrame(data)
     sex_restr = None
     sex_col = None
     if covs and rng.random() < 0.3:
         sex_col = covs[0]
-        pdf[covs[0]] = rng.choice([0.0, 1.0], size=n)
+        data[covs[0]] = rng.choice([0.0, 1.0], size=n)
         sex_restr = {"dep0": 1.0}
-    key = ("pred0", "dep0")
-    ok_old = ok_new = None
+    cov_arrays = [(c, c, data[c]) for c in covs]
     min_cc = int(rng.choice([1, 5, 20]))
-    old_k = old_assoc.make_kernel(model, covs, quantitative, min_cc,
-                                  sex_restr, sex_col)
-    new_k = new_assoc.make_kernel(model, covs, quantitative, min_cc,
-                                  sex_restr, sex_col)
-    try:
-        r_old = old_k(key, pdf.copy())
-        e_old = None
-    except Exception as e:
-        r_old, e_old = None, repr(e)
-    try:
-        r_new = new_k(key, pdf.copy())
-        e_new = None
-    except Exception as e:
-        r_new, e_new = None, repr(e)
+    results = []
+    for assoc in (old_assoc, new_assoc):
+        akernel = assoc.make_array_kernel(model, covs, quantitative, min_cc,
+                                          sex_restr, sex_col)
+        try:
+            (row,) = akernel("pred0", x.copy(), cov_arrays, ["dep0"],
+                             lambda _d: y.copy())
+            results.append((row, None))
+        except Exception as e:
+            results.append((None, repr(e)))
+    (ro, e_old), (rn, e_new) = results
     if e_old or e_new:
         if e_old != e_new:
             print(f"trial {trial}: EXC MISMATCH old={e_old} new={e_new}")
             kbad += 1
         continue
-    ro, rn = r_old.iloc[0].to_dict(), r_new.iloc[0].to_dict()
     for kk in ro:
         ov, nv = ro[kk], rn[kk]
         same = (ov == nv) or (
