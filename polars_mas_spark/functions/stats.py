@@ -16,8 +16,10 @@ algorithms directly:
   gtol=1e-5, xtol=1e-5. The p-value is a penalized likelihood-ratio
   test of the tested coefficient (models.py:41 `fl.lrt(0)`), which is
   what makes small-sample/separated PheWAS fits well-behaved.
-  ``firth_fit_many`` fits many dependents on one design together, with
-  firth_fit's decisions and a different floating-point op order.
+  Profile penalized-likelihood CIs take one joint Newton iteration per
+  bound (Venzon & Moolgavkar 1988, as logistf). ``firth_fit_many`` fits
+  many dependents on one design together, with firth_fit's decisions
+  and a different floating-point op order.
 
 Design-matrix convention (reference models.py:58,73): the *tested*
 predictor is column 0, covariates follow, and the intercept is appended
@@ -63,9 +65,13 @@ def ols_fit(X: np.ndarray, y: np.ndarray) -> dict:
     Returns the reference's linear-model output fields
     (/root/reference/src/polars_mas/models.py:72-83): pval/beta/se/
     ci_low/ci_high for the coefficient at index 0, converged always True.
+    A NaN or infinite value raises the moments strategy's failure
+    reason; LAPACK would otherwise print DLASCL errors and fail the SVD.
     """
     Xc = add_intercept(np.asarray(X, dtype=np.float64))
     y = np.asarray(y, dtype=np.float64)
+    if not (np.isfinite(Xc).all() and np.isfinite(y).all()):
+        raise ValueError("Non-finite predictor/covariate/dependent values.")
     n, k = Xc.shape
     if n <= k:
         raise ValueError(f"OLS requires n > k (n={n}, k={k})")
@@ -270,6 +276,45 @@ def _pll_from_parts(
     return _loglik(y, p, ws) + 0.5 * logdet
 
 
+def _firth_state(
+    Xc: np.ndarray, b: np.ndarray, ws: _Workspace, slot: int = 0
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(p, w, Fisher) at ``b``: p = _sigmoid(Xc @ b); w = p * (1 - p);
+    fisher = (Xc*w).T @ Xc — buffered into the slot's (p, w) pair,
+    bit-identical (see _Workspace). fisher is k×k and stays a fresh
+    matmul result."""
+    p, w = ws.pw[slot]
+    np.dot(Xc, b, out=ws.eta)
+    _sigmoid_into(ws.eta, p, ws)
+    np.subtract(1.0, p, out=w)
+    np.multiply(p, w, out=w)
+    np.multiply(Xc, w[:, None], out=ws.nk)
+    return p, w, ws.nk.T @ Xc
+
+
+def _score_terms(
+    Xc: np.ndarray,
+    y: np.ndarray,
+    p: np.ndarray,
+    w: np.ndarray,
+    fisher_inv: np.ndarray,
+    ws: _Workspace,
+) -> np.ndarray:
+    """The per-row terms y - p + h (1/2 - p) of the Firth modified score
+    X'(y - p + h (1/2 - p)), into ``ws.u``. The hat-matrix diagonal
+    h_i = w_i * x_i' I^{-1} x_i is one BLAS matmul + a row-wise dot (the
+    3-operand einsum form contracts in C loops without BLAS and dominated
+    the whole Firth kernel's profile at ~60% of fit time)."""
+    np.dot(Xc, fisher_inv, out=ws.nk)
+    np.einsum("ij,ij->i", ws.nk, Xc, out=ws.h)
+    np.multiply(ws.h, w, out=ws.h)
+    np.subtract(0.5, p, out=ws.t)
+    np.multiply(ws.h, ws.t, out=ws.t)
+    np.subtract(y, p, out=ws.u)
+    np.add(ws.u, ws.t, out=ws.u)
+    return ws.u
+
+
 def _firth_newton(
     Xc: np.ndarray,
     y: np.ndarray,
@@ -302,21 +347,8 @@ def _firth_newton(
         ws = _Workspace(Xc, y)
     beta = np.zeros(k) if beta0 is None else beta0.astype(np.float64).copy()
     converged = False
-
-    def state(b, slot):
-        # p = _sigmoid(Xc @ b); w = p * (1 - p); fisher = (Xc*w).T @ Xc
-        # — buffered into the slot's (p, w) pair, bit-identical (see
-        # _Workspace). fisher is k×k and stays a fresh matmul result.
-        p, w = ws.pw[slot]
-        np.dot(Xc, b, out=ws.eta)
-        _sigmoid_into(ws.eta, p, ws)
-        np.subtract(1.0, p, out=w)
-        np.multiply(p, w, out=w)
-        np.multiply(Xc, w[:, None], out=ws.nk)
-        return p, w, ws.nk.T @ Xc
-
     cur = 0
-    p, w, fisher = state(beta, cur)
+    p, w, fisher = _firth_state(Xc, beta, ws, cur)
     # pll is evaluated lazily: the monotone safeguard only engages on
     # LARGE steps (>= 1, where clamp-induced 2-cycles and overshoot
     # live); small near-convergence Newton steps skip the O(n)
@@ -334,19 +366,7 @@ def _firth_newton(
             fisher_inv = np.linalg.inv(fisher)
         except np.linalg.LinAlgError:
             fisher_inv = np.linalg.pinv(fisher)
-        # Hat-matrix diagonal h_i = w_i * x_i' I^{-1} x_i, as one BLAS
-        # matmul + a row-wise dot (the 3-operand einsum form contracts
-        # in C loops without BLAS and dominated the whole Firth kernel's
-        # profile at ~60% of fit time).
-        np.dot(Xc, fisher_inv, out=ws.nk)
-        np.einsum("ij,ij->i", ws.nk, Xc, out=ws.h)
-        np.multiply(ws.h, w, out=ws.h)
-        # Firth modified score: X' (y - p + h (1/2 - p)).
-        np.subtract(0.5, p, out=ws.t)
-        np.multiply(ws.h, ws.t, out=ws.t)
-        np.subtract(y, p, out=ws.u)
-        np.add(ws.u, ws.t, out=ws.u)
-        score = Xc.T @ ws.u
+        score = Xc.T @ _score_terms(Xc, y, p, w, fisher_inv, ws)
         if free_all:
             score_f = score
             sub = fisher
@@ -377,7 +397,7 @@ def _firth_newton(
                     cand = beta + step
                 else:
                     cand[free] = beta[free] + step
-                p2, w2, f2 = state(cand, 1 - cur)
+                p2, w2, f2 = _firth_state(Xc, cand, ws, 1 - cur)
                 pll2 = _pll_from_parts(y, p2, f2, ws)
                 if pll2 >= pll - 1e-12:
                     break
@@ -388,7 +408,7 @@ def _firth_newton(
                 cand = beta + step
             else:
                 cand[free] = beta[free] + step
-            p2, w2, f2 = state(cand, 1 - cur)
+            p2, w2, f2 = _firth_state(Xc, cand, ws, 1 - cur)
             pll2 = None
         beta, p, w, fisher, pll = cand, p2, w2, f2, pll2
         cur = 1 - cur
@@ -410,7 +430,7 @@ def _profile_pll(
     j: int,
     b: float,
     beta_start: np.ndarray,
-    ws: _Workspace | None = None,
+    ws: _Workspace,
 ) -> tuple[float, np.ndarray, float, np.ndarray]:
     """Penalized log-likelihood profiled over all coefficients except j,
     which is fixed at b, plus d(profile PLL)/db. Warm-started from
@@ -446,20 +466,8 @@ def _profile_pll(
     tangent = cov[:, j] / cjj if (cjj > 0 and math.isfinite(cjj)) else None
     # The solver's final-state byproducts (p, w, fisher, cov=fisher^-1)
     # are exactly what the profile value and derivative need — no
-    # recomputation. Buffered forms are bit-identical (see _Workspace);
-    # the None-ws path keeps the original expressions.
-    if ws is None:
-        h = w * np.einsum("ij,ij->i", Xc @ cov, Xc)
-        grad_j = float(Xc[:, j] @ (y - p + h * (0.5 - p)))
-    else:
-        np.dot(Xc, cov, out=ws.nk)
-        np.einsum("ij,ij->i", ws.nk, Xc, out=ws.h)
-        np.multiply(ws.h, w, out=ws.h)
-        np.subtract(0.5, p, out=ws.t)
-        np.multiply(ws.h, ws.t, out=ws.t)
-        np.subtract(y, p, out=ws.u)
-        np.add(ws.u, ws.t, out=ws.u)
-        grad_j = float(Xc[:, j] @ ws.u)
+    # recomputation.
+    grad_j = float(Xc[:, j] @ _score_terms(Xc, y, p, w, cov, ws))
     return _pll_from_parts(y, p, fisher, ws), beta_c, grad_j, tangent
 
 
@@ -503,81 +511,41 @@ def _hermite_root(
     return b if lo < b < hi else math.nan
 
 
-class _ProfileSide:
-    """One side of a profile-CI search: the scalar bound search
-    ([[_profile_search]]) plus the warm start of its next refit, the
-    FIRST-ORDER PREDICTOR along the profile path, warm + (b - b_warm) *
-    tangent (see firth_profile_ci). The per-pair search and the batch
-    ([[firth_fit_many]]) both drive it, so the search logic exists once."""
-
-    def __init__(self, search, warm: np.ndarray, b_warm: float, tangent):
-        self._search = search
-        self.warm, self.b_warm, self.tangent = warm, b_warm, tangent
-        self.b = math.nan
-        self.bound = math.nan
-
-    def advance(self, reply: tuple[float, float] | None = None) -> bool:
-        """Send the last refit's (f, f') (None to begin); True while a
-        refit at ``self.b`` is pending, False once ``self.bound`` holds
-        the result."""
-        try:
-            self.b = self._search.send(reply)
-            return True
-        except StopIteration as stop:
-            self.bound = stop.value
-            return False
-
-    def start(self) -> np.ndarray:
-        """The predicted warm start for the refit at ``self.b``."""
-        if self.tangent is None:
-            return self.warm
-        return self.warm + (self.b - self.b_warm) * self.tangent
-
-    def update(self, beta: np.ndarray, tangent: np.ndarray | None) -> None:
-        """Record the refit at ``self.b``: its solution and, when
-        defined, its profile-path tangent."""
-        self.warm, self.b_warm = beta, self.b
-        if tangent is not None:
-            self.tangent = tangent
-
-
-def _profile_sides(
+def _profile_search(
+    Xc: np.ndarray,
+    y: np.ndarray,
     beta_hat: np.ndarray,
     pll_full: float,
     se: float,
-    j: int,
-    alpha: float,
-    tol: float,
-    max_expand: int,
-    tangent0: np.ndarray | None,
-) -> tuple[_ProfileSide, _ProfileSide]:
-    """The (low, high) searches of one profile CI, not yet started."""
+    direction: float,
+    ws: _Workspace,
+    tangent0: np.ndarray | None = None,
+    j: int = 0,
+    alpha: float = 0.05,
+    tol: float = 1e-6,
+    max_expand: int = 40,
+) -> float:
+    """One side of the bracketed profile-CI bound search: the bound of
+    coefficient j below (``direction`` -1) or above (+1) ``beta_hat``,
+    ±inf when the profile never drops to its target within
+    ``max_expand`` probes. See firth_profile_ci."""
     zq = norm_ppf(1.0 - alpha / 2.0)
     target = pll_full - 0.5 * zq * zq
     step0 = zq * se if (se > 0 and math.isfinite(se)) else 1.0
     b_hat = float(beta_hat[j])
-    return tuple(
-        _ProfileSide(
-            _profile_search(b_hat, pll_full, target, step0, direction, tol, max_expand),
-            beta_hat, b_hat, tangent0,
-        )
-        for direction in (-1.0, 1.0)
-    )
+    # Each refit's warm start is the FIRST-ORDER PREDICTOR along the
+    # profile path, warm + (b - b_warm) * tangent.
+    warm, b_warm, tangent = beta_hat, b_hat, tangent0
 
+    def evaluate(b: float) -> tuple[float, float]:
+        nonlocal warm, b_warm, tangent
+        start = warm if tangent is None else warm + (b - b_warm) * tangent
+        f, warm, g, tg = _profile_pll(Xc, y, j, b, start, ws)
+        b_warm = b
+        if tg is not None:
+            tangent = tg
+        return f, g
 
-def _profile_search(
-    b_hat: float,
-    pll_full: float,
-    target: float,
-    step0: float,
-    direction: float,
-    tol: float,
-    max_expand: int,
-):
-    """One side of the profile-CI bound search as a generator: it yields
-    each beta_j to refit at, is sent back the profile value and
-    derivative (f, f') there, and returns the bound (±inf when the
-    profile never drops to ``target`` within the expansion budget)."""
     # Expand outward from beta_hat_j until the profile falls below
     # the target (f is decreasing as we move away from the optimum).
     # First probe at 1.15x the Wald half-width — profile bounds run
@@ -593,7 +561,7 @@ def _profile_search(
     b = b_hat
     for _ in range(max_expand):
         b = b + direction * step
-        f, g = yield b
+        f, g = evaluate(b)
         if f < target:
             b_out, f_out, g_out = b, f, g
             break
@@ -633,7 +601,7 @@ def _profile_search(
         )
         if math.isnan(b_next):  # degenerate, forced, or out of bracket
             b_next = 0.5 * (b_in + b_out)
-        f_next, g_next = yield b_next
+        f_next, g_next = evaluate(b_next)
         if f_next >= target:
             b_in, f_in, g_in = b_next, f_next, g_next
         else:
@@ -659,46 +627,149 @@ def firth_profile_ci(
     ws: _Workspace | None = None,
     tangent0: np.ndarray | None = None,
 ) -> tuple[float, float]:
-    """Profile penalized-likelihood CI for coefficient j (the method
-    behind R logistf's default ``conf_int`` and firthmodels', which the
-    reference uses — models.py:45-53): the bound is the value of
-    beta_j at which the profiled penalized log-likelihood drops by
-    chi2_{1,1-alpha}/2 from its maximum (Venzon & Moolgavkar 1988).
+    """Profile penalized-likelihood CI for coefficient j by a bracketed
+    search on the profile: the bound is the value of beta_j at which the
+    profiled penalized log-likelihood drops by chi2_{1,1-alpha}/2 from
+    its maximum (the definition behind R logistf's default
+    ``conf_int`` and firthmodels', which the reference uses —
+    models.py:45-53). firth_fit finds the same bounds by the cheaper
+    joint iteration ([[_profile_bound]]) and keeps this search as the
+    fallback for a side that iteration cannot finish; it is also the
+    reference the iteration is tested against.
 
-    Bracket each side starting from the Wald bound, then close in with
-    SAFEGUARDED NEWTON on the scalar profile: the derivative of the
-    profile PLL is the modified score's j-th component at the profiled
-    solution (see _profile_pll), so each evaluation yields both f and
-    f' and the root find converges quadratically — typically 2-4
-    evaluations per side instead of the ~8 a blind secant/bisection
-    hybrid needs (this search runs once per regression × thousands of
-    regressions, so evaluation count is the whole cost). A Newton step
-    leaving the bracket falls back to the midpoint. Returns (low,
-    high); an unbracketable side (profile never drops far enough within
-    the expansion budget) yields ±inf. The search itself is
-    [[_profile_search]], shared with the batch ([[firth_fit_many]]);
-    this function drives each side to completion in turn.
-
-    Each refit's warm start is the FIRST-ORDER PREDICTOR along the
-    profile path, warm + (b - b_warm) * tangent, with the tangent
+    Each side brackets from the Wald bound, then closes in with a
+    safeguarded cubic-Hermite root find on the scalar profile: the
+    derivative of the profile PLL is the modified score's j-th component
+    at the profiled solution (see _profile_pll), so each evaluation
+    yields both f and f'. Each profile point is an inner refit converged
+    to 1e-4, warm-started by the FIRST-ORDER PREDICTOR along the profile
+    path, warm + (b - b_warm) * tangent, with the tangent
     d(beta)/d(beta_j) returned for free by the previous _profile_pll
-    (``tangent0`` seeds it from the full fit's covariance). The inner
-    Newton then starts within O(db^2) of the profiled solution instead
-    of O(db), converging in ~2 evaluations instead of ~4 — same solver,
-    same tolerances, same outer search; only the starting point moves,
-    so converged numerics agree with the unpredicted path to the inner
-    tolerance's second order (measured: bounds move < 2e-9 across the
-    28-fixture battery, goldens hash-stable)."""
-    sides = _profile_sides(
-        beta_hat, pll_full, se, j, alpha, tol, max_expand, tangent0
+    (``tangent0`` seeds it from the full fit's covariance). Returns
+    (low, high); an unbracketable side (profile never drops far enough
+    within the expansion budget) yields ±inf."""
+    if ws is None:
+        ws = _Workspace(Xc, y)
+    return tuple(
+        _profile_search(
+            Xc, y, beta_hat, pll_full, se, direction, ws,
+            tangent0, j, alpha, tol, max_expand,
+        )
+        for direction in (-1.0, 1.0)
     )
-    for side in sides:
-        reply = None
-        while side.advance(reply):
-            f, wc, g, tg = _profile_pll(Xc, y, j, side.b, side.start(), ws)
-            side.update(wc, tg)
-            reply = (f, g)
-    return sides[0].bound, sides[1].bound
+
+
+# The joint profile iteration's stopping rule: the PLL within
+# _PROFILE_FTOL of its target (the search's tolerance) and every free
+# score component within _PROFILE_GTOL (the search's inner-refit
+# tolerance), within _PROFILE_MAX_EVALS state evaluations.
+_PROFILE_FTOL = 1e-6
+_PROFILE_GTOL = 1e-4
+_PROFILE_MAX_EVALS = 30
+
+
+def _profile_steps(
+    fisher_inv: np.ndarray,
+    score: np.ndarray,
+    gap: np.ndarray,
+    direction: np.ndarray,
+    max_step: float = 5.0,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One joint Newton step toward a profile-CI bound of coefficient 0
+    (Venzon & Moolgavkar 1988, the profile iteration logistf uses), from
+    the inverse Fisher matrix V (k x k), the modified score U (k) and
+    ``gap`` = PLL - target; every argument may carry leading stack axes.
+
+    The step solves PLL = target and U_f = 0 (f: every coefficient but
+    0) together on the PLL's quadratic model. In partitioned form, with
+    I_ff [a c] = [U_f, I_f0], s = I_00 - I_0f c and r = U_0 - I_0f a, it
+    moves coefficient 0 by d0 = (r ± sqrt(r^2 + 2 s (gap + U_f a / 2))) / s,
+    the root on ``direction``'s side, and the others by a - c d0. By the
+    partitioned-inverse identities (s = 1/V_00, c = -V_f0/V_00,
+    r/s = delta_0 for the full Newton step delta = V U) that is
+    delta + t V[:, 0] / V_00 with t = ±sqrt(V_00 (2 gap + U delta)):
+    the Newton step, then a move along the profile path's tangent onto
+    the target. Computed so, it needs no solve beyond the V the modified
+    score already used. From beta-hat (U = 0) it is the Wald bound moved
+    along the tangent.
+
+    Returns (steps, failed): failed where V_00 is not positive, the step
+    is not finite, or it moves a coefficient by more than ``max_step``
+    (where _firth_newton would clamp). A step that long means the
+    quadratic model is far from the PLL, as on separated designs, where
+    the iteration can settle on a stationary point off the profile
+    (measured: a bound of 76 where the profile crosses its target at
+    105); the bracketed search, whose refits only climb the PLL,
+    finishes such a side."""
+    delta = np.matmul(fisher_inv, score[..., None])[..., 0]
+    v00 = fisher_inv[..., 0, 0]
+    with np.errstate(invalid="ignore", divide="ignore"):
+        t = direction * np.sqrt(
+            np.maximum(v00 * (2.0 * gap + (score * delta).sum(axis=-1)), 0.0)
+        )
+        step = delta + (t / v00)[..., None] * fisher_inv[..., :, 0]
+    failed = ~(v00 > 0) | ~(np.abs(step).max(axis=-1) <= max_step)
+    return step, failed
+
+
+def _profile_starts(
+    beta: np.ndarray, cov: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """The joint iteration's first iterate for both bounds of each row
+    of ``beta`` (m x k), rows ordered (low, high) per fit, and the side
+    of each (-1, +1): the [[_profile_steps]] step from beta-hat, where
+    the modified score is zero and the gap is z^2 / 2, taken from the
+    full fit's covariance ``cov`` (m x k x k) without a state
+    evaluation. A start _profile_steps fails is NaN."""
+    direction = np.tile([-1.0, 1.0], len(beta))
+    step, failed = _profile_steps(
+        np.repeat(cov, 2, axis=0),
+        np.zeros((len(direction), beta.shape[1])),
+        0.5 * _Z975 * _Z975,
+        direction,
+    )
+    step[failed] = math.nan
+    return np.repeat(beta, 2, axis=0) + step, direction
+
+
+def _profile_converged(gap, score: np.ndarray):
+    """Whether the joint profile iteration has converged (per row)."""
+    return (np.abs(gap) < _PROFILE_FTOL) & (
+        np.abs(score[..., 1:]).max(axis=-1) < _PROFILE_GTOL
+    )
+
+
+def _profile_bound(
+    Xc: np.ndarray,
+    y: np.ndarray,
+    beta: np.ndarray,
+    direction: float,
+    target: float,
+    ws: _Workspace,
+) -> float:
+    """One profile-CI bound of coefficient 0 by the joint iteration
+    ([[_profile_steps]]) from ``beta`` (a [[_profile_starts]] start),
+    one state evaluation per step on the fit's buffers. NaN when it did
+    not converge within _PROFILE_MAX_EVALS evaluations, hit a singular
+    matrix or needed a step _profile_steps fails; firth_fit searches
+    such a side instead."""
+    if not np.isfinite(beta).all():
+        return math.nan
+    for _ in range(_PROFILE_MAX_EVALS):
+        p, w, fisher = _firth_state(Xc, beta, ws)
+        try:
+            fisher_inv = np.linalg.inv(fisher)
+        except np.linalg.LinAlgError:
+            break
+        score = Xc.T @ _score_terms(Xc, y, p, w, fisher_inv, ws)
+        gap = _pll_from_parts(y, p, fisher, ws) - target
+        if _profile_converged(gap, score):
+            return float(beta[0])
+        step, failed = _profile_steps(fisher_inv, score, gap, direction)
+        if failed:
+            break
+        beta = beta + step
+    return math.nan
 
 
 def _base_rate_start(y: np.ndarray, k: int) -> np.ndarray:
@@ -719,8 +790,11 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
     tested coefficient constrained to zero; `converged` is False when
     either fit exhausts its iterations (the reference detects this via
     ConvergenceWarning, models.py:42-44). ``ci_method="profile"``
-    (default) computes profile penalized-likelihood CIs exactly like the
-    reference's firthmodels delegate; ``"wald"`` is the cheap fallback.
+    (default) computes profile penalized-likelihood CIs like the
+    reference's firthmodels delegate, each bound by one joint Newton
+    iteration ([[_profile_bound]]) with the bracketed search
+    ([[firth_profile_ci]]) as its fallback; ``"wald"`` is the cheap
+    alternative.
     """
     Xc = add_intercept(np.asarray(X, dtype=np.float64))
     y = np.asarray(y, dtype=np.float64)
@@ -759,13 +833,24 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
     pval = chi2_sf(lr, 1.0)
     se = math.sqrt(max(cov[0, 0], 0.0))
     if ci_method == "profile":
-        c00 = float(cov[0, 0])
-        tangent0 = (
-            cov[:, 0] / c00 if (c00 > 0 and math.isfinite(c00)) else None
-        )
-        ci_low, ci_high = firth_profile_ci(
-            Xc, y, beta, pll_full, se, ws=ws, tangent0=tangent0
-        )
+        # The joint iteration per bound; the bracketed search finishes a
+        # side it cannot (see _profile_bound), or whose bound landed on
+        # the wrong side of beta-hat.
+        starts, directions = _profile_starts(beta[None], cov[None])
+        target = pll_full - 0.5 * _Z975 * _Z975
+        bounds = []
+        for start, direction in zip(starts, directions):
+            b = _profile_bound(Xc, y, start, direction, target, ws)
+            if not direction * (b - beta[0]) > 0:
+                c00 = float(cov[0, 0])
+                tangent0 = (
+                    cov[:, 0] / c00 if (c00 > 0 and math.isfinite(c00)) else None
+                )
+                b = _profile_search(
+                    Xc, y, beta, pll_full, se, direction, ws, tangent0
+                )
+            bounds.append(b)
+        ci_low, ci_high = bounds
     else:
         ci_low, ci_high = beta[0] - _Z975 * se, beta[0] + _Z975 * se
     return {
@@ -785,7 +870,7 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
 
 # Columns x rows held in one chunk of the batched Firth fit. Every
 # working array of a chunk is (columns, rows), and the profile-CI pass
-# holds two chains per column, so this bounds the batch's memory. On
+# holds two sides per column, so this bounds the batch's memory. On
 # phewas_firth-shaped data (n = 1,000, k = 7, 146 dependents, one core)
 # 2^14, i.e. 16 columns, cost the least CPU: 258 ms per 146 fits,
 # against 304-351 ms at 2^12-2^13, 276-299 ms at 2^15-2^17 and 659 ms
@@ -840,6 +925,23 @@ def _pll_rows(Y: np.ndarray, P: np.ndarray, F: np.ndarray) -> np.ndarray:
     return np.where(sign <= 0, -math.inf, ll + 0.5 * logdet)
 
 
+def _scores(
+    Xc: np.ndarray,
+    Q: np.ndarray,
+    Y: np.ndarray,
+    p: np.ndarray,
+    w: np.ndarray,
+    fisher_inv: np.ndarray,
+) -> np.ndarray:
+    """The Firth modified score X'(y - p + h (1/2 - p)) for each row
+    (m x k). All hat diagonals are one GEMM, Finv.reshape(m, k^2) @ Q.T."""
+    h = fisher_inv.reshape(len(p), -1) @ Q.T
+    h *= w
+    u = Y - p
+    u += h * (0.5 - p)
+    return u @ Xc
+
+
 def _firth_newton_many(
     Xc: np.ndarray,
     Q: np.ndarray,
@@ -853,7 +955,7 @@ def _firth_newton_many(
 ) -> tuple[np.ndarray, ...]:
     """_firth_newton for every row of ``Y`` (m x n) in lockstep, each
     from its own row of ``beta0``; ``hold0`` holds coefficient 0 at its
-    start (the LRT null fit and the profile refits), and xtol = gtol =
+    start (the LRT null fit), and xtol = gtol =
     ``tol``. Each row takes exactly _firth_newton's decisions — the ±5
     clamp, the PLL-monotone halving of a step >= 1 (up to 12 halvings,
     plus the halving after the last failed try), the convergence test —
@@ -893,11 +995,7 @@ def _firth_newton_many(
         # singular row's NaNs run through this iteration harmlessly (a
         # NaN step takes the small-step branch) and it leaves below.
         fisher_inv, bad = _stacked(np.linalg.inv, fisher)
-        h = fisher_inv.reshape(len(rows), k * k) @ Q.T
-        h *= w
-        u = Yw - p
-        u += h * (0.5 - p)
-        score_f = (u @ Xc)[:, fr]
+        score_f = _scores(Xc, Q, Yw, p, w, fisher_inv)[:, fr]
         step, bad_step = _stacked(np.linalg.solve, fisher[:, fr, fr], score_f[..., None])
         bad |= bad_step
         step = step[..., 0]
@@ -957,58 +1055,49 @@ def _profile_ci_many(
     pll_full: np.ndarray,
     cols: list[int],
 ) -> dict[int, tuple[float, float]]:
-    """firth_profile_ci for the rows ``cols`` of ``Yt``. Every column's
-    two sides are independent searches ([[_profile_search]]) that
-    advance together: each round's pending profile refits are one
-    _firth_newton_many call at the per-pair refit's tolerance (1e-4).
-    Returns {col: (low, high)}, leaving out any column whose refit hit a
-    singular matrix."""
-    k = Xc.shape[1]
-    pending: list[tuple[int, _ProfileSide]] = []
-    sides: dict[int, tuple[_ProfileSide, _ProfileSide]] = {}
-    for c in cols:
-        c00 = float(cov[c, 0, 0])
-        ok = c00 > 0 and math.isfinite(c00)
-        se = math.sqrt(max(c00, 0.0))
-        sides[c] = _profile_sides(
-            beta[c], pll_full[c], se, 0, 0.05, 1e-6, 40,
-            cov[c, :, 0] / c00 if ok else None,
-        )
-        pending += [(c, side) for side in sides[c] if side.advance()]
-    while pending:
-        m = len(pending)
-        start = np.array([side.start() for _, side in pending])
-        start[:, 0] = [side.b for _, side in pending]
-        Yp = Yt[[c for c, _ in pending]]
-        beta_c, cov_c, _, f, p, w, bad = _firth_newton_many(
-            Xc, Q, Yp, start, hold0=True, tol=1e-4
-        )
-        # Profile derivative: the modified score's coefficient-0
-        # component at the profiled solution (see _profile_pll).
-        h = cov_c.reshape(m, k * k) @ Q.T
-        h *= w
-        u = Yp - p
-        u += h * (0.5 - p)
-        g = u @ Xc[:, 0]
-        for c in {pending[i][0] for i in np.flatnonzero(bad)}:
-            sides.pop(c, None)
-        nxt = []
-        for i, (c, side) in enumerate(pending):
-            if c not in sides:
-                continue
-            cjj = float(cov_c[i, 0, 0])
-            tangent = cov_c[i, :, 0] / cjj if (cjj > 0 and math.isfinite(cjj)) else None
-            side.update(beta_c[i], tangent)
-            if side.advance((float(f[i]), float(g[i]))):
-                nxt.append((c, side))
-        pending = nxt
-    return {c: (lo.bound, hi.bound) for c, (lo, hi) in sides.items()}
+    """firth_fit's profile CIs for the rows ``cols`` of ``Yt``: the joint
+    iteration ([[_profile_steps]]) of both sides of every column as one
+    stacked loop, one state evaluation per live side per step; a side
+    retires when it converges. Returns {col: (low, high)}, leaving out
+    any column with a side that did not converge within
+    _PROFILE_MAX_EVALS evaluations, needed a step _profile_steps fails
+    (a singular matrix or a step past the clamp), or converged on the
+    wrong side of beta-hat: firth_fit fits that column, with the
+    bracketed search as its own fallback."""
+    cols = np.asarray(cols, dtype=int)
+    starts, direction = _profile_starts(beta[cols], cov[cols])
+    side_col = np.repeat(cols, 2)
+    target = pll_full[side_col] - 0.5 * _Z975 * _Z975
+    bound = np.full(len(starts), math.nan)
+    rows = np.flatnonzero(np.isfinite(starts).all(axis=1))
+    b = starts[rows]
+    for _ in range(_PROFILE_MAX_EVALS):
+        if not rows.size:
+            break
+        Y = Yt[side_col[rows]]
+        p, w, fisher = _firth_states(Xc, Q, b)
+        # A singular row's inverse is NaN, so its step fails.
+        fisher_inv, _ = _stacked(np.linalg.inv, fisher)
+        score = _scores(Xc, Q, Y, p, w, fisher_inv)
+        gap = _pll_rows(Y, p, fisher) - target[rows]
+        done = _profile_converged(gap, score)
+        bound[rows[done]] = b[done, 0]
+        step, failed = _profile_steps(fisher_inv, score, gap, direction[rows])
+        keep = ~(done | failed)
+        rows, b = rows[keep], b[keep] + step[keep]
+    ok = (direction * (bound - beta[side_col, 0]) > 0).reshape(-1, 2).all(axis=1)
+    return {
+        c: (bound[2 * i], bound[2 * i + 1])
+        for i, c in enumerate(cols.tolist())
+        if ok[i]
+    }
 
 
 def _firth_chunk(Xc: np.ndarray, Q: np.ndarray, Yt: np.ndarray) -> list[dict | None]:
     """firth_fit's result for each row of ``Yt`` (B x n), fitted
-    together; None for a column that hit a singular matrix or whose full
-    or null fit did not converge."""
+    together; None for a column that hit a singular matrix, whose full
+    or null fit did not converge, or whose profile CI the joint
+    iteration did not finish."""
     B, k = len(Yt), Xc.shape[1]
     beta0 = np.array([_base_rate_start(y, k) for y in Yt])
     beta, cov, conv_full, pll_full, _, _, bad = _firth_newton_many(
@@ -1052,7 +1141,7 @@ def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
     firth_fit's keys.
 
     A PheWAS task fits many dependents on the same x and covariates,
-    and per pair the Newton and profile-CI search are mostly
+    and per pair the Newton and profile-CI iterations are mostly
     interpreter and small-BLAS dispatch. Here every column of a chunk
     takes firth_fit's exact decision sequence in lockstep
     ([[_firth_newton_many]]), so results differ from per-pair fits only
@@ -1060,12 +1149,15 @@ def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
     to rtol 1e-9). Per iteration, all Fisher matrices are one GEMM,
     W @ Q with Q the row-wise X (x) X (n x k^2), and all hat diagonals
     are one more, Finv.reshape(B, k^2) @ Q.T; inverses, solves and
-    log-determinants are stacked. ``ys`` is consumed in chunks of
-    _BATCH_ELEMENTS // n columns, so only one chunk is held at a time.
+    log-determinants are stacked, and the profile CIs of all columns are
+    one stacked joint iteration ([[_profile_ci_many]]). ``ys`` is
+    consumed in chunks of _BATCH_ELEMENTS // n columns, so only one
+    chunk is held at a time.
 
     firth_fit is both the reference and the fallback: it fits a column
-    whose batched solve hit a singular matrix or whose full or null fit
-    did not converge, and every column when batching cannot help
+    whose batched solve hit a singular matrix, whose full or null fit
+    did not converge or whose profile iteration left a side unfinished,
+    and every column when batching cannot help
     (n > _BATCH_ELEMENTS / 2, an n x k^2 Q over _OUTER_ELEMENTS) or the
     design is non-finite or rank-deficient (every column's Fisher
     matrix is then singular)."""

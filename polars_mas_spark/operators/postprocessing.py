@@ -20,6 +20,8 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
+from polars_mas_spark.sources.readers import phecode_table
+
 
 def sex_restrictions_from_defs(
     defs_df: DataFrame,
@@ -120,16 +122,18 @@ def add_phecode_definitions(
 ) -> pa.Table:
     """Left join of the ~1.9k-row phecode definition table
     (postprocessing.py:23-29): dependent=phecode for PheWAS, predictor=
-    phecode for flipWAS. ``defs_df`` is collected once with
-    ``toArrow()``; the join runs locally, keeps the results' row order,
-    and leaves the definition columns NULL on unmatched rows."""
+    phecode for flipWAS. ``defs_df`` becomes a local table through
+    readers.phecode_table: no Spark job for a read_phecode_definitions
+    table, one ``toArrow()`` collect for any other. The join runs
+    locally, keeps the results' row order, and leaves the definition
+    columns NULL on unmatched rows."""
     if is_phewas:
         key = "dependent"
     elif is_flipwas:
         key = "predictor"
     else:
         return table
-    defs = defs_df.toArrow()
+    defs = phecode_table(defs_df)
     defs = _with_column(
         defs, "phecode", defs["phecode"].cast(table.schema.field(key).type)
     )

@@ -18,6 +18,10 @@ shuffle.
 
 from __future__ import annotations
 
+import os
+import weakref
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,7 +44,9 @@ def read_input(
     natively, common as interchange at corpus scale."""
     suffix = "." + (fmt or path.rsplit(".", 1)[-1]).lower()
     if suffix == ".parquet":
-        return spark.read.parquet(path)
+        schema = _parquet_schema(spark, path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(path)
     if suffix == ".orc":
         return spark.read.orc(path)
     if suffix in (".json", ".jsonl", ".ndjson"):
@@ -60,6 +66,64 @@ def read_input(
     if extra:
         df = _rewrite_extra_null_tokens(df, extra)
     return df
+
+
+# Arrow types that from_arrow_schema maps to the Spark type Spark's own
+# parquet schema inference gives (tests/test_io.py checks each one).
+_PLAIN_ARROW_TYPES = frozenset([
+    pa.int8(), pa.int16(), pa.int32(), pa.int64(), pa.float32(),
+    pa.float64(), pa.bool_(), pa.string(), pa.date32(),
+])
+
+
+def _same_as_inferred(t: pa.DataType) -> bool:
+    return t in _PLAIN_ARROW_TYPES or (
+        pa.types.is_timestamp(t) and t.unit in ("ms", "us") and t.tz in (None, "UTC")
+    )
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The Spark schema of a local parquet file, or of a flat directory
+    of part files that share one schema, read from the footers with
+    pyarrow. Spark's own inference runs a job per read to open one
+    footer (about 0.1 s of wall time per study); handing it this schema
+    runs none. None, keeping Spark's inference, for anything else: a
+    Hive-partitioned or empty directory, a non-local path, part files
+    whose schemas differ, duplicate names, or a column type outside
+    _same_as_inferred."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isfile(path):
+        files = [path]
+    elif os.path.isdir(path):
+        # Spark skips names starting with "_" or "." (_SUCCESS, .crc).
+        files = [
+            os.path.join(path, name)
+            for name in sorted(os.listdir(path))
+            if not name.startswith(("_", "."))
+        ]
+        if not files or not all(map(os.path.isfile, files)):
+            return None
+    else:
+        return None
+    schema = pq.read_schema(files[0])
+    names = [name.lower() for name in schema.names]
+    if (
+        len(set(names)) < len(names)
+        or not all(_same_as_inferred(t) for t in schema.types)
+        or not all(
+            pq.read_schema(f).equals(schema, check_metadata=False)
+            for f in files[1:]
+        )
+    ):
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
+    inferred = from_arrow_schema(schema, prefer_timestamp_ntz=ntz.lower() == "true")
+    # Spark reads every file column as nullable.
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in inferred.fields]
+    )
 
 
 def _rewrite_extra_null_tokens(df: DataFrame, tokens: list[str]) -> DataFrame:
@@ -179,12 +243,50 @@ def bundled_sex2_path() -> str:
     )
 
 
+PHECODE_DEF_COLUMNS = ("phecode", "phenotype", "sex", "category", "category_number")
+
+# read_phecode_definitions' DataFrames -> the local table each was made
+# from, so annotating with one runs no Spark job.
+_PHECODE_TABLES: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def read_phecode_csv(path: str) -> pa.Table:
+    """The PHECODE_DEF_COLUMNS of a phecode definition CSV, read locally
+    with pyarrow as Spark's CSV reader reads it under PHECODE_DEF_SCHEMA:
+    codes as strings, category_number as a double, and only empty cells
+    (quoted or not) as NULL."""
+    from pyarrow import csv
+
+    types = {c: pa.string() for c in PHECODE_DEF_COLUMNS}
+    types["category_number"] = pa.float64()
+    return csv.read_csv(
+        path,
+        convert_options=csv.ConvertOptions(
+            column_types=types,
+            include_columns=list(PHECODE_DEF_COLUMNS),
+            null_values=[""],
+            strings_can_be_null=True,
+        ),
+    )
+
+
 def read_phecode_definitions(spark: SparkSession, path: str | None = None) -> DataFrame:
     """Load a phecode definition CSV, forcing the code column to string so
     '008.5' survives (reference constants.py:6-13). With no path, loads
     the bundled public PheWAS-catalog table — the reference's default.
-    Returns the same projection the reference keeps."""
+    Returns the same projection the reference keeps, as a DataFrame made
+    from the local table, which [[phecode_table]] hands back without a
+    Spark job."""
     if path is None:
         path = bundled_phecode_definitions_path()
-    df = spark.read.option("header", True).schema(PHECODE_DEF_SCHEMA).csv(path)
-    return df.select("phecode", "phenotype", "sex", "category", "category_number")
+    table = read_phecode_csv(path)
+    df = spark.createDataFrame(table)
+    _PHECODE_TABLES[df] = table
+    return df
+
+
+def phecode_table(defs_df: DataFrame) -> pa.Table:
+    """``defs_df`` as a local table: the one read_phecode_definitions
+    made it from, else one ``toArrow()`` collect."""
+    table = _PHECODE_TABLES.get(defs_df)
+    return defs_df.toArrow() if table is None else table

@@ -323,9 +323,10 @@ def test_moments_null_covariates_fail_as_rows(spark):
     out = run_associations(df, cfg, strategy="moments").to_pandas()
     assert set(out["failed_reason"]) == {"Null covariate values (age)."}
     assert out["pval"].isna().all()
-    # Kernel path also yields failure rows (not silently-wrong numbers).
+    # Kernel path also yields failure rows (not silently-wrong numbers);
+    # a fitted row's failed_reason is the string "nan".
     k = run_associations(df, cfg, strategy="columnar").to_pandas()
-    assert k["failed_reason"].notna().all()
+    assert (k["failed_reason"] != "nan").all()
 
 
 def test_moments_keeps_large_offset_covariates(spark):
@@ -414,8 +415,9 @@ def test_moments_nan_semantics_match_packed(spark):
     """True NaN values (not nulls — Arrow turns pandas NaN into null, so
     these are injected Spark-side) must follow the packed-path contract:
     NaN DEPENDENTS are missing data (masked per-dependent), NaN
-    COVARIATES fail the pair as a row. Without the finiteness guard the
-    moments solve would emit converged=True rows full of NaN stats."""
+    COVARIATES fail the pair as a row, with one failed_reason on every
+    strategy. Without the finiteness guard the moments solve would emit
+    converged=True rows full of NaN stats."""
     rng = np.random.default_rng(17)
     n = 200
     pdf = pd.DataFrame({
@@ -440,7 +442,6 @@ def test_moments_nan_semantics_match_packed(spark):
     assert m["n_observations"] == p["n_observations"] == n - 10
     assert m["beta"] == pytest.approx(p["beta"], rel=1e-9)
 
-    # NaN covariate -> the pair fails as a row on BOTH paths.
     df2 = base.withColumn(
         "c1", F.when(F.col("rid") == 3, nan).otherwise(F.col("c1"))
     ).drop("rid")
@@ -448,11 +449,14 @@ def test_moments_nan_semantics_match_packed(spark):
         predictors="x", dependents=["q_a"], covariates=["c1"],
         model="linear", quantitative=True, min_case_count=10,
     ).resolve(df2.columns)
-    m2 = run_associations(df2, cfg2, strategy="moments").to_pandas().iloc[0]
-    p2 = run_associations(df2, cfg2, strategy="packed").to_pandas().iloc[0]
-    assert m2["failed_reason"] == "Non-finite predictor/covariate/dependent values."
-    assert math.isnan(m2["pval"])
-    assert p2["failed_reason"] not in (None, "nan")
+    # NaN covariate -> the pair fails as a row on every path, for the
+    # same reason (ols_fit checks finiteness before its lstsq).
+    for strategy in ("moments", "packed", "columnar"):
+        got = run_associations(df2, cfg2, strategy=strategy).to_pandas().iloc[0]
+        assert got["failed_reason"] == (
+            "Non-finite predictor/covariate/dependent values."
+        ), strategy
+        assert math.isnan(got["pval"]), strategy
 
 
 def test_moments_dotted_column_names(spark):
@@ -1357,10 +1361,10 @@ def _jobs_after_fan_out(spark, monkeypatch, group: str, **kwargs) -> int:
 
 
 def test_study_spark_job_budget(synth, spark, tmp_path, monkeypatch):
-    # From the fan-out on, a study is one collect of the fitted rows; a
-    # PheWAS study adds one collect of the phecode definitions. The
-    # corrections, the pair completion, the annotation and the write
-    # run on the driver.
+    # From the fan-out on, a study is one collect of the fitted rows, a
+    # PheWAS study included: read_phecode_definitions keeps its local
+    # table, so the annotation collects nothing. The corrections, the
+    # pair completion, the annotation and the write run locally.
     from polars_mas_spark.sources.readers import read_phecode_definitions
 
     src, deps = _phewas_input(synth, tmp_path)
@@ -1377,7 +1381,7 @@ def test_study_spark_job_budget(synth, spark, tmp_path, monkeypatch):
         spark, monkeypatch, "budget-phewas", config=cfg, input_path=src,
         output_path=str(tmp_path / "out.csv"), strategy="columnar",
         phecode_defs=read_phecode_definitions(spark),
-    ) == 2
+    ) == 1
 
 
 def test_outputs_keep_nan_and_null_apart(synth, spark, tmp_path, monkeypatch):

@@ -128,3 +128,120 @@ def test_erfc_vec_nan_propagates():
     assert abs(out[1] - 1.0) < 1e-15
     assert abs(out[2] - 0.15729920705028513) < 1e-12
     assert abs(out[3] - 2.0) < 1e-15
+
+
+def _parquet_columns():
+    import datetime
+
+    day, moment = datetime.date(2020, 1, 2), datetime.datetime(2020, 1, 2, 3, 4, 5)
+    return {
+        "i8": pa.array([1, None], pa.int8()),
+        "i16": pa.array([1, 2], pa.int16()),
+        "i32": pa.array([1, 2], pa.int32()),
+        "i64": pa.array([1, 2], pa.int64()),
+        "f32": pa.array([1.5, None], pa.float32()),
+        "f64": pa.array([1.5, float("nan")]),
+        "flag": pa.array([True, None]),
+        "name": pa.array(["a", None]),
+        "day": pa.array([day, None], pa.date32()),
+        "250.1": pa.array([0, 1], pa.int8()),
+        "ts_naive_us": pa.array([moment, None], pa.timestamp("us")),
+        "ts_naive_ms": pa.array([moment, None], pa.timestamp("ms")),
+        "ts_utc_us": pa.array([moment, None], pa.timestamp("us", "UTC")),
+    }
+
+
+def test_parquet_schema_matches_spark_inference(spark, tmp_path):
+    """The footer-read schema read_input hands to Spark equals Spark's
+    own inference, per column type and for dotted names, for one file
+    and for a flat directory of part files. Anything else keeps Spark's
+    inference: Hive-partitioned directories, part files that disagree,
+    unmapped types (unsigned, nanosecond timestamps) and non-local
+    paths."""
+    import pyarrow.parquet as pq
+
+    from polars_mas_spark.sources.readers import _parquet_schema
+
+    table = pa.table(_parquet_columns())
+    single = str(tmp_path / "single.parquet")
+    pq.write_table(table, single)
+    parts = tmp_path / "parts"
+    parts.mkdir()
+    for i in range(2):
+        pq.write_table(table, str(parts / f"part-{i}.parquet"))
+    (parts / "_SUCCESS").write_text("")
+    for path in (single, str(parts)):
+        want = spark.read.parquet(path).schema
+        assert _parquet_schema(spark, path) == want, path
+        assert read_input(spark, path, fmt="parquet").schema == want
+    for name in table.column_names:
+        one = str(tmp_path / f"col-{name}.parquet")
+        pq.write_table(table.select([name]), one)
+        assert _parquet_schema(spark, one) == spark.read.parquet(one).schema, name
+
+    hive = tmp_path / "hive"
+    (hive / "site=a").mkdir(parents=True)
+    pq.write_table(table, str(hive / "site=a" / "part-0.parquet"))
+    mixed = tmp_path / "mixed"
+    mixed.mkdir()
+    pq.write_table(table, str(mixed / "part-0.parquet"))
+    pq.write_table(table.drop_columns(["i8"]), str(mixed / "part-1.parquet"))
+    unsigned = str(tmp_path / "unsigned.parquet")
+    pq.write_table(pa.table({"u": pa.array([1], pa.uint8())}), unsigned)
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"t": pa.array([0], pa.timestamp("ns"))}), nanos)
+    for path in (str(hive), str(mixed), unsigned, nanos, f"file://{single}"):
+        assert _parquet_schema(spark, path) is None, path
+
+
+def test_read_input_parquet_runs_no_job(spark, tmp_path):
+    """Reading a parquet input opens its footer locally: no Spark
+    job, where Spark's own schema inference runs one."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "in.parquet")
+    pq.write_table(pa.table(_parquet_columns()), path)
+    sc = spark.sparkContext
+    sc.setJobGroup("read-input", "read-input")
+    try:
+        df = read_input(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read-input") == []
+    assert df.count() == 2
+
+
+def test_phecode_csv_matches_spark_read(spark, tmp_path):
+    """read_phecode_definitions' local pyarrow read gives the values and
+    schema Spark's CSV reader gives under PHECODE_DEF_SCHEMA, for the
+    bundled table and for a file with empty, quoted and "NULL" cells."""
+    from polars_mas_spark.sources.readers import (
+        PHECODE_DEF_COLUMNS,
+        PHECODE_DEF_SCHEMA,
+        bundled_phecode_definitions_path,
+        read_phecode_csv,
+        read_phecode_definitions,
+    )
+
+    odd = _write_csv(
+        tmp_path, "defs.csv",
+        "phecode,phenotype,phecode_exclude_range,sex,rollup,leaf,"
+        "category_number,category\n"
+        '008,"Intestinal, infection",001-009.99,Both,1,0,1,infectious\n'
+        '008.5,,,"",1,0,,NULL\n'
+        '250,"",x,Female,1,1,NaN,"quoted name"\n'
+        "401.1,NA,,Male,,,2.5,\n",
+    )
+    for path in (bundled_phecode_definitions_path(), odd):
+        spark_df = (
+            spark.read.option("header", True).schema(PHECODE_DEF_SCHEMA)
+            .csv(path).select(*PHECODE_DEF_COLUMNS)
+        )
+        want = [tuple(r) for r in spark_df.collect()]
+        got = read_phecode_csv(path)
+        rows = list(zip(*(got[c].to_pylist() for c in PHECODE_DEF_COLUMNS)))
+        assert len(rows) == len(want), path
+        for g, w in zip(rows, want):
+            assert g[:4] == w[:4], (path, g, w)
+            assert g[4] == w[4] or (g[4] != g[4] and w[4] != w[4]), (path, g, w)
+        assert read_phecode_definitions(spark, path).schema == spark_df.schema

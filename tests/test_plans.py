@@ -53,9 +53,10 @@ def test_unpivot_is_jvm_expand(spark):
 
 
 def test_annotation_runs_no_spark_join(spark):
-    """The PheWAS annotation joins on the driver: its one Spark job is
-    the collect of the phecode definition table, whose plan holds no
-    join, and the results never enter Spark."""
+    """The PheWAS annotation joins with the local table that
+    read_phecode_definitions kept, so it runs no Spark job, and the
+    results never enter Spark. Another definitions DataFrame costs one
+    collect, whose plan holds no join."""
     import pyarrow as pa
 
     from polars_mas_spark.operators.postprocessing import add_phecode_definitions
@@ -74,10 +75,20 @@ def test_annotation_runs_no_spark_join(spark):
         out = add_phecode_definitions(results, defs, is_phewas=True)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("annotation")) == 1
+    assert sc.statusTracker().getJobIdsForGroup("annotation") == []
     assert isinstance(out, pa.Table)
     assert out["dependent"].to_pylist() == ["250.1", "008.5"]
     assert out["phenotype"].null_count == 0
+
+    other = defs.select("*")
+    assert "Join" not in plan_of(other)
+    sc.setJobGroup("annotation-collect", "annotation-collect")
+    try:
+        again = add_phecode_definitions(results, other, is_phewas=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("annotation-collect")) == 1
+    assert again.equals(out)
 
 
 def test_packed_fanout_single_exchange_to_python(spark):

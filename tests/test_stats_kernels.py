@@ -440,3 +440,140 @@ def test_firth_newton_many_flags_singular_rows_only():
     want = stats._firth_newton(Xc, Y[0], np.ones(3, dtype=bool), beta0=beta0[0])
     assert converged[0] and want[2]
     np.testing.assert_allclose(beta[0], want[0], rtol=1e-9)
+
+
+def _search_reference(X, y):
+    """firth_fit's CI bounds as the bracketed search finds them, from
+    firth_fit's own full fit."""
+    Xc = stats.add_intercept(np.asarray(X, dtype=float))
+    k = Xc.shape[1]
+    ws = stats._Workspace(Xc, y)
+    beta, cov, _, p, _, fisher = stats._firth_newton(
+        Xc, y, np.ones(k, dtype=bool), beta0=stats._base_rate_start(y, k), ws=ws
+    )
+    pll = stats._pll_from_parts(y, p, fisher, ws)
+    return stats.firth_profile_ci(
+        Xc, y, beta, pll, math.sqrt(cov[0, 0]), ws=ws,
+        tangent0=cov[:, 0] / cov[0, 0],
+    )
+
+
+def _searched_sides(monkeypatch):
+    """Spy on the bracketed search: the directions it was run for."""
+    sides = []
+    search = stats._profile_search
+
+    def spy(*args, **kwargs):
+        sides.append(args[5])
+        return search(*args, **kwargs)
+
+    monkeypatch.setattr(stats, "_profile_search", spy)
+    return sides
+
+
+def test_joint_profile_bounds_match_search(monkeypatch):
+    """firth_fit's profile CIs agree with the bracketed search's bounds
+    to 1e-6 relative on BATCH_SHAPES columns and on each sex2
+    coefficient. The joint iteration finishes every side itself except
+    on the n = 60 shapes, where a handful of columns with a few cases
+    and up to 21 covariates converge too slowly and the search finishes
+    them (its own result, so it agrees trivially)."""
+    cases = []
+    for n, k, prev, B in BATCH_SHAPES:
+        rng = np.random.default_rng(n * 1000 + k * 10 + B)
+        X = rng.normal(size=(n, k))
+        effects = rng.normal(0.0, 0.6, size=B) * (rng.random(B) < 0.5)
+        eta = X[:, :1] * effects + math.log(prev / (1 - prev))
+        Y = (rng.random((n, B)) < 1 / (1 + np.exp(-eta))).astype(float)
+        cases += [
+            (X, np.ascontiguousarray(Y[:, b]), n == 60) for b in range(min(B, 4))
+        ]
+    import pandas as pd
+
+    from polars_mas_spark.sources.readers import bundled_sex2_path
+
+    df = pd.read_csv(bundled_sex2_path())
+    X = df[["age", "oc", "vic", "vicl", "vis", "dia"]].to_numpy(float)
+    y = df["case"].to_numpy(float)
+    cases += [
+        (X[:, [i] + [j for j in range(6) if j != i]], y, False) for i in range(6)
+    ]
+
+    for X, y, may_search in cases:
+        want = _search_reference(X, y)
+        searched = _searched_sides(monkeypatch)
+        got = firth_fit(X, y)
+        monkeypatch.undo()
+        assert may_search or searched == []
+        assert got["ci_low"] == pytest.approx(want[0], rel=1e-6)
+        assert got["ci_high"] == pytest.approx(want[1], rel=1e-6)
+
+
+def test_separated_profile_sides_fall_back_to_search(monkeypatch):
+    """On a completely separated design the joint iteration's steps run
+    longer than the ±5 clamp, so the bracketed search finishes both
+    sides and returns exactly its own bounds, per pair and through the
+    batch. A predictor that is all zeros gets today's (-inf, +inf) the
+    same way."""
+    rng = np.random.default_rng(0)
+    X = rng.normal(size=(40, 2))
+    y = (X[:, 0] > 0).astype(float)
+    want = _search_reference(X, y)
+    searched = _searched_sides(monkeypatch)
+    got = firth_fit(X, y)
+    assert sorted(searched) == [-1.0, 1.0]
+    assert (got["ci_low"], got["ci_high"]) == want
+    monkeypatch.undo()
+    many = firth_fit_many(X, [y, np.ascontiguousarray(y[::-1])])
+    assert (many[0]["ci_low"], many[0]["ci_high"]) == want
+
+    X0 = np.column_stack([np.zeros(30), rng.normal(size=30)])
+    y0 = (rng.random(30) < 0.3).astype(float)
+    for res in (firth_fit(X0, y0), firth_fit_many(X0, [y0, y0[::-1]])[0]):
+        assert (res["ci_low"], res["ci_high"]) == (-math.inf, math.inf)
+
+
+def test_batch_profile_ci_state_evaluations(monkeypatch):
+    """On a PheWAS-shaped chunk (n = 1,000, five covariates, prevalence
+    1-8%) the batch's profile CIs cost at most 14 state evaluations per
+    fit, counted as rows through _firth_states while _profile_ci_many
+    runs (the nested bracketed search took about 25), and no column
+    falls back to the per-pair fit."""
+    rng = np.random.default_rng(2024)
+    n, B = 1000, 48
+    X = np.column_stack([
+        rng.normal(size=n), rng.normal(size=n),
+        rng.integers(0, 2, n), rng.normal(size=(n, 3)),
+    ])
+    Y = np.empty((n, B))
+    for b in range(B):
+        prev = rng.uniform(0.01, 0.08)
+        coef = rng.normal(0.0, 0.15, 6)
+        coef[0] = rng.normal(0.0, 0.3) if b % 10 == 0 else 0.0
+        eta = X @ coef
+        eta += math.log(prev / (1 - prev)) - eta.mean()
+        Y[:, b] = rng.random(n) < 1 / (1 + np.exp(-eta))
+
+    evaluations, inside, fallbacks = [0], [False], []
+    states, profile_ci, per_pair = (
+        stats._firth_states, stats._profile_ci_many, stats.firth_fit
+    )
+
+    def counting_states(Xc, Q, betas):
+        if inside[0]:
+            evaluations[0] += len(betas)
+        return states(Xc, Q, betas)
+
+    def counted_ci(*args, **kwargs):
+        inside[0] = True
+        try:
+            return profile_ci(*args, **kwargs)
+        finally:
+            inside[0] = False
+
+    monkeypatch.setattr(stats, "_firth_states", counting_states)
+    monkeypatch.setattr(stats, "_profile_ci_many", counted_ci)
+    monkeypatch.setattr(stats, "firth_fit", lambda *a: fallbacks.append(1) or per_pair(*a))
+    got = firth_fit_many(X, list(Y.T))
+    assert len(got) == B and not fallbacks
+    assert evaluations[0] / B <= 14
