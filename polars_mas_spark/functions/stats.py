@@ -19,7 +19,9 @@ algorithms directly:
   Profile penalized-likelihood CIs take one joint Newton iteration per
   bound (Venzon & Moolgavkar 1988, as logistf). ``firth_fit_many`` fits
   many dependents on one design together, with firth_fit's decisions
-  and a different floating-point op order.
+  and a different floating-point op order: each state evaluation of a
+  chunk is a few GEMMs against Q, the k(k+1)/2 distinct products of
+  each design row's entries (n x k(k+1)/2).
 
 Design-matrix convention (reference models.py:58,73): the *tested*
 predictor is column 0, covariates follow, and the intercept is appended
@@ -32,6 +34,7 @@ touch Spark.
 
 from __future__ import annotations
 
+import functools
 import itertools
 import math
 from typing import Iterable
@@ -424,6 +427,15 @@ def _firth_newton(
     return beta, cov, converged, p, w, fisher
 
 
+# Iteration cap of each bracketed-search refit. On separated designs,
+# where the free coordinates' curvature nearly vanishes, a refit can
+# need hundreds of Newton iterations, and the logistf cap of 25 left
+# bounds up to 5e-4 relative off (n = 47-120, y = x[:, 0] + noise > 0);
+# at 200 the bounds of such fixtures were within 5e-7 of 1,000-iteration
+# refits, at up to 1.4x the 25-iteration search's CPU time.
+_PROFILE_REFIT_MAX_ITER = 200
+
+
 def _profile_pll(
     Xc: np.ndarray,
     y: np.ndarray,
@@ -458,9 +470,12 @@ def _profile_pll(
     # Looser inner tolerance than the headline fit: by the same envelope
     # argument the profile value's error is SECOND order in the inner
     # solve's error (1e-4 coords -> ~1e-8 in f), well inside the scalar
-    # search's tolerance; measured bound movement < 1e-14.
+    # search's tolerance; measured bound movement < 1e-14. The value
+    # holds only once the refit has converged, which on separated
+    # designs can take hundreds of iterations (_PROFILE_REFIT_MAX_ITER).
     beta_c, cov, _, p, w, fisher = _firth_newton(
-        Xc, y, free, beta0=beta0, xtol=1e-4, gtol=1e-4, ws=ws
+        Xc, y, free, beta0=beta0, max_iter=_PROFILE_REFIT_MAX_ITER,
+        xtol=1e-4, gtol=1e-4, ws=ws,
     )
     cjj = float(cov[j, j])
     tangent = cov[:, j] / cjj if (cjj > 0 and math.isfinite(cjj)) else None
@@ -871,13 +886,16 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
 # Columns x rows held in one chunk of the batched Firth fit. Every
 # working array of a chunk is (columns, rows), and the profile-CI pass
 # holds two sides per column, so this bounds the batch's memory. On
-# phewas_firth-shaped data (n = 1,000, k = 7, 146 dependents, one core)
-# 2^14, i.e. 16 columns, cost the least CPU: 258 ms per 146 fits,
-# against 304-351 ms at 2^12-2^13, 276-299 ms at 2^15-2^17 and 659 ms
-# per pair, with a 6 MB peak traced allocation.
-_BATCH_ELEMENTS = 2 ** 14
-# Elements of the row-wise X (x) X matrix (n x k^2) the batch keeps per
-# design. A larger design (very wide or tall) fits per pair.
+# phewas_firth-shaped data (n = 1,000, k = 7, one core; 800 dependents
+# in four calls of 200, min of 8) 2^15, i.e. 32 columns, cost the least
+# CPU: 474-478 ms, against 495-502 ms at 2^14, 619 ms at 2^13, 513 ms
+# at 2^16 and 1.9-2.1 s per pair, with a 3.5 MB peak traced allocation
+# per call. At n = 5,000 and 12,000 (3 and 2 columns, where 2^14 fits
+# the latter per pair) it took 2.55 and 6.7 ms per fit, against 3.1 and
+# 12.8 ms at 2^14.
+_BATCH_ELEMENTS = 2 ** 15
+# Elements of the [[_pair_products]] matrix Q (n x k(k+1)/2) the batch
+# keeps per design. A larger design (very wide or tall) fits per pair.
 _OUTER_ELEMENTS = 2 ** 22
 
 
@@ -898,29 +916,62 @@ def _stacked(fn, *arrays: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         return out, singular
 
 
+def _pair_products(Xc: np.ndarray) -> np.ndarray:
+    """Q for the batch: the k(k+1)/2 distinct products x_a x_b (a <= b)
+    of each row of ``Xc`` (n x k), in np.triu_indices order."""
+    a, b = np.triu_indices(Xc.shape[1])
+    return Xc[:, a] * Xc[:, b]
+
+
+@functools.lru_cache(maxsize=None)
+def _pair_layout(k: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Index maps between a k x k symmetric matrix, flattened, and its
+    k(k+1)/2 distinct entries (Q's columns): ``full`` gathers the
+    distinct entries into all k^2 positions, ``upper``/``lower`` pick
+    the (a, b) and (b, a) entries of each pair a <= b."""
+    a, b = np.triu_indices(k)
+    full = np.empty((k, k), dtype=np.intp)
+    full[a, b] = full[b, a] = np.arange(len(a))
+    maps = (full.ravel(), a * k + b, b * k + a)
+    for m in maps:
+        m.flags.writeable = False
+    return maps
+
+
 def _firth_states(
     Xc: np.ndarray, Q: np.ndarray, betas: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """(p, w, Fisher) for each row of ``betas``, row-major (m x n). The
-    Fisher matrices are one GEMM, W @ Q, with Q the row-wise X (x) X; the
-    sigmoid is _sigmoid_into's formula."""
-    eta = betas @ Xc.T
-    t = np.exp(-np.abs(eta))
-    u = t + 1.0
-    p = 1.0 / u
-    np.divide(t, u, out=t)
-    np.copyto(p, t, where=eta < 0.0)
+    Fisher matrices' distinct entries are one GEMM, W @ Q with Q the
+    [[_pair_products]] (n x k(k+1)/2), gathered into both triangles.
+    The sigmoid is 1 / (1 + exp(-eta)) in place: _sigmoid_into's value
+    for eta >= 0, within an ulp of it below, and 0 where exp overflows
+    (eta < -709, where _sigmoid_into's value is below 1e-308;
+    firth_fit_many ignores that warning)."""
+    p = betas @ Xc.T
+    np.negative(p, out=p)
+    np.exp(p, out=p)
+    p += 1.0
+    np.divide(1.0, p, out=p)
     w = 1.0 - p
     w *= p
     k = Xc.shape[1]
-    return p, w, (w @ Q).reshape(len(betas), k, k)
+    full, _, _ = _pair_layout(k)
+    return p, w, (w @ Q)[:, full].reshape(len(betas), k, k)
 
 
 def _pll_rows(Y: np.ndarray, P: np.ndarray, F: np.ndarray) -> np.ndarray:
-    """_pll_from_parts for each row."""
+    """_pll_from_parts for each row, with the controls' term summed as
+    sum(log(1 - p)) - y . log(1 - p)."""
     eps = 1e-300
-    ll = np.einsum("ij,ij->i", Y, np.log(P + eps))
-    ll += np.einsum("ij,ij->i", 1.0 - Y, np.log(1.0 - P + eps))
+    logs = P + eps
+    np.log(logs, out=logs)
+    ll = np.einsum("ij,ij->i", Y, logs)
+    np.subtract(1.0, P, out=logs)
+    logs += eps
+    np.log(logs, out=logs)
+    ll += logs.sum(axis=1)
+    ll -= np.einsum("ij,ij->i", Y, logs)
     sign, logdet = np.linalg.slogdet(F)
     return np.where(sign <= 0, -math.inf, ll + 0.5 * logdet)
 
@@ -934,12 +985,19 @@ def _scores(
     fisher_inv: np.ndarray,
 ) -> np.ndarray:
     """The Firth modified score X'(y - p + h (1/2 - p)) for each row
-    (m x k). All hat diagonals are one GEMM, Finv.reshape(m, k^2) @ Q.T."""
-    h = fisher_inv.reshape(len(p), -1) @ Q.T
+    (m x k). All hat diagonals h_i = x_i' Finv x_i are one GEMM, C @ Q.T,
+    where C holds Finv's distinct entries with each off-diagonal pair
+    summed (Finv_ab + Finv_ba)."""
+    _, upper, lower = _pair_layout(Xc.shape[1])
+    flat = fisher_inv.reshape(len(p), -1)
+    coef = flat[:, upper] + flat[:, lower]
+    coef[:, upper == lower] *= 0.5
+    h = coef @ Q.T
     h *= w
-    u = Y - p
-    u += h * (0.5 - p)
-    return u @ Xc
+    h *= 0.5 - p
+    h += Y
+    h -= p
+    return h @ Xc
 
 
 def _firth_newton_many(
@@ -1006,21 +1064,21 @@ def _firth_newton_many(
 
         cand = beta.copy()
         cand[:, fr] += step
-        p2, w2, f2 = np.empty_like(p), np.empty_like(w), np.empty_like(fisher)
+        p2, w2, f2 = _firth_states(Xc, Q, cand)
         pll2 = np.full(len(rows), math.nan)
-        guard = mx >= 1.0
-        easy = ~guard
-        if easy.any():
-            p2[easy], w2[easy], f2[easy] = _firth_states(Xc, Q, cand[easy])
-        if guard.any():
-            # Monotone-ascent safeguard on the large steps only.
-            stale = guard & np.isnan(pll)
-            if stale.any():
+        tries = np.flatnonzero(mx >= 1.0)
+        if tries.size:
+            # Monotone-ascent safeguard on the large steps only; the
+            # full step's state is the first try.
+            stale = tries[np.isnan(pll[tries])]
+            if stale.size:
                 pll[stale] = _pll_rows(Yw[stale], p[stale], fisher[stale])
-            tries = np.flatnonzero(guard)
-            for _hs in range(max_halvings + 1):
-                cand[tries, fr] = beta[tries, fr] + step[tries]
-                p2[tries], w2[tries], f2[tries] = _firth_states(Xc, Q, cand[tries])
+            for hs in range(max_halvings + 1):
+                if hs:
+                    cand[tries, fr] = beta[tries, fr] + step[tries]
+                    p2[tries], w2[tries], f2[tries] = _firth_states(
+                        Xc, Q, cand[tries]
+                    )
                 pll2[tries] = _pll_rows(Yw[tries], p2[tries], f2[tries])
                 tries = tries[~(pll2[tries] >= pll[tries] - 1e-12)]
                 if not tries.size:
@@ -1032,9 +1090,10 @@ def _firth_newton_many(
         retire(done, True)
         singular[rows[bad]] = True
         keep = ~(done | bad)
-        rows, Yw, beta, p, w, fisher, pll = (
-            a[keep] for a in (rows, Yw, beta, p, w, fisher, pll)
-        )
+        if not keep.all():
+            rows, Yw, beta, p, w, fisher, pll = (
+                a[keep] for a in (rows, Yw, beta, p, w, fisher, pll)
+            )
     retire(slice(None), False)
 
     ok = np.flatnonzero(~singular)
@@ -1070,11 +1129,10 @@ def _profile_ci_many(
     target = pll_full[side_col] - 0.5 * _Z975 * _Z975
     bound = np.full(len(starts), math.nan)
     rows = np.flatnonzero(np.isfinite(starts).all(axis=1))
-    b = starts[rows]
+    b, Y = starts[rows], Yt[side_col[rows]]
     for _ in range(_PROFILE_MAX_EVALS):
         if not rows.size:
             break
-        Y = Yt[side_col[rows]]
         p, w, fisher = _firth_states(Xc, Q, b)
         # A singular row's inverse is NaN, so its step fails.
         fisher_inv, _ = _stacked(np.linalg.inv, fisher)
@@ -1083,8 +1141,10 @@ def _profile_ci_many(
         done = _profile_converged(gap, score)
         bound[rows[done]] = b[done, 0]
         step, failed = _profile_steps(fisher_inv, score, gap, direction[rows])
+        b += step
         keep = ~(done | failed)
-        rows, b = rows[keep], b[keep] + step[keep]
+        if not keep.all():
+            rows, b, Y = rows[keep], b[keep], Y[keep]
     ok = (direction * (bound - beta[side_col, 0]) > 0).reshape(-1, 2).all(axis=1)
     return {
         c: (bound[2 * i], bound[2 * i + 1])
@@ -1146,10 +1206,12 @@ def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
     takes firth_fit's exact decision sequence in lockstep
     ([[_firth_newton_many]]), so results differ from per-pair fits only
     in floating-point op order (tests/test_stats_kernels.py holds them
-    to rtol 1e-9). Per iteration, all Fisher matrices are one GEMM,
-    W @ Q with Q the row-wise X (x) X (n x k^2), and all hat diagonals
-    are one more, Finv.reshape(B, k^2) @ Q.T; inverses, solves and
-    log-determinants are stacked, and the profile CIs of all columns are
+    to rtol 1e-9). Per state evaluation, all Fisher matrices are one
+    GEMM, W @ Q with Q the k(k+1)/2 distinct products x_a x_b of each
+    row ([[_pair_products]], n x k(k+1)/2), and all hat diagonals are
+    one more, C @ Q.T with C the inverse Fisher matrices' distinct
+    entries ([[_scores]]); inverses, solves and log-determinants are
+    stacked, and the profile CIs of all columns are
     one stacked joint iteration ([[_profile_ci_many]]). ``ys`` is
     consumed in chunks of _BATCH_ELEMENTS // n columns, so only one
     chunk is held at a time.
@@ -1158,7 +1220,7 @@ def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
     whose batched solve hit a singular matrix, whose full or null fit
     did not converge or whose profile iteration left a side unfinished,
     and every column when batching cannot help
-    (n > _BATCH_ELEMENTS / 2, an n x k^2 Q over _OUTER_ELEMENTS) or the
+    (n > _BATCH_ELEMENTS / 2, a Q over _OUTER_ELEMENTS) or the
     design is non-finite or rank-deficient (every column's Fisher
     matrix is then singular)."""
     X = np.asarray(X, dtype=np.float64)
@@ -1169,15 +1231,16 @@ def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
     width = _BATCH_ELEMENTS // max(n, 1)
     if (
         width < 2
-        or n * k * k > _OUTER_ELEMENTS
+        or n * k * (k + 1) // 2 > _OUTER_ELEMENTS
         or not np.isfinite(Xc).all()
         or np.linalg.matrix_rank(Xc) < k
     ):
         return [firth_fit(X, y) for y in ys]
-    Q = (Xc[:, :, None] * Xc[:, None, :]).reshape(n, k * k)
+    Q = _pair_products(Xc)
     out: list[dict] = []
     while chunk := list(itertools.islice(ys, width)):
-        fits = _firth_chunk(Xc, Q, np.array(chunk))
+        with np.errstate(over="ignore"):
+            fits = _firth_chunk(Xc, Q, np.array(chunk))
         out += [r if r is not None else firth_fit(X, y) for r, y in zip(fits, chunk)]
     return out
 

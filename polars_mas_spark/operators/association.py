@@ -440,8 +440,8 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
                 # skipped the nulls — moments inconsistent with n; the
                 # kernel's lstsq likewise blows up on the NaNs). An
                 # ALL-null covariate instead drops out of the design:
-                # the kernel's nunique(dropna=False) sees one value
-                # (NaN) and removes it as constant, and the covar_samp
+                # the kernel's constant check (_is_constant) sees one
+                # value (NaN) and removes it as constant, and the covar_samp
                 # NULL below excludes it from `active` the same way.
                 null_covs = [
                     display[i]
@@ -465,8 +465,8 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
                     continue
                 # Per-pair constant drop: Welford variance == 0 <=>
                 # constant (exactly — the merge formula accumulates 0 for
-                # identical values). The kernel uses pandas nunique on the
-                # same doubles; the two agree including for large-offset
+                # identical values). The kernel compares the min and max
+                # of the same doubles; the two agree including for large-offset
                 # covariates where a raw ss/n - mean**2 test would lose
                 # the signal to cancellation.
                 active = [0]
@@ -476,9 +476,9 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
                         # ALL-null covariate: its covar_samp is NULL
                         # (which mapInPandas delivers as NaN, so the
                         # NaN test below can't see the difference — the
-                        # non-null count can). The kernel's
-                        # nunique(dropna=False) sees one value and
-                        # drops it as constant; match that.
+                        # non-null count can). The kernel's constant
+                        # check sees one value and drops it as
+                        # constant; match that.
                         continue
                     v = r[f"__c{i}_{i}__"]
                     if v is None:
@@ -582,16 +582,21 @@ def _fit_linear_moments(df: DataFrame, config: MASConfig) -> DataFrame:
     return g.mapInPandas(solve, schema=LINEAR_RESULT_SCHEMA)
 
 
-def _nunique_values(arr) -> int:
-    """Distinct-value count of a 1-D array with pandas semantics
-    (``Series.nunique(dropna=False)``): all NA-likes collapse to one
-    value, -0.0 == 0.0. Series.nunique(dropna=False) is literally
-    ``len(self.unique())`` and ``Series.unique()`` delegates to
-    ``pd.unique`` on the values, so calling ``pd.unique`` on the raw
-    ndarray is the same hashtable over the same values — identical
-    count, minus the Series-construction overhead that dominated the
-    kernel's validation profile (r13)."""
-    return len(pd.unique(arr))
+def _is_constant(arr: np.ndarray) -> bool:
+    """Whether a 1-D array holds at most one distinct value, as pandas
+    counts them (``Series.nunique(dropna=False) <= 1``): an empty or
+    all-NaN array is constant, a NaN next to any other value makes two
+    values, and -0.0 == 0.0. A number array takes an O(n) min/max
+    compare (NaN propagates through both); any other dtype counts its
+    values with ``pd.unique``."""
+    if arr.dtype.kind not in "biuf":
+        return len(pd.unique(arr)) <= 1
+    if arr.size == 0:
+        return True
+    lo, hi = arr.min(), arr.max()
+    if lo != lo:  # a NaN: constant only if every value is NaN
+        return bool(np.isnan(arr).all())
+    return bool(lo == hi)
 
 
 def make_array_kernel(
@@ -637,7 +642,7 @@ def make_array_kernel(
 
     Every numeric decision here is made by the same operations on the
     same float64 values as a per-pair fit of one dependent (y.sum(),
-    pd.unique-based distinct counts, column_stack → add_intercept's
+    the [[_is_constant]] checks, column_stack → add_intercept's
     C-order copy), so the per-pair kernels stay bit-identical —
     tools/ab_kernel_battery.py checks this, and it holds the batch to
     rtol 1e-9."""
@@ -695,7 +700,7 @@ def make_array_kernel(
         # nonzero beta — a pure false positive. Fail the pair instead
         # (also keeps all three physical strategies result-identical;
         # the centered-moments formulation would report beta=0 here).
-        if _nunique_values(x) <= 1:
+        if _is_constant(x):
             for row in todo:
                 row["failed_reason"] = "Constant predictor."
             return rows
@@ -704,7 +709,7 @@ def make_array_kernel(
         active = [
             (orig, arr)
             for _safe, orig, arr in cov_arrays
-            if _nunique_values(arr) > 1
+            if not _is_constant(arr)
         ]
         terms = f"{predictor} + {' + '.join(orig for orig, _ in active)}"
         for row in todo:
@@ -1143,6 +1148,23 @@ def _pair_ids(spark: SparkSession, n_pairs: int) -> DataFrame:
     return spark.range(0, n_pairs, 1, n_tasks)
 
 
+def _numeric_rows(data: pd.DataFrame, cols: list[str]) -> np.ndarray:
+    """The columns ``cols`` of ``data`` as rows of a float64 matrix
+    (len(cols) x len(data)). A numpy bool, integer or float column is
+    cast; any other column goes through ``pd.to_numeric(errors="coerce")``,
+    so a value that is not a number becomes NaN, as a null does."""
+    out = np.empty((len(cols), len(data)))
+    for row, col in zip(out, cols):
+        s = data[col]
+        if isinstance(s.dtype, np.dtype) and s.dtype.kind in "biuf":
+            row[:] = s.to_numpy()
+        else:
+            row[:] = pd.to_numeric(s, errors="coerce").to_numpy(
+                dtype=np.float64, na_value=np.nan
+            )
+    return out
+
+
 def _fit_columnar(
     df: DataFrame,
     config: MASConfig,
@@ -1252,23 +1274,17 @@ def _fit_columnar(
                         tbl[recipe.sex_filter[0]]
                     ).to_numpy(zero_copy_only=False)
                 data = recipe.apply_pandas(data)
-            # The group kernel fetches each dependent's column through
-            # `numeric` when it needs it (see make_array_kernel), a few
-            # times per dependent, so plain numpy number columns skip
-            # pd.to_numeric (~80 us a call). Nulls become NaN; the
-            # predictor's own are masked by `keep`.
-            def numeric(col: str) -> np.ndarray:
-                s = data[col]
-                if isinstance(s.dtype, np.dtype) and s.dtype.kind in "biuf":
-                    return s.to_numpy().astype(np.float64)
-                return pd.to_numeric(s, errors="coerce").to_numpy(
-                    dtype=np.float64, na_value=np.nan
-                )
-
+            # The group kernel fetches a dependent's column a few times
+            # (see make_array_kernel): convert each column once, into one
+            # row of a dependents x rows matrix, which takes the place of
+            # the arrow table in memory.
+            del tbl
+            values = _numeric_rows(data, deps)
+            row_of = {d: i for i, d in enumerate(deps)}
             rows = akernel(
-                p, numeric(p),
+                p, _numeric_rows(data, [p])[0],
                 [(safe, orig, data[orig].to_numpy()) for safe, orig in cov_names],
-                deps, numeric,
+                deps, lambda dep: values[row_of[dep]],
                 keep=~data["__pred_isnull__"].to_numpy(),
             )
             yield pd.DataFrame(

@@ -866,6 +866,79 @@ def test_columnar_firth_mask_groups_match_per_pair_fits(spark, monkeypatch):
         np.testing.assert_allclose(got.loc[deps, col], want.loc[deps, col], rtol=1e-9)
 
 
+def test_columnar_coerces_dependents_to_float(spark):
+    """The columnar task turns each dependent into float64: an int8
+    column is cast, NaN and NULL are both missing, and a string column
+    goes through pd.to_numeric(errors="coerce"), so its digits are
+    numbers and its junk is missing. Each result equals a local Firth
+    fit of the coerced column's rows."""
+    import pyarrow as pa
+
+    from polars_mas_spark.functions.stats import firth_fit
+
+    rng = np.random.default_rng(71)
+    n = 300
+    x, age = rng.normal(0, 1, n), rng.normal(50, 10, n)
+    ys = [(rng.random(n) < 1 / (1 + np.exp(1.0 - 0.5 * x))).astype(float)
+          for _ in range(4)]
+    missing = [rng.random(n) < 0.1 for _ in range(3)]
+    digits = np.where(ys[3] == 1.0, "1", "0").astype(object)
+    digits[missing[2]] = "n/a"
+    table = pa.table({
+        "x": x,
+        "age": age,
+        "d_int8": pa.array(ys[0].astype(np.int8)),
+        "d_nan": np.where(missing[0], np.nan, ys[1]),
+        "d_null": pa.array(ys[2], mask=missing[1]),
+        "d_str": pa.array(digits.tolist(), pa.string()),
+    })
+    rows = {
+        "d_int8": (ys[0], np.ones(n, dtype=bool)),
+        "d_nan": (ys[1], ~missing[0]),
+        "d_null": (ys[2], ~missing[1]),
+        "d_str": (ys[3], ~missing[2]),
+    }
+    cfg = MASConfig(
+        predictors="x", dependents=list(rows), covariates=["age"],
+        model="firth", min_case_count=5,
+    ).resolve(table.column_names)
+    got = (run_associations(spark.createDataFrame(table), cfg, strategy="columnar")
+           .to_pandas().set_index("dependent"))
+    X = np.column_stack([x, age])
+    for dep, (y, keep) in rows.items():
+        row, want = got.loc[dep], firth_fit(X[keep], y[keep])
+        assert row["failed_reason"] == "nan", dep
+        assert (row["total_n"], row["cases"]) == (keep.sum(), y[keep].sum()), dep
+        for key in ("beta", "pval", "ci_low", "ci_high"):
+            assert row[key] == pytest.approx(want[key], rel=1e-9), (dep, key)
+
+
+def test_is_constant_matches_pandas_distinct_count():
+    """The kernel's constant check makes pandas' decision
+    (Series.nunique(dropna=False) <= 1) without hashing number arrays:
+    all-NaN is constant, NaN next to any value is two values, -0.0 equals
+    0.0, and object arrays are counted by pd.unique."""
+    from polars_mas_spark.operators.association import _is_constant
+
+    nan = np.nan
+    cases = [
+        (np.array([nan, nan, nan]), True),
+        (np.array([nan, 1.0, 1.0]), False),
+        (np.array([2.0, 2.0, nan]), False),
+        (np.array([-0.0, 0.0, 0.0]), True),
+        (np.array([1.5, 1.5]), True),
+        (np.array([1.5, 2.5]), False),
+        (np.array([3, 3], dtype=np.int8), True),
+        (np.array([3, 4], dtype=np.int8), False),
+        (np.array(["a", "a"], dtype=object), True),
+        (np.array(["a", None], dtype=object), False),
+        (np.array([None, None], dtype=object), True),
+    ]
+    for arr, constant in cases:
+        assert (pd.Series(arr).nunique(dropna=False) <= 1) is constant, arr
+        assert _is_constant(arr) is constant, arr
+
+
 def test_dotted_phecode_column_names(spark):
     # PheWAS dependents are phecode-named ("250.0") — dots must not be
     # parsed as struct accessors anywhere in the engine (colutils.qcol).

@@ -430,7 +430,7 @@ def test_firth_newton_many_flags_singular_rows_only():
     rng = np.random.default_rng(9)
     n = 200
     Xc = np.column_stack([rng.normal(size=(n, 2)), np.ones(n)])
-    Q = (Xc[:, :, None] * Xc[:, None, :]).reshape(n, 9)
+    Q = stats._pair_products(Xc)
     Y = (rng.random((2, n)) < 0.3).astype(float)
     beta0 = np.array([[0.0, 0.0, -0.8], [0.0, 0.0, 1e4]])
     beta, _, converged, _, _, _, singular = stats._firth_newton_many(
@@ -531,6 +531,45 @@ def test_separated_profile_sides_fall_back_to_search(monkeypatch):
     y0 = (rng.random(30) < 0.3).astype(float)
     for res in (firth_fit(X0, y0), firth_fit_many(X0, [y0, y0[::-1]])[0]):
         assert (res["ci_low"], res["ci_high"]) == (-math.inf, math.inf)
+
+
+def test_profile_search_refits_converge(monkeypatch):
+    """On a separated design some of the bracketed search's refits need
+    far more than logistf's 25 iterations; stopped there, the upper
+    bound was 1.1e-4 relative off. The bound must agree to 1e-6 with the
+    search whose refits get 1,000 iterations."""
+    rng = np.random.default_rng(10)
+    X = rng.normal(size=(120, 2))
+    y = (X[:, 0] + rng.normal(0.0, 0.05, 120) > 0).astype(float)
+    searched = _searched_sides(monkeypatch)
+    got = firth_fit(X, y)
+    assert 1.0 in searched
+    monkeypatch.setattr(stats, "_PROFILE_REFIT_MAX_ITER", 1000)
+    want = firth_fit(X, y)
+    assert got["ci_high"] == pytest.approx(want["ci_high"], rel=1e-6)
+
+
+def test_separated_profile_bound_follows_the_higher_maximum():
+    """The Firth penalized likelihood need not be concave: at the upper
+    bound of this separated design, the profile over the other two
+    coefficients has two local maxima. The one the search follows from
+    beta-hat lies on the target; a refit started from beta-hat's own
+    coordinates finds the other, 0.11 below it. The bound is the
+    profile's, i.e. the higher maximum's."""
+    X = np.random.default_rng(3).normal(size=(60, 2))
+    y = (X[:, 0] > 0).astype(float)
+    Xc = stats.add_intercept(X)
+    ws = stats._Workspace(Xc, y)
+    beta, _, _, p, _, fisher = stats._firth_newton(
+        Xc, y, np.ones(3, dtype=bool), beta0=stats._base_rate_start(y, 3), ws=ws
+    )
+    target = stats._pll_from_parts(y, p, fisher, ws) - 0.5 * stats._Z975**2
+    high = firth_fit(X, y)["ci_high"]
+    assert high == pytest.approx(47.2412, rel=1e-5)
+    on_path = stats._profile_pll(Xc, y, 0, high, np.array([0.0, -4.0, 5.0]), ws)
+    from_hat = stats._profile_pll(Xc, y, 0, high, beta, ws)
+    assert on_path[0] == pytest.approx(target, abs=1e-5)
+    assert from_hat[0] < target - 0.1
 
 
 def test_batch_profile_ci_state_evaluations(monkeypatch):
