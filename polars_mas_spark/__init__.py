@@ -5,7 +5,7 @@ table, preprocess it, fit one regression per (predictor, dependent)
 pair, correct for multiple testing, annotate and write the results.
 
 ``operators/`` also still holds what is left of a data-pipeline operator
-library (dedup, text, similarity, sampling, bloom) that the
+library (dedup, text, similarity, bloom) that the
 MAS pipeline never imports; ``staging.py`` belongs to it too.
 """
 

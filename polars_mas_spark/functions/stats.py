@@ -797,6 +797,23 @@ def _base_rate_start(y: np.ndarray, k: int) -> np.ndarray:
     return beta0
 
 
+def _rank_deficient(Xc: np.ndarray) -> bool:
+    """Whether the design's columns are linearly dependent, by
+    np.linalg.matrix_rank's SVD criterion. The k x k Gram matrix's
+    eigenvalues clear a well-conditioned design first, at a fraction of
+    the SVD's cost: a dependent design leaves the smallest eigenvalue
+    at rounding level (about n * eps of the largest), far below 1e-8.
+    A non-finite design is left to the fit."""
+    gram = Xc.T @ Xc
+    if not np.isfinite(gram).all():
+        return False
+    eig = np.linalg.eigvalsh(gram)
+    return bool(
+        eig[0] <= 1e-8 * eig[-1]
+        and np.linalg.matrix_rank(Xc) < Xc.shape[1]
+    )
+
+
 def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
     """Firth logistic regression with a penalized LRT p-value for coef 0.
 
@@ -804,7 +821,10 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
     the penalized likelihood-ratio test obtained by refitting with the
     tested coefficient constrained to zero; `converged` is False when
     either fit exhausts its iterations (the reference detects this via
-    ConvergenceWarning, models.py:42-44). ``ci_method="profile"``
+    ConvergenceWarning, models.py:42-44). A rank-deficient design gets
+    no p-value (NaN) and the interval (-inf, inf): its Jeffreys penalty
+    is -inf at every beta, so neither the penalized LRT nor a profile
+    bound exists. ``ci_method="profile"``
     (default) computes profile penalized-likelihood CIs like the
     reference's firthmodels delegate, each bound by one joint Newton
     iteration ([[_profile_bound]]) with the bracketed search
@@ -829,6 +849,17 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
     beta, cov, conv_full, p_full, _, fish_full = _firth_newton(
         Xc, y, all_free, beta0=_base_rate_start(y, k), ws=ws
     )
+    se = math.sqrt(max(cov[0, 0], 0.0))
+    if _rank_deficient(Xc):
+        return {
+            "pval": math.nan,
+            "beta": float(beta[0]),
+            "se": se,
+            "OR": math.exp(beta[0]),
+            "converged": bool(conv_full),
+            "ci_low": -math.inf,
+            "ci_high": math.inf,
+        }
     pll_full = _pll_from_parts(y, p_full, fish_full, ws)
 
     # LRT null fit warm-started from the full-model solution (the
@@ -846,7 +877,6 @@ def firth_fit(X: np.ndarray, y: np.ndarray, ci_method: str = "profile") -> dict:
 
     lr = max(2.0 * (pll_full - pll_null), 0.0)
     pval = chi2_sf(lr, 1.0)
-    se = math.sqrt(max(cov[0, 0], 0.0))
     if ci_method == "profile":
         # The joint iteration per bound; the bracketed search finishes a
         # side it cannot (see _profile_bound), or whose bound landed on
@@ -1233,7 +1263,7 @@ def firth_fit_many(X: np.ndarray, ys: Iterable[np.ndarray]) -> list[dict]:
         width < 2
         or n * k * (k + 1) // 2 > _OUTER_ELEMENTS
         or not np.isfinite(Xc).all()
-        or np.linalg.matrix_rank(Xc) < k
+        or _rank_deficient(Xc)
     ):
         return [firth_fit(X, y) for y in ys]
     Q = _pair_products(Xc)

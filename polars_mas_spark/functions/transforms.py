@@ -123,160 +123,6 @@ def _avg_tie_ranks(df: DataFrame, col: str, num_blocks: int | None):
     return ranked, df.filter(~valid), n
 
 
-_GN = "__pms_group_n__"
-
-
-def grouped_avg_tie_ranks(
-    df: DataFrame,
-    col: str,
-    group_col: str,
-    num_blocks: int | None = None,
-):
-    """Per-group average-tie-rank: the two-phase distributed rank (see
-    module docstring) generalized to rank ``col`` WITHIN each value of
-    ``group_col`` — the CCNet §4.4 shape (per-LANGUAGE perplexity
-    quantiles) where a per-group global window would funnel the
-    dominant language through one task.
-
-    Mechanics: block boundaries stay GLOBAL (one approxQuantile job —
-    a value-monotone block id is monotone within every group too, so
-    per-group ranks still compose from per-(group, block) sorted
-    passes); the tiny counts aggregate and the driver prefix sum become
-    per-(group, block); offsets + per-group valid counts come back as a
-    broadcast literal-table join keyed on (group, block). Driver state
-    is bounded by ``n_groups * num_blocks`` rows — the group column
-    must be LOW-CARDINALITY (language codes, sources, splits), which is
-    asserted (<= 10,000 cells) so a high-cardinality key fails loudly
-    instead of building a gigabyte literal table.
-
-    Returns ``(ranked, invalid)``: ``ranked`` carries ``_AR`` (the mean
-    of the tied rows' consecutive 1-based ranks within their group) and
-    ``_GN`` (the group's valid-row count); ``invalid`` is the null/NaN
-    slice untouched. ``ranked`` is None when no row is valid.
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    spark = df.sparkSession
-    if num_blocks is None:
-        num_blocks = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    valid = _valid_value(df, col)
-    vdf = df.filter(valid)
-
-    block_expr, n_blocks = range_block_column(vdf, col, num_blocks)
-    blocked = vdf.withColumn(_RB, block_expr)
-
-    counts = (
-        blocked.groupBy(qcol(group_col).alias("__g__"), F.col(_RB))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    )
-    if not counts:
-        return None, df.filter(~valid)
-    assert len(counts) <= 10_000, (
-        f"grouped rank over {len(counts)} (group, block) cells — "
-        f"'{group_col}' looks high-cardinality; this operator is for "
-        "bounded keys (languages, sources, splits)"
-    )
-    per_group: dict = {}
-    for r in counts:
-        per_group.setdefault(r["__g__"], {})[r[_RB]] = r["cnt"]
-    rows = []
-    for g, blocks in per_group.items():
-        n_g = sum(blocks.values())
-        running = 0
-        for b in range(n_blocks):
-            if b in blocks:
-                rows.append((g, b, running, n_g))
-                running += blocks[b]
-    gtype = df.schema[group_col].dataType
-    offsets = spark.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField("__g__", gtype),
-                StructField(_RB + "_o", LongType()),
-                StructField("__off__", LongType()),
-                StructField(_GN, LongType()),
-            ]
-        ),
-    )
-    # eqNullSafe: a NULL group value is a legal group (only the SCORE
-    # column gates validity); plain equality would silently drop it.
-    joined = blocked.join(
-        F.broadcast(offsets),
-        qcol(group_col).eqNullSafe(F.col("__g__"))
-        & (F.col(_RB) == F.col(_RB + "_o")),
-    ).drop("__g__", _RB + "_o")
-
-    # One sorted pass per (group, block): same tie-min rank + RANGE-frame
-    # tie-max count identity as _avg_tie_ranks; value-based blocks mean
-    # ties never straddle blocks.
-    w = Window.partitionBy(qcol(group_col), F.col(_RB)).orderBy(qcol(col).asc())
-    w_range = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    min_rank = F.rank().over(w) + F.col("__off__")
-    max_rank = F.count(F.lit(1)).over(w_range) + F.col("__off__")
-    avg_rank = (min_rank.cast("double") + max_rank.cast("double")) / F.lit(2.0)
-    ranked = joined.withColumn(_AR, avg_rank).drop(_RB, "__off__")
-    return ranked, df.filter(~valid)
-
-
-def quantile_buckets(
-    df: DataFrame,
-    score_col: str,
-    group_col: str,
-    n_buckets: int = 3,
-    labels: tuple | None = None,
-    out_col: str = "bucket",
-    label_col: str = "bucket_label",
-    num_blocks: int | None = None,
-) -> DataFrame:
-    """Per-group quantile-rank bucketing: bucket
-    ``s`` in ``[0, n_buckets)`` by the rank of ``score_col`` ascending
-    WITHIN each ``group_col`` value, ties sharing a bucket via the
-    average tie rank — ``bucket = floor(n_buckets * (avg_tie_rank -
-    0.5) / n_group)``, written mul before div so the IEEE result (and
-    the floor) is bit-identical cross-engine on exact rank inputs.
-    The distributed shape is [[grouped_avg_tie_ranks]] (one global approxQuantile boundary job,
-    one hash shuffle on (group, block) — no per-group single-task
-    window). NULL/NaN scores get a NULL bucket; optional ``labels``
-    (len == n_buckets) adds a label column (NULL for NULL buckets).
-
-    The CCNet §4.4 head/middle/tail perplexity cut is this operator at
-    n_buckets=3 grouped by language (operators.text.perplexity_thirds);
-    per-source quality tiers and per-split difficulty bands are the
-    same shape."""
-    if n_buckets < 1:
-        raise ValueError(f"n_buckets must be >= 1, got {n_buckets}")
-    if labels is not None and len(labels) != n_buckets:
-        raise ValueError(
-            f"labels must have exactly n_buckets={n_buckets} entries, "
-            f"got {len(labels)}"
-        )
-    ranked, invalid = grouped_avg_tie_ranks(
-        df, score_col, group_col, num_blocks
-    )
-    if ranked is None:
-        out = df.withColumn(out_col, F.lit(None).cast("int"))
-    else:
-        bucket = F.floor(
-            F.lit(float(n_buckets))
-            * (F.col(_AR) - F.lit(0.5))
-            / F.col(_GN).cast("double")
-        ).cast("int")
-        out_valid = ranked.withColumn(out_col, bucket).drop(_AR, _GN)
-        out_invalid = invalid.withColumn(out_col, F.lit(None).cast("int"))
-        out = out_valid.unionByName(out_invalid)
-    if labels is not None:
-        out = out.withColumn(
-            label_col,
-            F.element_at(
-                F.array(*[F.lit(str(l)) for l in labels]),
-                F.col(out_col) + 1,
-            ),
-        )
-    return out
-
-
 def rint(
     df: DataFrame, col: str, out_col: str | None = None,
     num_blocks: int | None = None,

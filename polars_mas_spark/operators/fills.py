@@ -83,9 +83,8 @@ def range_block_column(
             "column (add a numeric ingest id)."
         )
     if num_blocks <= 1:
-        # One block = no boundaries; approxQuantile with an empty
-        # probability list throws (found by the budget-selection
-        # property test at num_blocks=1).
+        # One block = no boundaries, and approxQuantile with an empty
+        # probability list throws, so skip the quantile job.
         return F.lit(0), 1
     probs = [i / num_blocks for i in range(1, num_blocks)]
     ordd = qcol(order_col).cast("double")

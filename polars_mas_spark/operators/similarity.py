@@ -1327,7 +1327,7 @@ def quantize_embeddings(
     isNotNull-guarded because ``F.greatest``/``F.least`` SKIP NULL
     operands — unguarded, least(127, NULL)=127 then greatest(-127,
     127)=127 would silently quantize a NULL component to the max
-    positive code (ADVICE r11 #1, the classifier_eval clamp trap).
+    positive code (the same NULL-clamp trap text.classifier_eval guards).
 
     Everything is JVM higher-order functions (transform / array_max /
     aggregate) — map-only, zero shuffles, whole-stage codegen; no UDF.

@@ -1,10 +1,10 @@
-"""Text analysis operators: language ID, quality scoring, token
-counting, document fingerprinting.
+"""Text analysis operators: quality and repetition signals,
+decontamination, document fingerprinting, lexical retrieval.
 
 Beyond-reference surface for the training-data pipeline. Everything is
 built from replace/length/split/regexp built-ins so it stays inside
 whole-stage codegen AND is reproducible in ANSI SQL for the DuckDB
-oracle (marker-word counting uses the replace-length trick instead of
+oracle (stopword counting uses the replace-length trick instead of
 engine-specific regex counting).
 """
 
@@ -15,15 +15,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from polars_mas_spark.colutils import nonempty_words, qcol, stage_columns
-
-# Small marker-word lists per language: enough signal for a heuristic
-# n-gram/stopword language id on clean text.
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": [" the ", " and ", " of ", " to ", " is "],
-    "de": [" der ", " und ", " die ", " ist ", " nicht "],
-    "fr": [" le ", " la ", " et ", " les ", " est "],
-    "es": [" el ", " de ", " que ", " los ", " es "],
-}
 
 STOPWORDS_EN = ["the", "and", "of", "to", "a", "in", "is", "it", "that", "for"]
 
@@ -39,85 +30,6 @@ def occurrence_count(col: Column, needle: str) -> Column:
 
 def _padded(col: Column) -> Column:
     return F.concat(F.lit(" "), F.lower(col), F.lit(" "))
-
-
-def lang_scores(text: Column) -> dict[str, Column]:
-    padded = _padded(text)
-    return {
-        lang: sum(occurrence_count(padded, m) for m in markers)
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
-def lang_id(df: DataFrame, text_col: str, out_col: str = "lang_guess") -> DataFrame:
-    """Argmax of marker-word hit counts; 'und' (undetermined) when no
-    marker fires. Deterministic tie-break: language order en,de,fr,es."""
-    scores = lang_scores(qcol(text_col))
-    langs = list(scores)
-    best = F.greatest(*[scores[lang] for lang in langs])
-    guess = F.lit("und")
-    # Build from the LAST language backwards so earlier languages win ties.
-    for lang in reversed(langs):
-        guess = F.when(scores[lang] == best, F.lit(lang)).otherwise(guess)
-    guess = F.when(best > 0, guess).otherwise(F.lit("und"))
-    return df.withColumn(out_col, guess)
-
-
-def token_count(df: DataFrame, text_col: str) -> DataFrame:
-    """Whitespace token count plus a BPE-ish subtoken count: letter
-    runs + digit runs + punctuation characters each count as one token
-    (the shape a byte-pair tokenizer's pre-tokenization produces)."""
-    text = qcol(text_col)
-    ws = F.size(nonempty_words(text))
-    letter_runs = F.size(
-        F.filter(F.split(text, "[^A-Za-z]+"), lambda t: t != "")
-    )
-    digit_runs = F.size(
-        F.filter(F.split(text, "[^0-9]+"), lambda t: t != "")
-    )
-    punct_chars = F.length(text) - F.length(
-        F.regexp_replace(text, r"[^\w\s]", "")
-    )
-    return df.select(
-        *df.columns,
-        ws.alias("n_tokens_ws"),
-        (letter_runs + digit_runs + punct_chars).alias("n_tokens_bpeish"),
-    )
-
-
-def text_stats(df: DataFrame, text_col: str) -> DataFrame:
-    """Length/punctuation/stopword quality features + a composite
-    quality score in [0, 1]."""
-    text = qcol(text_col)
-    n_chars = F.length(text)
-    words = nonempty_words(text)
-    n_words = F.size(words)
-    avg_word_len = F.when(n_words > 0, n_chars.cast("double") / n_words).otherwise(0.0)
-    punct = n_chars - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    punct_ratio = F.when(n_chars > 0, punct.cast("double") / n_chars).otherwise(0.0)
-    uppers = n_chars - F.length(F.regexp_replace(text, "[A-Z]", ""))
-    upper_ratio = F.when(n_chars > 0, uppers.cast("double") / n_chars).otherwise(0.0)
-    padded = _padded(text)
-    stop_hits = sum(occurrence_count(padded, f" {w} ") for w in STOPWORDS_EN)
-    stopword_ratio = F.when(
-        n_words > 0, stop_hits.cast("double") / n_words
-    ).otherwise(0.0)
-    quality = (
-        F.least(n_words.cast("double") / 20.0, F.lit(1.0)) * 0.4
-        + F.least(stopword_ratio * 4.0, F.lit(1.0)) * 0.3
-        + (1.0 - F.least(punct_ratio * 5.0, F.lit(1.0))) * 0.2
-        + (1.0 - F.least(upper_ratio * 5.0, F.lit(1.0))) * 0.1
-    )
-    return df.select(
-        *df.columns,
-        n_chars.alias("n_chars_computed"),
-        n_words.alias("n_words"),
-        F.round(avg_word_len, 6).alias("avg_word_len"),
-        F.round(punct_ratio, 6).alias("punct_ratio"),
-        F.round(upper_ratio, 6).alias("upper_ratio"),
-        F.round(stopword_ratio, 6).alias("stopword_ratio"),
-        F.round(quality, 6).alias("quality_score"),
-    )
 
 
 def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -469,7 +381,7 @@ def _ngram_stream(df: DataFrame, text_col: str, n: int) -> DataFrame:
         __toks__=nonempty_words(F.col("__t__"), lowercase=True),
     )
     toks = F.col("__toks__")
-    # Explicit size guard (the span/_char_trigram_windows idiom), not a
+    # Explicit size guard (the span-window idiom), not a
     # bare greatest() clamp: size(NULL) is NULL and F.greatest skips
     # NULL operands (CLAUDE.md) — without the guard a NULL/short text
     # emits a window that only the trailing n-word filter catches.
@@ -934,167 +846,6 @@ def winnow_fingerprints(
     ).drop(tmp)
 
 
-def model_quality_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    weights: list[float] | None = None,
-    bias: float = 0.0,
-    salt: str = "qmodel",
-    threshold: float = 0.5,
-    seed: int = 11,
-    n_buckets: int = 256,
-) -> DataFrame:
-    """Model-based quality filtering plumbing (the fastText-style linear
-    classifier step of DCLM / FineWeb-Edu curation): score each document
-    with a hashing-trick linear model — tokens hash into ``n_buckets``
-    weight slots (portable md5 bucket, sampling.hash_bucket), the logit
-    is ``bias + mean(w[bucket(token)])`` (mean, not sum, so the score is
-    length-invariant), and ``kept`` thresholds the sigmoid.
-
-    Pass trained ``weights`` in production; the default is a seeded
-    deterministic stand-in (this operator is the INFERENCE path — the
-    hashing, gather, and scoring plumbing — not a trained model).
-    Entirely JVM-side: the weight table is a literal array, the gather
-    is transform + element_at over the staged token array, so scoring a
-    corpus is one map-only pass with zero shuffles and no Python."""
-    import numpy as np
-
-    from polars_mas_spark.operators.sampling import hash_bucket
-
-    if weights is None:
-        rng = np.random.RandomState(seed)
-        weights = rng.normal(scale=1.0, size=n_buckets).round(6).tolist()
-    if len(weights) != n_buckets:
-        raise ValueError(
-            f"weights has {len(weights)} entries, expected n_buckets={n_buckets}"
-        )
-    w_lit = F.array(*[F.lit(float(w)) for w in weights])
-    staged = stage_columns(
-        # NULL text scores like an empty document (n_tokens=0, logit =
-        # bias) — mirrors the media decoders' None -> b"" contract.
-        df.select(
-            qcol(id_col).alias("doc_id"),
-            F.coalesce(qcol(text_col), F.lit("")).alias("__t__"),
-        ),
-        __toks__=nonempty_words(F.col("__t__"), lowercase=True),
-    )
-    toks = F.col("__toks__")
-    n = F.size(toks)
-    gathered = F.transform(
-        toks, lambda t: F.element_at(w_lit, hash_bucket(t, n_buckets, salt).cast("int") + 1)
-    )
-    total = F.aggregate(gathered, F.lit(0.0), lambda acc, x: acc + x)
-    logit = F.when(n > 0, F.lit(float(bias)) + total / n).otherwise(
-        F.lit(float(bias))
-    )
-    score = F.lit(1.0) / (F.lit(1.0) + F.exp(-logit))
-    return staged.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        # + 0.0 normalizes IEEE signed zero: the mean-of-weights logit is
-        # dense near 0, and a tiny negative rounds to -0.0 in DuckDB but
-        # +0.0 in Spark (gate hasher reprs them differently).
-        (F.round(logit, 6) + F.lit(0.0)).alias("logit"),
-        F.round(score, 6).alias("model_score"),
-        (score >= threshold).alias("kept"),
-    )
-
-
-def train_quality_classifier(
-    df: DataFrame,
-    text_col: str,
-    label_col: str,
-    n_buckets: int = 256,
-    salt: str = "qmodel",
-    fit_intercept: bool = True,
-    max_iter: int = 200,
-    tol: float = 1e-9,
-    reg_param: float = 0.0,
-) -> tuple[list[float], float]:
-    """Distributed training for the hashing-trick quality classifier
-    (the fastText/DCLM-style model ``model_quality_score`` scores with):
-    fit logistic weights over labeled documents and return
-    ``(weights, bias)`` ready to pass straight back into
-    ``model_quality_score`` — closing the curation loop (train on a
-    labeled seed set, score the full crawl).
-
-    The feature map is EXACTLY the inference path's: token t hashes to
-    ``hash_bucket(t, n_buckets, salt)`` and the document's feature
-    vector is the mean-pooled bucket histogram x[b] = count_b/n_tokens,
-    so ``dot(w, x) + bias == model_quality_score``'s
-    ``bias + mean(w[bucket(token)])`` identically.
-
-    Spark-first shape, sized for 100 TB of labeled docs:
-    - Featurization is ONE map-only JVM pass (split/lower/md5-bucket +
-      a sequence-filter histogram), zero shuffles, no Python. The
-      histogram costs O(n_buckets * n_tokens) per doc vs O(n_tokens)
-      for an explode + groupBy(doc) pivot — chosen deliberately: the
-      hashing trick keeps n_buckets small (<= a few hundred) and the
-      filter passes stay inside whole-stage codegen, while the explode
-      route pays a full doc-keyed shuffle of every token.
-    - The fit is MLlib ``LogisticRegression`` (breeze LBFGS/OWLQN over
-      ``treeAggregate`` gradient partials): per-iteration traffic is
-      O(n_buckets) per partition with map-side combine — the canonical
-      big-n / small-p layout. Labels outside {0,1} are dropped
-      (mirrors the MAS pipeline's per-task validation).
-
-    ``standardization=False`` so coefficients are in raw feature units
-    (directly usable as score weights) even under L2; with
-    ``reg_param=0`` the optimum is the plain MLE, which the unit tests
-    bind against the engine's own golden-validated numpy
-    ``logistic_mle`` kernel and, on per-bucket-separable planted data,
-    against the closed-form log-odds (driver query
-    ``quality_classifier_train``).
-
-    Gauge caveat: mean-pooled features sum to 1 on every non-empty doc,
-    so with ``fit_intercept=True`` the intercept is collinear with the
-    feature block and the MLE is a ridge (``w + c, bias - c`` all
-    equivalent). Scores on TRAINED-vocabulary docs are unaffected, but
-    docs whose tokens all hash to never-seen buckets score ``bias``
-    alone, which IS gauge-dependent. For reproducible weights pass
-    ``fit_intercept=False`` (pins bias to 0; per-bucket-separable data
-    then has a closed form) or a small ``reg_param`` (pins the
-    minimum-norm point on the ridge)."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.functions import array_to_vector
-
-    from polars_mas_spark.operators.sampling import hash_bucket
-
-    staged = stage_columns(
-        df.select(
-            qcol(label_col).cast("double").alias("__y__"),
-            F.coalesce(qcol(text_col), F.lit("")).alias("__t__"),
-        ),
-        __b__=F.transform(
-            nonempty_words(F.col("__t__"), lowercase=True),
-            lambda t: hash_bucket(t, n_buckets, salt).cast("int"),
-        ),
-    )
-    b = F.col("__b__")
-    n = F.size(b)
-    hist = F.transform(
-        F.sequence(F.lit(0), F.lit(n_buckets - 1)),
-        lambda k: F.when(
-            n > 0, F.size(F.filter(b, lambda t: t == k)) / n
-        ).otherwise(F.lit(0.0)),
-    )
-    feats = staged.select(
-        F.col("__y__").alias("label"), array_to_vector(hist).alias("features")
-    ).where(F.col("label").isin(0.0, 1.0))
-    model = LogisticRegression(
-        maxIter=max_iter,
-        tol=tol,
-        regParam=reg_param,
-        fitIntercept=fit_intercept,
-        standardization=False,
-    ).fit(feats)
-    return (
-        [float(w) for w in model.coefficients.toArray()],
-        float(model.intercept),
-    )
-
-
 def classifier_eval(
     df: DataFrame,
     id_col: str,
@@ -1105,9 +856,9 @@ def classifier_eval(
     holdout_mod: int = 5,
 ) -> DataFrame:
     """Train/holdout evaluation report for a scored corpus — the
-    accept/reject gate after [[train_quality_classifier]] (VERDICT r10
-    next-steps #5): bucketed AUC plus the confusion counts at a score
-    threshold, per split, in ONE aggregation pass over score buckets.
+    accept/reject gate for a document classifier: bucketed AUC plus
+    the confusion counts at a score threshold, per split, in ONE
+    aggregation pass over score buckets.
 
     Returns one row per split ('train' / 'holdout') of ALL-INTEGER
     columns — no rounded quotients can diverge cross-engine (the r9
@@ -1207,400 +958,6 @@ def classifier_eval(
             F.sum(F.when(pred_pos, F.col("neg_b")).otherwise(0)).alias("fp"),
             F.sum(F.when(~pred_pos, F.col("pos_b")).otherwise(0)).alias("fn"),
         )
-    )
-
-
-def char_trigram_scores(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    alpha: float = 0.5,
-    vocab: int = 256,
-) -> DataFrame:
-    """CCNet-style perplexity filtering (Wenzek et al. 2020) with a
-    self-trained character-trigram LM: count every char trigram over
-    the corpus once, smooth additively (``alpha``, alphabet size
-    ``vocab``), and score each document by its mean negative
-    log-likelihood and perplexity. High-ppl documents are gibberish /
-    non-language; low-ppl ones are boilerplate — the classic two-sided
-    quality signal.
-
-    Scale shape: ONE pass over corpus trigrams builds the counts (hash
-    aggregate with map-side combine); context (bigram) totals derive
-    from the trigram table itself — no second corpus pass; the model
-    table is bounded by the distinct-trigram count (<= charset^3,
-    corpus-independent) and BROADCASTS back, so scoring is a map-side
-    join over the exploded document trigrams. Any trigram absent from
-    the TRAINING corpus scores the uniform floor ln(1/V) — the model
-    table is keyed by trigram alone, so context-aware smoothing only
-    shapes probabilities of trigrams the corpus has seen (self-scoring,
-    the mode this operator runs in, never hits the floor at all).
-    Documents shorter than 3 chars emit (0, NULL, NULL)."""
-    base, tris, model = _char_trigram_lm(df, id_col, text_col, alpha, vocab)
-    scored = (
-        tris.join(F.broadcast(model), on="tri", how="left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_trigrams"),
-            F.avg(
-                -F.coalesce(
-                    F.col("logp"), F.log(F.lit(1.0 / vocab))
-                )
-            ).alias("nll_mean"),
-        )
-    )
-    ids = base.select("doc_id")
-    return ids.join(scored, on="doc_id", how="left").select(
-        "doc_id",
-        F.coalesce("n_trigrams", F.lit(0)).alias("n_trigrams"),
-        F.col("nll_mean"),
-        F.exp("nll_mean").alias("ppl"),
-    )
-
-
-def _char_trigram_lm(df, id_col, text_col, alpha, vocab):
-    """Shared LM build for [[char_trigram_scores]] and
-    [[perplexity_thirds]]: ``(base, tris, model)`` where ``base`` is
-    (doc_id, __t__, __tris__), ``tris`` the exploded (doc_id, tri)
-    stream, and ``model`` the broadcastable (tri, logp) table."""
-    base, tris = _char_trigram_windows(df, id_col, text_col)
-    tri_counts = tris.groupBy("tri").agg(F.count("*").alias("c_tri"))
-    # Context (bigram) totals as a sum window over the trigram table —
-    # NOT a self-join: tri_counts fed both join sides before (r12) and
-    # each side replayed the full corpus explode+aggregate (the model
-    # subtree cost two corpus passes instead of one). The window
-    # shuffles only the model table (bounded by distinct trigrams,
-    # corpus-independent); c_ctx is the same integer sum.
-    model = tri_counts.withColumn(
-        "c_ctx",
-        F.sum("c_tri").over(
-            Window.partitionBy(F.substring("tri", 1, 2))
-        ),
-    ).select(
-        "tri",
-        F.log(
-            (F.col("c_tri") + F.lit(float(alpha)))
-            / (F.col("c_ctx") + F.lit(float(alpha * vocab)))
-        ).alias("logp"),
-    )
-    return base, tris, model
-
-
-def _char_trigram_windows(df, id_col, text_col):
-    """(base, tris): the stride-1 char-trigram stream of a document
-    frame — the scoring-side half of [[_char_trigram_lm]], shared with
-    the epoch-static streaming scorer [[perplexity_bucket_assign]]."""
-    base = stage_columns(
-        df.select(
-            qcol(id_col).alias("doc_id"),
-            F.lower(F.coalesce(qcol(text_col), F.lit(""))).alias("__t__"),
-        ),
-        __tris__=F.when(
-            F.length(F.col("__t__")) >= 3,
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.length(F.col("__t__")) - 2, F.lit(1)),
-                ),
-                lambda i: F.substring(F.col("__t__"), i, 3),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
-    tris = base.select("doc_id", F.explode("__tris__").alias("tri"))
-    return base, tris
-
-
-def perplexity_thirds(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    alpha: float = 0.5,
-    vocab: int = 256,
-    quant: float = 1_000_000.0,
-    n_buckets: int = 3,
-    labels: tuple = ("head", "middle", "tail"),
-    num_blocks: int | None = None,
-) -> DataFrame:
-    """CCNet §4.4 perplexity bucketing (Wenzek et al. 2020): cut each
-    LANGUAGE's perplexity distribution into equal-rank thirds —
-    ``head`` (lowest perplexity, closest to the LM's training
-    distribution), ``middle``, ``tail`` — the bucket labels LLM corpus
-    recipes cite when they say "CCNet head+middle". The LM is the
-    self-trained char-trigram model of [[char_trigram_scores]] (the
-    documented deviation from CCNet's Wikipedia-trained KenLM: no
-    external model artifacts in this engine); the cut composes
-    [[quantile_buckets]]' per-group two-phase distributed rank, so no
-    language ever funnels through a single task.
-
-    Cross-engine exactness (the reason this does NOT rank the double
-    ``nll_mean`` of [[char_trigram_scores]]): each doc's score is the
-    integer sum of per-trigram ``round(-logp * quant)`` micro-nats
-    divided once by the trigram count — integer sums are exact in any
-    aggregation order (the q11 integer-cents pattern), and one division
-    of identical integers is the identical IEEE double in Spark and
-    DuckDB, so rank ties are bit-deterministic in both engines.
-    Ranking a float mean instead would let Spark's own shuffle-read
-    order re-roll last-ulp ties between duplicate documents run to run
-    (the r7 flap class). Docs with no trigrams (< 3 chars) or NULL
-    text get a NULL bucket.
-
-    Output: ``(id, lang, n_trigrams, nll_q, bucket, bucket_label)`` —
-    ``nll_q`` is the exact integer micro-nat sum (oracle-bindable),
-    ``bucket`` in [0, n_buckets) ascending perplexity.
-
-    Scale shape: one trigram-count pass + broadcast model join (the
-    char_trigram_scores plan), then ONE hash shuffle on (lang, block)
-    for the rank; driver state = per-(lang, block) counts, bounded by
-    language cardinality x num_blocks.
-    """
-    from polars_mas_spark.functions.transforms import quantile_buckets
-
-    base, tris, model = _char_trigram_lm(df, id_col, text_col, alpha, vocab)
-    scored = _trigram_int_scores(tris, model, vocab, quant)
-    ids = df.select(
-        qcol(id_col).alias("doc_id"), qcol(lang_col).alias("__lang__")
-    )
-    joined = ids.join(scored, on="doc_id", how="left").select(
-        "doc_id",
-        "__lang__",
-        F.coalesce("n_trigrams", F.lit(0)).alias("n_trigrams"),
-        "nll_q",
-        (F.col("nll_q").cast("double") / F.col("n_trigrams")).alias("__s__"),
-    )
-    # Materialize the per-doc score table ONCE before the rank phase
-    # (guide §3.3/§5: truncate a replayed subtree with a narrow
-    # intermediate). quantile_buckets runs two driver jobs
-    # (approxQuantile block boundaries + the per-(lang, block) counts
-    # collect) and its final plan unions valid/invalid slices and joins
-    # the broadcast offset table — without truncation every one of
-    # those consumers replays the FULL trigram pipeline (explode +
-    # LM aggregate + broadcast score join): the before-plan for this
-    # query carried 16 parquet scans of the document table (r12,
-    # plans/r12/perplexity_thirds_before.txt); measured 7.20 -> 4.03 s
-    # at sf0.1. One row per document, 5 narrow columns — but still
-    # O(corpus doc count), so the materialization is SIZE-GATED (r13,
-    # VERDICT r12 #3): localCheckpoint locally, recomputable DISK_ONLY
-    # persist above the threshold (staging.materialize_stage).
-    from polars_mas_spark.staging import materialize_stage
-
-    joined = materialize_stage(joined, "perplexity per-doc scores")
-    out = quantile_buckets(
-        joined,
-        "__s__",
-        "__lang__",
-        n_buckets=n_buckets,
-        labels=labels,
-        num_blocks=num_blocks,
-    )
-    return out.select(
-        F.col("doc_id").alias(id_col),
-        F.col("__lang__").alias(lang_col),
-        "n_trigrams",
-        "nll_q",
-        "bucket",
-        "bucket_label",
-    )
-
-
-def _trigram_int_scores(tris, model, vocab, quant):
-    """(doc_id, n_trigrams, nll_q): the exact integer micro-nat scoring
-    aggregate shared by [[perplexity_thirds]] and the epoch-static
-    streaming scorer [[perplexity_bucket_assign]] — identical
-    expressions so batch and micro-batch scores are bit-equal."""
-    nll_q_term = F.round(
-        -F.coalesce(F.col("logp"), F.log(F.lit(1.0 / vocab)))
-        * F.lit(float(quant)),
-        0,
-    ).cast("long")
-    return (
-        tris.join(F.broadcast(model), on="tri", how="left")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_trigrams"),
-            F.sum(nll_q_term).alias("nll_q"),
-        )
-    )
-
-
-def char_trigram_model(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    alpha: float = 0.5,
-    vocab: int = 256,
-    materialize: bool = True,
-) -> DataFrame:
-    """The (tri, logp) trigram-LM table of [[char_trigram_scores]]
-    exposed as an EPOCH ARTIFACT: compute it once per crawl epoch over
-    the accepted corpus, then every streaming micro-batch scores
-    against the broadcast table without re-reading the corpus — the
-    same epoch-static role the centroid matrix plays for the r11
-    semantic twins. Bounded by the distinct-trigram count
-    (<= charset^3), corpus-size independent.
-
-    ``materialize`` (default True) SEVERS the result from the corpus
-    lineage via an eager ``localCheckpoint``. This is load-bearing, not
-    an optimization: ``cache()`` is NOT an epoch snapshot — any later
-    append to the corpus path triggers Spark's ``recacheByPath``, which
-    re-materializes the cached plan from a refreshed file listing and
-    silently RE-TRAINS the LM on post-epoch files (observed
-    non-deterministically: the drift depends on file-listing cache
-    timing). On a cluster, prefer writing the table to its own path per
-    epoch; localCheckpoint is the in-session equivalent. Pass
-    ``materialize=False`` only when the caller persists it itself."""
-    _, _, model = _char_trigram_lm(df, id_col, text_col, alpha, vocab)
-    return model.localCheckpoint(eager=True) if materialize else model
-
-
-def perplexity_cut_points(
-    thirds: DataFrame,
-    lang_col: str = "lang",
-    n_buckets: int | None = None,
-) -> list[tuple]:
-    """Driver-tiny epoch artifact derived from a [[perplexity_thirds]]
-    output: per-language RUNNING-MAX score cut points ``[(lang,
-    [c_0, ..., c_{n_buckets-2}])]`` where ``c_b`` is the max score
-    (nll_q / n_trigrams — the exact rank key) over buckets <= b, with
-    empty buckets filling down (-inf when every bucket <= b is empty).
-    ``n_buckets`` is DERIVED from the thirds frame (max bucket + 1) by
-    default — passing a count that disagrees with how the thirds were
-    built would silently truncate or pad the cut list and misassign
-    every downstream micro-batch (review r12).
-
-    The running-max construction makes threshold assignment replay the
-    RANK cut exactly: scores are monotone across buckets and ties never
-    straddle a bucket (quantile_buckets' average-tie-rank), so for a
-    doc in rank-bucket B, ``count(b: score > c_b) == B`` — including
-    the degenerate languages where the floor formula leaves a LOWER
-    bucket empty (2 docs land in buckets 0 and 2; a 1-doc language
-    lands in bucket 1), which a naive per-bucket-max threshold would
-    misassign. Bounded by language cardinality x n_buckets."""
-    rows = (
-        thirds.filter(F.col("bucket").isNotNull())
-        .groupBy(qcol(lang_col).alias("__lang__"), "bucket")
-        .agg(
-            F.max(
-                F.col("nll_q").cast("double") / F.col("n_trigrams")
-            ).alias("mx")
-        )
-        .collect()
-    )
-    per: dict = {}
-    for r in rows:
-        per.setdefault(r["__lang__"], {})[r["bucket"]] = r["mx"]
-    if n_buckets is None:
-        n_buckets = 1 + max(
-            (b for byb in per.values() for b in byb), default=0
-        )
-    out = []
-    for lang, byb in sorted(per.items(), key=lambda kv: repr(kv[0])):
-        cuts, run = [], float("-inf")
-        for b in range(n_buckets - 1):
-            if b in byb:
-                run = max(run, byb[b])
-            cuts.append(run)
-        out.append((lang, cuts))
-    return out
-
-
-def perplexity_bucket_assign(
-    df: DataFrame,
-    model: DataFrame,
-    cut_points: list[tuple],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    vocab: int = 256,
-    quant: float = 1_000_000.0,
-    labels: tuple = ("head", "middle", "tail"),
-) -> DataFrame:
-    """Micro-batch member of the CCNet bucketing epoch (the
-    foreachBatch twin of [[perplexity_thirds]], the r11 epoch-static
-    pattern): score each document against the EPOCH trigram LM
-    ([[char_trigram_model]], broadcast) with the identical integer
-    micro-nat arithmetic, then assign head/middle/tail by the epoch's
-    [[perplexity_cut_points]] — ``bucket = count(c in cuts: score >
-    c)``, map-only, no rank, no shuffle beyond the per-doc aggregate.
-    Same output schema as the batch operator; parity on epoch members
-    is exact (tests/test_streaming_decontaminate.py). Docs with no
-    trigrams, and languages absent from the epoch cut points (a new
-    language mid-epoch — give it buckets next epoch), get NULL."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        StructField,
-        StructType,
-    )
-
-    n_cuts = max((len(cs) for _, cs in cut_points), default=0)
-    if len(labels) < n_cuts + 1:
-        raise ValueError(
-            f"{len(labels)} labels cannot name {n_cuts + 1} buckets — "
-            "cut_points came from an epoch with more buckets than this "
-            "label tuple (the element_at lookup would read past the "
-            "label array)"
-        )
-    spark = df.sparkSession
-    _, tris = _char_trigram_windows(df, id_col, text_col)
-    scored = _trigram_int_scores(tris, model, vocab, quant)
-    ids = df.select(
-        qcol(id_col).alias("doc_id"), qcol(lang_col).alias("__lang__")
-    )
-    gtype = df.schema[lang_col].dataType
-    cuts = spark.createDataFrame(
-        [(lang, [float(c) for c in cs]) for lang, cs in cut_points],
-        StructType(
-            [
-                StructField("__lang__", gtype),
-                StructField("__cuts__", ArrayType(DoubleType())),
-            ]
-        ),
-    )
-    # eqNullSafe: a NULL language is a legal group in the batch cut
-    # (grouped_avg_tie_ranks), so it must match its cut row here too.
-    joined = (
-        ids.join(scored, on="doc_id", how="left")
-        .join(
-            F.broadcast(cuts.withColumnRenamed("__lang__", "__clang__")),
-            F.col("__lang__").eqNullSafe(F.col("__clang__")),
-            "left",
-        )
-        .drop("__clang__")
-        .select(
-            "doc_id",
-            "__lang__",
-            F.coalesce("n_trigrams", F.lit(0)).alias("n_trigrams"),
-            "nll_q",
-            (F.col("nll_q").cast("double") / F.col("n_trigrams")).alias("__s__"),
-            "__cuts__",
-        )
-    )
-    bucket = F.when(
-        F.col("__s__").isNotNull() & F.col("__cuts__").isNotNull(),
-        F.size(
-            F.filter(F.col("__cuts__"), lambda c: F.col("__s__") > c)
-        ),
-    ).cast("int")
-    out = joined.withColumn("bucket", bucket)
-    return out.select(
-        F.col("doc_id").alias(id_col),
-        F.col("__lang__").alias(lang_col),
-        "n_trigrams",
-        "nll_q",
-        "bucket",
-        # Explicit isNotNull guard: Spark 4.1 codegen's element_at
-        # returns the LAST element (not NULL) when the index is a
-        # runtime NULL from a CASE WHEN — only constant-folded literal
-        # NULL indexes behave; same guard-the-nullable-clamp class as
-        # F.greatest/F.least (CLAUDE.md).
-        F.when(
-            F.col("bucket").isNotNull(),
-            F.element_at(
-                F.array(*[F.lit(str(l)) for l in labels]),
-                F.col("bucket") + 1,
-            ),
-        ).alias("bucket_label"),
     )
 
 

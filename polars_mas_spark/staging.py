@@ -1,9 +1,8 @@
 """Size-gated materialization for multi-consumer intermediates.
 
-VERDICT r12 "What's wrong" #3: two corpus-width intermediates (the
-paragraph passage table, the perplexity per-doc score table) were
-``localCheckpoint``-ed unconditionally. localCheckpoint is the right
-local/bench call — it truncates the plan so N consumers share one
+A corpus-width intermediate with several consumers (such as dedup's
+paragraph passage table) wants ``localCheckpoint`` locally and at
+bench scale — it truncates the plan so N consumers share one
 computation — but its blocks are NON-fault-tolerant executor-local
 storage with no lineage: at 100 TB a corpus-sized copy means an
 executor loss fails the whole job, and storage is O(corpus) per query
@@ -12,8 +11,7 @@ threshold and switches to an EAGER ``persist(StorageLevel.DISK_ONLY)``
 above it: blocks are spill-managed and the retained lineage lets Spark
 recompute lost partitions instead of failing; on a multi-node cluster
 with strict durability needs, write the stage to its own parquet path
-per epoch instead (the ``char_trigram_model(materialize=True)``
-pattern this mirrors).
+per epoch instead.
 
 The gate reads Catalyst's optimized-plan size estimate — no extra job.
 Estimates scale with the source file bytes, so the gate is

@@ -417,17 +417,6 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_weighted_sample_is_takeordered_not_global_sort(spark):
-    """Top-n by jitter key must compile to TakeOrderedAndProject
-    (per-partition heaps merged on the driver), never a full global
-    Sort + Limit of the corpus."""
-    from polars_mas_spark.operators import sampling as smp
-
-    docs = _docs(spark).select("doc_id", "n_chars")
-    plan = plan_of(smp.weighted_sample_n(docs, "doc_id", "n_chars", n=200))
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_span_decontaminate_bench_broadcast_no_pairs(spark):
     """The benchmark fingerprint set must reach the corpus windows as a
     BROADCAST (semi) join — the corpus n-gram stream never shuffles for

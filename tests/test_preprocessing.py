@@ -92,22 +92,24 @@ def test_forward_fill_requires_order_col(wide_df):
         handle_missing_covariates(wide_df, cfg)
 
 
-def test_forward_fill_matches_sequential_semantics(spark):
+@pytest.mark.parametrize("num_blocks", [1, 3])
+def test_forward_fill_matches_sequential_semantics(spark, num_blocks):
     pdf = pd.DataFrame(
         {"ord": range(10), "v": [None, 1.0, None, None, 4.0, None, 6.0, None, None, None]}
     )
     df = spark.createDataFrame(pdf).repartition(4)
-    out = forward_fill(df, ["v"], "ord", num_blocks=3)
+    out = forward_fill(df, ["v"], "ord", num_blocks=num_blocks)
     got = [r["v"] for r in out.orderBy("ord").collect()]
     assert got == [None, 1.0, 1.0, 1.0, 4.0, 4.0, 6.0, 6.0, 6.0, 6.0]
 
 
-def test_backward_fill_matches_sequential_semantics(spark):
+@pytest.mark.parametrize("num_blocks", [1, 3])
+def test_backward_fill_matches_sequential_semantics(spark, num_blocks):
     pdf = pd.DataFrame(
         {"ord": range(10), "v": [None, 1.0, None, None, 4.0, None, 6.0, None, None, None]}
     )
     df = spark.createDataFrame(pdf).repartition(4)
-    out = backward_fill(df, ["v"], "ord", num_blocks=3)
+    out = backward_fill(df, ["v"], "ord", num_blocks=num_blocks)
     got = [r["v"] for r in out.orderBy("ord").collect()]
     assert got == [1.0, 1.0, 4.0, 4.0, 4.0, 6.0, 6.0, None, None, None]
 
@@ -368,16 +370,9 @@ def test_covariate_correlations_values_and_guards(spark):
 
 def test_new_operators_accept_dotted_column_names(spark):
     """qcol discipline (colutils): dotted user column names must work
-    through covariate_correlations and the sampling operators —
-    F.col('250.1') would parse as a struct access and fail or silently
-    misresolve."""
-    import datetime as dt
-
+    through covariate_correlations — F.col('250.1') would parse as a
+    struct access and fail or silently misresolve."""
     from polars_mas_spark.operators.preprocessing import covariate_correlations
-    from polars_mas_spark.operators.sampling import (
-        temporal_split,
-        weighted_sample_n,
-    )
 
     df = spark.createDataFrame(
         [(i, float(i), float(i) * 2 + 1) for i in range(40)],
@@ -388,9 +383,6 @@ def test_new_operators_accept_dotted_column_names(spark):
         for r in covariate_correlations(df, ["250.1", "008.5"]).collect()
     }
     assert corr[("250.1", "008.5")] == 1.0
-    assert weighted_sample_n(df, "id", "008.5", 10).count() == 10
-    ts_df = df.withColumn("ts", F.lit(dt.datetime(2024, 1, 1)))
-    assert temporal_split(ts_df, "ts", "2024-06-01").count() == 40
 
 
 def test_drop_correlated_covariates_greedy_first_kept_wins(spark):

@@ -155,30 +155,6 @@ def test_span_dedup_total_and_monotone(spark, txts):
 
 
 @given(
-    weights=st.dictionaries(
-        st.sampled_from(["0", "1", "2", "3"]),
-        st.floats(min_value=0.05, max_value=1.0),
-        min_size=1,
-        max_size=4,
-    )
-)
-@SETTINGS
-def test_mixture_sample_never_upsamples_and_is_subset(spark, weights):
-    """Every stratum's sample is a subset of its input rows (no
-    upsampling by construction) and unlisted strata are excluded."""
-    from polars_mas_spark.operators import sampling as smp
-
-    ids = spark.range(0, 400).select(
-        F.col("id").alias("key"), (F.col("id") % 4).cast("string").alias("grp")
-    )
-    out = smp.mixture_sample(ids, "key", "grp", weights)
-    got = out.groupBy("grp").count().collect()
-    for r in got:
-        assert r["grp"] in weights
-        assert r["count"] <= 100
-
-
-@given(
     n_cov=st.integers(min_value=0, max_value=5),
     n_dep=st.integers(min_value=1, max_value=7),
     n_buckets=st.integers(min_value=1, max_value=9),
@@ -224,41 +200,6 @@ def test_packed_fanout_matches_columnar_any_shape(
     b = (run_associations(df, cfg, strategy="packed", n_buckets=n_buckets)
          .to_pandas().sort_values("dependent").reset_index(drop=True))
     pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
-
-
-budget_rows = st.lists(
-    st.tuples(
-        st.floats(min_value=-5, max_value=5, allow_nan=False,
-                  allow_infinity=False),
-        st.integers(min_value=0, max_value=20),
-    ),
-    min_size=1,
-    max_size=25,
-)
-
-
-@given(rows=budget_rows, budget=st.integers(min_value=0, max_value=120),
-       blocks=st.integers(min_value=1, max_value=5))
-@SETTINGS
-def test_select_until_budget_matches_naive(spark, rows, budget, blocks):
-    """The two-phase range-block running sum must equal the naive
-    single-pass computation on ANY (score, weight) multiset, any budget,
-    any block count — including constant scores (everything collapses
-    into one block) and heavy score ties."""
-    from polars_mas_spark.operators.sampling import select_until_budget
-
-    data = [(i, float(s), int(w)) for i, (s, w) in enumerate(rows)]
-    df = spark.createDataFrame(data, "doc_id long, score double, w long")
-    got = {
-        r.doc_id: (r.cum_weight, r.selected)
-        for r in select_until_budget(
-            df, "score", "w", budget, "doc_id", num_blocks=blocks
-        ).collect()
-    }
-    cum = 0
-    for i, s, w in sorted(data, key=lambda t: (-t[1], t[0])):
-        cum += w
-        assert got[i] == (cum, cum <= budget), (i, got[i], cum, budget)
 
 
 @given(
@@ -385,28 +326,6 @@ def test_span_decontaminate_matches_python_replay(spark, txts):
         assert r.clean_text == expect, (i, r.clean_text, expect)
         assert r.n_tokens == len(w) and r.n_removed == len(removed)
         assert r.contaminated == (len(removed) > 0)
-
-
-@given(txts=texts)
-@SETTINGS
-def test_dsir_select_total_deterministic_k_bound(spark, txts):
-    """dsir_select emits exactly one row per doc, exactly min(k, n)
-    selected rows, and identical scores on a rerun."""
-    from polars_mas_spark.operators import sampling as smp
-
-    df = _docs(spark, txts).withColumn("is_t", F.col("doc_id") % 2 == 0)
-    k = 3
-    out = smp.dsir_select(df, "doc_id", "text", F.col("is_t"), k=k)
-    rows = sorted(out.collect(), key=lambda r: r.doc_id)
-    assert [r.doc_id for r in rows] == list(range(len(txts)))
-    assert sum(r.selected for r in rows) == min(k, len(txts))
-    again = sorted(
-        smp.dsir_select(df, "doc_id", "text", F.col("is_t"), k=k).collect(),
-        key=lambda r: r.doc_id,
-    )
-    assert [(r.logw, r.gumbel, r.selected) for r in rows] == [
-        (r.logw, r.gumbel, r.selected) for r in again
-    ]
 
 
 @given(txts=texts)
@@ -705,46 +624,3 @@ def test_heavy_hitter_sketch_equals_naive(spark, txts, min_count):
         .collect()
     }
     assert got == naive
-
-
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.sampled_from(["en", "fr", None]),
-            st.lists(st.sampled_from(list("abcd x")), min_size=0,
-                     max_size=24).map("".join),
-        ),
-        min_size=1,
-        max_size=14,
-    )
-)
-@SETTINGS
-def test_perplexity_cut_replay_exact_on_any_corpus(spark, rows):
-    """The running-max cut points replay the batch rank cut EXACTLY on
-    every epoch member, for ANY language/tie/degenerate-bucket
-    structure (tiny alphabet -> identical texts and exact score ties
-    are common; 1-doc and 2-doc languages exercise the empty-bucket
-    fill-down)."""
-    from polars_mas_spark.operators.text import (
-        char_trigram_model,
-        perplexity_bucket_assign,
-        perplexity_cut_points,
-        perplexity_thirds,
-    )
-
-    df = spark.createDataFrame(
-        [(i, lang, t) for i, (lang, t) in enumerate(rows)],
-        "doc_id long, lang string, text string",
-    )
-    thirds = perplexity_thirds(df, num_blocks=4)
-    batch = {
-        r.doc_id: (r.lang, r.n_trigrams, r.nll_q, r.bucket, r.bucket_label)
-        for r in thirds.collect()
-    }
-    model = char_trigram_model(df)
-    cuts = perplexity_cut_points(thirds)
-    got = {
-        r.doc_id: (r.lang, r.n_trigrams, r.nll_q, r.bucket, r.bucket_label)
-        for r in perplexity_bucket_assign(df, model, cuts).collect()
-    }
-    assert got == batch

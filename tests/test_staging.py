@@ -51,11 +51,10 @@ def test_above_threshold_persists_disk_only(spark):
 
 
 def test_gated_operators_keep_local_checkpoint_plan(spark):
-    """The two gated corpus-width stages (paragraph passages,
-    perplexity per-doc scores) must still plan as localCheckpoint at
-    bench SFs — the r12 measured wins rest on that shape."""
+    """The gated corpus-width stage (paragraph passages) must still
+    plan as localCheckpoint at bench SFs — the r12 measured wins rest
+    on that shape."""
     from polars_mas_spark.operators import dedup as dd
-    from polars_mas_spark.operators import text as tx
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     pairs = docs.select("doc_id", "text")
@@ -76,7 +75,6 @@ def test_gated_operators_keep_local_checkpoint_plan(spark):
             base, "doc_id", "text",
             max_words=16, num_hashes=16, bands=4, rows_per_band=4,
         )),
-        ("perplexity_thirds", tx.perplexity_thirds(docs)),
     ):
         plan = formatted_plan(q)
         assert "Scan ExistingRDD" in plan, name

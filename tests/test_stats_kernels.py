@@ -423,6 +423,34 @@ def test_firth_fit_many_collinear_design_fits_per_column():
     assert _assert_batch_matches_per_pair(X, Y) == 6
 
 
+def test_firth_rank_deficient_design_reports_no_pvalue():
+    """A covariate that is constant (so a multiple of the intercept)
+    makes the design rank-deficient, just like an exactly collinear
+    one: its Jeffreys penalty is -inf everywhere, so both kernels
+    report no p-value and an unbounded interval instead of the LRT of
+    two unconverged fits. The data is case 48 of
+    tools/ab_kernel_battery.py, whose constant column is not exactly
+    singular in floating point."""
+    rng = np.random.default_rng(20260818)
+    for n in (60, 300, 2000, 5000):  # the battery's earlier draws
+        for k in (0, 1, 5, 20):
+            for _prev in range(3):
+                rng.normal(size=(n, k + 1))
+                rng.random(n)
+    n = 500
+    X = rng.normal(size=(n, 3))
+    X[:, 2] = 1.7
+    y = (rng.random(n) < 0.3).astype(float)
+    Y = np.column_stack([y, y[::-1]])
+    fits = [firth_fit(X, y), *firth_fit_many(X, list(Y.T))]
+    for res in fits:
+        assert math.isnan(res["pval"])
+        assert (res["ci_low"], res["ci_high"]) == (-math.inf, math.inf)
+    assert repr(fits[1]) == repr(fits[0])  # NaN-safe bit equality
+    # Without the constant column the design has full rank and a p-value.
+    assert firth_fit(X[:, :2], y)["pval"] == pytest.approx(0.597, abs=1e-3)
+
+
 def test_firth_newton_many_flags_singular_rows_only():
     """A row whose Fisher matrix is singular (here: a start so far out
     that every weight underflows to 0) is flagged and dropped, and the

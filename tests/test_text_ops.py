@@ -359,6 +359,18 @@ def test_span_dedup_cross_alignment_recall(spark):
     assert spanned[4] == rows[3][1]                   # clean doc untouched
 
 
+def test_bpe_and_span_dedup_input_validation(spark):
+    """Malformed inputs fail loudly at plan-build time, not with
+    silently-wrong results: k < 1 span windows."""
+    import pytest
+
+    from polars_mas_spark.operators.dedup import span_dedup
+
+    df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="k >= 1"):
+        span_dedup(df, "doc_id", "text", k=0)
+
+
 def test_span_dedup_overlong_span_and_short_docs(spark):
     """A repeated span LONGER than k is removed in full (every stride-1
     window marks its cover); docs shorter than k words emit no windows
@@ -604,56 +616,6 @@ def test_passage_split_no_subsumed_tail(spark):
     assert by_doc[3] == [(0, 64), (1, 52)]     # 49..100; start 97 subsumed
 
 
-def test_model_quality_score_matches_python(spark):
-    """The hashing-trick scorer must reproduce a direct Python
-    computation: same md5 buckets, same weight gather, same mean/sigmoid
-    — plus the empty-document logit = bias contract."""
-    import hashlib
-    import math
-
-    from polars_mas_spark.operators.text import model_quality_score
-
-    weights = [round(0.01 * i - 1.0, 6) for i in range(256)]
-    rows = [
-        (1, "the cat sat on the mat"),
-        (2, "  weird   spacing\ttabs "),
-        (3, ""),
-        (4, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r.doc_id: r
-        for r in model_quality_score(
-            df, "doc_id", "text", weights=weights, bias=0.25
-        ).collect()
-    }
-
-    def bucket(tok):
-        return int(hashlib.md5(("qmodel" + tok).encode()).hexdigest()[:8], 16) % 256
-
-    for doc_id, text in rows:
-        toks = [t for t in (text or "").lower().split() if t]
-        logit = 0.25 + (
-            sum(weights[bucket(t)] for t in toks) / len(toks) if toks else 0.0
-        )
-        score = 1.0 / (1.0 + math.exp(-logit))
-        r = got[doc_id]
-        assert r.n_tokens == len(toks)
-        assert abs(r.logit - round(logit, 6)) < 1e-9, (doc_id, r.logit, logit)
-        assert abs(r.model_score - round(score, 6)) < 1e-9
-        assert r.kept == (score >= 0.5)
-
-
-def test_model_quality_score_validates_weights(spark):
-    import pytest as _pytest
-
-    from polars_mas_spark.operators.text import model_quality_score
-
-    df = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="expected n_buckets"):
-        model_quality_score(df, "doc_id", "text", weights=[0.1, 0.2])
-
-
 def test_fuzzy_pairs_exact_vs_python_dp(spark):
     """fuzzy_pairs must equal the brute-force DP levenshtein pair set —
     including short strings below the q-gram lemma threshold that share
@@ -693,50 +655,11 @@ def test_fuzzy_pairs_exact_vs_python_dp(spark):
         assert got == expect, (d, got ^ expect)
 
 
-def test_char_trigram_scores_math(spark):
-    """Hand-computed LM on a two-doc corpus: counts, smoothing, unseen
-    floor, and the short-doc (0, NULL, NULL) contract."""
-    import math
-    from collections import Counter
-
-    from polars_mas_spark.operators.text import char_trigram_scores
-
-    texts = {1: "ababab", 2: "abcd", 3: "xy"}
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
-    got = {
-        r.doc_id: r
-        for r in char_trigram_scores(df, "doc_id", "text").collect()
-    }
-    # Corpus model (doc 3 contributes nothing: < 3 chars).
-    tris = []
-    for t in texts.values():
-        tris += [t[i:i + 3] for i in range(len(t) - 2)]
-    tc = Counter(tris)
-    cc = Counter()
-    for tri, c in tc.items():
-        cc[tri[:2]] += c
-    for doc_id, t in texts.items():
-        doc_tris = [t[i:i + 3] for i in range(len(t) - 2)]
-        if not doc_tris:
-            assert got[doc_id].n_trigrams == 0
-            assert got[doc_id].nll_mean is None and got[doc_id].ppl is None
-            continue
-        nll = sum(
-            -math.log((tc[x] + 0.5) / (cc[x[:2]] + 128.0)) for x in doc_tris
-        ) / len(doc_tris)
-        assert got[doc_id].n_trigrams == len(doc_tris)
-        assert abs(got[doc_id].nll_mean - nll) < 1e-9, (doc_id, nll)
-        assert abs(got[doc_id].ppl - math.exp(nll)) < 1e-6
-    # Repetitive text must be more predictable than one-off trigrams.
-    assert got[1].nll_mean < got[2].nll_mean
-
-
 def test_leakage_safe_split_keeps_neardups_together(spark):
-    """Planted near-duplicates must land on the SAME split side (they
-    share an LSH component), while the split itself matches the keyed
-    hash of the component label."""
+    """Planted near-duplicates must share an LSH component label (the
+    key a leakage-safe split hashes), while unrelated documents label
+    themselves."""
     from polars_mas_spark.operators.dedup import minhash_component_labels
-    from polars_mas_spark.operators.sampling import train_eval_split
 
     base = (
         "the quick brown fox jumps over the lazy dog and then runs far "
@@ -751,50 +674,10 @@ def test_leakage_safe_split_keeps_neardups_together(spark):
     labels = minhash_component_labels(
         df, "doc_id", "text", num_hashes=16, bands=8, rows_per_band=2
     )
-    out = {r.doc_id: (r.label, r.split)
-           for r in train_eval_split(labels, "label", eval_fraction=0.3)
-           .collect()}
-    assert out[1][0] == out[2][0] == 1          # same component
-    assert out[1][1] == out[2][1]               # -> same side, by key
-    assert out[3][0] == 3                       # singleton labels itself
+    out = {r.doc_id: r.label for r in labels.collect()}
+    assert out[1] == out[2] == 1                # same component
+    assert out[3] == 3                          # singleton labels itself
     assert len(out) == 33                       # every doc labeled
-
-
-def test_weighted_sample_n_contract(spark):
-    """Deterministic across runs, excludes non-positive/NULL weights,
-    returns exactly n rows, and skews toward heavy weights."""
-    import pytest as pt
-    from pyspark.sql import functions as F
-
-    from polars_mas_spark.operators.sampling import weighted_sample_n
-
-    df = spark.range(2000).select(
-        "id",
-        F.when(F.col("id") % 100 == 0, None)
-        .when(F.col("id") % 100 == 1, -1.0)
-        .otherwise((F.col("id") % 10 + 1).cast("double"))
-        .alias("w"),
-    )
-    a = sorted(r.id for r in weighted_sample_n(df, "id", "w", 300).collect())
-    b = sorted(r.id for r in weighted_sample_n(df, "id", "w", 300).collect())
-    assert a == b and len(a) == 300
-    assert not any(i % 100 in (0, 1) for i in a)  # excluded weights
-    # Different salt: a decorrelated (different) sample.
-    c = sorted(
-        r.id for r in weighted_sample_n(df, "id", "w", 300, salt="s2").collect()
-    )
-    assert c != a
-    # Expected mean weight under w-proportional sampling is
-    # E[w^2]/E[w] = 7 for w uniform on 1..10, vs population mean 5.5.
-    mean_w = (
-        spark.createDataFrame([(i,) for i in a], "id long")
-        .join(df, "id")
-        .agg(F.avg("w"))
-        .first()[0]
-    )
-    assert mean_w > 6.0
-    with pt.raises(ValueError, match="positive"):
-        weighted_sample_n(df, "id", "w", 0)
 
 
 def test_bm25_hand_computed_scores(spark):
@@ -830,34 +713,6 @@ def test_bm25_hand_computed_scores(spark):
     assert rows[2][1] == pytest.approx(s(3, 3), rel=1e-9)
     assert rows[1][1] == pytest.approx(s(1, 2), rel=1e-9)
     assert rows[2][0] == 1 and rows[1][0] == 2  # saturation still ranks tf=3 first
-
-
-def test_temporal_split_boundaries_and_embargo(spark):
-    """Strict train/embargo/test boundaries at truncated-second
-    precision; NULL ts quarantined as 'unknown'; negative embargo
-    raises."""
-    import datetime as dt
-
-    import pytest as pt
-
-    from polars_mas_spark.operators.sampling import temporal_split
-
-    b = dt.datetime(2024, 6, 1)
-    rows = [
-        (1, b - dt.timedelta(days=2)),            # train
-        (2, b - dt.timedelta(days=1)),            # exactly train_end -> embargo
-        (3, b - dt.timedelta(hours=1)),           # embargo
-        (4, b),                                   # test (inclusive)
-        (5, None),                                # unknown
-    ]
-    df = spark.createDataFrame(rows, "k long, ts timestamp")
-    out = {
-        r.k: r.split
-        for r in temporal_split(df, "ts", "2024-06-01 00:00:00", 86400).collect()
-    }
-    assert out == {1: "train", 2: "embargo", 3: "embargo", 4: "test", 5: "unknown"}
-    with pt.raises(ValueError, match=">= 0"):
-        temporal_split(df, "ts", "2024-06-01", -1)
 
 
 def test_canonical_url_edges(spark):

@@ -30,7 +30,6 @@ MODULES = [
     ("polars_mas_spark.operators.bloom", "Approximate membership (Bloom epoch artifacts)"),
     ("polars_mas_spark.operators.similarity", "Similarity / ANN / embeddings"),
     ("polars_mas_spark.operators.text", "Text analysis & curation"),
-    ("polars_mas_spark.operators.sampling", "Sampling & budget selection"),
     ("polars_mas_spark.sources.readers", "Sources"),
     ("polars_mas_spark.sources.writers", "Sinks"),
 ]
