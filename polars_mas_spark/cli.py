@@ -163,10 +163,18 @@ def main(argv: list[str] | None = None) -> int:
     )
     try:
         if args.dry_run:
-            from polars_mas_spark.sources.readers import read_input
+            from polars_mas_spark.sources.readers import parquet_input, read_input
 
-            df = read_input(spark, args.input, null_values=config.null_value_tokens)
-            config.resolve(df.columns)
+            # A local parquet input's header comes from its footers, as
+            # run_study reads it; anything else is read by Spark.
+            source = parquet_input(spark, args.input)
+            if source is None:
+                columns = read_input(
+                    spark, args.input, null_values=config.null_value_tokens
+                ).columns
+            else:
+                columns = source.schema.names
+            config.resolve(columns)
             print(config.summary())
             return 0
 

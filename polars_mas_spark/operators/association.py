@@ -274,6 +274,9 @@ def make_packed_kernel(
     columns = [f.name for f in result_schema(model).fields]
 
     def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        from polars_mas_spark.functions.native_threads import prepare_worker
+
+        prepare_worker()  # cheap after the first call per process
         predictor, bucket = key
         deps = bucket_deps[int(bucket)]
         # Arrow list<double> arrives as ndarray-per-cell; nulls are NaN.
@@ -738,9 +741,6 @@ def make_array_kernel(
         return rows
 
     def akernel(predictor, x, cov_arrays, deps, values, keep=None) -> list[dict]:
-        from polars_mas_spark.functions.native_threads import prepare_worker
-
-        prepare_worker()  # cheap after the first call per process
         sex = None
         if sex_safe is not None:
             sex = next((a for s, _o, a in cov_arrays if s == sex_safe), None)
@@ -885,7 +885,7 @@ def checkpoint_wide(df: DataFrame, checkpoint_dir: str | None = None) -> str:
 
 
 def run_associations(
-    df: DataFrame,
+    df: DataFrame | None,
     config: MASConfig,
     strategy: str,
     checkpoint_path: str | None = None,
@@ -922,9 +922,9 @@ def run_associations(
       data; a per-pair long table would move n_rows x n_deps duplicated
       covariates through a shuffle for a table that reads back in
       kilobytes per task. ``checkpoint_path`` or ``source_files`` name
-      parquet the caller already has, so no checkpoint is written.
+      parquet the caller already has, so no checkpoint is written; with
+      ``source_files``, ``df`` may be None (the active session runs it).
     """
-    spark = df.sparkSession
     model = config.model
     covariates = list(config.covariate_columns)
     if strategy == "columnar":
@@ -933,7 +933,7 @@ def run_associations(
     if strategy == "moments":
         return _complete_pairs(_fit_linear_moments(df, config), config)
 
-    par = spark.sparkContext.defaultParallelism
+    par = df.sparkSession.sparkContext.defaultParallelism
     if strategy == "packed":
         # Tall-table scale path (SURVEY §7.4.6): dependents travel as
         # per-bucket arrays so the shuffle duplicates covariates G times
@@ -1166,7 +1166,7 @@ def _numeric_rows(data: pd.DataFrame, cols: list[str]) -> np.ndarray:
 
 
 def _fit_columnar(
-    df: DataFrame,
+    df: DataFrame | None,
     config: MASConfig,
     checkpoint_path: str | None = None,
     recipe=None,
@@ -1195,7 +1195,7 @@ def _fit_columnar(
     Each task hands a predictor's whole run of dependents to the group
     kernel ([[make_array_kernel]]) in one call, so the Firth dependents
     that share a row mask are fitted together (stats.firth_fit_many)."""
-    spark = df.sparkSession
+    spark = SparkSession.active() if df is None else df.sparkSession
     model = config.model
     covariates = list(config.covariate_columns)
     cov_pairs = safe_covariate_pairs(covariates)

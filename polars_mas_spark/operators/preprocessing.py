@@ -20,10 +20,11 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType
+from pyspark.sql.types import IntegralType, NumericType, StructType
 
 from polars_mas_spark.colutils import qcol
 from polars_mas_spark.config import MASConfig
@@ -293,7 +294,7 @@ def preprocess(df: DataFrame, config: MASConfig) -> DataFrame:
     df = drop_constant_covariates(
         df, config, counts={c: row[f"__nd_{c}"] for c in covs}
     )
-    _reject_string_covariates(df, config)
+    _reject_string_covariates(df.schema, config)
     # Constant categoricals were just dropped from df; create_dummy
     # re-filters its cat list against df.columns, so supplying the
     # pre-drop level sets keyed by name is safe.
@@ -309,14 +310,14 @@ def preprocess(df: DataFrame, config: MASConfig) -> DataFrame:
     return df
 
 
-def _reject_string_covariates(df: DataFrame, config: MASConfig) -> None:
+def _reject_string_covariates(schema: StructType, config: MASConfig) -> None:
     """Fail fast with a clear message on string-typed covariates that
     were not declared categorical — otherwise the raw strings reach the
     regression kernel's to_numpy(float64) and die with an opaque "could
     not convert string to float" deep inside a Python worker. Runs
     AFTER the constant drop so a constant string covariate is dropped
     harmlessly (as it always was), not hard-failed."""
-    dtypes = dict(df.dtypes)
+    dtypes = {f.name: f.dataType.simpleString() for f in schema.fields}
     cats = set(config.categorical_covariate_columns)
     undeclared = [
         c for c in config.covariate_columns
@@ -425,12 +426,14 @@ class PrepRecipe:
 _RECIPE_DRIVER_MAX_ROWS = 2_000_000
 
 
-def _recipe_stats_local(source_files, covs, strategy):
+def _recipe_stats_local(source_files, covs, strategy, n_rows=None):
     """Driver-side pyarrow replica of the recipe's eager-stats job for
     the ``drop``/``fail`` strategies (exact-integer statistics only —
     no fill means/mins whose float summation order could differ from
     Spark's). Returns ``(nd, null_counts, total)`` or None when the
     inputs are out of scope (non-local files, too many rows).
+    ``n_rows`` is the files' row count when the caller already has it;
+    None sums it from their footers.
 
     Parity argument: for ``drop``, Spark runs countDistinct AFTER
     na.drop(subset=covs) — na.drop treats float NaN as missing, exactly
@@ -448,7 +451,9 @@ def _recipe_stats_local(source_files, covs, strategy):
     try:
         import pyarrow.dataset as pads
 
-        if input_row_count(source_files) > _RECIPE_DRIVER_MAX_ROWS:
+        if n_rows is None:
+            n_rows = input_row_count(source_files)
+        if n_rows > _RECIPE_DRIVER_MAX_ROWS:
             return None
         tbl = pads.dataset(source_files).to_table(
             columns=list(dict.fromkeys(covs)), use_threads=False
@@ -468,28 +473,41 @@ def _recipe_stats_local(source_files, covs, strategy):
 
 
 def build_prep_recipe(
-    df: DataFrame, config: MASConfig, source_files: list[str] | None = None
+    df: DataFrame | Callable[[], DataFrame],
+    config: MASConfig,
+    source_files: list[str] | None = None,
+    schema: StructType | None = None,
+    n_rows: int | None = None,
 ) -> PrepRecipe:
     """Compute a PrepRecipe with narrow aggregate jobs against ``df``
     (ideally a parquet scan, so every job is column-pruned down to the
     covariates). Mutates ``config.covariate_columns`` exactly like
     ``preprocess`` does, so the downstream kernel sees the same design.
 
-    ``source_files`` (the columnar path's local parquet files) enables a
-    driver-side pyarrow fast path for the stats of the ``drop``/``fail``
-    strategies — same integer statistics, zero Spark jobs — gated to
-    small row counts (see _recipe_stats_local)."""
+    ``df`` is the included table, or a function that builds it, called
+    only when a statistic runs as a Spark job; ``schema``, the table's
+    Spark schema, is then required. ``source_files`` (the columnar
+    path's local parquet files) enables a driver-side pyarrow fast path
+    for the stats of the ``drop``/``fail`` strategies — same integer
+    statistics, zero Spark jobs — gated to small row counts (see
+    _recipe_stats_local, which takes ``n_rows``)."""
+    if isinstance(df, DataFrame):
+        schema = df.schema
     covs = list(config.covariate_columns)
     strategy = config.missing_covariate_values
     recipe = PrepRecipe(onehot={})
 
     if config.male_only or config.female_only:
-        if config.sex_col not in df.columns:
+        if config.sex_col not in config.included_columns:
             raise ValueError(
                 f"Sex column '{config.sex_col}' not found in included columns."
             )
         recipe.sex_filter = (config.sex_col, config.female_only, config.female_code)
-        df = limit_sex_specific(df, config)
+
+    def stats_frame() -> DataFrame:
+        # The rows the eager statistics see: the sex filter applies first.
+        frame = df if isinstance(df, DataFrame) else df()
+        return limit_sex_specific(frame, config) if recipe.sex_filter else frame
 
     if strategy in ("forward", "backward") and covs:
         raise ValueError(
@@ -521,7 +539,7 @@ def build_prep_recipe(
         and recipe.sex_filter is None
         and source_files is not None
     ):
-        local_stats = _recipe_stats_local(source_files, covs, strategy)
+        local_stats = _recipe_stats_local(source_files, covs, strategy, n_rows)
     if local_stats is not None:
         nd, null_counts, total = local_stats
         if strategy == "drop":
@@ -540,17 +558,16 @@ def build_prep_recipe(
                     )
     elif covs and strategy == "drop":
         recipe.drop_null_covs = list(covs)
-        df = df.na.drop(subset=covs)
         aggs = [F.countDistinct(qcol(c)).alias(f"__nd_{c}") for c in covs]
         aggs += [
             F.sort_array(F.collect_set(qcol(c))).alias(f"__lv_{c}") for c in cats
         ]
-        row = df.agg(*aggs).first()
+        row = stats_frame().na.drop(subset=covs).agg(*aggs).first()
         nd = {c: row[f"__nd_{c}"] for c in covs}
         levels_map = {c: list(row[f"__lv_{c}"] or []) for c in cats}
     elif covs:
         numeric = {
-            f.name for f in df.schema.fields
+            f.name for f in schema.fields
             if isinstance(f.dataType, NumericType)
         }
         agg_fn = {"min": F.min, "max": F.max, "mean": F.avg}.get(strategy)
@@ -568,7 +585,7 @@ def build_prep_recipe(
         ]
         if strategy == "fail":
             aggs.append(F.count(F.lit(1)).alias("__total__"))
-        row = df.agg(*aggs).first()
+        row = stats_frame().agg(*aggs).first()
 
         if strategy == "fail":
             # Same messages as handle_missing_covariates.
@@ -593,11 +610,9 @@ def build_prep_recipe(
             v = 0 if strategy == "zero" else 1
             recipe.fill_values = {c: v for c in covs if c in numeric}
 
-        from pyspark.sql.types import IntegralType
-
         recipe.int_fill_cols = [
             c for c in recipe.fill_values
-            if isinstance(df.schema[c].dataType, IntegralType)
+            if isinstance(schema[c].dataType, IntegralType)
         ]
 
         def _effective_fill(c):
@@ -657,7 +672,7 @@ def build_prep_recipe(
     # the recipe in pandas and would otherwise crash opaquely on raw
     # strings. One-hot output columns are ints; only surviving source
     # columns can be string-typed.
-    _reject_string_covariates(df, config)
+    _reject_string_covariates(schema, config)
 
     # Fills on columns that left the design (constant-dropped) are dead
     # work — and dead reads — in the tasks; keep only design-relevant

@@ -11,6 +11,15 @@ table. On the tall paths (packed, moments) it is played by
 ``persist(MEMORY_AND_DISK)``: the eager preprocessing statistics and the
 association shuffle both reuse the cached partitions instead of
 re-scanning the source (SURVEY.md §4 note 1).
+
+A local parquet input is planned from its footers, as the reference
+reads only the header (config.py:123): ``readers.parquet_input`` gives
+its header, files and row count from one footer read per file, and the
+Spark frame over it is built only when a Spark job needs it — a plan
+that is not columnar, or a recipe statistic that runs as a Spark job.
+At 806 columns building, analysing and printing that frame's plan cost
+0.18 s of CPU per study (4-core guest). Every other input (CSV, a
+hive-partitioned directory, a URI, a ``df=`` frame) is read by Spark.
 """
 
 from __future__ import annotations
@@ -39,7 +48,7 @@ from polars_mas_spark.operators.postprocessing import (
     bonferroni,
 )
 from polars_mas_spark.operators.preprocessing import build_prep_recipe, preprocess
-from polars_mas_spark.sources.readers import read_input
+from polars_mas_spark.sources.readers import ParquetInput, parquet_input, read_input
 from polars_mas_spark.sources.writers import write_output
 
 # Studies the columnar PrepRecipe path cannot run, as (applies, reason)
@@ -139,21 +148,24 @@ class StudyPlan:
 def plan_study(
     spark: SparkSession,
     config: MASConfig,
-    df: DataFrame,
+    source: DataFrame | ParquetInput,
     strategy: str | None = None,
 ) -> StudyPlan:
     """Pick the fan-out strategy for a resolved study. This is the only
     code that picks or changes a strategy (see also
     StudyPlan.after_preprocess).
 
-    ``strategy=None`` is the auto pick. A linear quantitative study with
-    at most 64 covariates takes moments, which needs no row count.
-    Anything else picks by row count (choose_strategy). The count is
-    summed from the parquet footers of a plain parquet scan, with no
-    Spark job; any other input is persisted and then counted by Spark,
-    so the counting pass fills the cache the chosen path reads. A
-    columnar pick that a guard above forbids becomes packed, with the
-    guard's reason recorded; an explicit columnar request raises it."""
+    ``source`` is the projected input frame, or a local parquet input's
+    footers (run_study's ParquetInput), whose files and row count are
+    used as they are. ``strategy=None`` is the auto pick. A linear
+    quantitative study with at most 64 covariates takes moments, which
+    needs no row count. Anything else picks by row count
+    (choose_strategy). The count is summed from the parquet footers of a
+    plain parquet scan, with no Spark job; any other input is persisted
+    and then counted by Spark, so the counting pass fills the cache the
+    chosen path reads. A columnar pick that a guard above forbids
+    becomes packed, with the guard's reason recorded; an explicit
+    columnar request raises it."""
     if strategy is not None and strategy not in STRATEGIES:
         # A typo must not pick a physical plan (review r9).
         raise ValueError(
@@ -168,19 +180,27 @@ def plan_study(
         and len(config.covariate_columns) <= MOMENTS_MAX_COVARIATES
     ):
         strategy = "moments"
+    footers = isinstance(source, ParquetInput)
     refusals: list[str] = []
-    files = (
-        reusable_scan_files(df, refusals) if strategy in (None, "columnar") else None
-    )
+    if strategy not in (None, "columnar"):
+        files = None
+    elif footers:
+        files = list(source.files)
+    else:
+        files = reusable_scan_files(source, refusals)
     n_rows = row_source = None
     if strategy is None:
-        if files is None:
-            # Not a plain parquet scan, so Spark must count it. Persist
-            # first so the counting pass also fills the cache: the tall
-            # path re-persists the same handle (a no-op) and the columnar
-            # path unpersists it once its checkpoint exists.
-            df.persist(StorageLevel.MEMORY_AND_DISK)
-        n_rows = input_row_count(files, df)
+        if footers:
+            n_rows = source.n_rows
+        else:
+            if files is None:
+                # Not a plain parquet scan, so Spark must count it.
+                # Persist first so the counting pass also fills the
+                # cache: the tall path re-persists the same handle (a
+                # no-op) and the columnar path unpersists it once its
+                # checkpoint exists.
+                source.persist(StorageLevel.MEMORY_AND_DISK)
+            n_rows = input_row_count(files, source)
         row_source = "spark count" if files is None else "footers"
         strategy = choose_strategy(n_rows)
     reasons: tuple[str, ...] = ()
@@ -204,24 +224,8 @@ def plan_study(
     )
 
 
-def run_study(
-    spark: SparkSession,
-    config: MASConfig,
-    df: DataFrame | None = None,
-    input_path: str | None = None,
-    output_path: str | None = None,
-    phecode_defs: DataFrame | None = None,
-    strategy: str | None = None,
-) -> pa.Table:
-    """Run the full MAS dataflow and return the results as a local
-    ``pyarrow.Table``, sorted by pval. Takes run_pipeline's arguments;
-    the CLI prints from this table, so showing results runs no Spark
-    job."""
-    if df is None:
-        if input_path is None:
-            raise ValueError("Provide either df or input_path")
-        df = read_input(spark, input_path, null_values=config.null_value_tokens)
-    config.resolve(df.columns)
+def _project(df: DataFrame, config: MASConfig) -> DataFrame:
+    """``df`` reduced to the study's included columns."""
     # Column pruning, minimally: at PheWAS width this projection was a
     # measured ~6 s of FIXED driver time per run — ~1,800 qcol() py4j
     # round-trips plus a 1,800-arg select. Skip it when the input
@@ -239,8 +243,50 @@ def run_study(
     # rejected, not repaired).
     if len(df.columns) != len(included) or set(df.columns) != set(included):
         df = df.selectExpr(*[qname(c) for c in included])
+    return df
 
-    plan = plan_study(spark, config, df, strategy)
+
+def run_study(
+    spark: SparkSession,
+    config: MASConfig,
+    df: DataFrame | None = None,
+    input_path: str | None = None,
+    output_path: str | None = None,
+    phecode_defs: DataFrame | None = None,
+    strategy: str | None = None,
+) -> pa.Table:
+    """Run the full MAS dataflow and return the results as a local
+    ``pyarrow.Table``, sorted by pval. Takes run_pipeline's arguments;
+    the CLI prints from this table, so showing results runs no Spark
+    job."""
+    if df is None and input_path is None:
+        raise ValueError("Provide either df or input_path")
+    # A local parquet input is planned from its footers: its header,
+    # files and row count (readers.parquet_input). The Spark frame over
+    # it is built only when a Spark job needs it: a plan that is not
+    # columnar, or a recipe statistic that runs as a Spark job.
+    source = None if df is not None else parquet_input(spark, input_path)
+    if source is None:
+        if df is None:
+            df = read_input(spark, input_path, null_values=config.null_value_tokens)
+        config.resolve(df.columns)
+        df = _project(df, config)
+    else:
+        config.resolve(source.schema.names)
+
+    def frame() -> DataFrame:
+        # The projected input frame, built once, on first use. Spark
+        # reads the footers' absolute path: the JVM's working directory
+        # need not be this process's.
+        nonlocal df
+        if df is None:
+            df = _project(
+                read_input(spark, source.path, null_values=config.null_value_tokens),
+                config,
+            )
+        return df
+
+    plan = plan_study(spark, config, df if source is None else source, strategy)
     if plan.strategy == "columnar":
         # Every table up to 100M rows, whatever its pair count, and above
         # all the wide-short PheWAS shape, where the preprocessed wide
@@ -256,17 +302,20 @@ def run_study(
         # its columns and applying the recipe in pandas — exactly how the
         # reference's workers mmap its IPC file (analysis.py:54-59).
         if plan.files is None:
-            ckpt = checkpoint_wide(df, config.checkpoint_dir)
+            ckpt = checkpoint_wide(frame(), config.checkpoint_dir)
             df.unpersist()  # checkpoint written; drop any pre-count cache
-            stats_df = spark.read.parquet(ckpt)
-            stats_files = _parquet_files(ckpt)
+            df = spark.read.parquet(ckpt)
+            recipe = build_prep_recipe(df, config, source_files=_parquet_files(ckpt))
         else:
             ckpt = None
-            stats_df = df
-            stats_files = plan.files
-        recipe = build_prep_recipe(stats_df, config, source_files=stats_files)
+            recipe = build_prep_recipe(
+                frame, config, source_files=plan.files,
+                schema=df.schema if source is None else source.schema,
+                n_rows=plan.n_rows if source is None else source.n_rows,
+            )
+        # df is None here only when no Spark job needed the input frame.
         results = run_associations(
-            stats_df, config, strategy="columnar",
+            df, config, strategy="columnar",
             checkpoint_path=ckpt, recipe=recipe, source_files=plan.files,
         )
     else:
@@ -280,7 +329,7 @@ def run_study(
         # shared-memory IPC checkpoint (preprocessing.py:111-132) and run
         # the tall fan-out from it: packed, or moments for a linear
         # study.
-        raw = df.persist(StorageLevel.MEMORY_AND_DISK)
+        raw = frame().persist(StorageLevel.MEMORY_AND_DISK)
         pre = preprocess(raw, config)
         if config.rint or config.logt:
             # §2.12 dependent-variable transforms, applied AFTER fills

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import weakref
+from dataclasses import dataclass
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
@@ -82,48 +83,83 @@ def _same_as_inferred(t: pa.DataType) -> bool:
     )
 
 
-def _parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The Spark schema of a local parquet file, or of a flat directory
-    of part files that share one schema, read from the footers with
-    pyarrow. Spark's own inference runs a job per read to open one
-    footer (about 0.1 s of wall time per study); handing it this schema
-    runs none. None, keeping Spark's inference, for anything else: a
+@dataclass(frozen=True)
+class ParquetInput:
+    """A local parquet input as its footers describe it: its absolute
+    path, the absolute paths of its data files, sorted, the Spark schema
+    Spark's own inference would give (every field nullable) and the
+    total row count, all from one footer read per file
+    ([[parquet_input]])."""
+
+    path: str
+    files: tuple[str, ...]
+    schema: T.StructType
+    n_rows: int
+
+
+def parquet_input(spark: SparkSession, path: str) -> ParquetInput | None:
+    """An input path that read_input reads as parquet (by its suffix) as
+    a ParquetInput, when _read_footers accepts it; else None."""
+    if not path.lower().endswith(".parquet"):
+        return None
+    return _read_footers(spark, path)
+
+
+def _read_footers(spark: SparkSession, path: str) -> ParquetInput | None:
+    """``path`` as a ParquetInput, when it is a local parquet file or a
+    flat directory of part files that share one schema. Spark's own
+    inference runs a job per read to open one footer (about 0.1 s of
+    wall time per study); the schema read here with pyarrow runs none.
+    None, leaving the input to Spark, for anything else: a
     Hive-partitioned or empty directory, a non-local path, part files
     whose schemas differ, duplicate names, or a column type outside
     _same_as_inferred."""
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    if os.path.isfile(path):
-        files = [path]
-    elif os.path.isdir(path):
+    root = os.path.abspath(path)
+    if os.path.isfile(root):
+        files = [root]
+    elif os.path.isdir(root):
         # Spark skips names starting with "_" or "." (_SUCCESS, .crc).
         files = [
-            os.path.join(path, name)
-            for name in sorted(os.listdir(path))
+            os.path.join(root, name)
+            for name in sorted(os.listdir(root))
             if not name.startswith(("_", "."))
         ]
         if not files or not all(map(os.path.isfile, files)):
             return None
     else:
         return None
-    schema = pq.read_schema(files[0])
+    footers = [pq.read_metadata(f) for f in files]
+    schema = footers[0].schema.to_arrow_schema()
     names = [name.lower() for name in schema.names]
     if (
         len(set(names)) < len(names)
         or not all(_same_as_inferred(t) for t in schema.types)
         or not all(
-            pq.read_schema(f).equals(schema, check_metadata=False)
-            for f in files[1:]
+            m.schema.to_arrow_schema().equals(schema, check_metadata=False)
+            for m in footers[1:]
         )
     ):
         return None
     ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     inferred = from_arrow_schema(schema, prefer_timestamp_ntz=ntz.lower() == "true")
     # Spark reads every file column as nullable.
-    return T.StructType(
-        [T.StructField(f.name, f.dataType, True) for f in inferred.fields]
+    return ParquetInput(
+        root,
+        tuple(files),
+        T.StructType(
+            [T.StructField(f.name, f.dataType, True) for f in inferred.fields]
+        ),
+        sum(m.num_rows for m in footers),
     )
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The footer-read schema of a _read_footers path, else None."""
+    source = _read_footers(spark, path)
+    return None if source is None else source.schema
 
 
 def _rewrite_extra_null_tokens(df: DataFrame, tokens: list[str]) -> DataFrame:

@@ -632,6 +632,31 @@ def test_worker_zip_stamp_skips_directory_rereads(spark):
     assert out["reads"][0] == 0
 
 
+def test_worker_heap_is_frozen(spark):
+    # Inside a real Python worker, the set-up step freezes the heap so
+    # the daemon's gc.collect() after each task skips it. The set-up
+    # runs only in shipped closures: this process is never frozen.
+    import gc
+
+    frozen_here = gc.get_freeze_count()
+
+    def probe(batches):
+        import gc
+
+        import pandas as pd
+
+        from polars_mas_spark.functions.native_threads import prepare_worker
+
+        prepare_worker()
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"frozen": [gc.get_freeze_count()]})
+
+    out = spark.range(1, numPartitions=1).mapInPandas(probe, "frozen long").toPandas()
+    assert out["frozen"][0] > 0
+    assert gc.get_freeze_count() == frozen_here
+
+
 def test_auto_pick_is_columnar_at_few_pairs(synth, spark, tmp_path, monkeypatch):
     # A 3-pair logistic study read from parquet takes the columnar path
     # (the auto pick no longer wants many pairs) and matches packed,

@@ -76,6 +76,33 @@ def test_cli_dry_run(tmp_path):
     assert "predictor" in r.stdout.lower() or "x" in r.stdout
 
 
+def test_cli_dry_run_reads_a_parquet_header_from_its_footers(
+    spark, tmp_path, monkeypatch, capsys
+):
+    # The summary is the one a Spark read of the header gives, and no
+    # Spark frame is built for it.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polars_mas_spark import cli, session
+    from polars_mas_spark.sources import readers
+
+    path = str(tmp_path / "in.parquet")
+    pq.write_table(pa.table({"x": [0.5, 1.5], "age": [40, 50], "250.1": [0, 1]}), path)
+    argv = ["-i", path, "-p", "x", "-d", "i:2-", "-c", "age", "--dry-run", "-q"]
+    want = config_from_args(create_parser().parse_args(argv))
+    want.resolve(readers.read_input(spark, path).columns)
+
+    def no_frame(*args, **kwargs):
+        raise AssertionError("--dry-run built a Spark frame")
+
+    monkeypatch.setattr(readers, "read_input", no_frame)
+    monkeypatch.setattr(session, "get_spark", lambda **kwargs: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)  # the shared session
+    assert cli.main(argv) == 0
+    assert capsys.readouterr().out == want.summary() + "\n"
+
+
 def test_quiet_turns_off_the_console_progress_bar(monkeypatch):
     # The log level does not reach Spark's "[Stage N:>" bar; -q passes
     # the conf that does, and without -q the session keeps its default.
